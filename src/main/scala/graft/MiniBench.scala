@@ -73,11 +73,16 @@ object MiniBench {
       spark.sparkContext.setJobDescription(s"mini: $n") // guide §1.5
       val t0 = System.nanoTime()
       // clear in a finally (ADVICE r17): a throwing count() must not
-      // bleed this query's description onto every later query's jobs
-      try SparkEntry.queries(n)(spark, sfDir).count()
-      finally spark.sparkContext.setJobDescription(null)
-      val wall = (System.nanoTime() - t0) / 1e9
-      passTurn()
+      // bleed this query's description onto every later query's jobs,
+      // nor keep the baton, or the partner process waits forever
+      val wall =
+        try {
+          SparkEntry.queries(n)(spark, sfDir).count()
+          (System.nanoTime() - t0) / 1e9
+        } finally {
+          spark.sparkContext.setJobDescription(null)
+          passTurn()
+        }
       org.apache.spark.sql.GraftBridge.drainListeners(spark)
       val mb = 1024.0 * 1024
       println(f"MINI $n$tag rep=$rep $wall%.2f s  " +

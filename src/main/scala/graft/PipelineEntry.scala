@@ -52,7 +52,8 @@ object PipelineEntry {
         derive.write.mode("overwrite").parquet(p)
         p
       })
-    s.read.parquet(path)
+    // the landed dir is never rewritten: resolve it once per session
+    Tables.parquet(s, path)
   }
 
   /** Temp parquet dirs this JVM has landed (edge cache, chunked-dedup
@@ -177,11 +178,9 @@ object PipelineEntry {
     * timezone is UTC so the instants are identical). */
   private[graft] def eventsStream(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // fixture schemas are immutable per path: resolve once per (session,
-    // path) instead of paying a batch-read footer round per stream row
-    // (r18 — the bench clears the catalog cache between rows, so the
-    // session's own footer cache doesn't survive)
-    val schema = cachedStreamSchema(s, s"$dir/events.parquet")
+    // the source schema is the session's resolved batch relation's
+    // (Tables.parquet): no footer-reading job per stream row
+    val schema = Tables.parquet(s, s"$dir/events.parquet").schema
     val src = s.readStream.schema(schema).parquet(s"$dir/events.parque*")
     schema("ts").dataType match {
       case LongType => src.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
@@ -2489,7 +2488,7 @@ object PipelineEntry {
       val (mBits, k) = (1024, 5)
       val words = Bloom.build(docs.filter(col("doc_id") % 2 === 0),
         col("text"), mBits, k)
-      val schema = cachedStreamSchema(s, s"$dir/documents.parquet")
+      val schema = Tables.parquet(s, s"$dir/documents.parquet").schema
       val src = s.readStream.schema(schema).parquet(s"$dir/documents.parque*")
         .filter(col("doc_id") % 2 === 1)
       StreamReplay.runToMemory(s,
@@ -2499,7 +2498,7 @@ object PipelineEntry {
     },
     "stream_dedup" -> { (s, dir) =>
       import graft.streaming.StreamOps
-      val schema = cachedStreamSchema(s, s"$dir/documents.parquet")
+      val schema = Tables.parquet(s, s"$dir/documents.parquet").schema
       val src = s.readStream.schema(schema).parquet(s"$dir/documents.parque*")
         // synthetic event time (fixture has none): doc_id seconds, offset
         // a day past epoch 0 — the initial watermark IS epoch 0, and a
@@ -6355,20 +6354,17 @@ object PipelineEntry {
   // =====================================================================
   private def runStreamToTable(s: SparkSession, name: String,
                                streaming: DataFrame, mode: String,
-                               stateParts: Option[Int] = Some(8)): DataFrame = {
-    // default: same 8 state partitions as the gate rows so the
-    // face/replay delta isolates the feed, not the partitioning;
-    // stateParts = None keeps the session width (the six faces below
-    // whose GATE form already streams from files use it — there the
-    // face isolates the state-partitioning axis instead). The five
-    // event-sized Append faces pass streamStateParts(events) — the
-    // data-sized width, which EQUALS the gate's 8 up through sf10
-    // (events < 256 MB) and widens only past it, so the face/gate
-    // delta is untouched at record scales while sf100 state tasks
-    // get real parallelism.
+                               stateParts: Int): DataFrame = {
+    // every face passes the data-sized state width of its source table
+    // (streamStateParts): ~32 MB of source parquet per state partition,
+    // floor 2, capped at the session width. It is 2 on the small
+    // fixtures and grows with the data (sf10 events → 6, sf100 → the
+    // session width), so it no longer matches the gate rows' fixed
+    // replay width of 8: a face/gate delta includes the partitioning
+    // axis as well as the feed.
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    stateParts.foreach(n => s.conf.set(key, n.toString))
+    s.conf.set(key, stateParts.toString)
     // PARQUET sink, never the memory sink (r17, found at the sf100
     // rehearsal): the memory sink materializes every output row ON THE
     // DRIVER, so an event-sized Append output (anomaly/cusum emit one
@@ -6418,14 +6414,6 @@ object PipelineEntry {
     System.err.println(s"[face] $name landed rows: ${footerRowCount(s, out)}")
     landed
   }
-
-  /** Schema cache for the readStream sources, keyed (session, path) so
-    * a config-divergent second session can't read a stale schema. The
-    * VALUE is metadata only — never rows. */
-  private val streamSchemas =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), StructType]()
-  private[graft] def cachedStreamSchema(s: SparkSession, path: String): StructType =
-    streamSchemas.computeIfAbsent((s, path), _ => s.read.parquet(path).schema)
 
   /** Sum of row counts from the parquet footers under `dir` — no Spark
     * job, no data pages read. Used for landing guards only (a result
@@ -6542,7 +6530,7 @@ object PipelineEntry {
         StreamOps.statefulSessions(s,
           eventsStream(s, dir).select(col("user_id"), col("ts"), col("value")),
           gapSeconds = 1800L, watermark = "1 second").toDF(), "append",
-        stateParts = Some(streamStateParts(s, dir, "events")))
+        stateParts = streamStateParts(s, dir, "events"))
     },
     "stream_interval_left" -> { (s, dir) =>
       import graft.streaming.StreamOps
@@ -6554,7 +6542,7 @@ object PipelineEntry {
           src().filter(col("event_type") === "purchase")
             .select(col("event_id"), col("user_id"), col("ts")),
           "user_id", windowSeconds = 600L, watermark = "1 second"), "append",
-        stateParts = Some(streamStateParts(s, dir, "events")))
+        stateParts = streamStateParts(s, dir, "events"))
     },
     "stream_cusum" -> { (s, dir) =>
       import graft.streaming.StreamOps
@@ -6563,7 +6551,7 @@ object PipelineEntry {
           eventsStream(s, dir).select(col("user_id"), col("event_id"),
             col("ts"), col("value")),
           kCenti = 5000L, hCenti = 20000L).toDF(), "append",
-        stateParts = Some(streamStateParts(s, dir, "events")))
+        stateParts = streamStateParts(s, dir, "events"))
     },
     "stream_anomaly" -> { (s, dir) =>
       import graft.streaming.StreamOps
@@ -6572,7 +6560,7 @@ object PipelineEntry {
           eventsStream(s, dir).select(col("user_id"), col("event_id"),
             col("ts"), col("value")),
           k = 5, z = 3L).toDF(), "append",
-        stateParts = Some(streamStateParts(s, dir, "events")))
+        stateParts = streamStateParts(s, dir, "events"))
     },
     "stream_attribution" -> { (s, dir) =>
       import graft.streaming.StreamOps
@@ -6583,7 +6571,7 @@ object PipelineEntry {
           conversionType = "purchase",
           touchTypes = Seq("view", "click", "signup"),
           watermark = "1 second").toDF(), "append",
-        stateParts = Some(streamStateParts(s, dir, "events")))
+        stateParts = streamStateParts(s, dir, "events"))
     },
     "stream_ewma" -> { (s, dir) =>
       import graft.streaming.StreamOps
@@ -6591,7 +6579,7 @@ object PipelineEntry {
         StreamOps.ewmaStream(s,
           eventsStream(s, dir).select(col("user_id"), col("ts"), col("value")),
           1L, 5L).toDF(), "update",
-        stateParts = Some(streamStateParts(s, dir, "events")))
+        stateParts = streamStateParts(s, dir, "events"))
     },
     "stream_holt" -> { (s, dir) =>
       import graft.streaming.StreamOps
@@ -6599,7 +6587,7 @@ object PipelineEntry {
         StreamOps.holtStream(s,
           eventsStream(s, dir).select(col("user_id"), col("ts"), col("value")),
           2L, 10L, 3L, 10L).toDF(), "update",
-        stateParts = Some(streamStateParts(s, dir, "events")))
+        stateParts = streamStateParts(s, dir, "events"))
     },
 
     // ------------------------------------------------------------------
@@ -6622,33 +6610,33 @@ object PipelineEntry {
       import graft.streaming.StreamOps
       runStreamToTable(s, "bf_tumbling",
         StreamOps.tumblingAgg(eventsStream(s, dir), widthSeconds = 300L),
-        "complete", stateParts = Some(streamStateParts(s, dir, "events")))
+        "complete", stateParts = streamStateParts(s, dir, "events"))
     },
     "stream_ohlc" -> { (s, dir) =>
       import graft.streaming.StreamOps
       runStreamToTable(s, "bf_ohlc",
         StreamOps.ohlcStream(eventsStream(s, dir), widthSeconds = 3600L),
-        "complete", stateParts = Some(streamStateParts(s, dir, "events")))
+        "complete", stateParts = streamStateParts(s, dir, "events"))
     },
     "stream_window_users" -> { (s, dir) =>
       import graft.streaming.StreamOps
       runStreamToTable(s, "bf_window_users",
         StreamOps.windowedUsers(eventsStream(s, dir), widthSeconds = 300L),
-        "update", stateParts = Some(streamStateParts(s, dir, "events")))
+        "update", stateParts = streamStateParts(s, dir, "events"))
     },
     "stream_topk" -> { (s, dir) =>
       runStreamToTable(s, "bf_topk",
         eventsStream(s, dir).groupBy(col("user_id")).agg(count(lit(1)).as("n")),
-        "complete", stateParts = Some(streamStateParts(s, dir, "events")))
+        "complete", stateParts = streamStateParts(s, dir, "events"))
     },
     "stream_dedup" -> { (s, dir) =>
       import graft.streaming.StreamOps
-      val schema = cachedStreamSchema(s, s"$dir/documents.parquet")
+      val schema = Tables.parquet(s, s"$dir/documents.parquet").schema
       val src = s.readStream.schema(schema).parquet(s"$dir/documents.parque*")
         .withColumn("ts", timestamp_seconds(col("doc_id") + 86400L))
       runStreamToTable(s, "bf_dedup",
         StreamOps.streamingExactDedup(src, "ts").select(col("doc_id")),
-        "append", stateParts = Some(streamStateParts(s, dir, "documents")))
+        "append", stateParts = streamStateParts(s, dir, "documents"))
     },
     "stream_interval_join" -> { (s, dir) =>
       import graft.streaming.StreamOps
@@ -6666,7 +6654,7 @@ object PipelineEntry {
         // per-partition overhead is ~4× an aggregation's — 4× coarser
         // width (measured at sf10: 17.5 s at the aggregate sizing's 25
         // partitions vs 9.0 s at 8)
-        "append", stateParts = Some(streamStateParts(s, dir, "events", mb = 128)))
+        "append", stateParts = streamStateParts(s, dir, "events", mb = 128))
     })
 
   /** Data-sized state-partition width for the file-source stream faces:

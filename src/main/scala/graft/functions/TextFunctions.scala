@@ -387,12 +387,18 @@ object TextFunctions {
     * Scale shape: one corpus-stats aggregate (N, avgdl — a single
     * broadcast row), tf restricted to the query terms BEFORE the
     * aggregate (the groupBy carries only matching (doc, term) rows,
-    * not the corpus vocabulary), df per term joined back as a
-    * broadcast of ≤ |terms| rows, and the per-doc term sum is a
+    * not the corpus vocabulary), df per term as a window count over
+    * those tf rows, and the per-doc term sum is a
     * FIXED-ORDER pivot (`coalesce(s₀,0)+coalesce(s₁,0)+…`) — never a
     * float aggregate whose partial order could vary. Output: all docs
     * containing ≥1 query term, (idCol, score); rank/limit at the call
     * site (global top-k via TakeOrdered stays bounded).
+    *
+    * Precondition: `idCol` is unique per row of `docs`. The df window
+    * counts tf rows, one per matching (id, term), as the number of
+    * docs containing the term; with a duplicated id the tf rows no
+    * longer map one-to-one to docs and df is wrong. Not checked at run
+    * time: a check would cost a Spark job over the corpus per call.
     */
   def bm25Scores(docs: DataFrame, textCol: Column, queryTerms: Seq[String],
                  idCol: String = "doc_id"): DataFrame = {

@@ -98,6 +98,14 @@ object GraftBridge {
   def drainListeners(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** A DataFrame over a copy of an already resolved relation with fresh
+    * attribute ids, built straight from the plan: no path listing, no
+    * schema inference. Fresh ids keep two copies in one plan distinct,
+    * as two separate reads would be. */
+  def freshInstance(spark: classic.SparkSession,
+      relation: catalyst.analysis.MultiInstanceRelation): DataFrame =
+    classic.Dataset.ofRows(spark, relation.newInstance())
+
   def freshStats(df: Dataset[_]): DataFrame = df match {
     case d: classic.Dataset[_] => d.queryExecution.analyzed match {
       case l: execution.LogicalRDD =>
