@@ -52,8 +52,8 @@ object Bench {
     try {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import org.apache.spark.sql.functions.col
-      val wuBase = java.nio.file.Files.createTempDirectory("graft-wu").toString
-      try {
+      // the timed faces' own scratch file system, warmed with them
+      Scratch.using(spark, "graft-wu") { wuBase =>
         val src = s"$wuBase/src"
         spark.range(100L).selectExpr("id % 7 AS k", "timestamp_micros(id) AS ts", "id AS v")
           .write.mode("overwrite").parquet(src)
@@ -77,8 +77,7 @@ object Bench {
           .option("checkpointLocation", s"$wuBase/ckpt2")
           .option("path", s"$wuBase/out2").start()
         try q2.processAllAvailable() finally q2.stop()
-      } finally org.apache.commons.io.FileUtils
-        .deleteQuietly(new java.io.File(wuBase))
+      }
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] streaming warmup failed (continuing): " +
         Option(e.getMessage).getOrElse(e.getClass.getName).take(120))

@@ -44,15 +44,12 @@ object GraphProbe {
       val plain = timed("pagerank PLAIN (3 rounds)")(
         prCrc(graft.operators.Graph.pagerank(e, 3)))
       println(s"[probe] plain (n, crcsum): $plain")
-      val staging = java.nio.file.Files
-        .createTempDirectory("graft-prx-probe").toString
-      try {
+      Scratch.using(spark, "graft-prx-probe") { staging =>
         val chunked = timed(s"pagerank CHUNKED ($passes waves, 3 rounds)")(
           prCrc(graft.operators.Graph.pagerankChunked(e, 3, passes, staging)))
         println(s"[probe] chunked (n, crcsum): $chunked")
         println(s"[probe] outputs identical: ${plain == chunked}")
-      } finally org.apache.commons.io.FileUtils
-        .deleteQuietly(new java.io.File(staging))
+      }
       return
     }
 
@@ -67,17 +64,13 @@ object GraphProbe {
     if (sys.env.get("GRAFT_GRAPH_PROBE").contains("lpwaves")) {
       val p1 = sys.env.get("GRAFT_LP_PASSES").map(_.toInt).getOrElse(6)
       val p2 = sys.env.get("GRAFT_LP_PASSES2").map(_.toInt).getOrElse(9)
-      def lpCrc(passes: Int): (Long, Long) = {
-        val staging = java.nio.file.Files
-          .createTempDirectory(s"graft-lpw$passes-probe").toString
-        try {
+      def lpCrc(passes: Int): (Long, Long) =
+        Scratch.using(spark, s"graft-lpw$passes-probe") { staging =>
           val d = graft.operators.Graph.labelPropagationChunked(e, 3, passes, staging)
           val r = d.agg(count(lit(1)),
             sum(crc32(concat_ws(":", col("id"), col("label"))))).head()
           (r.getLong(0), r.getLong(1))
-        } finally org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(staging))
-      }
+        }
       val a = timed(s"labelprop CHUNKED ($p1 waves, 3 rounds)")(lpCrc(p1))
       println(s"[probe] $p1-wave (n, crcsum): $a")
       val b = timed(s"labelprop CHUNKED ($p2 waves, 3 rounds)")(lpCrc(p2))
@@ -92,9 +85,7 @@ object GraphProbe {
     // times ONLY labelPropagationChunked at GRAFT_LP_PASSES waves
     if (sys.env.get("GRAFT_GRAPH_PROBE").contains("chunked")) {
       val passes = sys.env.get("GRAFT_LP_PASSES").map(_.toInt).getOrElse(6)
-      val staging = java.nio.file.Files
-        .createTempDirectory("graft-lpc-probe").toString
-      try {
+      Scratch.using(spark, "graft-lpc-probe") { staging =>
         val res = timed(s"labelprop CHUNKED ($passes waves, 3 rounds)") {
           val d = graft.operators.Graph
             .labelPropagationChunked(e, 3, passes, staging)
@@ -103,18 +94,14 @@ object GraphProbe {
           (r.getLong(0), r.getLong(1))
         }
         println(s"[probe] chunked (n, crcsum): $res")
-        val prStaging = java.nio.file.Files
-          .createTempDirectory("graft-prc-probe").toString
-        try {
+        Scratch.using(spark, "graft-prc-probe") { prStaging =>
           val pr = timed(s"pagerank CHUNKED ($passes waves, 3 rounds)") {
             graft.operators.Graph
               .pagerankChunked(e, 3, passes, prStaging).count()
           }
           println(s"[probe] pagerank chunked rows: $pr")
-        } finally org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(prStaging))
-      } finally org.apache.commons.io.FileUtils
-        .deleteQuietly(new java.io.File(staging))
+        }
+      }
       return
     }
 

@@ -39,76 +39,19 @@ object PipelineEntry {
     * failed 6 graph rows with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
     * Parquet staging is immune and matches what a cluster user
     * actually does (write the edge table). Keyed by (application,
-    * fixture dir, recipe); one temp dir per key per JVM, bounded. */
+    * fixture dir, recipe); one scratch dir per key per JVM, bounded. */
   private val edgeCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def cachedEdges(s: SparkSession, dir: String, recipe: String)
                          (derive: => DataFrame): DataFrame = {
     val path = edgeCache.computeIfAbsent(
       s"${s.sparkContext.applicationId}|$dir|$recipe", _ => {
-        val p = java.nio.file.Files
-          .createTempDirectory(s"graft-edges-$recipe").toString
-        registerTempDir(p)
+        val p = Scratch.dir(s, s"graft-edges-$recipe")
         derive.write.mode("overwrite").parquet(p)
         p
       })
     // the landed dir is never rewritten: resolve it once per session
     Tables.parquet(s, path)
-  }
-
-  /** Temp parquet dirs this JVM has landed (edge cache, chunked-dedup
-    * results): all removed at JVM exit, so a long-lived driver's /tmp
-    * footprint is bounded by the LIVE handles, never by invocation
-    * count. */
-  private val tempDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private lazy val tempDirHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      tempDirs.forEach(d =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
-    }))
-  private def registerTempDir(p: String): Unit = { tempDirHook; tempDirs.add(p) }
-
-  /** Create-and-REGISTER a wave staging dir: registered with the
-    * shutdown hook at creation, so an exception inside a chunked
-    * operator can no longer leak the (potentially large) staging
-    * parquet in /tmp for the life of the process. Pair with
-    * [[reclaimTempDir]] in a finally for prompt reclamation. */
-  private def stagingTempDir(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix).toString
-    registerTempDir(p)
-    p
-  }
-
-  /** Prompt reclamation of a staging dir (and its hook registration —
-    * the live set stays bounded by live handles, not invocations). */
-  private def reclaimTempDir(p: String): Unit = {
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
-    tempDirs.remove(p)
-  }
-
-  /** One landed-result dir per (query, fixture dir) key for the chunked
-    * dedup faces: the result parquet is ~10^8 pairs at scale, and the
-    * returned DataFrame reads it lazily, so it can't be deleted at
-    * return time — but re-entry for the SAME key deletes the previous
-    * invocation's dir (a repeated gate query in a long-lived Connect
-    * server / notebook driver must not accumulate result parquet the
-    * way the staging dirs used to), and the shutdown hook reclaims
-    * whatever is still registered at exit. Contract: re-invoking a
-    * chunked query on the same fixture dir invalidates the previous
-    * invocation's still-unread DataFrame handle, exactly like an
-    * overwrite of a shared output path. */
-  private val chunkedOut =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def chunkedOutDir(key: String): String = {
-    val fresh = java.nio.file.Files
-      .createTempDirectory("graft-chunk-out").toString
-    registerTempDir(fresh)
-    val prev = chunkedOut.put(key, fresh)
-    if (prev != null) {
-      tempDirs.remove(prev)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(prev))
-    }
-    fresh
   }
 
   /** Scale-adaptive wave count for the chunked gate rows (r17,
@@ -1201,7 +1144,6 @@ object PipelineEntry {
       // partitioned by pmod(variant hash, passes), staged wave
       // outputs, identical pair set — certified against the identical
       // oracle as dedup_fuzzy (same pattern as dedup_prefix_chunked)
-      val staging = stagingTempDir("graft-fuzzy-gate")
       // wave count is a pure execution knob (result identical by
       // construction at ANY value — pinned by the equivalence test);
       // derived from the input size (r17 — see autoPasses), env
@@ -1216,12 +1158,13 @@ object PipelineEntry {
       // Keyed per (query, dir) so re-entry reclaims the previous
       // result dir (ADVICE r15: the landing itself must not become
       // the unbounded /tmp accumulation it exists to prevent).
-      val out = chunkedOutDir(s"dedup_fuzzy_chunked|$dir")
-      try Dedup.fuzzyPairsChunked(
-          t(s, dir, "customer").select(col("c_custkey").as("id"), col("c_name").as("name")),
-          maxDist = 1, passes = passes, stagingDir = staging)
-        .write.mode("overwrite").parquet(out)
-      finally reclaimTempDir(staging)
+      val out = Scratch.landing(s, s"dedup_fuzzy_chunked|$dir")
+      Scratch.using(s, "graft-fuzzy-gate") { staging =>
+        Dedup.fuzzyPairsChunked(
+            t(s, dir, "customer").select(col("c_custkey").as("id"), col("c_name").as("name")),
+            maxDist = 1, passes = passes, stagingDir = staging)
+          .write.mode("overwrite").parquet(out)
+      }
       s.read.parquet(out).orderBy("id_a", "id_b")
     },
     "dedup_fuzzy_witness" -> { (s, dir) =>
@@ -1372,7 +1315,6 @@ object PipelineEntry {
       // out-of-core / 100 TB shape): candidate space partitioned by
       // pmod(prefix hash, 4), staged wave outputs, identical pair set —
       // certified against the identical oracle as dedup_prefix_pairs
-      val staging = stagingTempDir("graft-ppjoin-gate")
       // wave count is a pure execution knob (result identical by
       // construction at ANY value — pinned by the equivalence test);
       // derived from the input size (r17 — see autoPasses): the
@@ -1389,11 +1331,12 @@ object PipelineEntry {
       // fuzzy sibling's ~10⁸-pair sf100 result OOMed the heap on
       // block re-read; a parquet write streams. Keyed per (query, dir)
       // so re-entry reclaims the previous result dir (ADVICE r15).
-      val out = chunkedOutDir(s"dedup_prefix_chunked|$dir")
-      try Dedup.prefixJaccardPairsChunked(t(s, dir, "documents"),
-          n = 2, tNum = 1, tDen = 2, passes = passes, stagingDir = staging)
-        .write.mode("overwrite").parquet(out)
-      finally reclaimTempDir(staging)
+      val out = Scratch.landing(s, s"dedup_prefix_chunked|$dir")
+      Scratch.using(s, "graft-ppjoin-gate") { staging =>
+        Dedup.prefixJaccardPairsChunked(t(s, dir, "documents"),
+            n = 2, tNum = 1, tDen = 2, passes = passes, stagingDir = staging)
+          .write.mode("overwrite").parquet(out)
+      }
       s.read.parquet(out).orderBy("id_a", "id_b")
     },
     "dedup_pr_audit" -> { (s, dir) =>
@@ -6377,9 +6320,8 @@ object PipelineEntry {
     // go through foreachBatch landing each micro-batch with the
     // memory sink's own accumulation semantics (update appends the
     // batch's emitted rows; complete truncates and rewrites).
-    val out = chunkedOutDir(s"stream_face|$name")
-    val ckpt = stagingTempDir(s"graft-ckpt-$name")
-    try {
+    val out = Scratch.landing(s, s"stream_face|$name")
+    try Scratch.using(s, s"graft-ckpt-$name") { ckpt =>
       val w = streaming.writeStream.queryName(name)
         .option("checkpointLocation", ckpt)
       val q = mode match {
@@ -6397,10 +6339,7 @@ object PipelineEntry {
           }.start()
       }
       try q.processAllAvailable() finally q.stop()
-    } finally {
-      reclaimTempDir(ckpt)
-      s.conf.set(key, prev)
-    }
+    } finally s.conf.set(key, prev)
     // the landed schema IS the streaming frame's schema (both sink
     // modes write it verbatim) — passing it skips the footer-sampling
     // schema inference pass per face (r18)
@@ -6478,12 +6417,12 @@ object PipelineEntry {
     "graph_labelprop" -> (("lineitem", 4L << 30, { (s, dir) =>
       val e0 = affinityEdges(s, dir)
       val e = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      val staging = stagingTempDir("graft-lpc-face")
       val passes = sys.env.get("GRAFT_LP_PASSES").map(_.toInt).getOrElse(6)
-      val out = chunkedOutDir(s"graph_labelprop|$dir")
-      try Graph.labelPropagationChunked(e, iters = 3, passes = passes, staging)
-        .write.mode("overwrite").parquet(out)
-      finally reclaimTempDir(staging)
+      val out = Scratch.landing(s, s"graph_labelprop|$dir")
+      Scratch.using(s, "graft-lpc-face") { staging =>
+        Graph.labelPropagationChunked(e, iters = 3, passes = passes, staging)
+          .write.mode("overwrite").parquet(out)
+      }
       s.read.parquet(out).orderBy("id")
     })),
     // past the cache ceiling the wave form is not just SAFER but
@@ -6494,12 +6433,12 @@ object PipelineEntry {
     "graph_pagerank" -> (("lineitem", 4L << 30, { (s, dir) =>
       val e0 = affinityEdges(s, dir)
       val e = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      val staging = stagingTempDir("graft-prc-face")
       val passes = sys.env.get("GRAFT_LP_PASSES").map(_.toInt).getOrElse(6)
-      val out = chunkedOutDir(s"graph_pagerank|$dir")
-      try Graph.pagerankChunked(e, iters = 3, passes = passes, staging)
-        .write.mode("overwrite").parquet(out)
-      finally reclaimTempDir(staging)
+      val out = Scratch.landing(s, s"graph_pagerank|$dir")
+      Scratch.using(s, "graft-prc-face") { staging =>
+        Graph.pagerankChunked(e, iters = 3, passes = passes, staging)
+          .write.mode("overwrite").parquet(out)
+      }
       s.read.parquet(out).orderBy("id")
     })),
     // the audit's exchange is ~98% the exact route (measured, see the
@@ -6509,17 +6448,16 @@ object PipelineEntry {
     // 13x its NVMe record on a 556 MB/s disk in r15, pure spill class)
     "dedup_pr_audit" -> (("documents", 16L << 20, { (s, dir) =>
       val docs = t(s, dir, "documents")
-      val staging = stagingTempDir("graft-praudit")
       val passes = sys.env.get("GRAFT_PPJOIN_PASSES").map(_.toInt)
         .getOrElse(autoPasses(s, dir, "documents", 64L << 20))
-      val out = chunkedOutDir(s"dedup_pr_audit|$dir")
+      val out = Scratch.landing(s, s"dedup_pr_audit|$dir")
       // the audit output is ONE row — land it, reclaim the wave staging
-      try {
+      Scratch.using(s, "graft-praudit") { staging =>
         val exact = Dedup.prefixJaccardPairsChunked(docs, n = 3, tNum = 3,
           tDen = 10, passes = passes, stagingDir = staging)
         prAuditAgg(exact, Dedup.minhashPairs(docs, threshold = 0.3, n = 3))
           .write.mode("overwrite").parquet(out)
-      } finally reclaimTempDir(staging)
+      }
       s.read.parquet(out)
     })))
 

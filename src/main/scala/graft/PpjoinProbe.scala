@@ -60,9 +60,7 @@ object PpjoinProbe {
       // before the distinct exchange.
       val old = probeMode == "chunkedold"
       val passes = sys.env.get("GRAFT_PPJOIN_PASSES").map(_.toInt).getOrElse(4)
-      val staging = java.nio.file.Files
-        .createTempDirectory("graft-ppjoin-probe").toString
-      try {
+      Scratch.using(spark, "graft-ppjoin-probe") { staging =>
         import graft.operators.Dedup
         timed("stage sh+prefix(+sketch)") {
           val (sh0, prefix0) = Dedup
@@ -107,8 +105,7 @@ object PpjoinProbe {
           .count()
         println(s"[probe] sketch-surviving candidates: $candTotal, " +
           s"verified pairs: $pairTotal")
-      } finally org.apache.commons.io.FileUtils
-        .deleteQuietly(new java.io.File(staging))
+      }
       return
     }
 

@@ -30,8 +30,8 @@ object StreamSinkProbe {
       val key = "spark.sql.shuffle.partitions"
       val prev = spark.conf.get(key)
       spark.conf.set(key, sys.env.getOrElse("GRAFT_SP_PARTS", "8"))
-      val out = java.nio.file.Files.createTempDirectory(s"sp-out-$name").toString
-      val ckpt = java.nio.file.Files.createTempDirectory(s"sp-ckpt-$name").toString
+      val out = Scratch.dir(spark, s"sp-out-$name")
+      val ckpt = Scratch.dir(spark, s"sp-ckpt-$name")
       val t0 = System.nanoTime()
       def ms = (System.nanoTime() - t0) / 1e6
       try {
@@ -72,8 +72,8 @@ object StreamSinkProbe {
         }
       } finally {
         spark.conf.set(key, prev)
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+        Scratch.reclaim(ckpt)
+        Scratch.reclaim(out)
       }
     }
 

@@ -170,24 +170,37 @@ object Features {
     // through an EXACT decimal division (≤8 fraction digits, result
     // scale 8) and is cast to double once, exactly like the decimal
     // sum it replaces — pinned by the oracle's value-exact diff.
-    // Soundness bound: |unscaled(x)·unscaled(y)| < 2^63 needs
-    // |x| ≤ 303,700 units at 4dp; enforced loudly in-plan below (the
-    // old decimal form had no such bound, so the operator now REJECTS
-    // inputs past it instead of computing them — values that large
-    // were never in the declared domain).
+    // The long product is exact while |unscaled| ≤ ⌊√(2⁶³−1)⌋, i.e.
+    // |x| ≤ 303,700.0499 at 4dp. A cell with an operand past that bound
+    // takes the exact decimal product of the two unscaled integers
+    // instead (decimal(28,0)² → decimal(38,0), the same 10⁻⁸ units);
+    // only those rows pay the decimal multiply, and in-bound inputs
+    // keep the long path bit for bit. Products and moment sums stay
+    // exact up to decimal(38,0) (10³⁰ in the input's units²; past it
+    // Spark's decimal overflow is raised under ANSI). A moment past
+    // decimal(38,8) (10²² in units²) is re-scaled to 6 fraction digits
+    // instead of 8, still far below a double's resolution at that size.
+    val bound = lit(BigDecimal("303700.0499"))
     def unscaled(c: Column): Column = org.apache.spark.sql.GraftBridge.column(
       org.apache.spark.sql.catalyst.expressions.UnscaledValue(
         org.apache.spark.sql.GraftBridge.expression(c.cast(DecimalType(18, 4)))))
     val us = cols.map(c => unscaled(col(c)))
+    val wide = cs.map(c => (c * lit(10000)).cast(DecimalType(28, 0)))
+    def product(i: Int, j: Int): Column =
+      when(abs(cs(i)) <= bound && abs(cs(j)) <= bound,
+        (us(i) * us(j)).cast(DecimalType(38, 0)))
+        .otherwise(wide(i) * wide(j))
     val aggs = count(lit(1)).cast(DoubleType).as("_n") +:
       (cols.indices.map(i => sum(cs(i)).cast(DoubleType).as(s"_s$i")) ++
         (for { i <- cols.indices; j <- i until cols.size } yield
-          sum((us(i) * us(j)).cast(DecimalType(38, 0))).as(s"_q${i}_$j")) :+
-        max(greatest(cs.map(abs): _*)).as("_ma"))
+          sum(product(i, j)).as(s"_q${i}_$j")))
     val pairs = for { i <- cols.indices; j <- (i + 1) until cols.size } yield {
-      def p(a: Int, b: Int): Column =
-        (col(s"_q${a}_$b").cast(DecimalType(38, 8)) / lit(100000000L))
-          .cast(DoubleType)
+      def p(a: Int, b: Int): Column = {
+        val q = col(s"_q${a}_$b")
+        when(abs(q) < lit(BigDecimal(10).pow(30)),
+          (q.cast(DecimalType(38, 8)) / lit(100000000L)).cast(DoubleType))
+          .otherwise((q / lit(BigDecimal(10).pow(8))).cast(DoubleType))
+      }
       val num = p(i, j) - col(s"_s$i") * col(s"_s$j") / col("_n")
       val den = sqrt(p(i, i) - col(s"_s$i") * col(s"_s$i") / col("_n")) *
         sqrt(p(j, j) - col(s"_s$j") * col(s"_s$j") / col("_n"))
@@ -195,10 +208,6 @@ object Features {
         (num / den).as("corr"))
     }
     df.agg(aggs.head, aggs.tail: _*)
-      .filter(when(col("_ma") > lit(BigDecimal(303700)),
-        raise_error(lit("correlationMatrix: |value| > 303700 would " +
-          "overflow the exact fixed-point product path")))
-        .otherwise(lit(true)))
       .select(explode(array(pairs: _*)).as("_e"))
       .select(col("_e.col_a").as("col_a"), col("_e.col_b").as("col_b"),
         col("_e.corr").as("corr"))

@@ -1,8 +1,11 @@
 package graft.testkit
 
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import graft.Scratch
 import graft.streaming.StreamOps
 
 /** Bounded-replay harnesses for driving the [[graft.streaming.StreamOps]]
@@ -37,63 +40,29 @@ object StreamReplay {
                              statePartitions: Option[Int] = Some(8)): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val src = events
       .select(col("user_id").cast("long"), col("ts"), col("value").cast("double"))
-    val total = src.count()
     val mem = MemoryStream[(Long, java.sql.Timestamp, Double)]
-    val stream = mem.toDF().toDF("user_id", "ts", "value")
-    val sessions = StreamOps
-      .statefulSessions(spark, stream, gapSeconds, watermark = "1 second").toDF()
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    statePartitions.foreach(n => spark.conf.set(key, n.toString))
-    try {
-      val q = sessions.writeStream
-        .format("memory").queryName(name).outputMode("append").start()
-      val chunkSize = math.max(1L, (total + nChunks - 1) / nChunks).toInt
-      // event-time-ordered stream of the bounded input, one partition on
-      // the driver at a time
-      val it = src.orderBy(col("ts"))
-        .as[(Long, java.sql.Timestamp, Double)].toLocalIterator()
+    val sessions = StreamOps.statefulSessions(spark,
+      mem.toDF().toDF("user_id", "ts", "value"), gapSeconds, watermark = "1 second").toDF()
+    toMemory(spark, sessions, name, "append", statePartitions) { q =>
       var maxMs = Long.MinValue
-      var batch = Vector.newBuilder[(Long, java.sql.Timestamp, Double)]
-      var inBatch = 0
-      def flush(): Unit = if (inBatch > 0) {
-        mem.addData(batch.result())
-        q.processAllAvailable()
-        batch = Vector.newBuilder; inBatch = 0
-      }
-      while (it.hasNext) {
-        val row = it.next()
-        maxMs = math.max(maxMs, row._2.getTime)
-        batch += row; inBatch += 1
-        if (inBatch >= chunkSize) flush()
-      }
-      flush()
-      if (total > 0) {
+      chunks(src.orderBy(col("ts")).as[(Long, java.sql.Timestamp, Double)], nChunks)
+        .foreach { c =>
+          maxMs = math.max(maxMs, c.map(_._2.getTime).max)
+          mem.addData(c)
+          q.processAllAvailable()
+        }
+      if (maxMs > Long.MinValue) {
         // sentinel user (Long.MinValue — can't collide with real ids)
         // a day past the last event: watermark passes every end + gap
         mem.addData(Seq((Long.MinValue,
           new java.sql.Timestamp(maxMs + (gapSeconds + 86400L) * 1000L), 0.0)))
         q.processAllAvailable()
       }
-      q.stop()
-    } finally spark.conf.set(key, prev)
-    spark.table(name).filter(col("user_id") =!= Long.MinValue)
+    }.filter(col("user_id") =!= Long.MinValue)
   }
 
-  /** run a streaming query over a bounded source to completion into a
-    * memory sink and return the result table.
-    *
-    * `statePartitions` overrides `spark.sql.shuffle.partitions` for the
-    * query's lifetime: every stateful operator commits one state-store
-    * instance per shuffle partition per micro-batch, so a bounded replay
-    * with few distinct keys pays ~linear overhead in partition count
-    * (32 → 8 cuts a one-batch stream-stream join ~4×). On a live cluster
-    * size it to cores/keys instead; the partitioning is frozen into the
-    * checkpoint at first start.
-    */
   /** multi-batch replay of [[StreamOps.attributionStream]] over a
     * bounded events frame: same chunked event-time-ordered MemoryStream
     * feed as [[replayStatefulSessions]] (ties broken by event_id so the
@@ -108,49 +77,18 @@ object StreamReplay {
                         statePartitions: Option[Int] = Some(8)): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val src = events.select(col("user_id").cast("long"), col("ts"),
       col("event_type").cast("string"), col("event_id").cast("long"))
-    val total = src.count()
     val mem = MemoryStream[(Long, java.sql.Timestamp, String, Long)]
-    val stream = mem.toDF().toDF("user_id", "ts", "event_type", "event_id")
-    val attributed = graft.streaming.StreamOps
-      .attributionStream(spark, stream, conversionType, touchTypes,
-        watermark = "1 second").toDF()
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    statePartitions.foreach(n => spark.conf.set(key, n.toString))
-    try {
-      val q = attributed.writeStream
-        .format("memory").queryName(name).outputMode("append").start()
-      val chunkSize = math.max(1L, (total + nChunks - 1) / nChunks).toInt
-      val it = src.orderBy(col("ts"), col("event_id"))
-        .as[(Long, java.sql.Timestamp, String, Long)].toLocalIterator()
-      var batch = Vector.newBuilder[(Long, java.sql.Timestamp, String, Long)]
-      var inBatch = 0
-      def flush(): Unit = if (inBatch > 0) {
-        mem.addData(batch.result())
-        q.processAllAvailable()
-        batch = Vector.newBuilder; inBatch = 0
-      }
-      while (it.hasNext) {
-        batch += it.next(); inBatch += 1
-        if (inBatch >= chunkSize) flush()
-      }
-      flush()
-      q.stop()
-    } finally spark.conf.set(key, prev)
-    spark.table(name)
+    val attributed = StreamOps.attributionStream(spark,
+      mem.toDF().toDF("user_id", "ts", "event_type", "event_id"),
+      conversionType, touchTypes, watermark = "1 second").toDF()
+    toMemory(spark, attributed, name, "append", statePartitions) { q =>
+      feed(q, mem, src.orderBy(col("ts"), col("event_id"))
+        .as[(Long, java.sql.Timestamp, String, Long)], nChunks)
+    }
   }
 
-  /** multi-batch replay of [[graft.streaming.StreamOps.ewmaStream]]:
-    * events feed chronologically in `nChunks` micro-batches (the
-    * within-batch sort is the operator's responsibility), running
-    * emits land in an Update-mode memory sink, and the LAST emit per
-    * user (the one carrying that user's total event count) is the
-    * final answer — selected with one `max_by` aggregate. Matches
-    * `Behavior.ewmaLast` bit-for-bit by construction.
-    */
   /** multi-batch replay of [[StreamOps.holtStream]] — same chunked
     * chronological feed as [[replayEwma]]; the final (max-n) emit per
     * user is the batch [[graft.operators.Behavior.holtLast]] answer
@@ -162,83 +100,43 @@ object StreamReplay {
                  statePartitions: Option[Int] = Some(8)): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val src = events.select(col("user_id").cast("long"), col("ts"),
       col("value").cast("double"))
-    val total = src.count()
     val mem = MemoryStream[(Long, java.sql.Timestamp, Double)]
-    val stream = mem.toDF().toDF("user_id", "ts", "value")
-    val smoothed = graft.streaming.StreamOps
-      .holtStream(spark, stream, aNum, aDen, bNum, bDen).toDF()
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    statePartitions.foreach(n => spark.conf.set(key, n.toString))
-    try {
-      val q = smoothed.writeStream
-        .format("memory").queryName(name).outputMode("update").start()
-      val chunkSize = math.max(1L, (total + nChunks - 1) / nChunks).toInt
-      val it = src.orderBy(col("ts"), col("value"))
-        .as[(Long, java.sql.Timestamp, Double)].toLocalIterator()
-      var batch = Vector.newBuilder[(Long, java.sql.Timestamp, Double)]
-      var inBatch = 0
-      def flush(): Unit = if (inBatch > 0) {
-        mem.addData(batch.result())
-        q.processAllAvailable()
-        batch = Vector.newBuilder; inBatch = 0
-      }
-      while (it.hasNext) {
-        batch += it.next(); inBatch += 1
-        if (inBatch >= chunkSize) flush()
-      }
-      flush()
-      q.stop()
-    } finally spark.conf.set(key, prev)
-    spark.table(name)
-      .groupBy(col("user_id"))
+    val smoothed = StreamOps.holtStream(spark,
+      mem.toDF().toDF("user_id", "ts", "value"), aNum, aDen, bNum, bDen).toDF()
+    toMemory(spark, smoothed, name, "update", statePartitions) { q =>
+      feed(q, mem, src.orderBy(col("ts"), col("value"))
+        .as[(Long, java.sql.Timestamp, Double)], nChunks)
+    }.groupBy(col("user_id"))
       .agg(max(col("n_events")).as("n_events"),
         max_by(col("level"), col("n_events")).as("level"),
         max_by(col("trend"), col("n_events")).as("trend"))
   }
 
+  /** multi-batch replay of [[graft.streaming.StreamOps.ewmaStream]]:
+    * events feed chronologically in `nChunks` micro-batches (the
+    * within-batch sort is the operator's responsibility), running
+    * emits land in an Update-mode memory sink, and the LAST emit per
+    * user (the one carrying that user's total event count) is the
+    * final answer — selected with one `max_by` aggregate. Matches
+    * `Behavior.ewmaLast` bit-for-bit by construction.
+    */
   def replayEwma(spark: SparkSession, events: DataFrame,
                  aNum: Long, aDen: Long, nChunks: Int = 4,
                  name: String = "stream_ewma_sink",
                  statePartitions: Option[Int] = Some(8)): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val src = events.select(col("user_id").cast("long"), col("ts"),
       col("value").cast("double"))
-    val total = src.count()
     val mem = MemoryStream[(Long, java.sql.Timestamp, Double)]
-    val stream = mem.toDF().toDF("user_id", "ts", "value")
-    val smoothed = graft.streaming.StreamOps
-      .ewmaStream(spark, stream, aNum, aDen).toDF()
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    statePartitions.foreach(n => spark.conf.set(key, n.toString))
-    try {
-      val q = smoothed.writeStream
-        .format("memory").queryName(name).outputMode("update").start()
-      val chunkSize = math.max(1L, (total + nChunks - 1) / nChunks).toInt
-      val it = src.orderBy(col("ts"), col("value"))
-        .as[(Long, java.sql.Timestamp, Double)].toLocalIterator()
-      var batch = Vector.newBuilder[(Long, java.sql.Timestamp, Double)]
-      var inBatch = 0
-      def flush(): Unit = if (inBatch > 0) {
-        mem.addData(batch.result())
-        q.processAllAvailable()
-        batch = Vector.newBuilder; inBatch = 0
-      }
-      while (it.hasNext) {
-        batch += it.next(); inBatch += 1
-        if (inBatch >= chunkSize) flush()
-      }
-      flush()
-      q.stop()
-    } finally spark.conf.set(key, prev)
-    spark.table(name)
-      .groupBy(col("user_id"))
+    val smoothed = StreamOps.ewmaStream(spark,
+      mem.toDF().toDF("user_id", "ts", "value"), aNum, aDen).toDF()
+    toMemory(spark, smoothed, name, "update", statePartitions) { q =>
+      feed(q, mem, src.orderBy(col("ts"), col("value"))
+        .as[(Long, java.sql.Timestamp, Double)], nChunks)
+    }.groupBy(col("user_id"))
       .agg(max(col("n_events")).as("n_events"),
         max_by(col("ewma"), col("n_events")).as("ewma"))
   }
@@ -254,38 +152,15 @@ object StreamReplay {
                       statePartitions: Option[Int] = Some(8)): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val src = events.select(col("user_id").cast("long"),
       col("event_id").cast("long"), col("ts"), col("value").cast("double"))
-    val total = src.count()
     val mem = MemoryStream[(Long, Long, java.sql.Timestamp, Double)]
-    val stream = mem.toDF().toDF("user_id", "event_id", "ts", "value")
-    val judged = graft.streaming.StreamOps
-      .anomalyStream(spark, stream, k, z).toDF()
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    statePartitions.foreach(n => spark.conf.set(key, n.toString))
-    try {
-      val q = judged.writeStream
-        .format("memory").queryName(name).outputMode("append").start()
-      val chunkSize = math.max(1L, (total + nChunks - 1) / nChunks).toInt
-      val it = src.orderBy(col("ts"), col("event_id"))
-        .as[(Long, Long, java.sql.Timestamp, Double)].toLocalIterator()
-      var batch = Vector.newBuilder[(Long, Long, java.sql.Timestamp, Double)]
-      var inBatch = 0
-      def flush(): Unit = if (inBatch > 0) {
-        mem.addData(batch.result())
-        q.processAllAvailable()
-        batch = Vector.newBuilder; inBatch = 0
-      }
-      while (it.hasNext) {
-        batch += it.next(); inBatch += 1
-        if (inBatch >= chunkSize) flush()
-      }
-      flush()
-      q.stop()
-    } finally spark.conf.set(key, prev)
-    spark.table(name)
+    val judged = StreamOps.anomalyStream(spark,
+      mem.toDF().toDF("user_id", "event_id", "ts", "value"), k, z).toDF()
+    toMemory(spark, judged, name, "append", statePartitions) { q =>
+      feed(q, mem, src.orderBy(col("ts"), col("event_id"))
+        .as[(Long, Long, java.sql.Timestamp, Double)], nChunks)
+    }
   }
 
   /** Multi-batch replay of [[StreamOps.cusumStream]] over a bounded
@@ -298,38 +173,15 @@ object StreamReplay {
                   statePartitions: Option[Int] = Some(8)): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val src = events.select(col("user_id").cast("long"),
       col("event_id").cast("long"), col("ts"), col("value").cast("double"))
-    val total = src.count()
     val mem = MemoryStream[(Long, Long, java.sql.Timestamp, Double)]
-    val stream = mem.toDF().toDF("user_id", "event_id", "ts", "value")
-    val judged = graft.streaming.StreamOps
-      .cusumStream(spark, stream, kCenti, hCenti).toDF()
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    statePartitions.foreach(n => spark.conf.set(key, n.toString))
-    try {
-      val q = judged.writeStream
-        .format("memory").queryName(name).outputMode("append").start()
-      val chunkSize = math.max(1L, (total + nChunks - 1) / nChunks).toInt
-      val it = src.orderBy(col("ts"), col("event_id"))
-        .as[(Long, Long, java.sql.Timestamp, Double)].toLocalIterator()
-      var batch = Vector.newBuilder[(Long, Long, java.sql.Timestamp, Double)]
-      var inBatch = 0
-      def flush(): Unit = if (inBatch > 0) {
-        mem.addData(batch.result())
-        q.processAllAvailable()
-        batch = Vector.newBuilder; inBatch = 0
-      }
-      while (it.hasNext) {
-        batch += it.next(); inBatch += 1
-        if (inBatch >= chunkSize) flush()
-      }
-      flush()
-      q.stop()
-    } finally spark.conf.set(key, prev)
-    spark.table(name)
+    val judged = StreamOps.cusumStream(spark,
+      mem.toDF().toDF("user_id", "event_id", "ts", "value"), kCenti, hCenti).toDF()
+    toMemory(spark, judged, name, "append", statePartitions) { q =>
+      feed(q, mem, src.orderBy(col("ts"), col("event_id"))
+        .as[(Long, Long, java.sql.Timestamp, Double)], nChunks)
+    }
   }
 
   /** Multi-batch replay of [[StreamOps.intervalJoinLeftOuter]] over two
@@ -351,34 +203,21 @@ object StreamReplay {
                                   statePartitions: Option[Int] = Some(8)): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    def prep(df: DataFrame) =
+    def ordered(df: DataFrame) =
       df.select(col("event_id").cast("long"), col(key).cast("long"), col("ts"))
-    val (lSrc, rSrc) = (prep(left), prep(right))
+        .orderBy(col("ts"), col("event_id")).as[(Long, Long, java.sql.Timestamp)]
     val memL = MemoryStream[(Long, Long, java.sql.Timestamp)]
     val memR = MemoryStream[(Long, Long, java.sql.Timestamp)]
     val joined = StreamOps.intervalJoinLeftOuter(
       memL.toDF().toDF("event_id", key, "ts"),
       memR.toDF().toDF("event_id", key, "ts"),
       key, windowSeconds, watermark = "1 second")
-    val confKey = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(confKey)
-    statePartitions.foreach(n => spark.conf.set(confKey, n.toString))
-    try {
-      val q = joined.writeStream
-        .format("memory").queryName(name).outputMode("append").start()
+    toMemory(spark, joined, name, "append", statePartitions) { q =>
       // lock-step chunked feed: split each side into nChunks by event
       // time and advance both per round, so the GLOBAL watermark (min
       // across inputs) moves and neither side's buffer waits on a
       // stalled sibling
-      def chunksOf(src: DataFrame): Iterator[Seq[(Long, Long, java.sql.Timestamp)]] = {
-        val total = src.count()
-        val size = math.max(1L, (total + nChunks - 1) / nChunks).toInt
-        src.orderBy(col("ts"), col("event_id"))
-          .as[(Long, Long, java.sql.Timestamp)].toLocalIterator()
-          .asScala.grouped(size)
-      }
-      val (lIt, rIt) = (chunksOf(lSrc), chunksOf(rSrc))
+      val (lIt, rIt) = (chunks(ordered(left), nChunks), chunks(ordered(right), nChunks))
       var maxMs = 0L
       while (lIt.hasNext || rIt.hasNext) {
         if (lIt.hasNext) {
@@ -399,23 +238,54 @@ object StreamReplay {
       memL.addData(Seq((Long.MinValue, Long.MinValue, sentinelTs)))
       memR.addData(Seq((Long.MinValue, Long.MinValue, sentinelTs)))
       q.processAllAvailable()
-      q.stop()
-    } finally spark.conf.set(confKey, prev)
-    spark.table(name).filter(col(s"${key}_l") =!= Long.MinValue)
+    }.filter(col(s"${key}_l") =!= Long.MinValue)
   }
 
+  /** run a streaming query over a bounded source to completion into a
+    * memory sink and return the result table (see [[toMemory]]). */
   def runToMemory(spark: SparkSession, streaming: DataFrame, name: String,
                   outputMode: String = "complete",
-                  statePartitions: Option[Int] = None): DataFrame = {
+                  statePartitions: Option[Int] = None): DataFrame =
+    toMemory(spark, streaming, name, outputMode, statePartitions)(_.processAllAvailable())
+
+  /** Start `streaming` into the memory sink `name`, run `drive` on the
+    * query, stop it and return the sink's table.
+    *
+    * `statePartitions` overrides `spark.sql.shuffle.partitions` for the
+    * query's lifetime: every stateful operator commits one state-store
+    * instance per shuffle partition per micro-batch, so a bounded replay
+    * with few distinct keys pays ~linear overhead in partition count
+    * (32 → 8 cuts a one-batch stream-stream join ~4×). On a live cluster
+    * size it to cores/keys instead; the partitioning is frozen into the
+    * checkpoint at first start.
+    *
+    * The checkpoint is an explicit [[graft.Scratch]] dir, reclaimed
+    * whether or not the query fails: Spark deletes its implicit
+    * temporary checkpoint only when a query stops without error. */
+  private def toMemory(spark: SparkSession, streaming: DataFrame, name: String,
+                       outputMode: String, statePartitions: Option[Int])
+                      (drive: StreamingQuery => Unit): DataFrame = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     statePartitions.foreach(n => spark.conf.set(key, n.toString))
-    try {
-      val q = streaming.writeStream
-        .format("memory").queryName(name).outputMode(outputMode).start()
-      q.processAllAvailable()
-      q.stop()
+    try Scratch.using(spark, s"graft-ckpt-$name") { ckpt =>
+      val q = streaming.writeStream.format("memory").queryName(name)
+        .outputMode(outputMode).option("checkpointLocation", ckpt).start()
+      try drive(q) finally q.stop()
     } finally spark.conf.set(key, prev)
     spark.table(name)
   }
+
+  /** `ordered` as `nChunks` consecutive chunks, one partition on the
+    * driver at a time. */
+  private def chunks[T](ordered: Dataset[T], nChunks: Int): Iterator[Seq[T]] = {
+    val size = math.max(1L, (ordered.count() + nChunks - 1) / nChunks).toInt
+    ordered.toLocalIterator().asScala.grouped(size)
+  }
+
+  /** Feed `ordered` to `mem` in `nChunks` micro-batches, each processed
+    * before the next is added. */
+  private def feed[T](q: StreamingQuery, mem: MemoryStream[T], ordered: Dataset[T],
+                      nChunks: Int): Unit =
+    chunks(ordered, nChunks).foreach { c => mem.addData(c); q.processAllAvailable() }
 }

@@ -243,12 +243,10 @@ class BehaviorSpec extends SparkSpec {
       // several wave counts, incl. passes=1 (degenerate) and a count
       // larger than the distinct-variant bucket population would need
       for (passes <- Seq(1, 3, 7)) {
-        val staging = java.nio.file.Files
-          .createTempDirectory("graft-fuzzy-chunk-test").toString
-        val chunked = Dedup.fuzzyPairsChunked(recs, maxDist = d,
-            passes = passes, stagingDir = staging)
-          .select("id_a", "id_b", "dist").as[(Long, Long, Int)].collect().toSet
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(staging))
+        val chunked = Scratch.using(spark, "graft-fuzzy-chunk-test") { staging =>
+          Dedup.fuzzyPairsChunked(recs, maxDist = d, passes = passes, stagingDir = staging)
+            .select("id_a", "id_b", "dist").as[(Long, Long, Int)].collect().toSet
+        }
         assert(chunked == single, s"maxDist=$d passes=$passes")
       }
     }
@@ -467,16 +465,13 @@ class BehaviorSpec extends SparkSpec {
     val base = graft.operators.Graph.labelPropagation(e, iters = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
     for (passes <- Seq(1, 3, 5)) {
-      val staging = java.nio.file.Files
-        .createTempDirectory(s"lpc-test-$passes").toString
-      try {
+      Scratch.using(spark, s"lpc-test-$passes") { staging =>
         val got = graft.operators.Graph
           .labelPropagationChunked(e, iters = 3, passes = passes, staging)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
         assert(got == base,
           s"passes=$passes diverged: missing ${base -- got}, extra ${got -- base}")
-      } finally org.apache.commons.io.FileUtils
-        .deleteQuietly(new java.io.File(staging))
+      }
     }
   }
 
@@ -491,16 +486,13 @@ class BehaviorSpec extends SparkSpec {
     val base = graft.operators.Graph.pagerank(e, iters = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
     for (passes <- Seq(1, 3, 5)) {
-      val staging = java.nio.file.Files
-        .createTempDirectory(s"prc-test-$passes").toString
-      try {
+      Scratch.using(spark, s"prc-test-$passes") { staging =>
         val got = graft.operators.Graph
           .pagerankChunked(e, iters = 3, passes = passes, staging)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
         assert(got == base,
           s"passes=$passes diverged: missing ${base -- got}, extra ${got -- base}")
-      } finally org.apache.commons.io.FileUtils
-        .deleteQuietly(new java.io.File(staging))
+      }
     }
   }
 
@@ -529,51 +521,49 @@ class BehaviorSpec extends SparkSpec {
   }
 
   test("correlationMatrix fixed-point moments: exact vs a driver-side decimal " +
-    "reference, nulls skipped, overflow guarded loudly") {
+    "reference, nulls skipped, inputs past the long-product bound computed") {
     // the r18 rewrite sums LONG products of unscaled 4dp fixed-point
     // values instead of decimal×decimal; this pins the result to an
     // exact BigInt/BigDecimal reference evaluated with the same final
     // IEEE op order, over data with negatives, >2dp fractions and nulls
-    val data = Seq[(java.lang.Double, java.lang.Double, java.lang.Double)](
+    def check(data: Seq[(java.lang.Double, java.lang.Double, java.lang.Double)]): Unit = {
+      val df = data.toDF("x", "y", "z")
+      val got = Features.correlationMatrix(df, Seq("x", "y", "z"))
+        .orderBy("col_a", "col_b").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
+      def q(v: java.lang.Double): Option[BigInt] = Option(v).map(d =>
+        BigInt(new java.math.BigDecimal(d).setScale(4,
+          java.math.RoundingMode.HALF_UP).unscaledValue()))
+      val colsQ = Seq(data.map(t => q(t._1)), data.map(t => q(t._2)),
+        data.map(t => q(t._3)))
+      val names = Seq("x", "y", "z")
+      val n = data.size.toDouble
+      def s(i: Int): Double = // decimal sum at scale 4, cast to double once
+        (BigDecimal(colsQ(i).flatten.sum) / BigDecimal(10000)).toDouble
+      def p(i: Int, j: Int): Double = { // Σ unscaled products, ×10⁻⁸ exactly
+        val tot = colsQ(i).zip(colsQ(j)).collect {
+          case (Some(a), Some(b)) => a * b }.sum
+        (BigDecimal(tot) / BigDecimal(100000000L)).toDouble
+      }
+      val expected = for { i <- 0 until 3; j <- (i + 1) until 3 } yield {
+        val num = p(i, j) - s(i) * s(j) / n
+        val den = math.sqrt(p(i, i) - s(i) * s(i) / n) *
+          math.sqrt(p(j, j) - s(j) * s(j) / n)
+        (names(i), names(j), num / den)
+      }
+      assert(got.toSeq == expected,
+        s"fixed-point moments diverged:\n got=${got.toSeq}\n exp=$expected")
+    }
+    check(Seq[(java.lang.Double, java.lang.Double, java.lang.Double)](
       (1.2345, 2.5, -3.75), (-0.0001, 4.125, 2.0), (7.5, null, 0.5),
-      (2.25, -1.0625, 1.0), (0.0, 3.5, -2.5), (100.98765, 250.1234, 9.87))
-    val df = data.toDF("x", "y", "z")
-    val got = Features.correlationMatrix(df, Seq("x", "y", "z"))
-      .orderBy("col_a", "col_b").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
-    def q(v: java.lang.Double): Option[BigInt] = Option(v).map(d =>
-      BigInt(new java.math.BigDecimal(d).setScale(4,
-        java.math.RoundingMode.HALF_UP).unscaledValue()))
-    val colsQ = Seq(data.map(t => q(t._1)), data.map(t => q(t._2)),
-      data.map(t => q(t._3)))
-    val names = Seq("x", "y", "z")
-    val n = data.size.toDouble
-    def s(i: Int): Double = // decimal sum at scale 4, cast to double once
-      (BigDecimal(colsQ(i).flatten.sum) / BigDecimal(10000)).toDouble
-    def p(i: Int, j: Int): Double = { // Σ unscaled products, ×10⁻⁸ exactly
-      val tot = colsQ(i).zip(colsQ(j)).collect {
-        case (Some(a), Some(b)) => a * b }.sum
-      (BigDecimal(tot) / BigDecimal(100000000L)).toDouble
-    }
-    val expected = for { i <- 0 until 3; j <- (i + 1) until 3 } yield {
-      val num = p(i, j) - s(i) * s(j) / n
-      val den = math.sqrt(p(i, i) - s(i) * s(i) / n) *
-        math.sqrt(p(j, j) - s(j) * s(j) / n)
-      (names(i), names(j), num / den)
-    }
-    assert(got.toSeq == expected,
-      s"fixed-point moments diverged:\n got=${got.toSeq}\n exp=$expected")
-    // the exact-product bound must fail LOUDLY, not wrap: under ANSI
-    // (the Spark 4 default) the long multiply itself throws; under
-    // non-ANSI the in-plan raise_error guard fires on the max-|value|
-    // moment before any wrapped sum can be returned
-    val big = Seq((400000.0, 1.0), (1.0, 2.0)).toDF("x", "y")
-    val e = intercept[Exception] {
-      Features.correlationMatrix(big, Seq("x", "y")).collect()
-    }
-    val msg = Option(e.getMessage).getOrElse("")
-    assert(msg.contains("303700") || msg.toLowerCase.contains("overflow"),
-      s"expected a loud overflow failure, got: $msg")
+      (2.25, -1.0625, 1.0), (0.0, 3.5, -2.5), (100.98765, 250.1234, 9.87)))
+    // values past 303,700 (where the unscaled long product would leave
+    // 2⁶³) take the exact decimal product, in the same cells as
+    // in-bound values, and equal the same exact reference
+    check(Seq[(java.lang.Double, java.lang.Double, java.lang.Double)](
+      (400000.0, 1.0, -3.75), (1.0, 2.0, 2.0), (-350000.5, 3.25, null),
+      (12.5, 5000000.1234, 0.5), (303700.0499, -303700.05, 7.0),
+      (98765432.1, 4.0, -1.5)))
   }
 
   test("Pca one-pass Gram equivalence: nulls, null elements and ragged arrays " +

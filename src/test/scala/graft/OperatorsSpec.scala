@@ -131,9 +131,7 @@ class OperatorsSpec extends SparkSpec {
     val docs = Tables(spark, sf, "documents").filter(col("doc_id") < 300)
     val single = Dedup.prefixJaccardPairs(docs, n = 2, tNum = 3, tDen = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val staging = java.nio.file.Files
-      .createTempDirectory("graft-ppjoin-chunk").toString
-    try {
+    Scratch.using(spark, "graft-ppjoin-chunk") { staging =>
       // 3 waves: pair space split by pmod(h, 3); pairs sharing prefix
       // tokens across waves must collapse to one identical row
       val chunked = Dedup
@@ -143,10 +141,6 @@ class OperatorsSpec extends SparkSpec {
       assert(chunked == single,
         s"chunked missed ${single -- chunked}, extra ${chunked -- single}")
       assert(single.nonEmpty, "empty pair set — equivalence proves nothing")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(staging)).iterator().asScala
-        .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
     }
   }
 
