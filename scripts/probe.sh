@@ -10,14 +10,15 @@
 # Usage:
 #   sh scripts/probe.sh <name> [sf_dir] [mem]
 #
-#   name    one of: graph | pca | ppjoin | mmdhash | stream | mini
+#   name    a probe name; `graft.Probe` holds the list and prints it
+#           for an unknown or missing name
 #   sf_dir  fixture dir (default /tmp/sf1); sf0.1 fixtures are at
 #           /root/testdata/sf0.1, larger ones are built with
 #           `sbt "runMain graft.ScaleUp /root/testdata/sf0.1 /tmp/sf10 100"`
 #   mem     driver heap (default 96g for scale dirs, 8g for sf0.1)
 #
 # Examples:
-#   sh scripts/probe.sh graph /tmp/sf10        # labelprop exchange economy
+#   sh scripts/probe.sh fuzzy /tmp/sf10        # d=1 split route vs generic
 #   sh scripts/probe.sh ppjoin /tmp/sf1        # sketch-prune kill rate
 #   sh scripts/probe.sh stream /tmp/sf1        # harness vs operator faces
 set -e
@@ -30,11 +31,6 @@ case "$SF_DIR" in
   *) DEFMEM=96g ;;
 esac
 MEM="${3:-$DEFMEM}"
-
-case "$NAME" in
-  graph|pca|ppjoin|mmdhash|stream|mini) ;; # dispatched by graft.Probe (one main, shared session/fixture plumbing)
-  *) echo "usage: sh scripts/probe.sh {graph|pca|ppjoin|mmdhash|stream|mini} [sf_dir] [mem]" >&2; exit 2 ;;
-esac
 
 echo "probe: graft.Probe $NAME at $SF_DIR (driver $MEM)"
 exec env SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \

@@ -25,7 +25,7 @@ object PipelineEntry {
     * expensive edge derivations (the customer↔supplier affinity graph
     * and the sampled part co-purchase graph), and each query
     * re-deriving its own copy re-ran the same orders⋈lineitem join up
-    * to 4× per suite — measured at sf10 (GraphProbe) the derivation
+    * to 4× per suite — measured at sf10 (r13 graph probe) the derivation
     * was 213 s of labelprop's 335.8 s. A user at 100 TB materializes
     * the edge list once and feeds it to every graph operator (the same
     * materialize-once contract as Similarity's persisted index); this
@@ -64,10 +64,9 @@ object PipelineEntry {
     * degenerate single-wave execution), and it reaches the 8-10 waves
     * the sf100 rehearsals needed at their measured input sizes
     * (customer ≈ 2.4 GB at sf100 / 256 MB per wave ≈ 10; the r16-r17
-    * records ran 8). Env overrides stay for explicit rehearsal
-    * control. Result is wave-count-invariant by construction (pinned
-    * by the equivalence unit suite), so this changes execution shape
-    * only, never the pair set. */
+    * records ran 8). Result is wave-count-invariant by construction
+    * (pinned by the equivalence unit suite), so this changes execution
+    * shape only, never the pair set. */
   private def autoPasses(s: SparkSession, dir: String, table: String,
                          bytesPerWave: Long): Int = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
@@ -1145,11 +1144,9 @@ object PipelineEntry {
       // outputs, identical pair set — certified against the identical
       // oracle as dedup_fuzzy (same pattern as dedup_prefix_chunked)
       // wave count is a pure execution knob (result identical by
-      // construction at ANY value — pinned by the equivalence test);
-      // derived from the input size (r17 — see autoPasses), env
-      // override kept for explicit rehearsal control
-      val passes = sys.env.get("GRAFT_FUZZY_PASSES").map(_.toInt)
-        .getOrElse(autoPasses(s, dir, "customer", 256L << 20))
+      // construction at ANY value — pinned by the equivalence test),
+      // derived from the input size (r17 — see autoPasses)
+      val passes = autoPasses(s, dir, "customer", 256L << 20)
       // land the final pair set to its OWN parquet so the wave staging
       // can be reclaimed NOW — landed as FILES, not localCheckpoint:
       // an eager checkpoint materializes the result as deserialized
@@ -1320,8 +1317,7 @@ object PipelineEntry {
       // derived from the input size (r17 — see autoPasses): the
       // documents table's shingle/candidate explosion is steeper than
       // the fuzzy route's, so its per-wave byte budget is smaller
-      val passes = sys.env.get("GRAFT_PPJOIN_PASSES").map(_.toInt)
-        .getOrElse(autoPasses(s, dir, "documents", 64L << 20))
+      val passes = autoPasses(s, dir, "documents", 64L << 20)
       // the chunked frame reads the staged wave outputs lazily; land
       // the final result to its OWN parquet so the wave staging can be
       // reclaimed NOW — a long-lived driver (Connect server, notebook)
@@ -2645,14 +2641,14 @@ object PipelineEntry {
 
     // ---- sources: round-trips through other formats (§2.1) ----
     "src_csv_roundtrip" -> { (s, dir) =>
-      val out = "/root/repo/target/roundtrip/region_csv"
+      val out = Scratch.landing(s, s"src_csv_roundtrip|$dir")
       t(s, dir, "region").write.mode("overwrite").option("header", "true").csv(out)
       graft.api.Table.data(s, out + "/part-00000*.csv").df
         .select(col("r_regionkey").cast(IntegerType), col("r_name"))
         .orderBy("r_regionkey")
     },
     "src_json_roundtrip" -> { (s, dir) =>
-      val out = "/root/repo/target/roundtrip/nation_json"
+      val out = Scratch.landing(s, s"src_json_roundtrip|$dir")
       t(s, dir, "nation").write.mode("overwrite").json(out)
       s.read.json(out)
         .select(col("n_nationkey").cast(IntegerType), col("n_name"),
@@ -2678,13 +2674,13 @@ object PipelineEntry {
         .orderBy("n_nationkey")
     },
     "src_orc_roundtrip" -> { (s, dir) =>
-      val out = "/root/repo/target/roundtrip/supplier_orc"
+      val out = Scratch.landing(s, s"src_orc_roundtrip|$dir")
       t(s, dir, "supplier").write.mode("overwrite").orc(out)
       s.read.orc(out).orderBy("s_suppkey")
     },
     "src_txt_roundtrip" -> { (s, dir) =>
       // plain-text lines: the rawest source format (one string column)
-      val out = "/root/repo/target/roundtrip/region_txt"
+      val out = Scratch.landing(s, s"src_txt_roundtrip|$dir")
       t(s, dir, "region").select(col("r_name")).write.mode("overwrite").text(out)
       graft.api.Table.data(s, out + "/part-*.txt").df
         .select(col("value").as("r_name")).orderBy("r_name")
@@ -2695,7 +2691,7 @@ object PipelineEntry {
       // at 100 TB this is the difference between scanning 1/5 of the
       // files and all of them (PartitionFilters plan-guarded in the
       // unit suite); the oracle aggregates the unpartitioned original
-      val out = "/root/repo/target/roundtrip/orders_by_priority"
+      val out = Scratch.landing(s, s"src_partition_prune|$dir")
       t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
         .write.mode("overwrite").partitionBy("o_orderpriority").parquet(out)
@@ -2710,7 +2706,7 @@ object PipelineEntry {
       // that gzip is NOT splittable (one file = one task), so ingest
       // keeps many files rather than few big ones — the fixture writes
       // per-partition .gz parts exactly as a distributed dump would
-      val out = "/root/repo/target/roundtrip/region_txt_gz"
+      val out = Scratch.landing(s, s"src_gzip_roundtrip|$dir")
       t(s, dir, "region").select(col("r_name"))
         .write.mode("overwrite").option("compression", "gzip").text(out)
       graft.api.Table.data(s, out + "/part-*.txt.gz").df
@@ -2722,18 +2718,19 @@ object PipelineEntry {
       // decode. Files are materialized by a tiny setup loop (25 rows;
       // binaryFile is a read-only source by design) and ids recovered
       // from filenames, the layout a real image corpus has.
-      val out = new java.io.File("/root/repo/target/roundtrip/png_files")
-      out.mkdirs()
-      out.listFiles().foreach(_.delete())
+      // a fresh landed dir each run; the files go through java.io, so
+      // they are written at the dir's local path
+      val out = Scratch.landing(s, s"src_binary_roundtrip|$dir")
+      val local = new org.apache.hadoop.fs.Path(out).toUri.getPath
       val dims = t(s, dir, "nation").select(
         col("n_nationkey").cast(LongType).as("doc_id"),
         (col("n_nationkey") % 31 + 1).as("w"), (col("n_nationkey") % 17 + 1).as("h"))
       Multimodal.synthesizePng(s, dims, "doc_id", "w", "h").collect().foreach { r =>
         java.nio.file.Files.write(
-          java.nio.file.Paths.get(out.getPath, s"img_${r.getLong(0)}.png"),
+          java.nio.file.Paths.get(local, s"img_${r.getLong(0)}.png"),
           r.getAs[Array[Byte]](1))
       }
-      val files = graft.api.Table.dataBinary(s, out.getPath, glob = "*.png").df
+      val files = graft.api.Table.dataBinary(s, out, glob = "*.png").df
         .select(regexp_extract(col("path"), "img_(\\d+)\\.png$", 1)
           .cast(LongType).as("media_id"), col("content").as("payload"))
       Multimodal.decodeImageMetaReal(s, files).orderBy("media_id")
@@ -2744,7 +2741,7 @@ object PipelineEntry {
       // json, and parquet datasets, each a Spark-written DIRECTORY —
       // then walk it; the oracle derives the column counts
       // independently from information_schema over the same tables
-      val root = "/root/repo/target/spider_fixture"
+      val root = Scratch.landing(s, s"src_spider|$dir")
       t(s, dir, "region").write.mode("overwrite")
         .option("header", "true").csv(root + "/region")
       t(s, dir, "nation").write.mode("overwrite").json(root + "/nation")
@@ -2865,7 +2862,7 @@ object PipelineEntry {
       // Spark 4 ships XML as a CORE data source (the former spark-xml
       // package): one <ROW> element per record. Numbers infer back as
       // long, so cast to the parquet schema like the JSON roundtrip.
-      val out = "/root/repo/target/roundtrip/nation_xml"
+      val out = Scratch.landing(s, s"src_xml_roundtrip|$dir")
       t(s, dir, "nation").write.mode("overwrite").option("rowTag", "ROW").xml(out)
       graft.api.Table.data(s, out + "/part-*.xml").df
         .select(col("n_nationkey").cast(IntegerType), col("n_name"),
@@ -6389,6 +6386,11 @@ object PipelineEntry {
         (col("n_both").cast(DoubleType) / col("n_approx").cast(DoubleType)).as("prec"))
   }
 
+  /** Waves per round of the two graph scale faces: the count their
+    * sf100 rehearsals ran (a face runs only past its 4 GiB input
+    * threshold, so the gate SFs never reach it). */
+  private val GraphFacePasses = 6
+
   /** Scale-face auto-selection (VERDICT r15 #5): rows whose single-pass
     * form is exact but whose one-box execution footprint has a
     * documented ceiling run their bounded-footprint CHUNKED sibling
@@ -6417,10 +6419,9 @@ object PipelineEntry {
     "graph_labelprop" -> (("lineitem", 4L << 30, { (s, dir) =>
       val e0 = affinityEdges(s, dir)
       val e = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      val passes = sys.env.get("GRAFT_LP_PASSES").map(_.toInt).getOrElse(6)
       val out = Scratch.landing(s, s"graph_labelprop|$dir")
       Scratch.using(s, "graft-lpc-face") { staging =>
-        Graph.labelPropagationChunked(e, iters = 3, passes = passes, staging)
+        Graph.labelPropagationChunked(e, iters = 3, passes = GraphFacePasses, staging)
           .write.mode("overwrite").parquet(out)
       }
       s.read.parquet(out).orderBy("id")
@@ -6433,10 +6434,9 @@ object PipelineEntry {
     "graph_pagerank" -> (("lineitem", 4L << 30, { (s, dir) =>
       val e0 = affinityEdges(s, dir)
       val e = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      val passes = sys.env.get("GRAFT_LP_PASSES").map(_.toInt).getOrElse(6)
       val out = Scratch.landing(s, s"graph_pagerank|$dir")
       Scratch.using(s, "graft-prc-face") { staging =>
-        Graph.pagerankChunked(e, iters = 3, passes = passes, staging)
+        Graph.pagerankChunked(e, iters = 3, passes = GraphFacePasses, staging)
           .write.mode("overwrite").parquet(out)
       }
       s.read.parquet(out).orderBy("id")
@@ -6448,8 +6448,7 @@ object PipelineEntry {
     // 13x its NVMe record on a 556 MB/s disk in r15, pure spill class)
     "dedup_pr_audit" -> (("documents", 16L << 20, { (s, dir) =>
       val docs = t(s, dir, "documents")
-      val passes = sys.env.get("GRAFT_PPJOIN_PASSES").map(_.toInt)
-        .getOrElse(autoPasses(s, dir, "documents", 64L << 20))
+      val passes = autoPasses(s, dir, "documents", 64L << 20)
       val out = Scratch.landing(s, s"dedup_pr_audit|$dir")
       // the audit output is ONE row — land it, reclaim the wave staging
       Scratch.using(s, "graft-praudit") { staging =>

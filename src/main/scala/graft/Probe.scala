@@ -15,16 +15,14 @@ import org.apache.spark.sql.SparkSession
   * over session/config drift.
   *
   * Usage (via scripts/probe.sh, or directly):
-  *   SPARK_GRAFT_SF_DIR=/tmp/sf10 sbt "runMain graft.Probe graph"
+  *   SPARK_GRAFT_SF_DIR=/tmp/sf10 sbt "runMain graft.Probe ppjoin"
   *
-  * Names: graph | pca | ppjoin | mmdhash | fuzzy | stream | mini.
+  * The probe names are the keys of `probes` below; an unknown or
+  * missing name prints them.
   */
 object Probe {
   private val probes: Map[String, (SparkSession, String) => Unit] = Map(
-    "graph" -> (GraphProbe.run _),   // labelprop/pagerank exchange economy
-    "pca" -> (PcaProbe.run _),       // Gram-pass strategies for arr_pca
     "ppjoin" -> (PpjoinProbe.run _), // sketch-prune kill rate + pair equality
-    "mmdhash" -> (MmDhashProbe.run _), // dHash contraction vs window forms
     "fuzzy" -> (FuzzyProbe.run _),   // d=1 split route vs generic variant join
     "stream" -> (StreamBench.run _), // MemoryStream harness vs file faces
     "streamsink" -> (StreamSinkProbe.run _), // per-batch cost attribution of the parquet-sink faces

@@ -293,7 +293,10 @@ object SparkEntry {
     },
     "src_jdbc_roundtrip" -> { (s, dir) =>
       // JDBC source (compute/sql.py:1376-1392) via embedded Derby
-      val url = "jdbc:derby:/root/repo/target/roundtrip/derbydb;create=true"
+      // Derby opens the database at a local path
+      val db = new org.apache.hadoop.fs.Path(
+        Scratch.landing(s, s"src_jdbc_roundtrip|$dir")).toUri.getPath
+      val url = s"jdbc:derby:$db/derbydb;create=true"
       val props = new java.util.Properties()
       props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
       t(s, dir, "nation")

@@ -61,34 +61,26 @@ object Verify {
     * vm.max_map_count=65530 makes them intermittently die with
     * OutOfMemoryException while RAM is free (the round-9 gate lost
     * 168/290 rows to exactly this). Verify runs immediately before the
-    * driver's DuckDB compare, so this is the right hook: raise the cap
-    * if possible (scripts/prepare_gate.sh recipe), else warn LOUDLY with
-    * the remedy. Never fails the export itself — a missing sysctl must
-    * not zero the round. Linux-only by construction (reads procfs). */
+    * DuckDB oracle compare, so this is the right hook to warn LOUDLY
+    * with the remedy. It only reads the setting: a correctness run must
+    * not change a kernel setting of the host it runs on, so it starts
+    * no process and writes nothing. Never fails the export itself.
+    * Linux-only by construction (reads procfs). */
   private def gatePreflight(): Unit = {
     val p = Paths.get("/proc/sys/vm/max_map_count")
     if (!Files.exists(p)) return
     // NOT Files.readString: procfs reports size 0 and NIO's sized read
     // comes back truncated (observed: "1" for "1048576"); a plain
     // stream read returns the real content
-    def cur(): Long = {
-      val in = new java.io.FileInputStream(p.toFile)
-      try new String(in.readAllBytes()).trim.toLong finally in.close()
-    }
+    val in = new java.io.FileInputStream(p.toFile)
+    val cur = try new String(in.readAllBytes()).trim.toLong finally in.close()
     val want = 1048576L
-    if (cur() >= want) return
-    try { // same remedy as scripts/prepare_gate.sh
-      new ProcessBuilder("sysctl", "-w", s"vm.max_map_count=$want")
-        .inheritIO().start().waitFor()
-    } catch { case _: Exception => () }
-    if (cur() < want)
+    if (cur < want)
       System.err.println(
-        s"""[verify] WARNING: vm.max_map_count=${cur()} < $want — the DuckDB
+        s"""[verify] WARNING: vm.max_map_count=$cur < $want — the DuckDB
            |[verify] oracle gate that follows this export is likely to lose
            |[verify] queries to spurious OutOfMemoryException (see BASELINE.md
            |[verify] "Oracle-harness reliability note"). Remedy before the
            |[verify] compare:  sh scripts/prepare_gate.sh""".stripMargin)
-    else
-      System.err.println(s"[verify] gate preflight: raised vm.max_map_count to $want")
   }
 }

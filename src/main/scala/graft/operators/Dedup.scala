@@ -500,46 +500,6 @@ object Dedup {
     ppjoinVerify(ppjoinCandidates(prefix, tNum, tDen, idCol), sh, tNum, tDen, idCol)
   }
 
-  /** Per-doc pigeonhole count sketch table — (id, _sk, _sz), 72 bytes a
-    * row. NULL `_sk` means the sketch saturated (≥256 same-bucket
-    * distinct shingles) and the pair must NOT be pruned.
-    */
-  private[graft] def ppjoinSketch(sh: DataFrame, idCol: String): DataFrame =
-    sh.select(col(idCol), graft.plans.PigeonCountSketch(col("sh")).as("_sk"),
-      size(col("sh")).cast(LongType).as("_sz"))
-
-  /** Pigeonhole-sketch candidate killer: drop every candidate pair the
-    * 64-bucket count sketches PROVE is below the jaccard threshold —
-    * `Σ_b min(cA_b,cB_b)` bounds |A∩B| from above (pigeonhole), and
-    * jaccard ≥ tNum/tDen ⟺ |A∩B|·(tDen+tNum) ≥ tNum·(szA+szB), so a
-    * pair whose BOUND misses that line cannot qualify. Soundness: a
-    * NULL bound (either sketch saturated) keeps the pair; the unit
-    * suite pins bound ≥ |A∩B| and never-prunes-a-qualifier on random
-    * sets, and the brute-force recall witness covers the wired path.
-    *
-    * Why it pays (measured, BASELINE.md "PPJoin probe"): at sf1 the
-    * prefix filter admits ~35M candidate pairs of which 99.8% are
-    * false — each would otherwise drag two ~0.7 KB shingle arrays
-    * through the verify joins' exchanges. This prune reads 72 bytes a
-    * side off the narrow deduped pair stream and kills those before
-    * any wide bytes move; the verify stage shrinks ~100×. Same two
-    * shuffled-hash joins as the verify, just narrow.
-    */
-  private[graft] def ppjoinSketchPrune(cand: DataFrame, sk: DataFrame,
-                                       tNum: Long, tDen: Long): DataFrame = {
-    val bound = graft.plans.PigeonMinSum(col("_ska"), col("_skb"))
-    cand
-      .join(sk.select(col(sk.columns.head).as("id_a"), col("_sk").as("_ska"),
-        col("_sz").as("_sza")).hint("shuffle_hash"), "id_a")
-      .join(sk.select(col(sk.columns.head).as("id_b"), col("_sk").as("_skb"),
-        col("_sz").as("_szb")).hint("shuffle_hash"), "id_b")
-      // keep = NOT provably below threshold; NULL bound keeps
-      .filter(coalesce(
-        bound * lit(tDen + tNum) >= lit(tNum) * (col("_sza") + col("_szb")),
-        lit(true)))
-      .select(col("id_a"), col("id_b"))
-  }
-
   /** Shared PPJoin sub-plans: the shingle-array table and the
     * frequency-ranked prefix table. Split out so the single-pass and
     * chunked operators are the SAME expressions — equivalence between
@@ -684,8 +644,8 @@ object Dedup {
     * join, narrow dedup, and wide array-verify run as their OWN job
     * over ~1/passes of the candidate volume, with results landed to
     * `stagingDir` and the wave's shuffle files released SYNCHRONOUSLY
-    * (via the ContextCleaner's cleanup path, not a GC nudge) before
-    * the next wave starts — so peak shuffle/spill footprint is
+    * before the next wave starts ([[Waves.run]]) — so peak
+    * shuffle/spill footprint is
     * divided by ~passes as a guarantee, which is what lets the sf10
     * fixture (whose 931-bigram vocabulary makes 99.997% of candidates
     * false) complete on one box instead of exceeding local disk. The
@@ -713,47 +673,18 @@ object Dedup {
       s"prefixJaccardPairsChunked: threshold must be in (0, 1]: $tNum/$tDen")
     require(passes >= 1, s"prefixJaccardPairsChunked: passes must be >= 1, got $passes")
     require(stagingDir.nonEmpty, "prefixJaccardPairsChunked: stagingDir required")
-    val spark = docs.sparkSession
     val (sh0, prefix0) = ppjoinShingleAndPrefix(docs, n, tNum, tDen, textCol, idCol)
-    sh0.write.mode("overwrite").parquet(s"$stagingDir/sh")
-    // prefix rows stage WITH their 64-byte pigeonhole sketches (the
-    // ppjoinShingleAndPrefix contract since r17): every wave's
-    // candidate join prunes in-condition off its own columnar scan —
-    // no separate sketch table, no post-distinct prune joins. Staged
-    // PARTITIONED BY WAVE (w = pmod(h, passes), per-task partitioned
-    // write, no shuffle) so each wave partition-prunes to its own
-    // slice instead of re-filtering the full prefix scan — staged
-    // prefix read I/O is one pass total at any wave count (the same
-    // fix measured on the fuzzy streams; the `sh` verify table stays
-    // unpartitioned — any wave's candidates may reference any doc).
-    val prefixCols = prefix0.columns.toSeq
-    prefix0.withColumn("w", pmod(col("h"), lit(passes.toLong)))
-      .write.mode("overwrite").partitionBy("w").parquet(s"$stagingDir/prefix")
-    val sh = spark.read.parquet(s"$stagingDir/sh")
-    val prefix = spark.read.parquet(s"$stagingDir/prefix")
-    (0 until passes).foreach { p =>
-      val before = org.apache.spark.sql.GraftBridge.activeShuffleIds(spark)
-      // partition-pruned slice; select the prefix schema explicitly so
-      // the inferred `w` column never rides into the candidate join
-      val wave = prefix.filter(col("w") === p)
-        .select(prefixCols.map(col): _*)
-      ppjoinVerify(ppjoinCandidates(wave, tNum, tDen, idCol), sh, tNum, tDen, idCol)
-        .write.mode("overwrite").parquet(s"$stagingDir/out/pass=$p")
-      // wave p's shuffle files must release before wave p+1 spills its
-      // own, or peak disk is NOT bounded by one wave. GC+ContextCleaner
-      // is advisory and asynchronous, so release DETERMINISTICALLY
-      // instead: the ids that appeared during this wave's job are
-      // exactly its shuffles (waves run sequentially — the operator's
-      // batch contract), and the wave's output is already landed to
-      // parquet, so nothing can re-read them. Blocking call: when it
-      // returns, the blocks are gone.
-      val created =
-        org.apache.spark.sql.GraftBridge.activeShuffleIds(spark) -- before
-      org.apache.spark.sql.GraftBridge.removeShuffles(spark, created)
-    }
-    spark.read.parquet(s"$stagingDir/out")
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-      .dropDuplicates("id_a", "id_b")
+    // the `sh` verify table stages unpartitioned (any wave's candidates
+    // may reference any doc); prefix rows stage by wave WITH their
+    // 64-byte pigeonhole sketches (the ppjoinShingleAndPrefix contract
+    // since r17), so every wave's candidate join prunes in-condition
+    // off its own pruned slice
+    val sh = Waves.stage(sh0, s"$stagingDir/sh").all
+    val prefix = Waves.stage(prefix0, s"$stagingDir/prefix", col("h"), passes)
+    Waves.run(docs.sparkSession, passes, s"$stagingDir/out") { p =>
+      ppjoinVerify(ppjoinCandidates(prefix.slice(p), tNum, tDen, idCol),
+        sh, tNum, tDen, idCol)
+    }.all.dropDuplicates("id_a", "id_b")
   }
 
   /** SemDeDup-style semantic dedup (Abbas et al. 2023, "SemDeDup:
@@ -922,13 +853,18 @@ object Dedup {
   private[graft] def fuzzyCandidatesGeneric(records: DataFrame, maxDist: Int,
                                             keyCol: String,
                                             idCol: String): DataFrame = {
-    val v = deletionVariantHashes(records, maxDist, keyCol, idCol,
-      variantParts(records, maxDist, keyCol))
+    variantSelfJoin(deletionVariantHashes(records, maxDist, keyCol, idCol,
+      variantParts(records, maxDist, keyCol)), idCol)
+  }
+
+  /** The share-any-variant self-join over an `(id, h)` stream already
+    * partitioned on `h` (the whole stream single-pass, one wave's slice
+    * staged): one DISTINCT `(id_a, id_b)` per colliding pair. */
+  private def variantSelfJoin(v: DataFrame, idCol: String): DataFrame =
     v.as("a").hint("merge").join(v.as("b"),
         col("a.h") === col("b.h") && col(s"a.$idCol") < col(s"b.$idCol"))
       .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
       .distinct()
-  }
 
   /** [[fuzzyPairs]] executed in `passes` bounded-footprint WAVES — the
     * out-of-core shape of the edit-distance self-join, the same recipe
@@ -962,9 +898,10 @@ object Dedup {
     * caller-owned and must outlive consumption of the returned
     * DataFrame (it reads the staged wave outputs lazily).
     *
-    * Equivalence to [[fuzzyPairs]] is structural (shared explode and
-    * verify builders) and asserted by a unit test comparing result
-    * sets on the shared fixture at several wave counts. */
+    * Equivalence to [[fuzzyPairs]] is structural (shared explode,
+    * candidate-join and verify builders) and asserted by a unit test
+    * comparing result sets on the shared fixture at several wave
+    * counts. */
   def fuzzyPairsChunked(records: DataFrame, maxDist: Int, passes: Int,
                         stagingDir: String, keyCol: String = "name",
                         idCol: String = "id"): DataFrame = {
@@ -972,34 +909,22 @@ object Dedup {
       s"fuzzyPairsChunked: maxDist must be 1 or 2, got $maxDist")
     require(passes >= 1, s"fuzzyPairsChunked: passes must be >= 1, got $passes")
     require(stagingDir.nonEmpty, "fuzzyPairsChunked: stagingDir required")
-    val spark = records.sparkSession
     // d=1 stages the three split-route streams (see [[fuzzyPairs]]);
     // d=2 stages the one generic variant stream. A candidate exists
-    // only through an h equality within ONE stream, so pmod-slicing
-    // every stream by the same h partitions the candidate space
+    // only through an h equality within ONE stream, so slicing every
+    // stream by the same pmod(h, passes) partitions the candidate space
     // exactly in either route.
     val waveParts =
       if (maxDist == 1) fuzzyD1Parts(records, keyCol, waves = passes)
       else variantParts(records, maxDist, keyCol, waves = passes)
-    // Stage each stream PARTITIONED BY ITS WAVE (w = pmod(h, passes),
-    // a plain per-task partitioned write — no shuffle): a wave then
-    // reads ONLY its own w=p subtree via partition pruning instead of
-    // filtering a full columnar scan per wave, which at sf100 was 8
-    // re-reads of ~15 GB of staged streams (measured — the dominant
-    // non-join cost of the wave loop). Total staged-stream read I/O
-    // becomes one pass over the data regardless of the wave count —
-    // the property that lets a cluster raise `passes` freely.
-    def stage(df: DataFrame, name: String): Unit = df
-      .withColumn("w", pmod(col("h"), lit(passes.toLong)))
-      .write.mode("overwrite").partitionBy("w").parquet(s"$stagingDir/$name")
-    if (maxDist == 1) {
+    val streams = if (maxDist == 1) {
       // the three split-route streams stage as ONE tagged table (r17):
       // a per-stream write re-scanned and re-exploded the corpus three
       // times and paid three write jobs; the union stages everything
       // in one corpus pass, partitioned by (wave, stream) so each
-      // wave's per-stream slice read below stays directory-pruned.
-      // `ha` is only meaningful for the substitution stream — the
-      // others carry it as null and never read it.
+      // wave's per-stream slice stays directory-pruned. `ha` is only
+      // meaningful for the substitution stream — the others carry it
+      // as null and never read it.
       val (an, su, pr) = fuzzyStreamsD1(records, keyCol, idCol)
       val tagged = an.select(col(idCol), col("h"),
           lit(null).cast(LongType).as("ha"), lit("an").as("s"))
@@ -1007,52 +932,21 @@ object Dedup {
           lit("su").as("s")))
         .unionByName(pr.select(col(idCol), col("h"),
           lit(null).cast(LongType).as("ha"), lit("pr").as("s")))
-      tagged.withColumn("w", pmod(col("h"), lit(passes.toLong)))
-        .write.mode("overwrite").partitionBy("w", "s")
-        .parquet(s"$stagingDir/d1")
-    } else stage(deletionVariantHashesRaw(records, maxDist, keyCol, idCol), "v")
-    verifyKeys(records, keyCol, idCol)
-      .write.mode("overwrite").parquet(s"$stagingDir/k")
-    val k = spark.read.parquet(s"$stagingDir/k")
-    (0 until passes).foreach { p =>
-      val before = org.apache.spark.sql.GraftBridge.activeShuffleIds(spark)
-      // partition-pruned slice read; the inferred `w` partition column
-      // must not ride along into the join frames (select explicitly)
-      def slice(path: String, cols: String*) = spark.read.parquet(path)
-        .filter(col("w") === p)
-        .select(cols.map(col): _*)
-        .repartition(waveParts, col("h"))
-      // d=1 slices read the ONE tagged staging table, pruned by
-      // (wave, stream) directory partitioning
-      def d1slice(tag: String, cols: String*) = spark.read
-        .parquet(s"$stagingDir/d1")
-        .filter(col("w") === p && col("s") === tag)
-        .select(cols.map(col): _*)
-        .repartition(waveParts, col("h"))
-      val cand = if (maxDist == 1)
-        fuzzyCandidateJoinsD1(d1slice("an", idCol, "h"),
-          d1slice("su", idCol, "h", "ha"),
-          d1slice("pr", idCol, "h"), idCol)
-      else {
-        val wv = slice(s"$stagingDir/v", idCol, "h")
-        wv.as("a").hint("merge").join(wv.as("b"),
-            col("a.h") === col("b.h") && col(s"a.$idCol") < col(s"b.$idCol"))
-          .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-          .distinct()
-      }
+      Waves.stage(tagged, s"$stagingDir/d1", col("h"), passes, "s")
+    } else Waves.stage(deletionVariantHashesRaw(records, maxDist, keyCol, idCol),
+      s"$stagingDir/v", col("h"), passes)
+    val k = Waves.stage(verifyKeys(records, keyCol, idCol), s"$stagingDir/k").all
+    Waves.run(records.sparkSession, passes, s"$stagingDir/out") { p =>
+      def slice(where: Column, cols: String*) = streams.slice(p, where)
+        .select(cols.map(col): _*).repartition(waveParts, col("h"))
+      val cand =
+        if (maxDist == 1)
+          fuzzyCandidateJoinsD1(slice(col("s") === "an", idCol, "h"),
+            slice(col("s") === "su", idCol, "h", "ha"),
+            slice(col("s") === "pr", idCol, "h"), idCol)
+        else variantSelfJoin(slice(lit(true), idCol, "h"), idCol)
       verifyLev(cand, k, maxDist)
-        .write.mode("overwrite").parquet(s"$stagingDir/out/pass=$p")
-      // wave p's shuffle files must release before wave p+1 spills its
-      // own, or peak disk is NOT bounded by one wave (see
-      // [[prefixJaccardPairsChunked]] — waves run sequentially, the
-      // wave's output is landed, nothing can re-read the blocks)
-      val created =
-        org.apache.spark.sql.GraftBridge.activeShuffleIds(spark) -- before
-      org.apache.spark.sql.GraftBridge.removeShuffles(spark, created)
-    }
-    spark.read.parquet(s"$stagingDir/out")
-      .select(col("id_a"), col("id_b"), col("dist"))
-      .dropDuplicates("id_a", "id_b")
+    }.all.dropDuplicates("id_a", "id_b")
   }
 
   /** Shared deletion-neighborhood blocking frame for [[fuzzyPairs]] and

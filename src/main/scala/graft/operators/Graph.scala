@@ -50,18 +50,6 @@ object Graph {
     math.max(small, wide).toInt
   }
 
-  /** Delete a retired staging round via the path's OWN Hadoop
-    * FileSystem: the chunked forms write staging through Spark's
-    * Hadoop FS (any scheme works), so deleting with java.io.File
-    * would silently no-op on a non-local stagingDir (HDFS/S3) and
-    * break the documented "peak staged state is 2 node-sized tables"
-    * bound without any error. */
-  private def deleteStaged(spark: org.apache.spark.sql.SparkSession,
-                           dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-  }
-
   /** Simplified damped PageRank over a DIRECTED edge list `(src, dst)`
     * for `iters` power iterations (make the graph undirected upstream
     * by unioning reversed edges if affinity is symmetric — that also
@@ -115,7 +103,6 @@ object Graph {
     e.count() // materialize the cache once, outside the round loop
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
       .localCheckpoint(true)
-    val base = scale - dampNum * scale / dampDen
     // rank state carries outdeg so each round is ONE edge join + ONE
     // aggregate (a separate degree join would re-shuffle the edges)
     var st = deg.select(col("src").as("id"), col("outdeg"),
@@ -128,20 +115,8 @@ object Graph {
     // edge-sized cache for the life of a long-lived driver
     try {
       for (_ <- 1 to iters) {
-        // ⌊pr/outdeg⌋ then ⌊d·Σ⌋: all intermediates < 2^53 for corpora up
-        // to ~10^9 nodes at the default scale, so the floor-of-double is
-        // exact integer division in any engine
-        val contrib = e.join(st, e("src") === st("id"))
-          .select(col("dst"),
-            floor(col("pr").cast(DoubleType) / col("outdeg").cast(DoubleType))
-              .cast(LongType).as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("s"))
         val prev = st
-        st = deg.join(contrib, deg("src") === contrib("dst"), "left")
-          .select(col("src").as("id"), col("outdeg"),
-            (lit(base) + floor((lit(dampNum) * coalesce(col("s"), lit(0L)))
-              .cast(DoubleType) / lit(dampDen).cast(DoubleType)).cast(LongType))
-              .as("pr"))
+        st = rankUpdate(deg, contributions(e, st), scale, dampNum, dampDen)
           .localCheckpoint(true)
         if (retirable ne null)
           org.apache.spark.sql.GraftBridge.releaseCheckpoint(retirable)
@@ -149,6 +124,31 @@ object Graph {
       }
     } finally e.unpersist(false) // final state is eagerly checkpointed
     st.select(col("id"), col("pr"))
+  }
+
+  /** One PageRank round's contribution stream `(dst, c)`: every edge
+    * carries ⌊pr/outdeg⌋ of its source. With the update's ⌊d·Σ⌋ all
+    * intermediates stay < 2^53 for corpora up to ~10^9 nodes at the
+    * default scale, so each floor-of-double is exact integer division
+    * in any engine. */
+  private def contributions(e: DataFrame, st: DataFrame): DataFrame =
+    e.join(st, e("src") === st("id"))
+      .select(col("dst"),
+        floor(col("pr").cast(DoubleType) / col("outdeg").cast(DoubleType))
+          .cast(LongType).as("c"))
+
+  /** The PageRank update `(id, outdeg, pr)` of the nodes in `deg` from
+    * their complete contribution stream: (scale − ⌊d·scale⌋) + ⌊d·Σc⌋,
+    * a node with no in-contribution keeping the base. */
+  private def rankUpdate(deg: DataFrame, contrib: DataFrame, scale: Long,
+                         dampNum: Long, dampDen: Long): DataFrame = {
+    val sums = contrib.groupBy(col("dst")).agg(sum(col("c")).as("s"))
+    deg.join(sums, deg("src") === sums("dst"), "left")
+      .select(col("src").as("id"), col("outdeg"),
+        (lit(scale - dampNum * scale / dampDen) +
+          floor((lit(dampNum) * coalesce(col("s"), lit(0L)))
+            .cast(DoubleType) / lit(dampDen).cast(DoubleType)).cast(LongType))
+          .as("pr"))
   }
 
   /** Deterministic label propagation over an UNDIRECTED edge list —
@@ -182,7 +182,7 @@ object Graph {
     // [[pagerank]]'s edge table: LogicalRDD carries the physical
     // partitioning through the checkpoint, so every round's edge-side
     // exchange disappears (only the node-sized label table moves to meet
-    // it). Measured at sf10 (GraphProbe): the unpartitioned form paid a
+    // it). Measured at the sf10 rehearsal: the unpartitioned form paid a
     // full ~100M-row edge exchange per round.
     // Width for the edge checkpoint AND the per-round vote exchange,
     // sized from the data BEFORE the first materialization (the same
@@ -198,24 +198,9 @@ object Graph {
     // would re-exchange the EDGE side every round — exactly the
     // per-round edge exchange the pre-partitioned checkpoint avoids.
     val default = edges.sparkSession.sessionState.conf.numShufflePartitions
-    // ONE aggregate sizes the exchange AND enforces the non-negative-id
-    // precondition (r17): the separate `filter(src < 0 …).limit(1)`
-    // probe was a second full pass over the edge table at every scale.
-    // PRECONDITION (enforced, not just documented): node ids must be
-    // non-negative — the decimal argmax packing below is order-correct
-    // only for 0 <= lab < 10^19; a negative id would overflow the
-    // label offset into the count digits and silently corrupt the
-    // winner.
-    val st0 = edges.select(col("src"), col("dst"))
-      .agg(count(lit(1)), min(col("src")), min(col("dst"))).head()
-    val nEdges = st0.getLong(0)
-    require(nEdges == 0L ||
-      (st0.getAs[Number](1).longValue >= 0L &&
-        st0.getAs[Number](2).longValue >= 0L),
-      "labelPropagation: negative node ids are not supported (the " +
-        "count·10^19 + (10^19-1-label) argmax packing requires ids in " +
-        "[0, 10^19)); relabel ids to non-negative first")
-    val voteParts = iterWidth(nEdges, default)
+    val voteParts = iterWidth(
+      checkedEdgeCount(edges.select(col("src"), col("dst")), "labelPropagation"),
+      default)
     // columnar persist, not localCheckpoint — same r16 fix as
     // [[pagerank]]: deserialized checkpoint blocks OOM the heap at
     // sf100; compressed columnar batches carry the same partitioning
@@ -225,54 +210,81 @@ object Graph {
     e.count() // materialize once, outside the round loop
     var st = e.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("lab"))
-    // argmax by (count desc, label asc) WITHOUT a struct-max aggregate:
-    // max(struct(...)) compiles to SortAggregate (struct buffers are
-    // not hash-aggregable), which SORTED the edge-sized vote stream
-    // twice per round — measured 20× super-linear at the sf10
-    // rehearsal. Packing (c, lab) into one DECIMAL(38,0) as
-    // c·10¹⁹ + (10¹⁹−1−lab) keeps the same total order under plain
-    // max() with a mutable (hash-aggregable) buffer; exact for any
-    // 0 ≤ c, lab < 10¹⁹ — i.e. every non-negative int64.
-    val P = DecimalType(38, 0)
-    val packBase = lit(BigDecimal("10000000000000000000")).cast(P) // 10^19
     var retirable: DataFrame = null
     // unpersist in a finally, as [[pagerank]]: a mid-iteration failure
     // must not leak the edge-sized cache in a long-lived driver
     try {
-    for (_ <- 1 to iters) {
-      // shuffle_hash on the node-sized label side: the edge stream is
-      // hash-probed, never sorted (SMJ would sort the edge relation
-      // every round), and the plan stops flip-flopping across AQE's
-      // broadcast-threshold boundary as the label table grows
-      val votes = e.join(st.hint("shuffle_hash"), e("src") === st("id"))
-        .select(col("dst").as("id"), col("lab"))
-        .unionByName(st.select(col("id"), col("lab")))
-        // ONE exchange per round: hash-partition the raw vote stream on
-        // id — HashPartitioning(id) satisfies ClusteredDistribution for
-        // BOTH downstream aggregates (grouping keys (id, lab) ⊇ {id}),
-        // so the count and the argmax run as complete in-partition hash
-        // aggregates with no further exchange. The alternative (partial
-        // agg + exchange on (id, lab), then a second exchange on id)
-        // moves the near-edge-sized vote stream twice in early rounds,
-        // when labels are still ~all distinct and map-side combine
-        // can't reduce anything.
-        .repartition(voteParts, col("id"))
-        .groupBy(col("id"), col("lab")).agg(count(lit(1)).as("c"))
-      val prev = st
-      st = votes
-        .select(col("id"),
-          (col("c").cast(P) * packBase +
-            (packBase - 1 - col("lab").cast(P))).as("_p"))
-        .groupBy(col("id")).agg(max(col("_p")).as("_w"))
-        .select(col("id"),
-          (packBase - 1 - (col("_w") % packBase)).cast(LongType).as("lab"))
-        .localCheckpoint(true)
-      if (retirable ne null)
-        org.apache.spark.sql.GraftBridge.releaseCheckpoint(retirable)
-      retirable = prev
-    }
+      for (_ <- 1 to iters) {
+        val prev = st
+        st = vote(e, st, st, voteParts).localCheckpoint(true)
+        if (retirable ne null)
+          org.apache.spark.sql.GraftBridge.releaseCheckpoint(retirable)
+        retirable = prev
+      }
     } finally e.unpersist(false) // final state is eagerly checkpointed
     st.select(col("id"), col("lab").as("label"))
+  }
+
+  /** The edge count, from ONE aggregate that also enforces label
+    * propagation's PRECONDITION (r17: the separate `filter(src < 0 …)
+    * .limit(1)` probe was a second full pass over the edge table at
+    * every scale): node ids must be non-negative — the decimal argmax
+    * packing in [[vote]] is order-correct only for 0 <= lab < 10^19; a
+    * negative id would overflow the label offset into the count digits
+    * and silently corrupt the winner. */
+  private def checkedEdgeCount(e: DataFrame, op: String): Long = {
+    val st0 = e.agg(count(lit(1)), min(col("src")), min(col("dst"))).head()
+    val nEdges = st0.getLong(0)
+    require(nEdges == 0L ||
+      (st0.getAs[Number](1).longValue >= 0L &&
+        st0.getAs[Number](2).longValue >= 0L),
+      s"$op: negative node ids are not supported (the " +
+        "count·10^19 + (10^19-1-label) argmax packing requires ids in " +
+        "[0, 10^19)); relabel ids to non-negative first")
+    nEdges
+  }
+
+  /** One label-propagation round for the nodes voted on: the votes of
+    * every edge in `e` (its source's label in `st`, cast for its
+    * destination) plus the `self` votes, counted per (id, lab), and
+    * each node's winner by (count desc, label asc).
+    *
+    * shuffle_hash on the node-sized label side: the edge stream is
+    * hash-probed, never sorted (SMJ would sort the edge relation every
+    * round), and the plan stops flip-flopping across AQE's
+    * broadcast-threshold boundary as the label table grows.
+    *
+    * ONE exchange: the raw vote stream is hash-partitioned on id —
+    * HashPartitioning(id) satisfies ClusteredDistribution for BOTH
+    * aggregates (grouping keys (id, lab) ⊇ {id}), so the count and the
+    * argmax run as complete in-partition hash aggregates. The
+    * alternative (partial agg + exchange on (id, lab), then a second
+    * exchange on id) moves the near-edge-sized vote stream twice in
+    * early rounds, when labels are still ~all distinct and map-side
+    * combine can't reduce anything.
+    *
+    * Argmax WITHOUT a struct-max aggregate: max(struct(...)) compiles
+    * to SortAggregate (struct buffers are not hash-aggregable), which
+    * SORTED the edge-sized vote stream twice per round — measured 20×
+    * super-linear at the sf10 rehearsal. Packing (c, lab) into one
+    * DECIMAL(38,0) as c·10¹⁹ + (10¹⁹−1−lab) keeps the same total order
+    * under plain max() with a mutable (hash-aggregable) buffer; exact
+    * for any 0 ≤ c, lab < 10¹⁹ — i.e. every non-negative int64. */
+  private def vote(e: DataFrame, st: DataFrame, self: DataFrame,
+                   parts: Int): DataFrame = {
+    val P = DecimalType(38, 0)
+    val packBase = lit(BigDecimal("10000000000000000000")).cast(P) // 10^19
+    e.join(st.hint("shuffle_hash"), e("src") === st("id"))
+      .select(col("dst").as("id"), col("lab"))
+      .unionByName(self.select(col("id"), col("lab")))
+      .repartition(parts, col("id"))
+      .groupBy(col("id"), col("lab")).agg(count(lit(1)).as("c"))
+      .select(col("id"),
+        (col("c").cast(P) * packBase +
+          (packBase - 1 - col("lab").cast(P))).as("_p"))
+      .groupBy(col("id")).agg(max(col("_p")).as("_w"))
+      .select(col("id"),
+        (packBase - 1 - (col("_w") % packBase)).cast(LongType).as("lab"))
   }
 
   /** [[pagerank]] executed as `passes` bounded-footprint WAVES per
@@ -290,9 +302,9 @@ object Graph {
     * Footprint: per wave one ~|E|/passes contribution exchange with
     * synchronous shuffle release; edges, the degree table, and the
     * per-round rank state live as snappy parquet in `stagingDir`
-    * (round r−1 deleted once round r lands). The returned frame reads
-    * the final round lazily — the caller owns `stagingDir`
-    * (the fuzzyPairsChunked contract).
+    * (round r−1 deleted once round r lands), run by [[Waves]]. The
+    * returned frame reads the final round lazily — the caller owns
+    * `stagingDir`.
     */
   def pagerankChunked(edges: DataFrame, iters: Int, passes: Int,
                       stagingDir: String, scale: Long = 1000000L,
@@ -304,62 +316,33 @@ object Graph {
       s"pagerankChunked: damping $dampNum/$dampDen outside [0, 1]")
     require(scale > 0, s"pagerankChunked: scale must be positive, got $scale")
     val spark = edges.sparkSession
-    // edges staged PARTITIONED BY WAVE (w = pmod(dst, passes) — a
-    // per-task partitioned write, no shuffle): each wave partition-
-    // prunes to its own w=p subtree, so staged-edge read I/O per round
-    // is ONE pass over |E| at any wave count, where the unpartitioned
-    // form re-scanned the full edge table `passes` times per round
-    // (at sf100 that was 6 × 1.17 B rows × rounds of pure re-read)
-    edges.select(col("src"), col("dst"))
-      .withColumn("w", pmod(col("dst"), lit(passes.toLong)))
-      .write.mode("overwrite").partitionBy("w").parquet(s"$stagingDir/e")
-    val e = spark.read.parquet(s"$stagingDir/e").select(col("src"), col("dst"))
-    val default = spark.sessionState.conf.numShufflePartitions
-    val waveParts = iterWidth(e.count() / passes, default)
-    // identical arithmetic to [[pagerank]]: state carries outdeg so a
-    // round is one edge join + one aggregate per wave; the degree
-    // table is likewise wave-partitioned (on the SOURCE id — it is
-    // sliced by the update side's pmod(src) filter, not the edge
-    // side's pmod(dst))
-    e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .withColumn("w", pmod(col("src"), lit(passes.toLong)))
-      .write.mode("overwrite").partitionBy("w").parquet(s"$stagingDir/deg")
-    val deg = spark.read.parquet(s"$stagingDir/deg")
-    val base = scale - dampNum * scale / dampDen
-    deg.select(col("src").as("id"), col("outdeg"), lit(scale).as("pr"))
-      .write.mode("overwrite").parquet(s"$stagingDir/r0")
+    // edges stage by their DESTINATION's wave: wave p sums the complete
+    // in-contributions of exactly its own nodes
+    val e = Waves.stage(edges.select(col("src"), col("dst")), s"$stagingDir/e",
+      col("dst"), passes)
+    val waveParts = iterWidth(e.all.count() / passes,
+      spark.sessionState.conf.numShufflePartitions)
+    // the degree table stages by the SOURCE id: it is sliced by the
+    // update side, whose rows are the wave's own nodes
+    val deg = Waves.stage(e.all.groupBy("src").agg(count(lit(1)).as("outdeg")),
+      s"$stagingDir/deg", col("src"), passes)
+    var st = Waves.stage(
+      deg.all.select(col("src").as("id"), col("outdeg"), lit(scale).as("pr")),
+      s"$stagingDir/r0")
     for (r <- 1 to iters) {
-      // select the state schema EXPLICITLY right at the read: round
-      // dirs are laid out as w=<p> subdirs, so partition discovery
-      // infers a stray `w` column that must not ride along into the
-      // inter-round state (a future select-star/unionByName would
-      // carry or break on it)
-      val st = spark.read.parquet(s"$stagingDir/r${r - 1}")
-        .select(col("id"), col("outdeg"), col("pr"))
-      (0 until passes).foreach { p =>
-        val before = org.apache.spark.sql.GraftBridge.activeShuffleIds(spark)
-        val contrib = spark.read.parquet(s"$stagingDir/e")
-          .filter(col("w") === p).select(col("src"), col("dst"))
-          .join(st.hint("shuffle_hash"), col("src") === st("id"))
-          .select(col("dst"),
-            floor(col("pr").cast(DoubleType) / col("outdeg").cast(DoubleType))
-              .cast(LongType).as("c"))
-          .repartition(waveParts, col("dst"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-        deg.filter(col("w") === p)
-          .join(contrib, deg("src") === contrib("dst"), "left")
-          .select(col("src").as("id"), col("outdeg"),
-            (lit(base) + floor((lit(dampNum) * coalesce(col("s"), lit(0L)))
-              .cast(DoubleType) / lit(dampDen).cast(DoubleType)).cast(LongType))
-              .as("pr"))
-          .write.mode("overwrite").parquet(s"$stagingDir/r$r/w=$p")
-        val created =
-          org.apache.spark.sql.GraftBridge.activeShuffleIds(spark) -- before
-        org.apache.spark.sql.GraftBridge.removeShuffles(spark, created)
+      val prev = st
+      val ranks = prev.all
+      st = Waves.run(spark, passes, s"$stagingDir/r$r") { p =>
+        rankUpdate(deg.slice(p),
+          contributions(e.slice(p), ranks.hint("shuffle_hash"))
+            .repartition(waveParts, col("dst")),
+          scale, dampNum, dampDen)
       }
-      deleteStaged(spark, s"$stagingDir/r${r - 1}")
+      // round r has landed: its input goes now (peak staged state is 2
+      // node-sized tables, not iters of them)
+      Waves.retire(prev)
     }
-    spark.read.parquet(s"$stagingDir/r$iters").select(col("id"), col("pr"))
+    st.all.select(col("id"), col("pr"))
   }
 
   /** [[labelPropagation]] executed as `passes` bounded-footprint WAVES
@@ -374,19 +357,17 @@ object Graph {
     * next-round state.
     *
     * Footprint contract, per wave: one exchange of ~|E|/passes vote
-    * rows plus one node-sized label broadcast side, with the wave's
-    * shuffle files released SYNCHRONOUSLY (GraftBridge.removeShuffles)
-    * once its output parquet lands — peak transient disk is one
-    * wave's, not one round's. Edges and per-round state live as
-    * snappy parquet in `stagingDir` (never JVM-pinned checkpoint
-    * blocks — the Bench-unpersists-everything lesson, and parquet
-    * compresses the long-pair edge stream ~3× vs demoted RDD blocks);
-    * round r's staging is deleted as soon as round r+1 lands. Edges
-    * stage partitioned by wave, so the per-round staged-edge read is
-    * ONE pass over |E| regardless of the wave count. The returned
-    * frame reads
-    * the final round's staging LAZILY — the caller owns `stagingDir`
-    * and reclaims it when done (the fuzzyPairsChunked contract).
+    * rows plus one node-sized label side, with the wave's shuffle
+    * files released once its output lands ([[Waves.run]]) — peak
+    * transient disk is one wave's, not one round's. Edges and
+    * per-round state live as snappy parquet in `stagingDir` (never
+    * JVM-pinned checkpoint blocks — the Bench-unpersists-everything
+    * lesson, and parquet compresses the long-pair edge stream ~3× vs
+    * demoted RDD blocks); round r's staging is deleted as soon as
+    * round r+1 lands. Edges stage partitioned by wave, so the
+    * per-round staged-edge read is ONE pass over |E| regardless of the
+    * wave count. The returned frame reads the final round's staging
+    * LAZILY — the caller owns `stagingDir` and reclaims it when done.
     *
     * Cluster translation: waves = executor-count-sized slices of the
     * node space; a real cluster runs them as one partitioned job, this
@@ -399,67 +380,26 @@ object Graph {
     require(passes >= 1, s"labelPropagationChunked: passes must be >= 1, got $passes")
     require(stagingDir.nonEmpty, "labelPropagationChunked: stagingDir required")
     val spark = edges.sparkSession
-    // wave-partitioned edge staging (w = pmod(dst, passes)): each wave
-    // partition-prunes to its own subtree — one staged-edge pass per
-    // round at any wave count (see [[pagerankChunked]])
-    edges.select(col("src"), col("dst"))
-      .withColumn("w", pmod(col("dst"), lit(passes.toLong)))
-      .write.mode("overwrite").partitionBy("w").parquet(s"$stagingDir/e")
-    val e = spark.read.parquet(s"$stagingDir/e").select(col("src"), col("dst"))
-    // ONE aggregate sizes the per-wave exchange and enforces the
-    // non-negative-id precondition (the decimal argmax packing is only
-    // order-correct for ids in [0, 10^19)) — same r17 fold as the
-    // single-pass form; per-WAVE vote width: the voteParts discipline
-    // divided by the wave count (each wave carries ~|E|/passes rows)
-    val st0 = e.agg(count(lit(1)), min(col("src")), min(col("dst"))).head()
-    require(st0.getLong(0) == 0L ||
-      (st0.getAs[Number](1).longValue >= 0L &&
-        st0.getAs[Number](2).longValue >= 0L),
-      "labelPropagationChunked: negative node ids are not supported " +
-        "(the count·10^19 + (10^19-1-label) argmax packing requires ids " +
-        "in [0, 10^19)); relabel ids to non-negative first")
-    val default = spark.sessionState.conf.numShufflePartitions
-    val waveParts = iterWidth(st0.getLong(0) / passes, default)
-    val P = DecimalType(38, 0)
-    val packBase = lit(BigDecimal("10000000000000000000")).cast(P) // 10^19
-    e.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("lab"))
-      .write.mode("overwrite").parquet(s"$stagingDir/r0")
+    // edges stage by their destination's wave (see [[pagerankChunked]])
+    val e = Waves.stage(edges.select(col("src"), col("dst")), s"$stagingDir/e",
+      col("dst"), passes)
+    // per-WAVE vote width: the single-pass voteParts discipline divided
+    // by the wave count (each wave carries ~|E|/passes vote rows)
+    val waveParts = iterWidth(
+      checkedEdgeCount(e.all, "labelPropagationChunked") / passes,
+      spark.sessionState.conf.numShufflePartitions)
+    var st = Waves.stage(e.all.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("lab")), s"$stagingDir/r0")
     for (r <- 1 to iters) {
-      // explicit state schema at the read — drops the `w` partition
-      // column that discovery infers from the w=<p> wave subdirs
-      val st = spark.read.parquet(s"$stagingDir/r${r - 1}")
-        .select(col("id"), col("lab"))
-      (0 until passes).foreach { p =>
-        val before = org.apache.spark.sql.GraftBridge.activeShuffleIds(spark)
-        // identical vote stream and argmax arithmetic as the wave's
-        // slice of labelPropagation (kept verbatim — the equivalence
-        // test pins the twin forms together)
-        spark.read.parquet(s"$stagingDir/e")
-          .filter(col("w") === p).select(col("src"), col("dst"))
-          .join(st.hint("shuffle_hash"), col("src") === st("id"))
-          .select(col("dst").as("id"), col("lab"))
-          .unionByName(st.select(col("id"), col("lab"))
-            .filter(pmod(col("id"), lit(passes.toLong)) === p))
-          .repartition(waveParts, col("id"))
-          .groupBy(col("id"), col("lab")).agg(count(lit(1)).as("c"))
-          .select(col("id"),
-            (col("c").cast(P) * packBase +
-              (packBase - 1 - col("lab").cast(P))).as("_p"))
-          .groupBy(col("id")).agg(max(col("_p")).as("_w"))
-          .select(col("id"),
-            (packBase - 1 - (col("_w") % packBase)).cast(LongType).as("lab"))
-          .write.mode("overwrite").parquet(s"$stagingDir/r$r/w=$p")
-        val created =
-          org.apache.spark.sql.GraftBridge.activeShuffleIds(spark) -- before
-        org.apache.spark.sql.GraftBridge.removeShuffles(spark, created)
+      val prev = st
+      val labels = prev.all
+      st = Waves.run(spark, passes, s"$stagingDir/r$r") { p =>
+        vote(e.slice(p), labels,
+          labels.filter(pmod(col("id"), lit(passes.toLong)) === p), waveParts)
       }
-      // round r is fully landed — its input state can go NOW (peak
-      // staged state is 2 node-sized tables, not iters of them)
-      deleteStaged(spark, s"$stagingDir/r${r - 1}")
+      Waves.retire(prev) // as in [[pagerankChunked]]
     }
-    spark.read.parquet(s"$stagingDir/r$iters")
-      .select(col("id"), col("lab").as("label"))
+    st.all.select(col("id"), col("lab").as("label"))
   }
 
   /** Exact triangle count over an UNDIRECTED edge list `(src, dst)`

@@ -161,4 +161,23 @@ class ScratchSpec extends SparkSpec {
     }
     assert((leftovers -- before).isEmpty, s"left behind: ${leftovers -- before}")
   }
+
+  test("the round-trip rows write nothing under the checkout's target/") {
+    // sbt keeps its build outputs, logs and test reports under target/
+    // and may touch them while a suite runs; every other entry counts
+    val root = Paths.get("target")
+    val sbtOwned = Set("streams", "test-reports", "task-temp-directory", "global-logging", "bg-jobs")
+    def listing: Map[String, Long] =
+      if (!Files.isDirectory(root)) Map.empty
+      else Files.list(root).iterator.asScala.toSeq
+        .filterNot { d => val n = d.getFileName.toString; sbtOwned(n) || n.startsWith("scala-") }
+        .flatMap(d => Files.walk(d).iterator.asScala)
+        .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis).toMap
+    val before = listing
+    for (row <- Seq("src_csv_roundtrip", "src_binary_roundtrip", "src_spider"))
+      assert(SparkEntry.queries(row)(spark, sf).count() > 0, row)
+    val after = listing
+    assert(after == before,
+      s"created or modified under target/: ${(after.toSet -- before.toSet).map(_._1).toSeq.sorted}")
+  }
 }

@@ -2,8 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** The input-table resolution contract of [[Tables]]: resolved once per
@@ -15,29 +14,6 @@ class TablesSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   override def afterAll(): Unit =
     try org.apache.commons.io.FileUtils.deleteQuietly(tmp) finally super.afterAll()
-
-  /** Jobs started on this thread while `body` runs (a job group tags
-    * them, so jobs of anything else running in the session don't count). */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val group = s"tables-spec-${System.nanoTime()}"
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    GraftBridge.drainListeners(spark)
-    spark.sparkContext.addSparkListener(l)
-    spark.sparkContext.setJobGroup(group, "TablesSpec")
-    try {
-      val r = body
-      GraftBridge.drainListeners(spark)
-      (r, n.get)
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(l)
-    }
-  }
 
   private def analyzed(df: DataFrame) =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.analyzed
