@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 /** Isolated re-time of named Bench rows (SPARK_GRAFT_ONLY), with
   * per-query shuffle-write / shuffle-read / disk-spill totals — the
   * exchange-volume measurement VERDICT-style audits ask for ("what
-  * widens this row's exchange?") without the Spark UI.
+  * widens this row's exchange?") without the Spark UI, and the count of
+  * generated classes each row compiled (a codegen cache hit compiles
+  * none, so a row that recompiles on every run shows here).
   *
   * Interleaved A/B mode (r18, VERDICT item 8): this box drifts ±25%
   * across minutes, so cross-run build comparisons eat the drift as
@@ -27,6 +29,8 @@ object MiniBench {
     val jobs = new java.util.concurrent.atomic.AtomicLong
     val stages = new java.util.concurrent.atomic.AtomicLong
     val tasks = new java.util.concurrent.atomic.AtomicLong
+    // generated classes compiled (JVM-wide; a codegen cache hit adds none)
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onTaskEnd(
@@ -70,6 +74,7 @@ object MiniBench {
       takeTurn()
       val (w0, r0, s0) = (shw.get, shr.get, spill.get)
       val (j0, g0, k0) = (jobs.get, stages.get, tasks.get)
+      val c0 = compiles.getCount
       spark.sparkContext.setJobDescription(s"mini: $n") // guide §1.5
       val t0 = System.nanoTime()
       // clear in a finally (ADVICE r17): a throwing count() must not
@@ -77,7 +82,8 @@ object MiniBench {
       // nor keep the baton, or the partner process waits forever
       val wall =
         try {
-          SparkEntry.queries(n)(spark, sfDir).count()
+          // a stream row runs its file-source face, as Bench times it
+          SparkEntry.benchFaces.getOrElse(n, SparkEntry.queries(n))(spark, sfDir).count()
           (System.nanoTime() - t0) / 1e9
         } finally {
           spark.sparkContext.setJobDescription(null)
@@ -88,7 +94,8 @@ object MiniBench {
       println(f"MINI $n$tag rep=$rep $wall%.2f s  " +
         f"shw=${(shw.get - w0) / mb}%.1fMB shr=${(shr.get - r0) / mb}%.1fMB " +
         f"spill=${(spill.get - s0) / mb}%.1fMB " +
-        s"jobs=${jobs.get - j0} stages=${stages.get - g0} tasks=${tasks.get - k0}")
+        s"jobs=${jobs.get - j0} stages=${stages.get - g0} tasks=${tasks.get - k0} " +
+        s"compiles=${compiles.getCount - c0}")
     }
   }
 }

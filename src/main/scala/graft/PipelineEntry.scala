@@ -86,6 +86,13 @@ object PipelineEntry {
     math.max(2L, math.min(64L, (bytes + bytesPerWave - 1) / bytesPerWave)).toInt
   }
 
+  /** Write `df` to `out` as parquet and return a frame that reads it back
+    * with the writer's schema, so the read starts no schema-inference job. */
+  private def land(df: DataFrame, out: String): DataFrame = {
+    df.write.mode("overwrite").parquet(out)
+    df.sparkSession.read.schema(df.schema).parquet(out)
+  }
+
   /** Customer↔supplier affinity edges (customers even ids, suppliers
     * odd), DIRECTED canonical form — consumers symmetrize as needed.
     * Shared by graph_pagerank / graph_labelprop / graph_powerlaw. */
@@ -1157,12 +1164,10 @@ object PipelineEntry {
       // the unbounded /tmp accumulation it exists to prevent).
       val out = Scratch.landing(s, s"dedup_fuzzy_chunked|$dir")
       Scratch.using(s, "graft-fuzzy-gate") { staging =>
-        Dedup.fuzzyPairsChunked(
+        land(Dedup.fuzzyPairsChunked(
             t(s, dir, "customer").select(col("c_custkey").as("id"), col("c_name").as("name")),
-            maxDist = 1, passes = passes, stagingDir = staging)
-          .write.mode("overwrite").parquet(out)
-      }
-      s.read.parquet(out).orderBy("id_a", "id_b")
+            maxDist = 1, passes = passes, stagingDir = staging), out)
+      }.orderBy("id_a", "id_b")
     },
     "dedup_fuzzy_witness" -> { (s, dir) =>
       // NON-REPLAY witness for the fuzzy family (the planted-literal
@@ -1329,11 +1334,9 @@ object PipelineEntry {
       // so re-entry reclaims the previous result dir (ADVICE r15).
       val out = Scratch.landing(s, s"dedup_prefix_chunked|$dir")
       Scratch.using(s, "graft-ppjoin-gate") { staging =>
-        Dedup.prefixJaccardPairsChunked(t(s, dir, "documents"),
-            n = 2, tNum = 1, tDen = 2, passes = passes, stagingDir = staging)
-          .write.mode("overwrite").parquet(out)
-      }
-      s.read.parquet(out).orderBy("id_a", "id_b")
+        land(Dedup.prefixJaccardPairsChunked(t(s, dir, "documents"),
+            n = 2, tNum = 1, tDen = 2, passes = passes, stagingDir = staging), out)
+      }.orderBy("id_a", "id_b")
     },
     "dedup_pr_audit" -> { (s, dir) =>
       // in-engine recall/precision audit of the LSH dedup route against
@@ -2046,13 +2049,12 @@ object PipelineEntry {
       // persisted form carries the full search state
       val emb = t(s, dir, "embeddings")
       val model = Similarity.pqTrain(emb, m = 4, ksub = 16, iters = 2, dim = 64)
-      val base = s"target/pq_index_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+      val base = Scratch.landing(s, s"sim_index_persist|$dir")
       model.save(s, s"$base/codebook")
-      Similarity.pqEncode(emb, model).withColumnRenamed("vec_id", "c_id")
-        .write.mode("overwrite").parquet(s"$base/codes")
+      val codes = land(Similarity.pqEncode(emb, model).withColumnRenamed("vec_id", "c_id"),
+        s"$base/codes")
       val loaded = Similarity.PqModel.load(s, s"$base/codebook")
-      Similarity.pqTopKFromCodes(s.read.parquet(s"$base/codes"),
-          emb.filter(col("vec_id") < 10), k = 5, loaded)
+      Similarity.pqTopKFromCodes(codes, emb.filter(col("vec_id") < 10), k = 5, loaded)
         .withColumn("rank", col("rank").cast(LongType))
         .orderBy("q_id", "rank")
     },
@@ -2066,17 +2068,15 @@ object PipelineEntry {
       val emb = t(s, dir, "embeddings")
       val base = emb.filter(col("vec_id") % 3 =!= 0)
       val batch = emb.filter(col("vec_id") % 3 === 0)
-      val p = s"target/pq_append_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+      val p = Scratch.landing(s, s"sim_index_append|$dir")
       val model = Similarity.pqTrain(base, m = 4, ksub = 16, iters = 2, dim = 64)
       model.save(s, s"$p/codebook")
-      Similarity.pqEncode(base, model).withColumnRenamed("vec_id", "c_id")
-        .write.mode("overwrite").parquet(s"$p/codes_base")
+      val codesBase = land(Similarity.pqEncode(base, model).withColumnRenamed("vec_id", "c_id"),
+        s"$p/codes_base")
       val loaded = Similarity.PqModel.load(s, s"$p/codebook")
-      Similarity.pqEncode(batch, loaded).withColumnRenamed("vec_id", "c_id")
-        .write.mode("overwrite").parquet(s"$p/codes_batch")
-      Similarity.pqTopKFromCodes(
-          s.read.parquet(s"$p/codes_base")
-            .unionByName(s.read.parquet(s"$p/codes_batch")),
+      val codesBatch = land(Similarity.pqEncode(batch, loaded).withColumnRenamed("vec_id", "c_id"),
+        s"$p/codes_batch")
+      Similarity.pqTopKFromCodes(codesBase.unionByName(codesBatch),
           emb.filter(col("vec_id") < 10), k = 5, loaded)
         .withColumn("rank", col("rank").cast(LongType))
         .orderBy("q_id", "rank")
@@ -6421,10 +6421,8 @@ object PipelineEntry {
       val e = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
       val out = Scratch.landing(s, s"graph_labelprop|$dir")
       Scratch.using(s, "graft-lpc-face") { staging =>
-        Graph.labelPropagationChunked(e, iters = 3, passes = GraphFacePasses, staging)
-          .write.mode("overwrite").parquet(out)
-      }
-      s.read.parquet(out).orderBy("id")
+        land(Graph.labelPropagationChunked(e, iters = 3, passes = GraphFacePasses, staging), out)
+      }.orderBy("id")
     })),
     // past the cache ceiling the wave form is not just SAFER but
     // MEASURED-faster (r17 sf100 cross-check: chunked 580.7 s vs
@@ -6436,10 +6434,8 @@ object PipelineEntry {
       val e = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
       val out = Scratch.landing(s, s"graph_pagerank|$dir")
       Scratch.using(s, "graft-prc-face") { staging =>
-        Graph.pagerankChunked(e, iters = 3, passes = GraphFacePasses, staging)
-          .write.mode("overwrite").parquet(out)
-      }
-      s.read.parquet(out).orderBy("id")
+        land(Graph.pagerankChunked(e, iters = 3, passes = GraphFacePasses, staging), out)
+      }.orderBy("id")
     })),
     // the audit's exchange is ~98% the exact route (measured, see the
     // gate row), so past the same threshold it runs the identical
@@ -6454,10 +6450,8 @@ object PipelineEntry {
       Scratch.using(s, "graft-praudit") { staging =>
         val exact = Dedup.prefixJaccardPairsChunked(docs, n = 3, tNum = 3,
           tDen = 10, passes = passes, stagingDir = staging)
-        prAuditAgg(exact, Dedup.minhashPairs(docs, threshold = 0.3, n = 3))
-          .write.mode("overwrite").parquet(out)
+        land(prAuditAgg(exact, Dedup.minhashPairs(docs, threshold = 0.3, n = 3)), out)
       }
-      s.read.parquet(out)
     })))
 
   def benchFaces: Map[String, (SparkSession, String) => DataFrame] = Map(

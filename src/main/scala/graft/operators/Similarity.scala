@@ -356,9 +356,14 @@ object Similarity {
   }
 
   object PqModel {
-    /** Load a codebook persisted by [[PqModel.save]]. */
+    /** The schema [[PqModel.save]] writes. */
+    private val codebookSchema =
+      StructType.fromDDL("m INT, dim INT, sub INT, cid BIGINT, cv ARRAY<BIGINT>")
+
+    /** Load a codebook persisted by [[PqModel.save]], read with the
+      * schema it was written with (no schema-inference job). */
     def load(spark: SparkSession, path: String): PqModel = {
-      val rows = spark.read.parquet(path)
+      val rows = spark.read.schema(codebookSchema).parquet(path)
         .select("m", "dim", "sub", "cid", "cv").collect()
       require(rows.nonEmpty, s"PqModel.load: empty codebook at $path")
       val (m, dim) = (rows.head.getInt(0), rows.head.getInt(1))

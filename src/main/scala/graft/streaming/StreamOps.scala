@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -474,8 +475,7 @@ object StreamOps {
         (col("value").cast("decimal(18,2)") * 100).cast("long").as("v"))
       .as[(Long, Long, java.sql.Timestamp, Long)]
       .groupByKey(_._1)
-    typed.flatMapGroupsWithState[AnomalyState, AnomalyVerdict](
-      OutputMode.Append, GroupStateTimeout.NoTimeout) {
+    typed.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
       (user: Long, it: Iterator[(Long, Long, java.sql.Timestamp, Long)],
        state: GroupState[AnomalyState]) =>
         var ring = state.getOption.map(_.ring).getOrElse(Vector.empty[Long])
@@ -494,8 +494,16 @@ object StreamOps {
         }
         state.update(AnomalyState(ring))
         out.result().iterator
-    }
+    }(anomalyStateEncoder, newProductEncoder[AnomalyVerdict])
   }
+
+  /** [[anomalyStream]]'s state encoder, built once. Building the
+    * expressions of an encoder with a collection field gives its
+    * `MapObjects` a fresh lambda-variable id, so an encoder built per
+    * call (as `spark.implicits._` and `Encoders.product` do, on every
+    * plan) generates new class source on every query start, and Spark's
+    * codegen cache, keyed by that source, compiles it again. */
+  private val anomalyStateEncoder: Encoder[AnomalyState] = ExpressionEncoder[AnomalyState]()
 
   /** Streaming one-sided CUSUM drift detector — the online face of
     * [[graft.operators.Behavior.cusum]]: per-key state is just the

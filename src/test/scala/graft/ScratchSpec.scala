@@ -174,10 +174,20 @@ class ScratchSpec extends SparkSpec {
         .flatMap(d => Files.walk(d).iterator.asScala)
         .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis).toMap
     val before = listing
-    for (row <- Seq("src_csv_roundtrip", "src_binary_roundtrip", "src_spider"))
+    for (row <- Seq("src_csv_roundtrip", "src_binary_roundtrip", "src_spider",
+        "sim_index_persist", "sim_index_append"))
       assert(SparkEntry.queries(row)(spark, sf).count() > 0, row)
     val after = listing
     assert(after == before,
       s"created or modified under target/: ${(after.toSet -- before.toSet).map(_._1).toSeq.sorted}")
+  }
+
+  test("the JDBC round-trip row leaves no derby.log in the working dir") {
+    // Derby logs every database boot, and the row boots a fresh one
+    val log = Paths.get("derby.log")
+    def state = if (Files.exists(log)) Some((Files.size(log), Files.getLastModifiedTime(log))) else None
+    val before = state
+    assert(SparkEntry.queries("src_jdbc_roundtrip")(spark, sf).count() > 0)
+    assert(state == before, s"derby.log went from $before to $state")
   }
 }
