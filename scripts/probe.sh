@@ -1,11 +1,12 @@
 #!/bin/sh
 # One entry point for the ad-hoc performance probes (VERDICT r14 #9).
 #
-# Probes are same-JVM A/B harnesses for ONE suspect operator family:
-# they exist to answer "is this row slow because of the plan or the
-# box?" head-to-head, with fixture plumbing shared through the same
-# Tables loader as the suite. They are NOT part of the gate (Verify)
-# or the record (Bench) — their numbers land in BASELINE.md prose.
+# Probes answer "is this row slow because of the plan or the box?" for
+# one suspect row or operator, on the program's one session factory
+# (graft.Session) and run recorder (graft.RunStats), with fixture
+# plumbing shared through the same Tables loader as the suite. They
+# are NOT part of the gate (Verify) or the record (Bench) — their
+# numbers land in BASELINE.md prose.
 #
 # Usage:
 #   sh scripts/probe.sh <name> [sf_dir] [mem]
@@ -18,9 +19,11 @@
 #   mem     driver heap (default 96g for scale dirs, 8g for sf0.1)
 #
 # Examples:
-#   sh scripts/probe.sh fuzzy /tmp/sf10        # d=1 split route vs generic
-#   sh scripts/probe.sh ppjoin /tmp/sf1        # sketch-prune kill rate
-#   sh scripts/probe.sh stream /tmp/sf1        # harness vs operator faces
+#   SPARK_GRAFT_ONLY=dedup_fuzzy,stream_ewma \
+#     sh scripts/probe.sh mini /root/testdata/sf0.1   # re-time named Bench rows
+#   GRAFT_CC_N=20000 sh scripts/probe.sh cc /tmp/sf1  # jobs of one CC call
+#
+# The session's width is SPARK_GRAFT_CPUS, else the processor count.
 set -e
 cd "$(dirname "$0")/.."
 
@@ -33,5 +36,5 @@ esac
 MEM="${3:-$DEFMEM}"
 
 echo "probe: graft.Probe $NAME at $SF_DIR (driver $MEM)"
-exec env SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
-  SPARK_DRIVER_MEM="$MEM" sbt -batch "runMain graft.Probe $NAME"
+exec env SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_DRIVER_MEM="$MEM" \
+  sbt -batch "runMain graft.Probe $NAME"

@@ -1,38 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Iterative graph/CC operators localCheckpoint ~edge-sized RDDs;
-      // partitions demoted from the storage pool are written to disk
-      // UNCOMPRESSED by default (spark.rdd.compress=false). At the sf100
-      // one-box rehearsal the uncompressed demotion stream exhausted
-      // local disk before round 1 finished; long-pair edge blocks LZ4
-      // ~3x, so compressing the demotion path trades a little CPU for
-      // the disk/IO that actually binds at scale.
-      .config("spark.rdd.compress", "true")
-      // single-JVM local mode: a long full-GC pause on a large heap
-      // must not trip the heartbeat executor-removal verdict (see
-      // Probe — an sf100 rehearsal died to a 137 s GC stall)
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // FileStreamSink.hasMetadata probes every glob read path for a
-    // streaming _spark_metadata dir and WARN-logs the (expected) miss
-    // with a full FileNotFoundException stack - benign but alarming in
-    // driver logs, so that one logger is quieted to ERROR
-    org.apache.log4j.Logger
-      .getLogger("org.apache.spark.sql.execution.streaming.sinks.FileStreamSink")
-      .setLevel(org.apache.log4j.Level.ERROR)
+    val cpus = Session.defaultCpus
+    val spark = Session.local(cpus)
     // Warm up JVM/codegen/parquet footer caches so the first timed query
     // isn't charged for one-time session costs.
     spark.range(1000000L).selectExpr("sum(id)").collect()
@@ -89,7 +60,7 @@ object Bench {
     // if both move ~1.2× together it's box drift, not a plan regression.
     def probeOnce(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 200000000L, 1L, cpus.toInt)
+      spark.range(0L, 200000000L, 1L, cpus)
         .selectExpr("id % 1000 AS k", "id AS v")
         .groupBy("k").agg(org.apache.spark.sql.functions.sum("v"))
         .selectExpr("sum(`sum(v)`)").collect()
@@ -115,7 +86,7 @@ object Bench {
     // `pad` from the exchange and gut the probe's volume.
     def ioProbeOnce(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 40000000L, 1L, cpus.toInt)
+      spark.range(0L, 40000000L, 1L, cpus)
         .selectExpr("id", "cast(id as string) AS pad")
         .repartition(64, org.apache.spark.sql.functions.col("id"))
         .selectExpr("count(pad)").collect()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Job-level attribution of one connectedComponents call (r18): a
   * permuted-id chain (the adversarial O(log n)-rounds shape) through
-  * [[graft.operators.Cluster.connectedComponents]] with a listener
+  * [[graft.operators.Cluster.connectedComponents]] under [[RunStats]],
   * printing every job's call site, so the per-round job floor can be
   * itemized instead of estimated. GRAFT_CC_N sets the chain length
   * (default 20000).
@@ -23,23 +23,11 @@ object CcProbe {
     val edges = (1 until n.toInt).map(i => (perm(i - 1), perm(i)))
       .toDF("src", "dst")
     val nodes = spark.range(n).toDF("id")
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet()
-          val site = Option(js.properties)
-            .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("?")
-          println(s"[ccjob] ${js.jobId} stages=${js.stageInfos.size} $site")
-        }
-      })
-    val t0 = System.nanoTime()
-    val out = graft.operators.Cluster
-      .connectedComponents(nodes, edges, maxIter = 40)
-    val nLabels = out.select(countDistinct(col("label"))).as[Long].head()
-    org.apache.spark.sql.GraftBridge.drainListeners(spark)
-    println(f"[ccprobe] n=$n components=$nLabels jobs=${jobs.get} " +
-      f"wall=${(System.nanoTime() - t0) / 1e9}%.2fs")
+    val (nLabels, rec) = RunStats.measure(spark, "cc") {
+      graft.operators.Cluster.connectedComponents(nodes, edges, maxIter = 40)
+        .select(countDistinct(col("label"))).as[Long].head()
+    }
+    rec.jobs.foreach(j => println(s"[ccjob] ${j.id} stages=${j.stages} ${j.site}"))
+    println(s"[ccprobe] n=$n components=$nLabels ${rec.columns}")
   }
 }

@@ -6290,7 +6290,7 @@ object PipelineEntry {
   // legitimately stay in state at end-of-input here, so the face's
   // OUTPUT is not the oracle contract, only its COST is comparable.
   // Harness-vs-operator numbers side by side: BASELINE.md
-  // "streaming faces" tables (graft.StreamBench).
+  // "streaming faces" tables.
   // =====================================================================
   private def runStreamToTable(s: SparkSession, name: String,
                                streaming: DataFrame, mode: String,
@@ -6595,8 +6595,8 @@ object PipelineEntry {
     * fixed per-batch cost, so width must follow data volume, not a
     * constant. r18 (VERDICT item 2): the old floor of 8 (chosen to
     * match the gate rows' replay width) was itself the constant this
-    * function exists to avoid — StreamSinkProbe measured the commit
-    * cost per partition directly: at sf0.1, 8 → 2 partitions reads
+    * function exists to avoid. The state-store commit is paid per
+    * partition; measured per batch at sf0.1, 8 → 2 partitions reads
     * sessions 3.87→1.79 s, ewma 1.93→1.16, tumbling 2.29→1.91,
     * interval_join 3.63→3.10 (3-rep medians; 1 partition adds nothing
     * over 2). The floor of 2 keeps the plan genuinely partitioned at

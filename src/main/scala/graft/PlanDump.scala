@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for named (or all) declared queries to
   * one file each under an output dir — the plans/rNN/<query>_{before,
@@ -22,16 +21,9 @@ object PlanDump {
     val names: Seq[String] =
       if (args.length < 3 || args(2) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    // match the Bench session's width so dumped exchanges show the
+    // the Bench session's width, so dumped exchanges show the
     // partitioning the record actually ran with
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (n <- names) {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Fixture scale-up for the sf1 rehearsal (VERDICT r7 #2): replicates the
@@ -35,22 +35,8 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(inDir, outDir, factorS) = args
     val factor = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // FileStreamSink.hasMetadata probes every glob read path for a
-    // streaming _spark_metadata dir and WARN-logs the (expected) miss
-    // with a full FileNotFoundException stack - benign but alarming in
-    // driver logs, so that one logger is quieted to ERROR
-    org.apache.log4j.Logger
-      .getLogger("org.apache.spark.sql.execution.streaming.sinks.FileStreamSink")
-      .setLevel(org.apache.log4j.Level.ERROR)
+    val cpus = Session.defaultCpus
+    val spark = Session.local(cpus)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     // source fixtures are single small parquet files = ONE input split;
@@ -59,7 +45,7 @@ object ScaleUp {
     // Round-robin the source across the worker count first so replica
     // generation parallelizes; replica writes re-partition anyway.
     def raw(name: String): DataFrame =
-      spark.read.parquet(s"$inDir/$name.parquet").repartition(cpus.toInt)
+      spark.read.parquet(s"$inDir/$name.parquet").repartition(cpus)
     // replica index column k = 0..factor-1; k=0 is the untouched original
     def rep(df: DataFrame): DataFrame =
       df.crossJoin(broadcast(spark.range(factor.toLong).toDF("k")))

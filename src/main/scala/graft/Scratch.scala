@@ -42,15 +42,22 @@ object Scratch {
 
   /** A fresh scratch dir, as a scheme URI on a classic session. */
   def dir(spark: SparkSession, prefix: String): String = {
-    val local = Files.createTempDirectory(prefix).toString
-    exitHook
-    live.add(local)
+    val local = localDir(prefix)
     spark match {
       case s: classic.SparkSession =>
         register(s.sparkContext.hadoopConfiguration)
         s"$scheme://$local"
       case _ => local
     }
+  }
+
+  /** A fresh local temp dir as a plain path, registered with the exit
+    * hook: for what needs a dir before a session exists. */
+  private[graft] def localDir(prefix: String): String = {
+    val local = Files.createTempDirectory(prefix).toString
+    exitHook
+    live.add(local)
+    local
   }
 
   /** Delete a dir made by [[dir]] now, and drop it from the exit hook. */

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,22 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     gatePreflight()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // FileStreamSink.hasMetadata probes every glob read path for a
-    // streaming _spark_metadata dir and WARN-logs the (expected) miss
-    // with a full FileNotFoundException stack - benign but alarming in
-    // driver logs, so that one logger is quieted to ERROR
-    org.apache.log4j.Logger
-      .getLogger("org.apache.spark.sql.execution.streaming.sinks.FileStreamSink")
-      .setLevel(org.apache.log4j.Level.ERROR)
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     // optional comma-separated name filter for fast local iteration
     // (driver leaves it unset → full run)

@@ -41,6 +41,7 @@ import scala.util.chaining._
   * noted inline).
   */
 object Cluster {
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.operators.Cluster")
 
   /** Round-loop checkpoint: truncate lineage AND drop the origin plan's
     * carried statistics. Without the drop, each round's checkpoint
@@ -141,10 +142,6 @@ object Cluster {
       root = rootCk
       rootLazyDepth = 0
     }
-    // opt-in round diagnostics (set GRAFT_CC_LOG=1): per-round wall time
-    // and inner-compression depth, for triaging convergence on hostile
-    // component shapes without touching the production plan
-    val ccLog = sys.env.contains("GRAFT_CC_LOG")
     var it = 0
     while (eRows > 0 && it < maxIter) {
       val roundT0 = System.nanoTime()
@@ -234,10 +231,13 @@ object Cluster {
       e = e2
       eRows = e2Rows
       it += 1
-      if (ccLog) {
+      // round diagnostics at DEBUG: wall time, inner-compression depth
+      // and stored blocks, for triaging convergence on hostile
+      // component shapes without touching the plan
+      if (log.isDebugEnabled) {
         val sc = e.sparkSession.sparkContext
         val stored = sc.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
-        System.err.println(f"[cc] round $it%2d depth=$depth " +
+        log.debug(f"[cc] round $it%2d depth=$depth " +
           f"wall=${(System.nanoTime() - roundT0) / 1e9}%.2fs " +
           f"stored=${stored / 1048576.0}%.1fMB edges=$eRows")
       }

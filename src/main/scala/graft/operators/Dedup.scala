@@ -808,7 +808,7 @@ object Dedup {
     * admit exactly dist-0, same-position-substitution and
     * deletion/insertion candidates — the candidate set collapses to
     * ~the true pair set, shrinking the DISTINCT and both verify joins
-    * (measured by [[graft.FuzzyProbe]] at sf10: 128.8 M → 41.4 M
+    * (measured at sf10: 128.8 M → 41.4 M
     * candidates — exactly the true pair count, zero spurious — and
     * 1.8× end-to-end with spill halved). Hash collisions
     * still only ADD candidates: the substitution join drops anchor-
@@ -825,8 +825,7 @@ object Dedup {
     else fuzzyPairsGeneric(records, maxDist, keyCol, idCol)
   }
 
-  /** The assembled d=1 split-route candidate set (pre-verify) —
-    * exposed for [[graft.FuzzyProbe]]'s admit-count split. */
+  /** The assembled d=1 split-route candidate set (pre-verify). */
   private[graft] def fuzzyCandidatesD1(records: DataFrame, keyCol: String,
                                        idCol: String): DataFrame = {
     val parts = fuzzyD1Parts(records, keyCol)
@@ -840,16 +839,15 @@ object Dedup {
     * [[fuzzyPairs]] — the only complete generator at maxDist 2 (the
     * position-compatibility rule for two deletions needs FastSS
     * position LISTS, which would widen the 16 B exchange rows the
-    * whole design is built around), and the A/B control arm
-    * [[graft.FuzzyProbe]] measures the d=1 split route against. */
+    * whole design is built around), and the control arm the d=1
+    * split route is checked against (`BehaviorSpec`). */
   private[graft] def fuzzyPairsGeneric(records: DataFrame, maxDist: Int,
                                        keyCol: String = "name",
                                        idCol: String = "id"): DataFrame =
     verifyLev(fuzzyCandidatesGeneric(records, maxDist, keyCol, idCol),
       verifyKeys(records, keyCol, idCol), maxDist)
 
-  /** The generic share-any-variant candidate set (pre-verify) — the
-    * probe's control arm. */
+  /** The generic share-any-variant candidate set (pre-verify). */
   private[graft] def fuzzyCandidatesGeneric(records: DataFrame, maxDist: Int,
                                             keyCol: String,
                                             idCol: String): DataFrame = {

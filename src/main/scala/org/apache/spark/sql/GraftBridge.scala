@@ -92,7 +92,7 @@ object GraftBridge {
   private val noCleanerWarned = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Block until every queued listener-bus event has been delivered —
-    * the fence MiniBench's per-query metric snapshots need (task-end
+    * the fence [[graft.RunStats]]' measurement windows need (task-end
     * events are posted asynchronously, so without a drain a query's
     * tail metrics land in the NEXT query's window). */
   def drainListeners(spark: SparkSession): Unit =

@@ -296,13 +296,15 @@ class ApiSpec extends SparkSpec {
   }
 
   test("jdbc:: URI routing round-trips through Derby") {
-    val url = "jdbc:derby:target/test_derby;create=true"
-    val props = new java.util.Properties()
-    props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-    accounts.df.write.mode("overwrite").jdbc(url, "accounts_t", props)
-    val back = Table.data(spark, s"$url::accounts_t")
-    assert(back.nrows == 5)
-    assert(back.fields.map(_.toLowerCase).sorted == Seq("amount", "id", "name"))
+    Scratch.using(spark, "graft-test-derby") { d =>
+      val url = s"jdbc:derby:${new org.apache.hadoop.fs.Path(d).toUri.getPath}/db;create=true"
+      val props = new java.util.Properties()
+      props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+      accounts.df.write.mode("overwrite").jdbc(url, "accounts_t", props)
+      val back = Table.data(spark, s"$url::accounts_t")
+      assert(back.nrows == 5)
+      assert(back.fields.map(_.toLowerCase).sorted == Seq("amount", "id", "name"))
+    }
   }
 
   test("saltedSumBy equals plain grouped sum (skew-safe two-stage agg)") {
@@ -323,54 +325,58 @@ class ApiSpec extends SparkSpec {
   test("partitioned writes prune at plan time (PartitionFilters)") {
     val o = Table(Tables(spark, sf, "orders"))
     val withYear = Table(o.df.withColumn("order_year", year(col("o_orderdate"))))
-    val path = "target/part_orders"
-    Table.writePartitioned(withYear, path, Seq("order_year"))
-    val back = spark.read.parquet(path).filter(col("order_year") === 1995)
-    val scan = back.queryExecution.executedPlan.toString
-    // the year filter must land in PartitionFilters (directory pruning),
-    // not in PushedFilters (row-group filtering)
-    assert(scan.contains("PartitionFilters") &&
-      scan.replaceAll("(?s).*PartitionFilters: \\[([^\\]]*)\\].*", "$1").contains("order_year"),
-      s"expected partition pruning on order_year:\n$scan")
-    val exp = o.df.filter(year(col("o_orderdate")) === 1995).count()
-    assert(back.count() == exp && exp > 0)
+    Scratch.using(spark, "graft-test-part-orders") { path =>
+      Table.writePartitioned(withYear, path, Seq("order_year"))
+      val back = spark.read.parquet(path).filter(col("order_year") === 1995)
+      val scan = back.queryExecution.executedPlan.toString
+      // the year filter must land in PartitionFilters (directory pruning),
+      // not in PushedFilters (row-group filtering)
+      assert(scan.contains("PartitionFilters") &&
+        scan.replaceAll("(?s).*PartitionFilters: \\[([^\\]]*)\\].*", "$1").contains("order_year"),
+        s"expected partition pruning on order_year:\n$scan")
+      val exp = o.df.filter(year(col("o_orderdate")) === 1995).count()
+      assert(back.count() == exp && exp > 0)
+    }
   }
 
   test("data() reads back a partitioned directory with pruning intact") {
     val o = Table(Tables(spark, sf, "orders"))
     val withYear = Table(o.df.withColumn("order_year", year(col("o_orderdate"))))
-    val path = "target/part_router"
-    Table.writePartitioned(withYear, path, Seq("order_year"))
-    // a bare directory URI (no .parquet suffix) must route to the
-    // partition-discovering parquet reader, not spark.table
-    val back = Table.data(spark, path)
-    assert(back.fields.contains("order_year"))
-    assert(back.nrows == o.nrows)
-    val pruned = back.filter(Col(col("order_year") === 1995)).df
-    assert(pruned.queryExecution.executedPlan.toString.contains("PartitionFilters"))
-    assert(pruned.count() == o.df.filter(year(col("o_orderdate")) === 1995).count())
+    Scratch.using(spark, "graft-test-part-router") { path =>
+      Table.writePartitioned(withYear, path, Seq("order_year"))
+      // a bare directory URI (no .parquet suffix) must route to the
+      // partition-discovering parquet reader, not spark.table
+      val back = Table.data(spark, path)
+      assert(back.fields.contains("order_year"))
+      assert(back.nrows == o.nrows)
+      val pruned = back.filter(Col(col("order_year") === 1995)).df
+      assert(pruned.queryExecution.executedPlan.toString.contains("PartitionFilters"))
+      assert(pruned.count() == o.df.filter(year(col("o_orderdate")) === 1995).count())
+    }
   }
 
   test("data() glob URIs read EVERY matching file (discovery parity, literal.py:165-198)") {
     // multi-file glob: the reference's resource discovery unions matching
     // files into one collection; for us the glob goes straight to the
     // Spark reader, which does the same (and keeps one task per split)
-    val dir = new java.io.File("target/glob_probe"); dir.mkdirs()
-    java.nio.file.Files.writeString(
-      java.nio.file.Path.of("target/glob_probe/a.csv"), "k,v\n1,alpha\n2,beta\n")
-    java.nio.file.Files.writeString(
-      java.nio.file.Path.of("target/glob_probe/b.csv"), "k,v\n3,gamma\n")
-    java.nio.file.Files.writeString(
-      java.nio.file.Path.of("target/glob_probe/ignored.tsv"), "k\tv\n9\tzzz\n")
-    val tb = Table.data(spark, "target/glob_probe/*.csv")
-    assert(tb.nrows == 3, "glob must union a.csv + b.csv and skip ignored.tsv")
-    assert(tb.df.select("k").as[Int].collect().sorted.toSeq == Seq(1, 2, 3))
-    // parquet glob over independently-written files of the SAME schema
-    val p1 = Seq((1L, "x")).toDF("id", "s"); val p2 = Seq((2L, "y")).toDF("id", "s")
-    p1.write.mode("overwrite").parquet("target/glob_probe/p1.parquet")
-    p2.write.mode("overwrite").parquet("target/glob_probe/p2.parquet")
-    val pq = Table.data(spark, "target/glob_probe/p*.parquet")
-    assert(pq.df.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+    Scratch.using(spark, "graft-test-glob") { dir =>
+      val local = new org.apache.hadoop.fs.Path(dir).toUri.getPath
+      java.nio.file.Files.writeString(
+        java.nio.file.Path.of(local, "a.csv"), "k,v\n1,alpha\n2,beta\n")
+      java.nio.file.Files.writeString(
+        java.nio.file.Path.of(local, "b.csv"), "k,v\n3,gamma\n")
+      java.nio.file.Files.writeString(
+        java.nio.file.Path.of(local, "ignored.tsv"), "k\tv\n9\tzzz\n")
+      val tb = Table.data(spark, s"$dir/*.csv")
+      assert(tb.nrows == 3, "glob must union a.csv + b.csv and skip ignored.tsv")
+      assert(tb.df.select("k").as[Int].collect().sorted.toSeq == Seq(1, 2, 3))
+      // parquet glob over independently-written files of the SAME schema
+      val p1 = Seq((1L, "x")).toDF("id", "s"); val p2 = Seq((2L, "y")).toDF("id", "s")
+      p1.write.mode("overwrite").parquet(s"$dir/p1.parquet")
+      p2.write.mode("overwrite").parquet(s"$dir/p2.parquet")
+      val pq = Table.data(spark, s"$dir/p*.parquet")
+      assert(pq.df.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+    }
   }
 
   test("data() mixed-schema discovery fails loudly, not silently") {
@@ -378,25 +384,28 @@ class ApiSpec extends SparkSpec {
     // the reference's discovery raises on inconsistent schemata
     // (literal.py:165-198); Spark must likewise surface an error rather
     // than silently coerce or drop rows
-    Seq((1L, 10L)).toDF("id", "k")
-      .write.mode("overwrite").parquet("target/mixed_probe/f1.parquet")
-    Seq((2L, "str")).toDF("id", "k")
-      .write.mode("overwrite").parquet("target/mixed_probe/f2.parquet")
-    val ex = intercept[Exception] {
-      Table.data(spark, "target/mixed_probe/f*.parquet").df.collect()
+    Scratch.using(spark, "graft-test-mixed") { dir =>
+      Seq((1L, 10L)).toDF("id", "k")
+        .write.mode("overwrite").parquet(s"$dir/f1.parquet")
+      Seq((2L, "str")).toDF("id", "k")
+        .write.mode("overwrite").parquet(s"$dir/f2.parquet")
+      val ex = intercept[Exception] {
+        Table.data(spark, s"$dir/f*.parquet").df.collect()
+      }
+      val msg = Option(ex.getMessage).getOrElse("") + Option(ex.getCause)
+        .flatMap(c => Option(c.getMessage)).getOrElse("")
+      assert(msg.nonEmpty, "mixed-schema read must carry a diagnostic message")
     }
-    val msg = Option(ex.getMessage).getOrElse("") + Option(ex.getCause)
-      .flatMap(c => Option(c.getMessage)).getOrElse("")
-    assert(msg.nonEmpty, "mixed-schema read must carry a diagnostic message")
   }
 
   test("data() routes .txt through spark.read.text") {
-    val path = "target/txt_probe"
-    Seq("alpha", "beta").toDF("value").coalesce(1)
-      .write.mode("overwrite").text(path)
-    // read the directory written above via the .txt-suffixed glob
-    val tb = Table.data(spark, s"$path/part-00000*.txt")
-    assert(tb.fields == Seq("value") && tb.nrows == 2)
+    Scratch.using(spark, "graft-test-txt") { path =>
+      Seq("alpha", "beta").toDF("value").coalesce(1)
+        .write.mode("overwrite").text(path)
+      // read the directory written above via the .txt-suffixed glob
+      val tb = Table.data(spark, s"$path/part-00000*.txt")
+      assert(tb.fields == Seq("value") && tb.nrows == 2)
+    }
   }
 
   test("bucketed tables join without any exchange (co-located join)") {
@@ -405,7 +414,8 @@ class ApiSpec extends SparkSpec {
     // clean both the catalog entry AND any stale location from a prior JVM
     Seq("orders_b", "customer_b").foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      val dir = new java.io.File(s"target/spark-warehouse/$t")
+      val dir = new java.io.File(
+        new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath, t)
       if (dir.exists()) {
         def rm(f: java.io.File): Unit = {
           if (f.isDirectory) f.listFiles().foreach(rm); f.delete()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.metrics.source.CodegenMetrics
-
 /** A repeated run reuses the generated classes Spark compiled for the
   * first: its codegen cache is keyed by (class loader, source), so a row
   * recompiles when a session clone gets its own executor class loader
@@ -16,8 +14,8 @@ class CodegenReuseSpec extends SparkSpec {
     test(s"a second run of $row compiles no generated class") {
       val run = SparkEntry.benchFaces.getOrElse(row, SparkEntry.queries(row))
       assert(run(spark, sf).collect().nonEmpty)
-      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      assert(run(spark, sf).collect().nonEmpty)
-      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled == 0)
+      val (rows, rec) = RunStats.measure(spark, row)(run(spark, sf).collect())
+      assert(rows.nonEmpty)
+      assert(rec.compiles == 0)
     }
 }

@@ -31,6 +31,42 @@ class CurationSpec extends SparkSpec {
     assert(got.forall(_._2 == 1L))
   }
 
+  test("connectedComponents logs one [cc] round line per round at DEBUG, none by default") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Configurator
+    val name = "graft.operators.Cluster"
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("cc-rounds", null, null, true, Array.empty) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val logger = LogManager.getLogger(name).asInstanceOf[Logger]
+    logger.addAppender(app)
+    val level = logger.getLevel
+    val Round = """\[cc\] round\s+(\d+) .*""".r
+    def rounds(): Seq[Int] = {
+      lines.clear()
+      val edges = (1L until 12L).map(i => (i, i + 1)).toDF("src", "dst")
+      Cluster.connectedComponents((1L to 12L).toDF("id"), edges).collect()
+      lines.toArray(Array.empty[String]).toSeq.map {
+        case Round(r) => r.toInt
+        case l => fail(s"unexpected line: $l")
+      }
+    }
+    try {
+      assert(rounds().isEmpty)
+      Configurator.setLevel(name, Level.DEBUG)
+      val r = rounds()
+      assert(r.nonEmpty && r == (1 to r.size), r)
+    } finally {
+      Configurator.setLevel(name, level)
+      logger.removeAppender(app)
+      app.stop()
+    }
+  }
+
   test("connectedComponents: contraction converges a chain far longer than maxIter") {
     // a 400-link path has diameter 400: plain hash-min propagation would
     // need ~400 rounds and trip the fail-fast; Borůvka hooking +
@@ -785,17 +821,21 @@ class CurationSpec extends SparkSpec {
 
   test("compactTo/compactParquetDir rewrite small files into the target count") {
     import graft.operators.Layout
-    val dir = "target/compact_test"
-    // 32 writer partitions of a 1000-row table → many small files
-    spark.range(1000).toDF("id").repartition(32).write.mode("overwrite").parquet(dir)
-    def nFiles = new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(nFiles > 8, s"precondition: expected many small files, got $nFiles")
-    val n = Layout.compactParquetDir(spark, dir, rowsPerFile = 500)
-    assert(n == 1000, s"row count changed: $n")
-    assert(nFiles == 2, s"expected 2 compacted files, got $nFiles")
-    // content preserved exactly
-    val ids = spark.read.parquet(dir).as[Long].collect().sorted
-    assert(ids.toSeq == (0L until 1000L))
+    Scratch.using(spark, "graft-test-compact") { scratch =>
+      // compactParquetDir stages beside the dir, so both stay inside scratch
+      val dir = s"$scratch/t"
+      // 32 writer partitions of a 1000-row table → many small files
+      spark.range(1000).toDF("id").repartition(32).write.mode("overwrite").parquet(dir)
+      def nFiles = new java.io.File(new org.apache.hadoop.fs.Path(dir).toUri.getPath)
+        .listFiles().count(_.getName.endsWith(".parquet"))
+      assert(nFiles > 8, s"precondition: expected many small files, got $nFiles")
+      val n = Layout.compactParquetDir(spark, dir, rowsPerFile = 500)
+      assert(n == 1000, s"row count changed: $n")
+      assert(nFiles == 2, s"expected 2 compacted files, got $nFiles")
+      // content preserved exactly
+      val ids = spark.read.parquet(dir).as[Long].collect().sorted
+      assert(ids.toSeq == (0L until 1000L))
+    }
   }
 
   test("bloom autoSize rejects bitmaps past the 2^31 single-bitmap ceiling") {

@@ -173,25 +173,27 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("overwritePartitions rewrites only the touched partitions") {
-    val dir = "target/inc_partitions"
-    val v1 = Seq((1L, "A", 10.0), (2L, "A", 20.0), (3L, "B", 30.0))
-      .toDF("k", "p", "v")
-    Incremental.overwritePartitions(v1, dir, Seq("p"))
-    def files(p: String): Set[(String, Long)] = {
-      val d = new java.io.File(s"$dir/p=$p")
-      d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => (f.getName, f.lastModified())).toSet
+    Scratch.using(spark, "graft-test-inc-partitions") { scratch =>
+      val dir = s"$scratch/t"
+      val v1 = Seq((1L, "A", 10.0), (2L, "A", 20.0), (3L, "B", 30.0))
+        .toDF("k", "p", "v")
+      Incremental.overwritePartitions(v1, dir, Seq("p"))
+      def files(p: String): Set[(String, Long)] = {
+        val d = new java.io.File(new org.apache.hadoop.fs.Path(s"$dir/p=$p").toUri.getPath)
+        d.listFiles().filter(_.getName.endsWith(".parquet"))
+          .map(f => (f.getName, f.lastModified())).toSet
+      }
+      val aBefore = files("A")
+      Thread.sleep(1100) // ensure a rewrite would bump mtime
+      // merge touches only partition B
+      val patch = Seq((3L, "B", 31.0), (9L, "B", 90.0)).toDF("k", "p", "v")
+      Incremental.overwritePartitions(patch, dir, Seq("p"))
+      assert(files("A") == aBefore, "partition A must not be rewritten")
+      val back = spark.read.parquet(dir).orderBy("k")
+        .collect().map(r => (r.getLong(0), r.getString(2), r.getDouble(1)))
+      assert(back.map(_._1).toSeq == Seq(1L, 2L, 3L, 9L))
+      assert(back.find(_._1 == 3L).get._3 == 31.0) // patched image read back
     }
-    val aBefore = files("A")
-    Thread.sleep(1100) // ensure a rewrite would bump mtime
-    // merge touches only partition B
-    val patch = Seq((3L, "B", 31.0), (9L, "B", 90.0)).toDF("k", "p", "v")
-    Incremental.overwritePartitions(patch, dir, Seq("p"))
-    assert(files("A") == aBefore, "partition A must not be rewritten")
-    val back = spark.read.parquet(dir).orderBy("k")
-      .collect().map(r => (r.getLong(0), r.getString(2), r.getDouble(1)))
-    assert(back.map(_._1).toSeq == Seq(1L, 2L, 3L, 9L))
-    assert(back.find(_._1 == 3L).get._3 == 31.0) // patched image read back
   }
 
   test("zValue interleaves bits (hand-computed) and validates bounds") {
@@ -222,27 +224,29 @@ class IncrementalSpec extends SparkSpec {
 
   test("zorderBy concentrates a 2-column box query into fewer files") {
     val part = Tables(spark, sf, "part")
-    val zDir = "target/layout_z"
-    val hDir = "target/layout_hash"
-    Layout.zorderBy(part, Seq(col("p_size"), col("p_partkey") % 256), 8, 8)
-      .write.mode("overwrite").parquet(zDir)
-    part.repartition(8, col("p_partkey")).write.mode("overwrite").parquet(hDir)
-    def filesTouched(dir: String): Long =
-      spark.read.parquet(dir)
-        .filter(col("p_size").between(10, 12) && col("p_partkey") % 256 < 64)
-        .select(input_file_name()).distinct().count()
-    val (zf, hf) = (filesTouched(zDir), filesTouched(hDir))
-    // hash layout scatters the box across ~every file; z-order keeps it
-    // in a contiguous z-range → strictly fewer files hold matching rows
-    assert(zf < hf, s"z-order touched $zf files, hash layout $hf")
-    // the Hilbert sibling prunes at least as well as the seam-jumping
-    // Morton layout on the same box (connected arcs → tight boxes)
-    val hilDir = "target/layout_hilbert"
-    Layout.hilbertBy(part, col("p_size"), col("p_partkey") % 256, 8, 8)
-      .write.mode("overwrite").parquet(hilDir)
-    val hil = filesTouched(hilDir)
-    assert(hil < hf, s"hilbert touched $hil files, hash layout $hf")
-    assert(hil <= zf, s"hilbert touched $hil files, z-order $zf")
+    Scratch.using(spark, "graft-test-layout") { scratch =>
+      val zDir = s"$scratch/z"
+      val hDir = s"$scratch/hash"
+      Layout.zorderBy(part, Seq(col("p_size"), col("p_partkey") % 256), 8, 8)
+        .write.mode("overwrite").parquet(zDir)
+      part.repartition(8, col("p_partkey")).write.mode("overwrite").parquet(hDir)
+      def filesTouched(dir: String): Long =
+        spark.read.parquet(dir)
+          .filter(col("p_size").between(10, 12) && col("p_partkey") % 256 < 64)
+          .select(input_file_name()).distinct().count()
+      val (zf, hf) = (filesTouched(zDir), filesTouched(hDir))
+      // hash layout scatters the box across ~every file; z-order keeps it
+      // in a contiguous z-range → strictly fewer files hold matching rows
+      assert(zf < hf, s"z-order touched $zf files, hash layout $hf")
+      // the Hilbert sibling prunes at least as well as the seam-jumping
+      // Morton layout on the same box (connected arcs → tight boxes)
+      val hilDir = s"$scratch/hilbert"
+      Layout.hilbertBy(part, col("p_size"), col("p_partkey") % 256, 8, 8)
+        .write.mode("overwrite").parquet(hilDir)
+      val hil = filesTouched(hilDir)
+      assert(hil < hf, s"hilbert touched $hil files, hash layout $hf")
+      assert(hil <= zf, s"hilbert touched $hil files, z-order $zf")
+    }
   }
 
   test("shuffled: exact permutation, window-parity, seeded determinism") {

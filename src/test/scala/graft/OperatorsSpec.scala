@@ -532,20 +532,21 @@ class OperatorsSpec extends SparkSpec {
   test("PqModel save/load roundtrip: identical codebook, identical search from persisted codes") {
     val emb = Tables(spark, sf, "embeddings")
     val model = Similarity.pqTrain(emb, m = 4, ksub = 16, iters = 2, dim = 64)
-    val base = "target/pq_test_index"
-    model.save(spark, s"$base/codebook")
-    Similarity.pqEncode(emb, model).withColumnRenamed("vec_id", "c_id")
-      .write.mode("overwrite").parquet(s"$base/codes")
-    val loaded = Similarity.PqModel.load(spark, s"$base/codebook")
-    assert(loaded == model, "codebook must roundtrip exactly")
-    val q = emb.filter(col("vec_id") < 10)
-    val direct = Similarity.pqTopK(emb, q, 5, model).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSeq
-    val persisted = Similarity.pqTopKFromCodes(
-        spark.read.parquet(s"$base/codes"), q, 5, loaded).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSeq
-    assert(persisted.sorted == direct.sorted,
-      "persisted-index search must reproduce the in-memory search exactly")
+    Scratch.using(spark, "graft-test-pq-index") { base =>
+      model.save(spark, s"$base/codebook")
+      Similarity.pqEncode(emb, model).withColumnRenamed("vec_id", "c_id")
+        .write.mode("overwrite").parquet(s"$base/codes")
+      val loaded = Similarity.PqModel.load(spark, s"$base/codebook")
+      assert(loaded == model, "codebook must roundtrip exactly")
+      val q = emb.filter(col("vec_id") < 10)
+      val direct = Similarity.pqTopK(emb, q, 5, model).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSeq
+      val persisted = Similarity.pqTopKFromCodes(
+          spark.read.parquet(s"$base/codes"), q, 5, loaded).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSeq
+      assert(persisted.sorted == direct.sorted,
+        "persisted-index search must reproduce the in-memory search exactly")
+    }
   }
 
   test("multi-probe IVF recall >= single-cell IVF on the trained quantizer") {
@@ -1293,21 +1294,21 @@ class OperatorsSpec extends SparkSpec {
 
   test("Spider.discover: mixed-format tree, parquet dirs bound once, junk skipped") {
     import graft.sources.Spider
-    val root = "target/spider_test"
-    val dir = new java.io.File(root)
-    org.apache.commons.io.FileUtils.deleteDirectory(dir)
     import spark.implicits._
-    val df3 = Seq((1, "x"), (2, "y")).toDF("a", "b")
-    df3.write.mode("overwrite").parquet(s"$root/pq")
-    df3.write.mode("overwrite").option("header", "true").csv(s"$root/nested/c")
-    df3.withColumn("c", lit(3)).write.mode("overwrite").json(s"$root/j")
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/junk.bin"),
-      Array[Byte](1, 2, 3))
-    val got = Spider.discover(spark, root)
-      .select("dataset", "format", "n_cols")
-      .as[(String, String, Long)].collect().toSeq
-    assert(got == Seq(("j", "json", 3L), ("nested.c", "csv", 2L),
-      ("pq", "parquet", 2L)), got.toString)
+    Scratch.using(spark, "graft-test-spider") { root =>
+      val df3 = Seq((1, "x"), (2, "y")).toDF("a", "b")
+      df3.write.mode("overwrite").parquet(s"$root/pq")
+      df3.write.mode("overwrite").option("header", "true").csv(s"$root/nested/c")
+      df3.withColumn("c", lit(3)).write.mode("overwrite").json(s"$root/j")
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(root).toUri.getPath, "junk.bin"),
+        Array[Byte](1, 2, 3))
+      val got = Spider.discover(spark, root)
+        .select("dataset", "format", "n_cols")
+        .as[(String, String, Long)].collect().toSeq
+      assert(got == Seq(("j", "json", 3L), ("nested.c", "csv", 2L),
+        ("pq", "parquet", 2L)), got.toString)
+    }
   }
 
   test("triangleCount: K4, paths, dirty input, hub skew") {

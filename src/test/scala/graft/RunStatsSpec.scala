@@ -1,0 +1,31 @@
+package graft
+
+/** The run recorder counts what a measured body ran, by time window. */
+class RunStatsSpec extends SparkSpec {
+
+  test("a stream face's micro-batch jobs count, though they run under the stream's job group") {
+    val (_, rec) = RunStats.measure(spark, "stream_ewma") {
+      SparkEntry.benchFaces("stream_ewma")(spark, sf).count()
+    }
+    assert(rec.jobs.nonEmpty, rec.columns)
+    assert(rec.batches > 0, rec.columns)
+    assert(rec.batchMs.contains("addBatch"), rec.columns)
+  }
+
+  test("a shuffle row reports its shuffle bytes") {
+    val (_, rec) = RunStats.measure(spark, "q1_agg")(SparkEntry.queries("q1_agg")(spark, sf).count())
+    assert(rec.shuffleWriteBytes > 0 && rec.shuffleReadBytes > 0, rec.columns)
+    assert(rec.stages > 0 && rec.tasks > 0, rec.columns)
+  }
+
+  test("a throwing body leaves no job description set") {
+    val sc = spark.sparkContext
+    intercept[IllegalStateException] {
+      RunStats.measure(spark, "boom") {
+        assert(sc.getLocalProperty("spark.job.description") == "boom")
+        throw new IllegalStateException("injected")
+      }
+    }
+    assert(sc.getLocalProperty("spark.job.description") == null)
+  }
+}

@@ -175,7 +175,7 @@ class ScratchSpec extends SparkSpec {
         .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis).toMap
     val before = listing
     for (row <- Seq("src_csv_roundtrip", "src_binary_roundtrip", "src_spider",
-        "sim_index_persist", "sim_index_append"))
+        "sim_index_persist", "sim_index_append", "bucketed_join"))
       assert(SparkEntry.queries(row)(spark, sf).count() > 0, row)
     val after = listing
     assert(after == before,
