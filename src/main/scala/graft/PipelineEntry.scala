@@ -31,10 +31,10 @@ object PipelineEntry {
     * materialize-once contract as Similarity's persisted index); this
     * cache is the in-suite expression of that contract: the derivation
     * is written ONCE as parquet (narrow two-long rows) and every
-    * consumer scans it back. Staged as FILES, not a localCheckpoint,
+    * consumer scans it back. Staged as FILES, not a local checkpoint,
     * deliberately: Bench unpersists all persistent RDDs between
     * queries (stranded-block hygiene), and a foreign-unpersisted
-    * localCheckpoint is unrecoverable (lineage truncated) — the first
+    * local checkpoint is unrecoverable (lineage truncated) — the first
     * in-suite run of this cache as checkpoints lost the blocks and
     * failed 6 graph rows with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
     * Parquet staging is immune and matches what a cluster user
@@ -569,7 +569,7 @@ object PipelineEntry {
       val bounds = toks.agg(min("doc_id").as("lo"), max("doc_id").as("hi"))
       // NOTE (r18, negative result kept for the record): materializing
       // a shared (tok, bucket) count table + the 16-row curve via
-      // localCheckpoint to de-duplicate the in-plan subtrees was tried
+      // a local checkpoint to de-duplicate the in-plan subtrees was tried
       // and REVERTED — interleaved A/B measured it 2.05x SLOWER at
       // sf0.1 (0.61 -> 1.25 s, jobs 10 -> 15): the two eager
       // materialization barriers cost more than the duplicated 0.6 MB
@@ -1155,7 +1155,7 @@ object PipelineEntry {
       // derived from the input size (r17 — see autoPasses)
       val passes = autoPasses(s, dir, "customer", 256L << 20)
       // land the final pair set to its OWN parquet so the wave staging
-      // can be reclaimed NOW — landed as FILES, not localCheckpoint:
+      // can be reclaimed NOW — landed as FILES, not a local checkpoint:
       // an eager checkpoint materializes the result as deserialized
       // JVM rows, and at the sf100 rehearsal the ~10⁸-pair result
       // OOMed the heap on block re-read; a parquet write streams.
@@ -1327,7 +1327,7 @@ object PipelineEntry {
       // the final result to its OWN parquet so the wave staging can be
       // reclaimed NOW — a long-lived driver (Connect server, notebook)
       // must not accumulate /tmp staging across repeated invocations.
-      // Landed as FILES, not localCheckpoint: an eager checkpoint
+      // Landed as FILES, not a local checkpoint: an eager checkpoint
       // materializes the result as deserialized JVM rows, and the
       // fuzzy sibling's ~10⁸-pair sf100 result OOMed the heap on
       // block re-read; a parquet write streams. Keyed per (query, dir)

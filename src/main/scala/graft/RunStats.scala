@@ -6,7 +6,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
@@ -14,7 +14,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * one SparkListener (jobs, stages, tasks, shuffle and spill bytes, each
   * job's call site) and one StreamingQueryListener (micro-batches, their
   * `durationMs` phases and state-store commit time), both installed once
-  * per session, plus the generated classes compiled.
+  * per session, plus the generated classes compiled and the rounds of
+  * [[graft.operators.Fixpoint]] loops.
   *
   * A measurement counts by time window, not by job group: everything
   * that runs between its opening and closing drain of the listener bus
@@ -22,22 +23,26 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * own job group) count too, and so does any other activity in the
   * session at the time. */
 object RunStats {
-  /** One job: its id, stage count and `callSite.short`. */
+  /** One job: its id, stage count and call site: `callSite.short` when
+    * set, else the name of its result stage. */
   final case class Job(id: Int, stages: Int, site: String)
 
   /** What one measured body ran. `batchMs` sums each micro-batch's
     * `durationMs` by phase; `compiles` counts generated classes compiled
-    * (JVM-wide; a codegen cache hit compiles none). */
+    * (JVM-wide; a codegen cache hit compiles none); `rounds` counts the
+    * rounds of iterative operators. */
   final case class Record(wallS: Double, jobs: Seq[Job], stages: Int,
       tasks: Int, shuffleWriteBytes: Long, shuffleReadBytes: Long, spillBytes: Long,
-      compiles: Long, batches: Int, batchMs: Map[String, Long], stateCommitMs: Long) {
+      compiles: Long, batches: Int, batchMs: Map[String, Long], stateCommitMs: Long,
+      rounds: Int) {
     /** The record as one line of `key=value` columns. */
     def columns: String = {
       val mb = 1024.0 * 1024
       val phases = batchMs.toSeq.sorted.map { case (k, v) => s"$k:$v" }.mkString(",")
       f"$wallS%.2f s  shw=${shuffleWriteBytes / mb}%.1fMB shr=${shuffleReadBytes / mb}%.1fMB " +
         f"spill=${spillBytes / mb}%.1fMB jobs=${jobs.size} stages=$stages tasks=$tasks " +
-        s"compiles=$compiles batches=$batches batch_ms={$phases} state_commit_ms=$stateCommitMs"
+        s"compiles=$compiles rounds=$rounds batches=$batches batch_ms={$phases} " +
+        s"state_commit_ms=$stateCommitMs"
     }
   }
 
@@ -63,15 +68,17 @@ object RunStats {
     * listeners' events on different threads, hence the locking. */
   private final class Window {
     private val jobs = mutable.ArrayBuffer[Job]()
-    private var stages, tasks, batches = 0
+    private var stages, tasks, batches, rounds = 0
     private var shw, shr, spill, stateCommitMs = 0L
     private val batchMs = mutable.Map[String, Long]().withDefaultValue(0L)
 
     def job(e: SparkListenerJobStart): Unit = synchronized {
       val site = Option(e.properties).flatMap(p => Option(p.getProperty("callSite.short")))
+        .orElse(e.stageInfos.maxByOption(_.stageId).map(_.name))
       jobs += Job(e.jobId, e.stageInfos.size, site.getOrElse("?"))
     }
     def stage(): Unit = synchronized { stages += 1 }
+    def round(): Unit = synchronized { rounds += 1 }
     def task(e: SparkListenerTaskEnd): Unit = synchronized {
       tasks += 1
       Option(e.taskMetrics).foreach { m =>
@@ -87,7 +94,7 @@ object RunStats {
     }
     def record(wallS: Double, compiles: Long): Record = synchronized {
       Record(wallS, jobs.toList, stages, tasks, shw, shr, spill, compiles, batches,
-        batchMs.toMap, stateCommitMs)
+        batchMs.toMap, stateCommitMs, rounds)
     }
   }
 
@@ -97,6 +104,10 @@ object RunStats {
     override def onJobStart(e: SparkListenerJobStart): Unit = open.forEach(_.job(e))
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = open.forEach(_.stage())
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = open.forEach(_.task(e))
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case _: graft.operators.Fixpoint.Round => open.forEach(_.round())
+      case _ => ()
+    }
   }
 
   private object Batches extends StreamingQueryListener {

@@ -21,7 +21,7 @@ object Session {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
-      // iterative operators localCheckpoint edge-sized RDDs, and blocks
+      // iterative operators checkpoint edge-sized RDDs locally, and blocks
       // demoted from the storage pool go to disk uncompressed by
       // default: at an sf100 rehearsal that stream filled the local
       // disk before CC's first round ended; the edge blocks LZ4 ~3x

@@ -24,9 +24,8 @@ import org.apache.spark.sql.types._
   * adjacent pairs — linear in corpus tokens, map-side combined), a
   * driver-side top-1 collect (the fitted-model rule: a merge table is
   * config-sized), and one codegen'd per-row fold rewriting the token
-  * arrays. The rewritten corpus is localCheckpoint'ed with one-round
-  * retirement lag (the kmeansTrain/pagerank pattern), so round r costs
-  * O(corpus), not O(r·corpus).
+  * arrays. The rewritten corpus is a [[graft.operators.Fixpoint]]
+  * checkpoint each round, so round r costs O(corpus), not O(r·corpus).
   */
 object Bpe {
 
@@ -98,27 +97,24 @@ object Bpe {
   def train(docs: DataFrame, textCol: Column, rounds: Int,
             joiner: String = "\u0002", idCol: String = "doc_id"): (Seq[Merge], DataFrame) = {
     require(rounds > 0 && rounds <= 64, s"train: rounds must be in [1, 64], got $rounds")
-    var cur = docs.select(col(idCol), TextFunctions.tokens(textCol).as("ts"))
-    var retirable: DataFrame = null
-    val merges = Seq.newBuilder[Merge]
-    var r = 1
-    var done = false
-    while (r <= rounds && !done) {
-      val top = pairCounts(cur)
-        .orderBy(col("c").desc, col("a"), col("b")).limit(1).collect()
-      if (top.isEmpty) done = true
-      else {
-        val (a, b, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += Merge(r, a, b, c)
-        val prev = cur
-        cur = cur.withColumn("ts",
-          applyMerge(col("ts"), a, b, a + joiner + b)).localCheckpoint(true)
-        if (retirable ne null)
-          org.apache.spark.sql.GraftBridge.releaseCheckpoint(retirable)
-        retirable = prev
-        r += 1
+    graft.operators.Fixpoint.run("bpe", docs.sparkSession) { fx =>
+      var cur = docs.select(col(idCol), TextFunctions.tokens(textCol).as("ts"))
+      val merges = Seq.newBuilder[Merge]
+      var r = 1
+      var done = false
+      while (r <= rounds && !done) fx.round {
+        val top = pairCounts(cur)
+          .orderBy(col("c").desc, col("a"), col("b")).limit(1).collect()
+        if (top.isEmpty) done = true
+        else {
+          val (a, b, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+          merges += Merge(r, a, b, c)
+          cur = fx.checkpoint(cur.withColumn("ts", applyMerge(col("ts"), a, b, a + joiner + b)))._1
+          r += 1
+        }
+        Seq(cur)
       }
-    }
-    (merges.result(), cur)
+      (merges.result(), cur)
+    }(r => Seq(r._2))
   }
 }

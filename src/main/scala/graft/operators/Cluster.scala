@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import scala.util.chaining._
-
 /** Duplicate-cluster resolution: turn near-dup PAIRS (from any of the
   * [[Dedup]] candidate generators) into connected components, so a
   * pipeline can keep exactly one canonical document per cluster.
@@ -35,25 +33,9 @@ import scala.util.chaining._
   * 100 rounds already at 400. The permuted-chain unit test pins
   * exactly this case.
   *
-  * Lineage is truncated every round with `localCheckpoint` so the plan
-  * doesn't grow across iterations; a production cluster job would set
-  * a fault-tolerant `checkpoint` dir instead (the one-line swap is
-  * noted inline).
+  * Each round's state is checkpointed and released by [[Fixpoint]].
   */
 object Cluster {
-  private val log = org.slf4j.LoggerFactory.getLogger("graft.operators.Cluster")
-
-  /** Round-loop checkpoint: truncate lineage AND drop the origin plan's
-    * carried statistics. Without the drop, each round's checkpoint
-    * re-captures the PRODUCT-estimated sizeInBytes of a join of previous
-    * checkpoints, exponentiating the carried BigInt (~64·k^r bits after
-    * r rounds) until driver-side stats estimation dominates wall time —
-    * see [[org.apache.spark.sql.GraftBridge.freshStats]] for the
-    * measured pathology. AQE re-derives real sizes at runtime.
-    */
-  private def ckpt(df: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftBridge.measuredStats(df.localCheckpoint(true))
-
   /** Connected components of an undirected graph.
     *
     * @param nodes one column `id` — every vertex (isolated vertices keep
@@ -67,13 +49,16 @@ object Cluster {
     *                pair-generation bug upstream, not a big graph.
     * @return (id, label) where label = min node id in the component
     */
-  def connectedComponents(nodes: DataFrame, edges: DataFrame, maxIter: Int = 40): DataFrame = {
+  def connectedComponents(nodes: DataFrame, edges: DataFrame, maxIter: Int = 40): DataFrame =
+    Fixpoint.run("cc", edges.sparkSession)(components(_, nodes, edges, maxIter))(Seq(_))
+
+  private def components(fx: Fixpoint, nodes: DataFrame, edges: DataFrame,
+                         maxIter: Int): DataFrame = {
     // materialize the edge list BEFORE symmetrizing: a union of two
     // selects over the raw plan would execute the (possibly expensive)
     // pair-generation pipeline once per branch. Everything downstream
     // derives narrowly from the checkpointed rows.
-    val e0 = edges.select(col("src"), col("dst"))
-      .localCheckpoint(true) // production: .checkpoint() against a DFS dir
+    val (e0, _) = fx.checkpoint(edges.select(col("src"), col("dst")))
     val sym = e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
 
     // only nodes that appear in an edge can ever change label — iterate
@@ -84,10 +69,9 @@ object Cluster {
     // same shuffle a plain distinct would cost, but it fuses the first
     // hook, so typical near-dup clusters (stars/pairs) arrive already
     // converged and the loop exits on its first emptiness check.
-    var labels = sym.groupBy(col("src").as("id"))
+    val (labels, _) = fx.checkpoint(sym.groupBy(col("src").as("id"))
       .agg(min(col("dst")).as("_m"))
-      .select(col("id"), least(col("id"), col("_m")).as("label"))
-      .pipe(ckpt)
+      .select(col("id"), least(col("id"), col("_m")).as("label")))
 
     // contract the edge list onto the seeded labels: canonical
     // (least, greatest) orientation, self-loops dropped, duplicates
@@ -104,12 +88,8 @@ object Cluster {
         .filter(col("src") =!= col("dst"))
         .distinct()
     }
-    // checkpoint-with-count (r17): the materializing action doubles as
-    // the loop's emptiness probe, so no round pays a separate isEmpty
-    // job over data the checkpoint job just touched
-    var (e, eRows) = org.apache.spark.sql.GraftBridge
-      .checkpointCounted(contract(e0, labels))
-    org.apache.spark.sql.GraftBridge.releaseCheckpoint(e0)
+    // the checkpoint's row count is the loop's emptiness probe
+    var (e, eRows) = fx.checkpoint(contract(e0, labels))
 
     // Composed merge map (r17 optimization): seed-label → current-root,
     // non-identity rows only, built up across rounds INSTEAD of
@@ -129,22 +109,15 @@ object Cluster {
     // so the returned plan's root carries measured stats and the final
     // label join can still broadcast it). The lazy layer is at most one
     // join + union deep over MEASURED checkpoints, so stats stay
-    // bounded (the k^rounds compounding measuredStats exists to stop
-    // cannot re-enter), and the checkpoints a lazy layer references
-    // are released only after the next materialization lands.
+    // bounded (the k^rounds compounding measured stats exist to stop
+    // cannot re-enter).
     var root: DataFrame = null
     var rootLazyDepth = 0
-    var pendingRelease: List[DataFrame] = Nil
     def materializeRoot(): Unit = if (root != null && rootLazyDepth > 0) {
-      val rootCk = ckpt(root)
-      pendingRelease.foreach(org.apache.spark.sql.GraftBridge.releaseCheckpoint)
-      pendingRelease = List(rootCk)
-      root = rootCk
+      root = fx.checkpoint(root)._1
       rootLazyDepth = 0
     }
-    var it = 0
-    while (eRows > 0 && it < maxIter) {
-      val roundT0 = System.nanoTime()
+    while (eRows > 0 && fx.rounds < maxIter) fx.round {
       // hooking: each supervertex adopts its minimum neighboring
       // supervertex when that neighbor is smaller — one aggregate over
       // the (symmetrized) contracted edges. parent < f always, so the
@@ -160,11 +133,9 @@ object Cluster {
       // steps per materialization: the convergence probe reads only
       // the LAST step's change flag (one doubling with no change is a
       // fixpoint, so "the final step changed nothing" certifies
-      // compression regardless of earlier steps). r18: the probe no
-      // longer pays its own job — the checkpoint's materializing count
-      // tallies the changed rows (GraftBridge.checkpointFlagCounted).
-      // 64 steps is unreachable for any real forest; fail loudly
-      // rather than spin.
+      // compression regardless of earlier steps), tallied by the
+      // checkpoint's own job. 64 steps is unreachable for any real
+      // forest; fail loudly rather than spin.
       def step(x: DataFrame): DataFrame = x.as("x")
         .join(x.select(col("f").as("_f2"), col("t").as("_t2")).as("y"),
           col("x.t") === col("_f2"), "left")
@@ -174,32 +145,40 @@ object Cluster {
       // variant was MEASURED worse this round: each extra in-plan
       // self-join adds ~2 AQE stage-jobs per pass while deep rounds
       // still need a second pass, 131 vs 115 jobs on the 20k permuted
-      // chain).
-      var (mCk, nChg) = org.apache.spark.sql.GraftBridge
-        .checkpointFlagCounted(step(step(hook).select(col("f"), col("t"))), "_chg")
-      var m = mCk.select(col("f"), col("t"))
-      var depth = 2
-      var compressed = nChg == 0L
-      while (!compressed && depth < 64) {
-        val (m2, nChg2) = org.apache.spark.sql.GraftBridge
-          .checkpointFlagCounted(step(step(m).select(col("f"), col("t"))), "_chg")
-        compressed = nChg2 == 0L
-        org.apache.spark.sql.GraftBridge.releaseCheckpoint(mCk)
-        mCk = m2
-        m = m2.select(col("f"), col("t"))
-        depth += 2
+      // chain). A superseded pass is map-sized and goes at the round's
+      // end.
+      def compress(x: DataFrame): (DataFrame, Long) = {
+        val (ck, chg) = fx.checkpoint(step(step(x).select(col("f"), col("t"))), Some("_chg"))
+        (ck.select(col("f"), col("t")), chg)
       }
-      if (!compressed)
+      var (m, nChg) = compress(hook)
+      var depth = 2
+      while (nChg > 0L && depth < 64) {
+        val (m2, nChg2) = compress(m)
+        m = m2; nChg = nChg2; depth += 2
+      }
+      if (nChg > 0L)
         throw new IllegalStateException(
           "connectedComponents: hooking forest failed to compress in 64 " +
             "doubling steps — impossible for any graph that fits in " +
             "storage; a bug, not a workload property")
+      // fold this round's merges into the composed map (map-sized):
+      // existing roots re-route through m, and m's own rows join the
+      // map verbatim (domain disjointness argued above); landed every
+      // second round
+      root =
+        if (root == null) m
+        else root.as("c")
+          .join(m.select(col("f").as("_mf"), col("t").as("_mt")).as("d"),
+            col("c.t") === col("_mf"), "left")
+          .select(col("c.f").as("f"), coalesce(col("_mt"), col("c.t")).as("t"))
+          .unionByName(m)
+      rootLazyDepth += 1
+      if (rootLazyDepth >= 2) materializeRoot()
       // edge endpoints are ALREADY label values, so they re-contract
       // through the partial map m directly (left join + coalesce —
-      // unhooked labels keep themselves). Materialized BEFORE the root
-      // fold's possible materializeRoot below, so mCk is never
-      // released while this plan still needs it.
-      val (e2, e2Rows) = org.apache.spark.sql.GraftBridge.checkpointCounted(
+      // unhooked labels keep themselves)
+      val (e2, e2Rows) = fx.checkpoint(
         e.as("e")
         .join(m.select(col("f").as("_sf"), col("t").as("_st")).as("ms"),
           col("e.src") === col("_sf"), "left")
@@ -211,36 +190,9 @@ object Cluster {
           greatest(col("_ns"), col("_nd")).as("dst"))
         .filter(col("src") =!= col("dst"))
         .distinct())
-      // fold this round's merges into the composed map (map-sized):
-      // existing roots re-route through m, and m's own rows join the
-      // map verbatim (domain disjointness argued above). r18: the fold
-      // is LAZY — materializeRoot lands it every second round (and
-      // once at exit), halving the per-round map-fold checkpoint jobs;
-      // mCk rides in pendingRelease until that materialization.
-      root =
-        if (root == null) m
-        else root.as("c")
-          .join(m.select(col("f").as("_mf"), col("t").as("_mt")).as("d"),
-            col("c.t") === col("_mf"), "left")
-          .select(col("c.f").as("f"), coalesce(col("_mt"), col("c.t")).as("t"))
-          .unionByName(m)
-      rootLazyDepth += 1
-      pendingRelease ::= mCk
-      if (rootLazyDepth >= 2) materializeRoot()
-      org.apache.spark.sql.GraftBridge.releaseCheckpoint(e)
       e = e2
       eRows = e2Rows
-      it += 1
-      // round diagnostics at DEBUG: wall time, inner-compression depth
-      // and stored blocks, for triaging convergence on hostile
-      // component shapes without touching the plan
-      if (log.isDebugEnabled) {
-        val sc = e.sparkSession.sparkContext
-        val stored = sc.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
-        log.debug(f"[cc] round $it%2d depth=$depth " +
-          f"wall=${(System.nanoTime() - roundT0) / 1e9}%.2fs " +
-          f"stored=${stored / 1048576.0}%.1fMB edges=$eRows")
-      }
+      Seq(labels, e, root)
     }
     if (eRows > 0)
       throw new IllegalStateException(
@@ -249,13 +201,8 @@ object Cluster {
           "this means a pair-generation bug upstream (e.g. an edge stream " +
           "that keeps growing), not a legitimately large graph; raise " +
           "maxIter only if such a graph is truly intended")
-    // the (empty) final edge checkpoint has no consumer past the loop
-    // probe — release it so the operator's live footprint at return is
-    // exactly the seeded labels + the composed map
-    org.apache.spark.sql.GraftBridge.releaseCheckpoint(e)
     // land any pending lazy fold so the final label join sees a
-    // MEASURED (usually broadcastable) root and the superseded
-    // checkpoints are released — the return-footprint contract above
+    // MEASURED (usually broadcastable) root
     materializeRoot()
     // apply the composed map to the seeded labels ONCE, then isolated
     // vertices get their own label via one left join (no iteration)

@@ -21,9 +21,8 @@ import org.apache.spark.sql.types._
   * Scale shape per iteration: one join of the edge list against the
   * (node, pr) table co-keyed on `src` — co-locatable by bucketing both
   * on the node key — then one `groupBy(dst)` partial/final aggregate;
-  * rank state is 2 columns per node. `localCheckpoint` truncates the
-  * per-iteration lineage exactly like the trainer loop (at petabyte
-  * scale swap for a reliable checkpoint dir).
+  * rank state is 2 columns per node, checkpointed each round by
+  * [[Fixpoint]].
   */
 object Graph {
 
@@ -69,7 +68,7 @@ object Graph {
       s"pagerank: damping $dampNum/$dampDen outside [0, 1]")
     require(scale > 0, s"pagerank: scale must be positive, got $scale")
     // the edge list feeds every iteration — materialize it ONCE,
-    // pre-partitioned on the join key (localCheckpoint preserves the
+    // pre-partitioned on the join key (the cache preserves the
     // partitioning, so no iteration re-shuffles the edges; only the
     // node-sized contribution aggregate moves per round — the shape
     // that holds when edges outweigh nodes 100:1 on a real crawl).
@@ -88,7 +87,7 @@ object Graph {
     val default = edges.sparkSession.sessionState.conf.numShufflePartitions
     val nEdges = edges.select(col("src"), col("dst")).count()
     val edgeParts = iterWidth(nEdges, default)
-    // COLUMNAR persist, not localCheckpoint, for the edge table: a
+    // COLUMNAR persist, not a checkpoint, for the edge table: a
     // local checkpoint stores DESERIALIZED row objects, and at sf100
     // (1.17 B rows) the unroll of ~GiB object blocks OOMed a 96 GB
     // heap even at the data-sized width. The SQL cache stores
@@ -100,30 +99,21 @@ object Graph {
     val e = edges.select(col("src"), col("dst"))
       .repartition(edgeParts, col("src")).sortWithinPartitions("src")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    e.count() // materialize the cache once, outside the round loop
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint(true)
-    // rank state carries outdeg so each round is ONE edge join + ONE
-    // aggregate (a separate degree join would re-shuffle the edges)
-    var st = deg.select(col("src").as("id"), col("outdeg"),
-      lit(scale).as("pr"))
-    // checkpoint retirement lags one round, as in Similarity.kmeansTrain
-    // (the lazy next-round plan still references the previous blocks)
-    var retirable: DataFrame = null
     // unpersist in a finally: an iteration that dies (OOM/disk-full —
     // the exact failure modes at the volume ceiling) must not leak an
     // edge-sized cache for the life of a long-lived driver
-    try {
-      for (_ <- 1 to iters) {
-        val prev = st
-        st = rankUpdate(deg, contributions(e, st), scale, dampNum, dampDen)
-          .localCheckpoint(true)
-        if (retirable ne null)
-          org.apache.spark.sql.GraftBridge.releaseCheckpoint(retirable)
-        retirable = prev
+    try Fixpoint.run("pagerank", edges.sparkSession) { fx =>
+      e.count() // materialize the cache once, outside the round loop
+      val (deg, _) = fx.checkpoint(e.groupBy("src").agg(count(lit(1)).as("outdeg")))
+      // rank state carries outdeg so each round is ONE edge join + ONE
+      // aggregate (a separate degree join would re-shuffle the edges)
+      var st = deg.select(col("src").as("id"), col("outdeg"), lit(scale).as("pr"))
+      for (_ <- 1 to iters) fx.round {
+        st = fx.checkpoint(rankUpdate(deg, contributions(e, st), scale, dampNum, dampDen))._1
+        Seq(deg, st)
       }
-    } finally e.unpersist(false) // final state is eagerly checkpointed
-    st.select(col("id"), col("pr"))
+      st.select(col("id"), col("pr"))
+    }(Seq(_)) finally e.unpersist(false) // final state is eagerly checkpointed
   }
 
   /** One PageRank round's contribution stream `(dst, c)`: every edge
@@ -201,28 +191,24 @@ object Graph {
     val voteParts = iterWidth(
       checkedEdgeCount(edges.select(col("src"), col("dst")), "labelPropagation"),
       default)
-    // columnar persist, not localCheckpoint — same r16 fix as
+    // columnar persist, not a checkpoint — same r16 fix as
     // [[pagerank]]: deserialized checkpoint blocks OOM the heap at
     // sf100; compressed columnar batches carry the same partitioning
     val e = edges.select(col("src"), col("dst"))
       .repartition(voteParts, col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    e.count() // materialize once, outside the round loop
-    var st = e.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("lab"))
-    var retirable: DataFrame = null
     // unpersist in a finally, as [[pagerank]]: a mid-iteration failure
     // must not leak the edge-sized cache in a long-lived driver
-    try {
-      for (_ <- 1 to iters) {
-        val prev = st
-        st = vote(e, st, st, voteParts).localCheckpoint(true)
-        if (retirable ne null)
-          org.apache.spark.sql.GraftBridge.releaseCheckpoint(retirable)
-        retirable = prev
+    try Fixpoint.run("labelprop", edges.sparkSession) { fx =>
+      e.count() // materialize once, outside the round loop
+      var st = e.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("lab"))
+      for (_ <- 1 to iters) fx.round {
+        st = fx.checkpoint(vote(e, st, st, voteParts))._1
+        Seq(st)
       }
-    } finally e.unpersist(false) // final state is eagerly checkpointed
-    st.select(col("id"), col("lab").as("label"))
+      st.select(col("id"), col("lab").as("label"))
+    }(Seq(_)) finally e.unpersist(false) // final state is eagerly checkpointed
   }
 
   /** The edge count, from ONE aggregate that also enforces label
@@ -567,8 +553,8 @@ object Graph {
     *
     * Scale shape per round: one node-sized degree aggregate + two
     * semi-joins of the edge list against the surviving node set (both
-    * keyed on the node id, co-locatable by bucketing); lineage
-    * truncated per round like [[pagerank]]. Rounds are data-bounded
+    * keyed on the node id, co-locatable by bucketing); each round's
+    * edge list is a [[Fixpoint]] checkpoint. Rounds are data-bounded
     * (each round removes ≥ 1 node or terminates) and in practice
     * O(log n) on web-like graphs; `maxIter` guards pathological
     * chains and FAILS FAST rather than returning a non-core.
@@ -579,28 +565,27 @@ object Graph {
     def degrees(e: DataFrame): DataFrame =
       e.select(col("a").as("id")).union(e.select(col("b").as("id")))
         .groupBy("id").agg(count(lit(1)).as("deg"))
-    // counted checkpoints (r17, as Cluster): the materializing count()
-    // doubles as the peel loop's convergence reading — one job per
-    // round where checkpoint-then-count paid two
-    var (e, prev) = org.apache.spark.sql.GraftBridge.checkpointCounted(
-      edges
+    Fixpoint.run("kcore", edges.sparkSession) { fx =>
+      // the checkpoint's row count is the peel's convergence reading
+      var (e, prev) = fx.checkpoint(edges
         .select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
         .filter(col("a") =!= col("b")).distinct())
-    var it = 0
-    var done = prev == 0L
-    while (!done && it < maxIter) {
-      val keep = degrees(e).filter(col("deg") >= k).select("id")
-      val (e2, n2) = org.apache.spark.sql.GraftBridge.checkpointCounted(e
-        .join(keep.withColumnRenamed("id", "a"), Seq("a"), "left_semi")
-        .join(keep.withColumnRenamed("id", "b"), Seq("b"), "left_semi"))
-      // no edge dropped ⇒ every endpoint already had deg >= k ⇒ fixpoint
-      done = n2 == prev || n2 == 0L
-      e = e2; prev = n2; it += 1
-    }
-    require(done, s"kCore: not converged after $maxIter rounds " +
-      "(raise maxIter; the peel always terminates in <= |V| rounds)")
-    degrees(e).filter(col("deg") >= k)
+      var done = prev == 0L
+      while (!done && fx.rounds < maxIter) fx.round {
+        val keep = degrees(e).filter(col("deg") >= k).select("id")
+        val (e2, n2) = fx.checkpoint(e
+          .join(keep.withColumnRenamed("id", "a"), Seq("a"), "left_semi")
+          .join(keep.withColumnRenamed("id", "b"), Seq("b"), "left_semi"))
+        // no edge dropped ⇒ every endpoint already had deg >= k ⇒ fixpoint
+        done = n2 == prev || n2 == 0L
+        e = e2; prev = n2
+        Seq(e)
+      }
+      require(done, s"kCore: not converged after $maxIter rounds " +
+        "(raise maxIter; the peel always terminates in <= |V| rounds)")
+      degrees(e).filter(col("deg") >= k)
+    }(Seq(_))
   }
 
   /** Common-neighbor link prediction over an undirected edge list —

@@ -124,58 +124,49 @@ object Similarity {
     val qvExpr = transform(col(vecCol),
       x => floor(x.cast(DoubleType) * S).cast(LongType))
     val base = emb.select(col(idCol), qvExpr.as("qv"))
-    // seeds = FIRST k vectors by id (TakeOrdered of k rows) — robust to
-    // sparse/offset id spaces, where an `id < k` filter would silently
-    // yield fewer than k (possibly zero) centroids (ADVICE r03). A corpus
-    // with fewer than k vectors legitimately trains that many centroids.
-    var cents = base.orderBy(col(idCol)).limit(kk)
-      .select(col(idCol).cast(LongType).as("cid"), col("qv").as("cv"))
-    var assigned: DataFrame = base.select(col(idCol), col("qv"), lit(0L).as("cid"))
-    // checkpoint retirement lags ONE round: the (lazy) `assigned` of round
-    // i still references round i-1's centroid blocks, so only the round
-    // i-2 checkpoint is garbage when round i completes. k tiny rows each,
-    // but the no-leak pattern should match Cluster.connectedComponents.
-    var retirable: DataFrame = null
-    for (_ <- 1 to iters) {
-      // pure-int64 squared distance, native kernel: exact in any engine
-      // and any order (the unrolled element_at sum it replaces compiled a
-      // dim-term expression tree per stage; same integers either way, so
-      // the DuckDB oracle replay is untouched)
-      val dist = graft.plans.QuantizedL2(col("qv"), col("cv"))
-      // argmin over the k broadcast candidates; ordering struct is unique
-      // per (vector, cid) so the cid-tiebreak is engine-deterministic
-      assigned = base.crossJoin(broadcast(cents))
-        .withColumn("_d", dist)
-        .groupBy(col(idCol))
-        .agg(min_by(struct(col("qv"), col("cid")), struct(col("_d"), col("cid"))).as("_b"))
-        .select(col(idCol), col("_b.qv").as("qv"), col("_b.cid").as("cid"))
-      // integer centroid update: floor(Σ qv / n) per dimension (sums fit
-      // int64: |qv| < 2^21, so even 2^31 rows stay under 2^52; the double
-      // division is exact below 2^53)
-      val sums = (0 until dim).map(i =>
-        floor(sum(element_at(col("qv"), i + 1)).cast(DoubleType) / count(lit(1)))
-          .cast(LongType).as(s"_c$i"))
-      val fresh = assigned.groupBy(col("cid"))
-        .agg(sums.head, sums.tail: _*)
-        .select(col("cid"), array((0 until dim).map(i => col(s"_c$i")): _*).as("cv"))
-      // a centroid whose cluster went empty emits NO row from the update
-      // aggregate; carry it forward unchanged (k-row left join) so k never
-      // silently shrinks — reachable when duplicate vectors sit among the
-      // seeds, since ties all break to the lowest cid
-      val prev = cents
-      cents = cents.select(col("cid"), col("cv").as("_prev"))
-        .join(fresh.select(col("cid"), col("cv").as("_new")), Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("_new"), col("_prev")).as("cv"))
-        // k tiny rows, but checkpointing them truncates the lineage so
-        // the plan stays one round deep however many iterations run
-        // (each round otherwise nests the previous crossJoin+agg)
-        .localCheckpoint(true)
-      if (retirable ne null) org.apache.spark.sql.GraftBridge.releaseCheckpoint(retirable)
-      retirable = prev
-    }
-    // `retirable` holds the centroids the LAST assignment ran against
-    // (the loop updates cents after assigning); non-null since iters ≥ 1
-    (assigned.select(col(idCol), col("cid")), retirable)
+    // pure-int64 squared distance, native kernel: exact in any engine
+    // and any order (the unrolled element_at sum it replaces compiled a
+    // dim-term expression tree per stage; same integers either way, so
+    // the DuckDB oracle replay is untouched)
+    val dist = graft.plans.QuantizedL2(col("qv"), col("cv"))
+    // argmin over the k broadcast candidates; ordering struct is unique
+    // per (vector, cid) so the cid-tiebreak is engine-deterministic
+    def assign(cents: DataFrame): DataFrame = base.crossJoin(broadcast(cents))
+      .withColumn("_d", dist)
+      .groupBy(col(idCol))
+      .agg(min_by(struct(col("qv"), col("cid")), struct(col("_d"), col("cid"))).as("_b"))
+      .select(col(idCol), col("_b.qv").as("qv"), col("_b.cid").as("cid"))
+    // integer centroid update: floor(Σ qv / n) per dimension (sums fit
+    // int64: |qv| < 2^21, so even 2^31 rows stay under 2^52; the double
+    // division is exact below 2^53)
+    val sums = (0 until dim).map(i =>
+      floor(sum(element_at(col("qv"), i + 1)).cast(DoubleType) / count(lit(1)))
+        .cast(LongType).as(s"_c$i"))
+    Fixpoint.run("kmeans", emb.sparkSession) { fx =>
+      // seeds = FIRST k vectors by id (TakeOrdered of k rows) — robust to
+      // sparse/offset id spaces, where an `id < k` filter would silently
+      // yield fewer than k (possibly zero) centroids (ADVICE r03). A corpus
+      // with fewer than k vectors legitimately trains that many centroids.
+      var cents = base.orderBy(col(idCol)).limit(kk)
+        .select(col(idCol).cast(LongType).as("cid"), col("qv").as("cv"))
+      // round i assigns against the incoming centroids, then updates
+      // them; the last round's update would describe no row's cell, so
+      // iters − 1 updates run and the final assignment stays lazy
+      for (_ <- 2 to iters) fx.round {
+        val fresh = assign(cents).groupBy(col("cid"))
+          .agg(sums.head, sums.tail: _*)
+          .select(col("cid"), array((0 until dim).map(i => col(s"_c$i")): _*).as("cv"))
+        // a centroid whose cluster went empty emits NO row from the update
+        // aggregate; carry it forward unchanged (k-row left join) so k never
+        // silently shrinks — reachable when duplicate vectors sit among the
+        // seeds, since ties all break to the lowest cid
+        cents = fx.checkpoint(cents.select(col("cid"), col("cv").as("_prev"))
+          .join(fresh.select(col("cid"), col("cv").as("_new")), Seq("cid"), "left")
+          .select(col("cid"), coalesce(col("_new"), col("_prev")).as("cv")))._1
+        Seq(cents)
+      }
+      (assign(cents).select(col(idCol), col("cid")), cents)
+    }(r => Seq(r._1, r._2))
   }
 
   /** Multi-probe IVF: each query searches its `nprobe` NEAREST coarse
@@ -404,49 +395,43 @@ object Similarity {
         transform(slice(col(vecCol), j * sub + 1, sub),
           x => floor(x.cast(DoubleType) * QScale).cast(LongType)).as("qv"))
     }: _*))
-    val base = emb.select(col(idCol), subCol.as("_s"))
-      .select(col(idCol), col("_s.sub").as("sub"), col("_s.qv").as("qv"))
-      .localCheckpoint(true)
-    // seeds: every subspace seeds from the SAME first-ksub ids, so one
-    // TakeOrdered + broadcast join covers all m (no corpus window)
-    val seeds = emb.select(col(idCol)).orderBy(col(idCol)).limit(ksub)
-    var cents = base.join(broadcast(seeds), idCol)
-      .select(col("sub"), col(idCol).cast(LongType).as("cid"), col("qv").as("cv"))
-      .localCheckpoint(true)
-    var retirable: DataFrame = null
-    for (_ <- 1 to iters) {
-      val assigned = base.join(broadcast(cents), "sub")
-        .withColumn("_d", graft.plans.QuantizedL2(col("qv"), col("cv")))
-        .groupBy(col(idCol), col("sub"))
-        .agg(min_by(struct(col("qv"), col("cid")), struct(col("_d"), col("cid"))).as("_b"))
-        .select(col("sub"), col("_b.qv").as("qv"), col("_b.cid").as("cid"))
+    Fixpoint.run("pq", emb.sparkSession) { fx =>
+      val (base, _) = fx.checkpoint(emb.select(col(idCol), subCol.as("_s"))
+        .select(col(idCol), col("_s.sub").as("sub"), col("_s.qv").as("qv")))
+      // seeds: every subspace seeds from the SAME first-ksub ids, so one
+      // TakeOrdered + broadcast join covers all m (no corpus window)
+      val seeds = emb.select(col(idCol)).orderBy(col(idCol)).limit(ksub)
+      var (cents, _) = fx.checkpoint(base.join(broadcast(seeds), idCol)
+        .select(col("sub"), col(idCol).cast(LongType).as("cid"), col("qv").as("cv")))
       val sums = (0 until sub).map(i =>
         floor(sum(element_at(col("qv"), i + 1)).cast(DoubleType) / count(lit(1)))
           .cast(LongType).as(s"_c$i"))
-      val fresh = assigned.groupBy(col("sub"), col("cid"))
-        .agg(sums.head, sums.tail: _*)
-        .select(col("sub"), col("cid"),
-          array((0 until sub).map(i => col(s"_c$i")): _*).as("cv"))
-      // empty-cluster carry-forward, as in kmeansTrain
-      val prev = cents
-      cents = cents.select(col("sub"), col("cid"), col("cv").as("_prev"))
-        .join(fresh.select(col("sub"), col("cid"), col("cv").as("_new")),
-          Seq("sub", "cid"), "left")
-        .select(col("sub"), col("cid"), coalesce(col("_new"), col("_prev")).as("cv"))
-        .localCheckpoint(true)
-      if (retirable ne null) org.apache.spark.sql.GraftBridge.releaseCheckpoint(retirable)
-      retirable = prev
-    }
-    // the model is `retirable` — the centroids the LAST assignment ran
-    // against (kmeansTrain's contract; the post-update set describes no
-    // row's cell, and the oracle replays exactly this choice)
-    val collected = retirable.orderBy(col("sub"), col("cid")).collect()
-    org.apache.spark.sql.GraftBridge.releaseCheckpoint(base)
-    org.apache.spark.sql.GraftBridge.releaseCheckpoint(cents)
-    val bySub = collected.groupBy(_.getInt(0))
-    PqModel(m, dim, (0 until m).map { j =>
-      bySub(j).map(r => (r.getLong(1), r.getSeq[Long](2).toIndexedSeq)).toIndexedSeq
-    }.toIndexedSeq)
+      // the model is the centroids the LAST assignment ran against
+      // (kmeansTrain's contract, which the oracle replays), so iters − 1
+      // assign-and-update rounds run
+      for (_ <- 2 to iters) fx.round {
+        val assigned = base.join(broadcast(cents), "sub")
+          .withColumn("_d", graft.plans.QuantizedL2(col("qv"), col("cv")))
+          .groupBy(col(idCol), col("sub"))
+          .agg(min_by(struct(col("qv"), col("cid")), struct(col("_d"), col("cid"))).as("_b"))
+          .select(col("sub"), col("_b.qv").as("qv"), col("_b.cid").as("cid"))
+        val fresh = assigned.groupBy(col("sub"), col("cid"))
+          .agg(sums.head, sums.tail: _*)
+          .select(col("sub"), col("cid"),
+            array((0 until sub).map(i => col(s"_c$i")): _*).as("cv"))
+        // empty-cluster carry-forward, as in kmeansTrain
+        cents = fx.checkpoint(cents.select(col("sub"), col("cid"), col("cv").as("_prev"))
+          .join(fresh.select(col("sub"), col("cid"), col("cv").as("_new")),
+            Seq("sub", "cid"), "left")
+          .select(col("sub"), col("cid"), coalesce(col("_new"), col("_prev")).as("cv")))._1
+        Seq(base, cents)
+      }
+      val collected = cents.orderBy(col("sub"), col("cid")).collect()
+      val bySub = collected.groupBy(_.getInt(0))
+      PqModel(m, dim, (0 until m).map { j =>
+        bySub(j).map(r => (r.getLong(1), r.getSeq[Long](2).toIndexedSeq)).toIndexedSeq
+      }.toIndexedSeq)
+    }(_ => Nil)
   }
 
   /** Encode every vector to its `m` nearest-sub-centroid codes — a PURE

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.api.{Col, Table}
 import graft.functions.TextFunctions
-import graft.operators.{Cluster, Incremental, Pack, Quantile, Sampling}
+import graft.operators.{Cluster, Graph, Incremental, Pack, Quantile, Sampling}
 
 /** Round-3 corpus-curation operators: connected-component dedup
   * clustering, sequence packing, deterministic sampling, PII scrubbing,
@@ -31,40 +31,55 @@ class CurationSpec extends SparkSpec {
     assert(got.forall(_._2 == 1L))
   }
 
-  test("connectedComponents logs one [cc] round line per round at DEBUG, none by default") {
+  /** The round numbers of the `[op] round n` lines the Fixpoint logger
+    * writes while `body` runs, first at the default level (asserted
+    * empty), then at DEBUG. */
+  private def fixpointRounds(op: String)(body: => Unit): Seq[Int] = {
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.{LogEvent, Logger}
     import org.apache.logging.log4j.core.appender.AbstractAppender
     import org.apache.logging.log4j.core.config.Configurator
-    val name = "graft.operators.Cluster"
+    val name = "graft.operators.Fixpoint"
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val app = new AbstractAppender("cc-rounds", null, null, true, Array.empty) {
+    val app = new AbstractAppender(s"$op-rounds", null, null, true, Array.empty) {
       override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
     }
     app.start()
     val logger = LogManager.getLogger(name).asInstanceOf[Logger]
     logger.addAppender(app)
     val level = logger.getLevel
-    val Round = """\[cc\] round\s+(\d+) .*""".r
+    val Round = """\[(\w+)\] round (\d+) rows=\d+ ms=\d+ stored=\d+B""".r
     def rounds(): Seq[Int] = {
       lines.clear()
-      val edges = (1L until 12L).map(i => (i, i + 1)).toDF("src", "dst")
-      Cluster.connectedComponents((1L to 12L).toDF("id"), edges).collect()
+      body
       lines.toArray(Array.empty[String]).toSeq.map {
-        case Round(r) => r.toInt
+        case Round(`op`, r) => r.toInt
         case l => fail(s"unexpected line: $l")
       }
     }
     try {
       assert(rounds().isEmpty)
       Configurator.setLevel(name, Level.DEBUG)
-      val r = rounds()
-      assert(r.nonEmpty && r == (1 to r.size), r)
+      rounds()
     } finally {
       Configurator.setLevel(name, level)
       logger.removeAppender(app)
       app.stop()
     }
+  }
+
+  private def chainEdges = (1L until 12L).map(i => (i, i + 1)).toDF("src", "dst")
+
+  test("connectedComponents logs one [cc] round line per round at DEBUG, none by default") {
+    val r = fixpointRounds("cc") {
+      Cluster.connectedComponents((1L to 12L).toDF("id"), chainEdges).collect()
+    }
+    assert(r.nonEmpty && r == (1 to r.size), r)
+  }
+
+  test("kCore logs one [kcore] round line per round at DEBUG, none by default") {
+    val r = fixpointRounds("kcore")(Graph.kCore(chainEdges, 2).collect())
+    assert(r.nonEmpty && r == (1 to r.size), r)
   }
 
   test("connectedComponents: contraction converges a chain far longer than maxIter") {
@@ -444,32 +459,6 @@ class CurationSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("collide"), ex.getMessage)
     assert(ex.getMessage.contains("n_1_urgent"), ex.getMessage)
-  }
-
-  test("iterative operators release superseded checkpoints (bounded executor storage)") {
-    import graft.operators.Similarity
-    val sc = spark.sparkContext
-    // long chain → many hash-min rounds; without per-round release the
-    // persistent-RDD count grows by one per round
-    val n = 16L
-    val nodes = (1L to n).toDF("id")
-    val edges = (1L until n).map(i => (i, i + 1)).toDF("src", "dst")
-    val before = sc.getPersistentRDDs.size
-    val labs = Cluster.connectedComponents(nodes, edges, maxIter = 20)
-      .as[(Long, Long)].collect()
-    assert(labs.forall(_._2 == 1L))
-    val afterCc = sc.getPersistentRDDs.size
-    assert(afterCc - before <= 2,
-      s"connectedComponents leaked checkpoints: $before -> $afterCc persistent RDDs")
-
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val a = Similarity.kmeansAssign(emb, k = 4, iters = 4, dim = 64)
-    assert(a.count() == emb.count())
-    val afterKm = sc.getPersistentRDDs.size
-    // retirement lags one round, so at most the last two centroid
-    // checkpoints may remain — never one per iteration
-    assert(afterKm - afterCc <= 2,
-      s"kmeansAssign leaked checkpoints: $afterCc -> $afterKm persistent RDDs")
   }
 
   test("topKBy: bounded aggregate plan, window-formulation parity") {

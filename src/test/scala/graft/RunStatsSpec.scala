@@ -18,6 +18,20 @@ class RunStatsSpec extends SparkSpec {
     assert(rec.stages > 0 && rec.tasks > 0, rec.columns)
   }
 
+  test("a batch row's jobs carry a call site, and it runs no rounds") {
+    val (_, rec) = RunStats.measure(spark, "q1_agg")(SparkEntry.queries("q1_agg")(spark, sf).count())
+    assert(rec.jobs.nonEmpty && rec.jobs.forall(_.site != "?"), rec.jobs)
+    assert(rec.rounds == 0, rec.columns)
+  }
+
+  test("an iterative row counts its rounds, and their jobs run under the round's call site") {
+    val (_, rec) = RunStats.measure(spark, "graph_kcore")(SparkEntry.queries("graph_kcore")(spark, sf).count())
+    assert(rec.rounds > 0, rec.columns)
+    val RoundSite = """kcore round (\d+)""".r
+    val sites = rec.jobs.map(_.site).collect { case RoundSite(n) => n.toInt }.distinct.sorted
+    assert(sites == (1 to rec.rounds), rec.jobs)
+  }
+
   test("a throwing body leaves no job description set") {
     val sc = spark.sparkContext
     intercept[IllegalStateException] {
