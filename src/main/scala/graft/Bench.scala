@@ -1,4 +1,7 @@
 package graft
+
+import Rows.json
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -7,8 +10,7 @@ object Bench {
     // Warm up JVM/codegen/parquet footer caches so the first timed query
     // isn't charged for one-time session costs.
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    try SparkEntry.queries("q1_agg")(spark, sfDir).count()
-    catch { case _: Throwable => () }
+    Rows.run(spark, sfDir, "warmup", "q1_agg")(_.count())
     // Streaming-engine warmup (r18): without it the alphabetically first
     // stream_* row is charged ~1.5-2 s of one-time machinery (stream
     // execution threads, state-store provider, file source/sink and
@@ -94,41 +96,11 @@ object Bench {
     }
     val ioProbeSec = Seq.fill(3)(ioProbeOnce()).sorted.apply(1)
     // A failed query is reported as time -1 plus an entry in "errors" —
-    // never silently folded into the totals as a fast success.
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // optional comma-separated name filter for isolated re-timing of a
-    // suspect query (same contract as Verify; driver leaves it unset)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // explicit exclusions for scale rehearsals (e.g. the documented
-    // one-box sf10 ceilings) — ALWAYS logged, never a silent cap, and
-    // surfaced in the JSON so a skipped run can't read as a full one
-    val skip = sys.env.get("SPARK_GRAFT_SKIP")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    if (skip.nonEmpty)
-      System.err.println(s"[bench] SKIPPING ${skip.size} queries by request: " +
-        skip.toSeq.sorted.mkString(", "))
-    // scale-face auto-selection: past a disclosed input size a row runs
-    // its bounded-footprint chunked sibling (result-identical by the
-    // equivalence suite) instead of needing a SPARK_GRAFT_SKIP — the
-    // full-scale record covers every row, skipped: []. Disclosed in the
-    // JSON as "scale_faces", never silent.
-    // NonFatal only: a fatal error (OOM, interrupt) during the FS probe
-    // must propagate — swallowing it into "no scale face" would
-    // silently run a single-pass form at a scale where it's known to die
-    def tableBytes(table: String): Long =
-      try {
-        val p = new org.apache.hadoop.fs.Path(s"$sfDir/$table.parquet")
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .getContentSummary(p).getLength
-      } catch { case scala.util.control.NonFatal(_) => 0L }
-    val scaleFaces = SparkEntry.scaleFaces.collect {
-      case (name, (table, threshold, sub)) if tableBytes(table) > threshold =>
-        System.err.println(s"[bench] $name: $table.parquet > $threshold B — " +
-          "timing the bounded-footprint chunked face")
-        name -> sub
-    }
+    // never silently folded into the totals as a fast success. Which
+    // rows run, their face, hygiene, timing and failures are the row
+    // step's (Rows); SPARK_GRAFT_SKIP's rows are surfaced in the JSON so
+    // a skipped run can't read as a full one.
+    val names = Rows.select()
     // per-family GC fence state (VERDICT r12 #5 / r13 #8): the alpha-
     // sorted suite runs whole families back to back, so fencing at the
     // family boundary gives each family a clean old-gen start — the
@@ -146,17 +118,7 @@ object Bench {
     // which. One sample per family (~0.5-1.5 s each, ~35 families) is
     // noise-tolerant by design: it flags multi-x steal, not 10% drift.
     val familyProbes = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) && !skip(name) }
-      .zipWithIndex.map { case ((name, fn), qi) =>
-      spark.catalog.clearCache() // no cross-query cache pollution
-      // iterative operators release their own checkpoints, but a failed
-      // query can strand blocks; stranded executor storage plus old-gen
-      // garbage from hundreds of prior queries inflates later rows (the
-      // r11 sf10 full-suite read 2-4x over isolated re-times for
-      // late-suite queries purely from this pressure). Cleanup runs
-      // OUTSIDE the timed region.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    val runs = names.zipWithIndex.map { case (name, qi) =>
       val family = name.takeWhile(_ != '_')
       if ((family != prevFamily && (System.nanoTime() - lastFence) > 60L * 1000000000L)
           || qi % 20 == 19) {
@@ -165,41 +127,23 @@ object Bench {
       }
       if (family != prevFamily) familyProbes(family) = probeOnce()
       prevFamily = family
-      // operator-face substitution (stream_* rows): time the real
-      // file-source face instead of the MemoryStream correctness
-      // harness — reported in the JSON's "faces" list, never silent
-      val timedFn = scaleFaces.getOrElse(name,
-        SparkEntry.benchFaces.getOrElse(name, fn))
-      // label the query's jobs (guide §1.5) so a UI/event-log reading of
-      // a bench run attributes every stage to its row; set OUTSIDE the
-      // timed region and cleared after
-      spark.sparkContext.setJobDescription(s"bench: $name")
-      val t0 = System.nanoTime()
-      try { timedFn(spark, sfDir).count(); name -> (System.nanoTime() - t0) / 1e9 }
-      catch {
-        case e: Throwable =>
-          val msg = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-          System.err.println(s"[bench] $name FAILED: $msg")
-          errors(name) = msg
-          name -> -1.0
-      } finally spark.sparkContext.setJobDescription(null)
+      Rows.run(spark, sfDir, "bench", name, timed = true)(_.count())
     }
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
-    val qs = results.map { case (k, v) => jstr(k) + ":" + v }
+    val results = runs.map(r => r.row -> (if (r.value.isSuccess) r.record.wallS else -1.0))
+    val errors = runs.flatMap(r => r.failure.map(r.row -> _.take(200)))
+    val qs = results.map { case (k, v) => json(k) + ":" + v }
       .mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }
+    val errJson = errors.map { case (k, v) => json(k) + ":" + json(v) }
       .mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
-    val skipJson = skip.toSeq.sorted.map(jstr).mkString("[", ",", "]")
-    val facesJson = results.map(_._1).filter(SparkEntry.benchFaces.contains)
-      .sorted.map(jstr).mkString("[", ",", "]")
-    val scaleFacesJson = results.map(_._1).filter(scaleFaces.contains)
-      .sorted.map(jstr).mkString("[", ",", "]")
-    val fpJson = familyProbes.map { case (k, v) => jstr(k) + ":" + v }
+    val skipJson = Rows.skipped.map(json).mkString("[", ",", "]")
+    // the rows that ran a bench face (stream_* rows) or a scale face in
+    // place of their gate form: disclosed, never silent
+    def ranAs(face: Rows.Face): String = runs.filter(_.face.contains(face)).map(_.row)
+      .sorted.map(json).mkString("[", ",", "]")
+    val facesJson = ranAs(Rows.Face.Bench)
+    val scaleFacesJson = ranAs(Rows.Face.Scale)
+    val fpJson = familyProbes.map { case (k, v) => json(k) + ":" + v }
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":$total,"unit":"sec","probe_sec":$probeSec,"io_probe_sec":$ioProbeSec,"queries":$qs,"errors":$errJson,"n_failed":${errors.size},"skipped":$skipJson,"faces":$facesJson,"scale_faces":$scaleFacesJson,"family_probes":$fpJson,"sf":"$sfDir"}""")
     // The driver's stdout tail capture is smaller than the full line
@@ -220,7 +164,7 @@ object Bench {
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val chunks = results.grouped(20).toSeq
     chunks.zipWithIndex.foreach { case (part, i) =>
-      val pq = part.map { case (k, v) => jstr(k) + ":" + ms(v) }
+      val pq = part.map { case (k, v) => json(k) + ":" + ms(v) }
         .mkString("{", ",", "}")
       println(s"""{"metric":"queries_chunk","part":${i + 1},"of":${chunks.size},"queries":$pq}""")
     }
@@ -229,11 +173,11 @@ object Bench {
     // (7) − newline/slack ⇒ 1500 is comfortably inside even if sbt's
     // trailer grows; measured against BENCH_r17.json's captured tail.
     val budget = 1500
-    val errJsonC = errors.map { case (k, v) => jstr(k) + ":" + jstr(v.take(40)) }
+    val errJsonC = errors.map { case (k, v) => json(k) + ":" + json(v.take(40)) }
       .mkString("{", ",", "}")
     val head = s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${results.size},"probe_sec":${ms(probeSec)},"io_probe_sec":${ms(ioProbeSec)},"errors":$errJsonC,"n_failed":${errors.size},"skipped":$skipJson,"scale_faces":$scaleFacesJson,"sf":"$sfDir","queries":{"""
     val entries = results.sortBy { case (_, v) => -v }
-      .map { case (k, v) => jstr(k) + ":" + ms(v) }
+      .map { case (k, v) => json(k) + ":" + ms(v) }
     val sb = new StringBuilder(head)
     var taken = 0
     val tailRoom = s""","queries_omitted":${results.size}}""".length

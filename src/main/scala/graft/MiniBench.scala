@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Isolated re-time of named Bench rows (SPARK_GRAFT_ONLY), with each
-  * row's [[RunStats]] record: shuffle-write / shuffle-read / disk-spill
+/** Isolated re-time of named Bench rows (SPARK_GRAFT_ONLY), each run
+  * as Bench runs it (the [[Rows]] step, timed: a stream row's bench
+  * face, a scale face past its threshold), with each row's
+  * [[RunStats]] record: shuffle-write / shuffle-read / disk-spill
   * totals (what widens this row's exchange?), jobs, stages, tasks, the
   * generated classes it compiled (a row that recompiles on every run
   * shows here) and, for a stream row, its micro-batches and their
@@ -22,10 +24,9 @@ import org.apache.spark.sql.SparkSession
   */
 object MiniBench {
   private[graft] def run(spark: SparkSession, sfDir: String): Unit = {
-    SparkEntry.queries("q1_agg")(spark, sfDir).count()
-    val names = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq("q1_agg", "sim_ivf_trained", "sim_ivf_trained"))
+    Rows.run(spark, sfDir, "warmup", "q1_agg")(_.count())
+    val names = Rows.select(
+      Rows.only.orElse(Some(Seq("q1_agg", "sim_ivf_trained", "sim_ivf_trained"))))
     val reps = sys.env.get("GRAFT_MB_REPS").map(_.toInt).getOrElse(1)
     val turnFile = sys.env.get("GRAFT_MB_TURNFILE")
       .map(java.nio.file.Paths.get(_))
@@ -40,16 +41,11 @@ object MiniBench {
       java.nio.file.Files.write(p, nextTok.getBytes))
     val tag = if (turnFile.isDefined) s" build=$token" else ""
     for (rep <- 1 to reps; n <- names) {
-      spark.catalog.clearCache()
       takeTurn()
-      // pass the baton in a finally (ADVICE r17): a throwing count() must
-      // not keep it, or the partner process waits forever
-      val (_, rec) = RunStats.measure(spark, s"mini: $n") {
-        // a stream row runs its file-source face, as Bench times it
-        try SparkEntry.benchFaces.getOrElse(n, SparkEntry.queries(n))(spark, sfDir).count()
-        finally passTurn()
-      }
-      println(s"MINI $n$tag rep=$rep ${rec.columns}")
+      // pass the baton in a finally (ADVICE r17): a fatal error must not
+      // keep it, or the partner process waits forever
+      val r = try Rows.run(spark, sfDir, "mini", n, timed = true)(_.count()) finally passTurn()
+      println(s"MINI $n$tag rep=$rep ${r.record.columns}")
     }
   }
 }

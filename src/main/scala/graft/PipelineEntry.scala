@@ -32,11 +32,12 @@ object PipelineEntry {
     * cache is the in-suite expression of that contract: the derivation
     * is written ONCE as parquet (narrow two-long rows) and every
     * consumer scans it back. Staged as FILES, not a local checkpoint,
-    * deliberately: Bench unpersists all persistent RDDs between
-    * queries (stranded-block hygiene), and a foreign-unpersisted
-    * local checkpoint is unrecoverable (lineage truncated) — the first
-    * in-suite run of this cache as checkpoints lost the blocks and
-    * failed 6 graph rows with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
+    * deliberately: the row step ([[Rows.run]]) unpersists all
+    * persistent RDDs between rows (stranded-block hygiene), and a
+    * foreign-unpersisted local checkpoint is unrecoverable (lineage
+    * truncated) — the first in-suite run of this cache as checkpoints
+    * lost the blocks and failed 6 graph rows with
+    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
     * Parquet staging is immune and matches what a cluster user
     * actually does (write the edge table). Keyed by (application,
     * fixture dir, recipe); one scratch dir per key per JVM, bounded. */
@@ -66,23 +67,12 @@ object PipelineEntry {
     * (customer ≈ 2.4 GB at sf100 / 256 MB per wave ≈ 10; the r16-r17
     * records ran 8). Result is wave-count-invariant by construction
     * (pinned by the equivalence unit suite), so this changes execution
-    * shape only, never the pair set. */
+    * shape only, never the pair set. A table that cannot be sized fails
+    * the row: a guessed count at scale could run near-single-wave, the
+    * local-disk spill regime the wave count exists to bound. */
   private def autoPasses(s: SparkSession, dir: String, table: String,
                          bytesPerWave: Long): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-    val bytes =
-      try p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .getContentSummary(p).getLength
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          // loud fallback (ADVICE r17): a misnamed/unreadable path at
-          // scale would otherwise quietly run near-single-wave — the
-          // local-disk spill regime the wave count exists to bound
-          System.err.println(s"[autoPasses] cannot size $p " +
-            s"(${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")
-              .take(120)}) — flooring to 2 waves")
-          0L
-      }
+    val bytes = Tables.bytes(s, dir, table)
     math.max(2L, math.min(64L, (bytes + bytesPerWave - 1) / bytesPerWave)).toInt
   }
 
@@ -6605,9 +6595,7 @@ object PipelineEntry {
     * local-mode tune. */
   private def streamStateParts(s: SparkSession, dir: String, table: String,
                                mb: Long = 32L): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-    val bytes = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .getContentSummary(p).getLength
+    val bytes = Tables.bytes(s, dir, table)
     // session width is the OUTER bound (state tasks can't use more
     // cores than exist — ADVICE r15: the floor must not override a
     // session configured narrower), the floor of 2 applies only

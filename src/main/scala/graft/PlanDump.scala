@@ -1,53 +1,48 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
+
 /** Dump `.explain("formatted")` for named (or all) declared queries to
   * one file each under an output dir — the plans/rNN/<query>_{before,
   * after}.txt evidence the optimization rounds commit.
   *
-  * NOT free of execution (ADVICE r17): rows that stage-then-read
-  * (chunked gates like dedup_fuzzy_chunked / dedup_pr_audit, the
-  * MemoryStream replay rows) run their full staging pipeline while the
-  * DataFrame is being CONSTRUCTED — the dumped plan is the landed
-  * read's, and the work happens here. Don't run "all" while a bench
-  * owns the box; heavy rows are flagged per-row on stderr instead of
-  * silently contending.
+  * Each row runs through the [[Rows]] step, so the dump knows what
+  * building the row ran: a row whose build starts jobs (a loop that
+  * checkpoints, a staged wave run, a stream replay) did real work here,
+  * and its dumped plan is only that of its last frame. Such a row is
+  * flagged on stderr with its measured job count.
   *
   * args: <sfDir> <outDir> [comma-separated query names | "all"]
   */
 object PlanDump {
+  /** `row`'s gate form, built and explained inside one measurement: the
+    * record's jobs are the ones its build ran, since explaining runs none. */
+  private[graft] def plan(spark: SparkSession, sfDir: String, row: String): Rows.Result[String] =
+    Rows.run(spark, sfDir, "plandump", row)(_.queryExecution.explainString(FormattedMode))
+
   def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val outDir = args(1)
-    val names: Seq[String] =
-      if (args.length < 3 || args(2) == "all") SparkEntry.queries.keys.toSeq.sorted
-      else args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val Array(sfDir, outDir) = args.take(2)
+    val rows = Rows.select(args.lift(2).filter(_ != "all").map(Rows.split))
     // the Bench session's width, so dumped exchanges show the
     // partitioning the record actually ran with
     val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    for (n <- names) {
-      // flag the rows whose CONSTRUCTION executes a staged pipeline
-      // (see class doc) so a log reader knows this dump did real work
-      if (n.endsWith("_chunked") || n == "dedup_pr_audit" || n.startsWith("stream_"))
-        System.err.println(s"[plandump] $n: construction executes its " +
-          "staging/replay pipeline — this is not a plans-only row")
-      try {
-        val df = SparkEntry.queries(n)(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$outDir/$n.txt"),
-          plan.getBytes("UTF-8"))
+    Files.createDirectories(Paths.get(outDir))
+    // a table's first read in a session runs one footer job: take them
+    // all here, so none is counted as a row's build
+    Tables.names.foreach(Tables(spark, sfDir, _))
+    for (n <- rows) {
+      val r = plan(spark, sfDir, n)
+      r.value.foreach { p =>
+        Files.write(Paths.get(s"$outDir/$n.txt"), p.getBytes("UTF-8"))
         println(s"[plandump] $n ok")
-      } catch {
-        // NonFatal only (ADVICE r17): an OOM/interrupt must propagate,
-        // not be logged as one more row's failure while the JVM burns
-        case scala.util.control.NonFatal(e) =>
-          // a query whose plan needs side effects (e.g. chunked staging
-          // already written) can fail to build here; report, don't die
-          println(s"[plandump] $n FAILED: ${Option(e.getMessage).getOrElse(e.getClass.getName).take(120)}")
       }
+      if (r.record.jobs.nonEmpty)
+        System.err.println(s"[plandump] $n: building ran ${r.record.jobs.size} jobs, " +
+          "so this is not a plans-only row")
     }
     spark.stop()
   }

@@ -58,20 +58,21 @@ object SparkEntry {
 
   /** Bench-only operator faces for queries whose gate form is a
     * correctness harness with dominant feed cost (the MemoryStream
-    * stream_* rows). Bench times these INSTEAD of the gate form and
-    * reports the substitution; Verify never uses them. */
+    * stream_* rows). A timed run ([[Rows.form]]) runs these INSTEAD of
+    * the gate form and reports the substitution; Verify never uses
+    * them. */
   def benchFaces: Map[String, (SparkSession, String) => DataFrame] =
     PipelineEntry.benchFaces
 
-  /** Size-triggered bounded-footprint substitutions for Bench (see
-    * [[PipelineEntry.scaleFaces]]): (table sized on, byte threshold,
-    * substitute). Verify never uses these — the gate always runs the
-    * single-pass form. */
+  /** Size-triggered bounded-footprint substitutions for a timed run
+    * ([[Rows.form]], see [[PipelineEntry.scaleFaces]]): (table sized
+    * on, byte threshold, substitute). Verify never uses these — the
+    * gate always runs the single-pass form. */
   def scaleFaces
       : Map[String, (String, Long, (SparkSession, String) => DataFrame)] =
     PipelineEntry.scaleFaces
 
-  private def relational: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private[graft] def relational: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- flagship: TPC-H Q1 pricing summary (SURVEY §2.7/§2.8) ----
     "q1_agg" -> { (s, dir) =>
       val li = t(s, dir, "lineitem")

@@ -41,6 +41,14 @@ object Tables {
   def registerAll(spark: SparkSession, sfDir: String): Unit =
     names.foreach(n => apply(spark, sfDir, n).createOrReplaceTempView(n))
 
+  /** On-disk bytes of fixture `table` under `sfDir`, the size every
+    * data-sized choice (scale faces, wave counts, stream state widths)
+    * reads. A failed read throws. */
+  def bytes(spark: SparkSession, sfDir: String, table: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(s"$sfDir/$table.parquet")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
+  }
+
   /** `spark.read.parquet(path)`, resolved once per session.
     *
     * A fresh read lists the path and runs a Spark job over the parquet

@@ -8,33 +8,14 @@ object Verify {
     gatePreflight()
     val spark = Session.local()
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated name filter for fast local iteration
-    // (driver leaves it unset → full run)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // SPARK_GRAFT_ONLY narrows the rows for fast local iteration
+    for (name <- Rows.select())
+      Rows.run(spark, sfDir, "verify", name)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+    // every control char escaped: a tab or CR in an oracle's SQL would
+    // otherwise fail the compare's json.load and lose every row's check
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Rows.json(k)}: ${Rows.json(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -123,11 +123,14 @@ object GraftBridge {
     * The deserialized block size OVERSTATES what an exchange would
     * move (~2-4× for narrow longs), which only makes broadcasting more
     * conservative — the safe direction at scale. Falls back to the
-    * stats-free copy when the storage info is not yet visible. */
+    * stats-free copy when the storage info is not yet visible. The
+    * checkpoint's constraints (its origin plan's, e.g. `isnotnull(src)`
+    * over a filtered frame) are kept, so Catalyst adds no not-null
+    * filter above its reads. */
   private def measuredStats(spark: classic.SparkSession, l: execution.LogicalRDD): DataFrame = {
     val bytes = spark.sparkContext.getRDDStorageInfo.find(_.id == l.rdd.id)
       .map(i => i.memSize + i.diskSize).filter(_ > 0L)
     val stats = bytes.map(b => catalyst.plans.logical.Statistics(sizeInBytes = BigInt(b)))
-    classic.Dataset.ofRows(spark, l.copy()(spark, stats, None))
+    classic.Dataset.ofRows(spark, l.copy()(spark, stats, Some(l.constraints)))
   }
 }

@@ -12,7 +12,7 @@ class CodegenReuseSpec extends SparkSpec {
 
   for (row <- Seq("stream_ewma", "stream_anomaly", "stream_bloom_novel"))
     test(s"a second run of $row compiles no generated class") {
-      val run = SparkEntry.benchFaces.getOrElse(row, SparkEntry.queries(row))
+      val (_, run) = Rows.form(spark, sf, row, timed = true)
       assert(run(spark, sf).collect().nonEmpty)
       val (rows, rec) = RunStats.measure(spark, row)(run(spark, sf).collect())
       assert(rows.nonEmpty)

@@ -85,4 +85,18 @@ class FixpointSpec extends SparkSpec {
     assert(persisted -- before == Set.empty)
     assert(spark.sparkContext.getLocalProperty("callSite.short") == null)
   }
+
+  test("a checkpoint keeps its not-null constraints: no IsNotNull filter above its reads") {
+    // a file read's columns are nullable, so the filter's facts are constraints
+    val edges = Tables(spark, sf, "orders")
+      .select(col("o_orderkey").as("src"), col("o_custkey").as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+    val ck = Fixpoint.run("ck", spark)(_.checkpoint(edges)._1)(Seq(_))
+    val plan = ck.filter(col("src") > 1L).queryExecution.optimizedPlan
+    val notNull = plan.collect { case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+      f.condition.collect { case n: org.apache.spark.sql.catalyst.expressions.IsNotNull => n }
+    }.flatten
+    assert(notNull.isEmpty, plan)
+    assert(ck.count() == Tables(spark, sf, "orders").count())
+  }
 }
