@@ -15,42 +15,23 @@ object Bench {
     // stream_* row is charged ~1.5-2 s of one-time machinery (stream
     // execution threads, state-store provider, file source/sink and
     // offset/commit-log classes plus their codegen) that is session
-    // setup, not operator cost — measured: stream_anomaly reads 3.2 s
+    // setup, not operator cost. Measured: stream_anomaly reads 3.2 s
     // isolated-cold vs 1.0-1.4 s with the machinery warm while every
     // other face is untouched. Same policy as the q1_agg warmup above;
-    // the work is sf-INDEPENDENT (100 generated rows round-tripped
-    // through a tiny file-source → stateful-aggregate → parquet-sink
-    // query plus a MemoryStream pass) and shares no result, input or
-    // output with any declared row.
-    try {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    // the work is sf-INDEPENDENT: 100 generated rows through the faces'
+    // own runner, once as a file-source stateful aggregate landed by
+    // foreachBatch and once into the native parquet file sink, sharing
+    // no result, input or output with any declared row.
+    try Scratch.using(spark, "graft-wu") { src =>
       import org.apache.spark.sql.functions.col
-      // the timed faces' own scratch file system, warmed with them
-      Scratch.using(spark, "graft-wu") { wuBase =>
-        val src = s"$wuBase/src"
-        spark.range(100L).selectExpr("id % 7 AS k", "timestamp_micros(id) AS ts", "id AS v")
-          .write.mode("overwrite").parquet(src)
-        val sch = spark.read.parquet(src).schema
-        val q1 = spark.readStream.schema(sch).parquet(src)
-          .withWatermark("ts", "1 second")
-          .groupBy(col("k")).count()
-          .writeStream.outputMode("complete")
-          .option("checkpointLocation", s"$wuBase/ckpt1")
-          .foreachBatch {
-            (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-              b.write.mode("overwrite").parquet(s"$wuBase/out1")
-          }.start()
-        try q1.processAllAvailable() finally q1.stop()
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-        import spark.implicits._
-        val ms = MemoryStream[Long]
-        ms.addData(1L to 100L)
-        val q2 = ms.toDF().selectExpr("value AS v")
-          .writeStream.outputMode("append").format("parquet")
-          .option("checkpointLocation", s"$wuBase/ckpt2")
-          .option("path", s"$wuBase/out2").start()
-        try q2.processAllAvailable() finally q2.stop()
-      }
+      import graft.streaming.StreamRun
+      spark.range(100L).selectExpr("id % 7 AS k", "timestamp_micros(id) AS ts", "id AS v")
+        .write.mode("overwrite").parquet(src)
+      val schema = spark.read.parquet(src).schema
+      def in = spark.readStream.schema(schema).parquet(src)
+      StreamRun(spark, "wu_state", in.withWatermark("ts", "1 second").groupBy(col("k")).count(),
+        "complete", StreamRun.Landed)()
+      StreamRun(spark, "wu_sink", in.select(col("v")), "append", StreamRun.Landed)()
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] streaming warmup failed (continuing): " +
         Option(e.getMessage).getOrElse(e.getClass.getName).take(120))

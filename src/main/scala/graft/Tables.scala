@@ -15,18 +15,32 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // events.ts has shipped as BOTH parquet TIMESTAMP(NANOS) (older
-    // driver fixtures; Spark rejects ns by default → read raw nanos via
-    // nanosAsLong and integral-DIV to µs — `/` would round-trip ~1.7e18
-    // epochs through double past 2^53) and TIMESTAMP(MICROS,
-    // isAdjustedToUTC=false) (current fixtures → Spark reads
-    // TIMESTAMP_NTZ; session timezone is UTC, so casting to
-    // TimestampType preserves the same instants the ns path produced).
-    // Dispatch on the loaded type so either vintage works.
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    normalized(name, file(spark, sfDir, name))
+
+  /** Fixture `name` as a file-source stream. Its schema is the session's
+    * resolved batch relation's ([[parquet]]), so starting it reads no
+    * footer, and `events.ts` is normalized as in [[apply]]. */
+  def stream(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    normalized(name, spark.readStream.schema(file(spark, sfDir, name).schema)
+      .parquet(s"$sfDir/$name.parque*"))
+
+  private def file(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = parquet(spark, s"$sfDir/$name.parquet")
-    if (name == "events") {
+    parquet(spark, s"$sfDir/$name.parquet")
+  }
+
+  /** events.ts has shipped as BOTH parquet TIMESTAMP(NANOS) (older
+    * driver fixtures; Spark rejects ns by default, so raw nanos are read
+    * via nanosAsLong and integral-DIVed to us; `/` would round-trip
+    * ~1.7e18 epochs through double past 2^53) and TIMESTAMP(MICROS,
+    * isAdjustedToUTC=false) (current fixtures, read as TIMESTAMP_NTZ;
+    * the session time zone is UTC, so casting to TimestampType keeps the
+    * instants the ns path produced). Dispatch on the loaded type so
+    * either vintage works, in a batch read or a stream. */
+  private def normalized(name: String, df: DataFrame): DataFrame =
+    if (name != "events") df
+    else {
       import org.apache.spark.sql.functions.{col, expr}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
       df.schema("ts").dataType match {
@@ -34,8 +48,7 @@ object Tables {
         case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
         case _ => df
       }
-    } else df
-  }
+    }
 
   /** Register every fixture as a temp view (for spark.sql use). */
   def registerAll(spark: SparkSession, sfDir: String): Unit =

@@ -42,7 +42,7 @@ object Verify {
     val want = 1048576L
     if (cur < want)
       System.err.println(
-        s"""[verify] WARNING: vm.max_map_count=$cur < $want — the DuckDB
+        s"""[verify] WARNING: vm.max_map_count=$cur < $want - the DuckDB
            |[verify] oracle gate that follows this export is likely to lose
            |[verify] queries to spurious OutOfMemoryException (see BASELINE.md
            |[verify] "Oracle-harness reliability note"). Remedy before the

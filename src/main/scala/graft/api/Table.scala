@@ -136,7 +136,7 @@ final case class Table(df: DataFrame) {
     val dupes = names.groupBy(identity).collect { case (n, vs) if vs.size > 1 => n }
     require(dupes.isEmpty,
       s"pivotAgg: pivot values collide after sanitization: ${dupes.mkString(", ")} " +
-        s"(values ${values.mkString("[", ", ", "]")}) — rename values or pivot separately")
+        s"(values ${values.mkString("[", ", ", "]")}) - rename values or pivot separately")
     val cols = values.zip(names).map { case (v, n) =>
       val agg = aggFn(Col(when(df(pivotCol) === v, valueCol.c))).c
       emptyAs.fold(agg)(z => coalesce(agg, lit(z))).as(n)
@@ -474,11 +474,11 @@ final case class Table(df: DataFrame) {
   def transpose: Table =
     throw new UnsupportedOperationException(
       "transpose: a Table is an unordered relation; for array semantics " +
-        "use graft.operators.Tensor.transpose over coordinate form (SURVEY §2.12)")
+        "use graft.operators.Tensor.transpose over coordinate form (SURVEY section 2.12)")
   def tensordot(other: Table): Table =
     throw new UnsupportedOperationException(
       "tensordot: a Table is an unordered relation; for array semantics " +
-        "use graft.operators.Tensor.tensordot over coordinate form (SURVEY §2.12)")
+        "use graft.operators.Tensor.tensordot over coordinate form (SURVEY section 2.12)")
 
   /** Field access THROUGH a foreign key (the `Map[key, Record]` dshape
     * traversal, `expr/expressions.py:136-142`; SQL lowering
@@ -502,7 +502,7 @@ final case class Table(df: DataFrame) {
     require(dimFields.nonEmpty, "fkField: at least one referenced field required")
     val clash = dimFields.filter(fields.contains)
     require(clash.isEmpty,
-      s"fkField: referenced field(s) ${clash.mkString(", ")} already exist on this table — relabel first")
+      s"fkField: referenced field(s) ${clash.mkString(", ")} already exist on this table - relabel first")
     val d = broadcast(dim.df.select((dimKey +: dimFields).map(dim.df(_)): _*))
     Table(df.join(d, df(localKey) === d(dimKey), "inner").drop(d(dimKey)))
   }

@@ -52,7 +52,7 @@ object Bloom {
     val raw = math.max(64L, n * bitsPerKey)
     require(raw <= Int.MaxValue.toLong - 63,
       s"Bloom.autoSize: $n keys at $bitsPerKey bits/key exceeds a 2^31-bit " +
-        "bitmap — shard the corpus into per-shard blooms")
+        "bitmap - shard the corpus into per-shard blooms")
     val m = ((raw + 63) / 64 * 64).toInt
     val k = math.max(1, math.round(bitsPerKey * math.log(2.0)).toInt)
     (m, k)

@@ -160,7 +160,7 @@ object Cluster {
       if (nChg > 0L)
         throw new IllegalStateException(
           "connectedComponents: hooking forest failed to compress in 64 " +
-            "doubling steps — impossible for any graph that fits in " +
+            "doubling steps - impossible for any graph that fits in " +
             "storage; a bug, not a workload property")
       // fold this round's merges into the composed map (map-sized):
       // existing roots re-route through m, and m's own rows join the
@@ -197,7 +197,7 @@ object Cluster {
     if (eRows > 0)
       throw new IllegalStateException(
         s"connectedComponents: not converged after $maxIter contraction " +
-          "rounds — supervertex count shrinks geometrically per round, so " +
+          "rounds - supervertex count shrinks geometrically per round, so " +
           "this means a pair-generation bug upstream (e.g. an edge stream " +
           "that keeps growing), not a legitimately large graph; raise " +
           "maxIter only if such a graph is truly intended")
@@ -257,7 +257,7 @@ object Cluster {
     require(missing.isEmpty,
       s"bestPerCluster: no such column(s): ${missing.mkString(", ")}")
     require(!clustered.columns.contains("keep"),
-      "bestPerCluster: input already has a 'keep' column — rename it " +
+      "bestPerCluster: input already has a 'keep' column - rename it " +
         "(the output's keep flag would silently shadow it)")
     val winners = clustered.groupBy(col(clusterCol))
       .agg(max_by(col(idCol),

@@ -39,7 +39,7 @@ object Features {
       .distinct().limit(maxCategories + 1).collect()
       .map(_.getString(0)).sorted
     require(cats.length <= maxCategories,
-      s"oneHot: '$catCol' has more than $maxCategories distinct values — " +
+      s"oneHot: '$catCol' has more than $maxCategories distinct values - " +
         "not a one-hot-able categorical (raise maxCategories only if you " +
         "really want that many columns)")
     val safe = cats.map(c => c -> (prefix + c.toLowerCase.replaceAll("[^a-z0-9]+", "_")))
@@ -317,7 +317,7 @@ object Features {
   def logisticTrain(df: DataFrame, featureCols: Seq[String], labelCol: String,
                     iters: Int = 8, lrNum: Long = 16L): Array[Long] = {
     require(featureCols.nonEmpty, "logisticTrain: no feature columns")
-    require(iters >= 1 && iters <= 64, s"logisticTrain: iters=$iters (1..64 — " +
+    require(iters >= 1 && iters <= 64, s"logisticTrain: iters=$iters (1..64 - " +
       "each iteration is a full pass; more usually means the lr is wrong)")
     require(lrNum >= 1, s"logisticTrain: lrNum=$lrNum")
     val missing = (featureCols :+ labelCol).filterNot(df.columns.contains)
@@ -367,7 +367,7 @@ object Features {
         }
       }
       wq.map { w =>
-        require(w.isValidLong, s"logisticTrain: weight overflow ($w) — lr too high")
+        require(w.isValidLong, s"logisticTrain: weight overflow ($w) - lr too high")
         w.toLong
       }
     } finally feats.unpersist()

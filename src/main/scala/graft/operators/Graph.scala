@@ -225,7 +225,7 @@ object Graph {
       (st0.getAs[Number](1).longValue >= 0L &&
         st0.getAs[Number](2).longValue >= 0L),
       s"$op: negative node ids are not supported (the " +
-        "count·10^19 + (10^19-1-label) argmax packing requires ids in " +
+        "count*10^19 + (10^19-1-label) argmax packing requires ids in " +
         "[0, 10^19)); relabel ids to non-negative first")
     nEdges
   }

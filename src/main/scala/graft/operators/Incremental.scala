@@ -123,7 +123,7 @@ object Incremental {
     require(before.columns.sorted.sameElements(after.columns.sorted),
       s"snapshotDiff: column sets differ: ${before.columns.mkString(",")} vs ${after.columns.mkString(",")}")
     require(!before.columns.contains(opCol),
-      s"snapshotDiff: snapshots already have a '$opCol' column — pass a different opCol")
+      s"snapshotDiff: snapshots already have a '$opCol' column - pass a different opCol")
     val nonKeys = before.columns.filterNot(keys.contains).toSeq
     val b = before.select(keys.map(col) :+ struct(nonKeys.map(col): _*).as("_b"): _*)
     val a = after.select(keys.map(col) :+ struct(nonKeys.map(col): _*).as("_a"): _*)
@@ -441,8 +441,8 @@ object Incremental {
         .join(known, Seq("id"), "left_anti")
         .limit(5).collect().map(_.get(0))
       require(foreign.isEmpty,
-        "mergeClusters: pair endpoints absent from prev ∪ incoming " +
-          s"(sample: ${foreign.mkString(", ")}) — a foreign endpoint can " +
+        "mergeClusters: pair endpoints absent from prev union incoming " +
+          s"(sample: ${foreign.mkString(", ")}) - a foreign endpoint can " +
           "be elected as a merged label while never appearing in the " +
           "output; left-semi filter the pair batch to known ids first")
     }

@@ -672,7 +672,7 @@ object Multimodal {
           lit(s"dhashPairs: identical-hash group over $maxGroupSize rows at " +
             s"$hashCol="),
           col(hashCol).cast(StringType),
-          lit(" — the pair listing is quadratic in group size; use " +
+          lit(" - the pair listing is quadratic in group size; use " +
             "Multimodal.dhashClusters (exact-hash contraction, same " +
             "clusters at ~|distinct hashes| cost) or raise maxGroupSize " +
             "if the full pair set is genuinely wanted"))))

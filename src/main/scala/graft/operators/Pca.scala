@@ -206,14 +206,14 @@ object Pca {
       min(aggregate(col("_qv"), lit(Long.MaxValue), (a, x) => least(a, x)))).head()
     val (n, ids) = (r.getLong(0), r.getLong(1))
     require(n == ids,
-      s"Pca.$what: ${n - ids} duplicate id rows — ids must be unique " +
+      s"Pca.$what: ${n - ids} duplicate id rows - ids must be unique " +
         "(the scatter matrix and the distinct-id count would diverge)")
     val qBound = 3037000499L // floor(sqrt(2^63 - 1))
     if (n > 0 && !r.isNullAt(2)) {
       val (maxQ, minQ) = (r.getLong(2), r.getLong(3))
       require(maxQ <= qBound && minQ >= -qBound,
-        s"Pca.$what: quantized component outside ±$qBound (got [$minQ, " +
-          s"$maxQ]) — the exact long product in the Gram pass would " +
+        s"Pca.$what: quantized component outside +/-$qBound (got [$minQ, " +
+          s"$maxQ]) - the exact long product in the Gram pass would " +
           "overflow; lower qscale for inputs of this magnitude")
     }
     n

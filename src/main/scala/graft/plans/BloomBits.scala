@@ -55,7 +55,7 @@ case class BloomBits(
       val p = v match { case l: Long => l; case i: Int => i.toLong }
       if (p < 0 || p >= mBits)
         throw new IllegalArgumentException(
-          s"BloomBits: position $p outside [0, $mBits) — hash/mBits mismatch")
+          s"BloomBits: position $p outside [0, $mBits) - hash/mBits mismatch")
       buf((p >>> 6).toInt) |= 1L << (p & 63)
     }
     buf

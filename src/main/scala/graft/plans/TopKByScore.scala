@@ -69,7 +69,7 @@ case class TopKByScore(
         TypeCheckResult.TypeCheckSuccess
       case other => TypeCheckResult.TypeCheckFailure(
         "TopKByScore expects (<numeric score>, <integral or string id>), got " +
-          s"$other — non-numeric scores are rejected here rather than silently " +
+          s"$other - non-numeric scores are rejected here rather than silently " +
           "cast (a string score under ANSI mode would otherwise fail at runtime)")
     }
 

@@ -1,291 +1,74 @@
 package graft.testkit
 
-import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import graft.Scratch
-import graft.streaming.StreamOps
+import java.sql.Timestamp
 
-/** Bounded-replay harnesses for driving the [[graft.streaming.StreamOps]]
-  * operators end-to-end against a finite fixture (the correctness gate's
-  * `stream_*` queries and the unit suite). Deliberately OUTSIDE
-  * `graft.streaming` (VERDICT r6 #4 / r7 #4): these feed a bounded test
-  * input into a MemoryStream on the driver, which is harness work — the
-  * production operators themselves never materialize a stream and keep
-  * watermark-bounded state only.
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.col
+import graft.streaming.StreamRun
+
+/** The bounded replay that drives a [[graft.streaming.StreamOps]]
+  * operator end-to-end over a finite input as a real multi-batch stream:
+  * the gate of the two stream rows whose output needs a later watermark,
+  * and the unit suite's cross-batch checks. Deliberately OUTSIDE
+  * `graft.streaming`: it feeds a bounded input into MemoryStreams on the
+  * driver, which is harness work; the production operators never
+  * materialize a stream and keep watermark-bounded state only.
   */
 object StreamReplay {
 
-  /** Replay a bounded events table through
-    * [[graft.streaming.StreamOps.statefulSessions]] as a REAL multi-batch
-    * stream: events are fed to a MemoryStream in `nChunks`
-    * event-time-ordered micro-batches (so the watermark genuinely
-    * ADVANCES between batches and Append mode emits sessions as they
-    * close mid-stream), then a far-future sentinel row pushes the
-    * watermark past every open session's `end + gap` so the
-    * EventTimeTimeout path closes the tail. Because the chunks are
-    * time-ordered and the watermark delay is 1 s, no row is ever late —
-    * the result matches the batch [[graft.operators.Sessionize.sessions]]
-    * exactly (the differential-oracle contract).
+  /** The row fed to every input after the data: its event time is a
+    * day past `horizonSeconds` after the last event, so the watermark
+    * passes every open state's horizon and its tail (closed sessions,
+    * unmatched outer rows) emits. `row` builds it, in the input's
+    * schema, at that time; it should carry a key no data row has, which
+    * the caller filters from the result. */
+  final case class Sentinel(horizonSeconds: Long, row: Timestamp => Row)
+
+  /** Replay `inputs` through `op` as the stream `name` and return its
+    * memory sink. Each input gets one MemoryStream with the input's own
+    * schema, and `op` runs over those streams in input order. Each input
+    * is sorted on `order` (event time first, then the operator's own
+    * tie-break, so a chunk boundary reorders no tie) and split into
+    * `nChunks` chunks; the chunks go in lock-step, one from every input
+    * per micro-batch, so the global watermark (the minimum over inputs)
+    * advances between batches and Append emits mid-stream. With the
+    * watermark delay at or under the chunk span no row is ever late, so
+    * the result equals the batch operator's. `sentinel`, if given, goes
+    * to every input last. The state width is 8 at every scale: a
+    * replay is a bounded correctness run, never a timed one.
     *
-    * The feed is `toLocalIterator` over a Spark-side event-time sort, so
-    * the driver holds at most one partition of the bounded input at a
-    * time — never the whole table (the r6 `.collect()` objection).
+    * The feed is `toLocalIterator` over a Spark-side sort, so the
+    * driver holds at most one partition of an input at a time.
     */
-  def replayStatefulSessions(spark: SparkSession, events: DataFrame,
-                             gapSeconds: Long, nChunks: Int = 4,
-                             name: String = "stream_sessions_sink",
-                             statePartitions: Option[Int] = Some(8)): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val src = events
-      .select(col("user_id").cast("long"), col("ts"), col("value").cast("double"))
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Double)]
-    val sessions = StreamOps.statefulSessions(spark,
-      mem.toDF().toDF("user_id", "ts", "value"), gapSeconds, watermark = "1 second").toDF()
-    toMemory(spark, sessions, name, "append", statePartitions) { q =>
-      var maxMs = Long.MinValue
-      chunks(src.orderBy(col("ts")).as[(Long, java.sql.Timestamp, Double)], nChunks)
-        .foreach { c =>
-          maxMs = math.max(maxMs, c.map(_._2.getTime).max)
+  def apply(spark: SparkSession, name: String, inputs: Seq[DataFrame], order: Seq[String],
+            mode: String, nChunks: Int = 4, sentinel: Option[Sentinel] = None)
+           (op: Seq[DataFrame] => DataFrame): DataFrame = {
+    val mems = inputs.map(in => MemoryStream[Row](spark)(Encoders.row(in.schema)))
+    StreamRun(spark, name, op(mems.map(_.toDF())), mode, StreamRun.Memory, Some(8)) { q =>
+      val fed = inputs.map(in => chunks(in.orderBy(order.map(col): _*), nChunks))
+      var lastMs = Long.MinValue
+      while (fed.exists(_.hasNext)) {
+        for ((mem, it) <- mems.zip(fed) if it.hasNext) {
+          val c = it.next()
+          lastMs = math.max(lastMs, c.map(_.getAs[Timestamp]("ts").getTime).max)
           mem.addData(c)
-          q.processAllAvailable()
-        }
-      if (maxMs > Long.MinValue) {
-        // sentinel user (Long.MinValue — can't collide with real ids)
-        // a day past the last event: watermark passes every end + gap
-        mem.addData(Seq((Long.MinValue,
-          new java.sql.Timestamp(maxMs + (gapSeconds + 86400L) * 1000L), 0.0)))
-        q.processAllAvailable()
-      }
-    }.filter(col("user_id") =!= Long.MinValue)
-  }
-
-  /** multi-batch replay of [[StreamOps.attributionStream]] over a
-    * bounded events frame: same chunked event-time-ordered MemoryStream
-    * feed as [[replayStatefulSessions]] (ties broken by event_id so the
-    * chunk boundary cannot reorder same-timestamp events). No sentinel
-    * needed — attribution emits on conversion arrival, nothing waits
-    * for the watermark.
-    */
-  def replayAttribution(spark: SparkSession, events: DataFrame,
-                        conversionType: String, touchTypes: Seq[String],
-                        nChunks: Int = 4,
-                        name: String = "stream_attribution_sink",
-                        statePartitions: Option[Int] = Some(8)): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val src = events.select(col("user_id").cast("long"), col("ts"),
-      col("event_type").cast("string"), col("event_id").cast("long"))
-    val mem = MemoryStream[(Long, java.sql.Timestamp, String, Long)]
-    val attributed = StreamOps.attributionStream(spark,
-      mem.toDF().toDF("user_id", "ts", "event_type", "event_id"),
-      conversionType, touchTypes, watermark = "1 second").toDF()
-    toMemory(spark, attributed, name, "append", statePartitions) { q =>
-      feed(q, mem, src.orderBy(col("ts"), col("event_id"))
-        .as[(Long, java.sql.Timestamp, String, Long)], nChunks)
-    }
-  }
-
-  /** multi-batch replay of [[StreamOps.holtStream]] — same chunked
-    * chronological feed as [[replayEwma]]; the final (max-n) emit per
-    * user is the batch [[graft.operators.Behavior.holtLast]] answer
-    * bit-for-bit. */
-  def replayHolt(spark: SparkSession, events: DataFrame,
-                 aNum: Long, aDen: Long, bNum: Long, bDen: Long,
-                 nChunks: Int = 4,
-                 name: String = "stream_holt_sink",
-                 statePartitions: Option[Int] = Some(8)): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val src = events.select(col("user_id").cast("long"), col("ts"),
-      col("value").cast("double"))
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Double)]
-    val smoothed = StreamOps.holtStream(spark,
-      mem.toDF().toDF("user_id", "ts", "value"), aNum, aDen, bNum, bDen).toDF()
-    toMemory(spark, smoothed, name, "update", statePartitions) { q =>
-      feed(q, mem, src.orderBy(col("ts"), col("value"))
-        .as[(Long, java.sql.Timestamp, Double)], nChunks)
-    }.groupBy(col("user_id"))
-      .agg(max(col("n_events")).as("n_events"),
-        max_by(col("level"), col("n_events")).as("level"),
-        max_by(col("trend"), col("n_events")).as("trend"))
-  }
-
-  /** multi-batch replay of [[graft.streaming.StreamOps.ewmaStream]]:
-    * events feed chronologically in `nChunks` micro-batches (the
-    * within-batch sort is the operator's responsibility), running
-    * emits land in an Update-mode memory sink, and the LAST emit per
-    * user (the one carrying that user's total event count) is the
-    * final answer — selected with one `max_by` aggregate. Matches
-    * `Behavior.ewmaLast` bit-for-bit by construction.
-    */
-  def replayEwma(spark: SparkSession, events: DataFrame,
-                 aNum: Long, aDen: Long, nChunks: Int = 4,
-                 name: String = "stream_ewma_sink",
-                 statePartitions: Option[Int] = Some(8)): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val src = events.select(col("user_id").cast("long"), col("ts"),
-      col("value").cast("double"))
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Double)]
-    val smoothed = StreamOps.ewmaStream(spark,
-      mem.toDF().toDF("user_id", "ts", "value"), aNum, aDen).toDF()
-    toMemory(spark, smoothed, name, "update", statePartitions) { q =>
-      feed(q, mem, src.orderBy(col("ts"), col("value"))
-        .as[(Long, java.sql.Timestamp, Double)], nChunks)
-    }.groupBy(col("user_id"))
-      .agg(max(col("n_events")).as("n_events"),
-        max_by(col("ewma"), col("n_events")).as("ewma"))
-  }
-
-  /** multi-batch replay of [[graft.streaming.StreamOps.anomalyStream]]:
-    * chronological chunked feed, Append-mode memory sink — one verdict
-    * row per event, equal to the batch `Behavior.anomalies` verdicts
-    * bit-for-bit by construction (integer test, same window order).
-    */
-  def replayAnomalies(spark: SparkSession, events: DataFrame,
-                      k: Int, z: Long, nChunks: Int = 4,
-                      name: String = "stream_anomaly_sink",
-                      statePartitions: Option[Int] = Some(8)): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val src = events.select(col("user_id").cast("long"),
-      col("event_id").cast("long"), col("ts"), col("value").cast("double"))
-    val mem = MemoryStream[(Long, Long, java.sql.Timestamp, Double)]
-    val judged = StreamOps.anomalyStream(spark,
-      mem.toDF().toDF("user_id", "event_id", "ts", "value"), k, z).toDF()
-    toMemory(spark, judged, name, "append", statePartitions) { q =>
-      feed(q, mem, src.orderBy(col("ts"), col("event_id"))
-        .as[(Long, Long, java.sql.Timestamp, Double)], nChunks)
-    }
-  }
-
-  /** Multi-batch replay of [[StreamOps.cusumStream]] over a bounded
-    * events frame: chronological chunks through a MemoryStream, one
-    * verdict row per event collected from the Append sink. Same
-    * harness shape as [[replayAnomalies]]. */
-  def replayCusum(spark: SparkSession, events: DataFrame,
-                  kCenti: Long, hCenti: Long, nChunks: Int = 4,
-                  name: String = "stream_cusum_sink",
-                  statePartitions: Option[Int] = Some(8)): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val src = events.select(col("user_id").cast("long"),
-      col("event_id").cast("long"), col("ts"), col("value").cast("double"))
-    val mem = MemoryStream[(Long, Long, java.sql.Timestamp, Double)]
-    val judged = StreamOps.cusumStream(spark,
-      mem.toDF().toDF("user_id", "event_id", "ts", "value"), kCenti, hCenti).toDF()
-    toMemory(spark, judged, name, "append", statePartitions) { q =>
-      feed(q, mem, src.orderBy(col("ts"), col("event_id"))
-        .as[(Long, Long, java.sql.Timestamp, Double)], nChunks)
-    }
-  }
-
-  /** Multi-batch replay of [[StreamOps.intervalJoinLeftOuter]] over two
-    * bounded (event_id, user_id, ts) frames: both sides feed
-    * MemoryStreams in lock-stepped event-time-ordered chunks (so the
-    * GLOBAL watermark — the min across both inputs — genuinely
-    * advances between batches and matched pairs emit mid-stream), then
-    * far-future sentinels on BOTH sides push the watermark past
-    * `last.ts + window`, which is what makes the outer join emit its
-    * final unmatched-left nulls (they are only provably unmatchable
-    * once the watermark clears the match window). Sentinel rows use
-    * user_id Long.MinValue and are filtered from the result.
-    */
-  def replayIntervalJoinLeftOuter(spark: SparkSession,
-                                  left: DataFrame, right: DataFrame,
-                                  key: String, windowSeconds: Long,
-                                  nChunks: Int = 4,
-                                  name: String = "stream_ij_left_sink",
-                                  statePartitions: Option[Int] = Some(8)): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    def ordered(df: DataFrame) =
-      df.select(col("event_id").cast("long"), col(key).cast("long"), col("ts"))
-        .orderBy(col("ts"), col("event_id")).as[(Long, Long, java.sql.Timestamp)]
-    val memL = MemoryStream[(Long, Long, java.sql.Timestamp)]
-    val memR = MemoryStream[(Long, Long, java.sql.Timestamp)]
-    val joined = StreamOps.intervalJoinLeftOuter(
-      memL.toDF().toDF("event_id", key, "ts"),
-      memR.toDF().toDF("event_id", key, "ts"),
-      key, windowSeconds, watermark = "1 second")
-    toMemory(spark, joined, name, "append", statePartitions) { q =>
-      // lock-step chunked feed: split each side into nChunks by event
-      // time and advance both per round, so the GLOBAL watermark (min
-      // across inputs) moves and neither side's buffer waits on a
-      // stalled sibling
-      val (lIt, rIt) = (chunks(ordered(left), nChunks), chunks(ordered(right), nChunks))
-      var maxMs = 0L
-      while (lIt.hasNext || rIt.hasNext) {
-        if (lIt.hasNext) {
-          val c = lIt.next(); maxMs = math.max(maxMs, c.map(_._3.getTime).max)
-          memL.addData(c)
-        }
-        if (rIt.hasNext) {
-          val c = rIt.next(); maxMs = math.max(maxMs, c.map(_._3.getTime).max)
-          memR.addData(c)
         }
         q.processAllAvailable()
       }
-      // sentinels on BOTH sides a day past every match window: the
-      // watermark clears last.ts + window, so the final unmatched-left
-      // rows flush with right-side nulls
-      val sentinelTs = new java.sql.Timestamp(
-        maxMs + (windowSeconds + 86400L) * 1000L)
-      memL.addData(Seq((Long.MinValue, Long.MinValue, sentinelTs)))
-      memR.addData(Seq((Long.MinValue, Long.MinValue, sentinelTs)))
-      q.processAllAvailable()
-    }.filter(col(s"${key}_l") =!= Long.MinValue)
-  }
-
-  /** run a streaming query over a bounded source to completion into a
-    * memory sink and return the result table (see [[toMemory]]). */
-  def runToMemory(spark: SparkSession, streaming: DataFrame, name: String,
-                  outputMode: String = "complete",
-                  statePartitions: Option[Int] = None): DataFrame =
-    toMemory(spark, streaming, name, outputMode, statePartitions)(_.processAllAvailable())
-
-  /** Start `streaming` into the memory sink `name`, run `drive` on the
-    * query, stop it and return the sink's table.
-    *
-    * `statePartitions` overrides `spark.sql.shuffle.partitions` for the
-    * query's lifetime: every stateful operator commits one state-store
-    * instance per shuffle partition per micro-batch, so a bounded replay
-    * with few distinct keys pays ~linear overhead in partition count
-    * (32 → 8 cuts a one-batch stream-stream join ~4×). On a live cluster
-    * size it to cores/keys instead; the partitioning is frozen into the
-    * checkpoint at first start.
-    *
-    * The checkpoint is an explicit [[graft.Scratch]] dir, reclaimed
-    * whether or not the query fails: Spark deletes its implicit
-    * temporary checkpoint only when a query stops without error. */
-  private def toMemory(spark: SparkSession, streaming: DataFrame, name: String,
-                       outputMode: String, statePartitions: Option[Int])
-                      (drive: StreamingQuery => Unit): DataFrame = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    statePartitions.foreach(n => spark.conf.set(key, n.toString))
-    try Scratch.using(spark, s"graft-ckpt-$name") { ckpt =>
-      val q = streaming.writeStream.format("memory").queryName(name)
-        .outputMode(outputMode).option("checkpointLocation", ckpt).start()
-      try drive(q) finally q.stop()
-    } finally spark.conf.set(key, prev)
-    spark.table(name)
+      for (Sentinel(horizon, row) <- sentinel if lastMs > Long.MinValue) {
+        val at = new Timestamp(lastMs + (horizon + 86400L) * 1000L)
+        mems.foreach(_.addData(Seq(row(at))))
+        q.processAllAvailable()
+      }
+    }
   }
 
   /** `ordered` as `nChunks` consecutive chunks, one partition on the
     * driver at a time. */
-  private def chunks[T](ordered: Dataset[T], nChunks: Int): Iterator[Seq[T]] = {
+  private def chunks(ordered: DataFrame, nChunks: Int): Iterator[Seq[Row]] = {
     val size = math.max(1L, (ordered.count() + nChunks - 1) / nChunks).toInt
     ordered.toLocalIterator().asScala.grouped(size)
   }
-
-  /** Feed `ordered` to `mem` in `nChunks` micro-batches, each processed
-    * before the next is added. */
-  private def feed[T](q: StreamingQuery, mem: MemoryStream[T], ordered: Dataset[T],
-                      nChunks: Int): Unit =
-    chunks(ordered, nChunks).foreach { c => mem.addData(c); q.processAllAvailable() }
 }

@@ -59,7 +59,7 @@ object GraftBridge {
       case None if ids.nonEmpty =>
         if (noCleanerWarned.compareAndSet(false, true)) {
           org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            "removeShuffles: spark.cleaner.referenceTracking=false — no " +
+            "removeShuffles: spark.cleaner.referenceTracking=false - no " +
               "ContextCleaner, per-wave shuffle release unavailable; " +
               "shuffle files persist until application exit")
         }

@@ -12,8 +12,7 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, udf}
-import graft.streaming.StreamOps
-import graft.testkit.StreamReplay
+import graft.streaming.{StreamOps, StreamRun}
 
 class ScratchSpec extends SparkSpec {
 
@@ -99,7 +98,7 @@ class ScratchSpec extends SparkSpec {
     try {
       val out = local.resolve("out").toUri.toString
       val q = StreamOps.ewmaStream(spark,
-          PipelineEntry.eventsStream(spark, sf).select(col("user_id"), col("ts"), col("value")),
+          Tables.stream(spark, sf, "events").select(col("user_id"), col("ts"), col("value")),
           1L, 5L).toDF()
         .writeStream.outputMode("update")
         .option("checkpointLocation", local.resolve("ckpt").toUri.toString)
@@ -150,8 +149,8 @@ class ScratchSpec extends SparkSpec {
       v
     })
     intercept[Exception] {
-      StreamReplay.runToMemory(spark, mem.toDF().select(boom(col("value")).as("v")),
-        "t_scratch_fail", "append")
+      StreamRun(spark, "t_scratch_fail", mem.toDF().select(boom(col("value")).as("v")),
+        "append", StreamRun.Memory)()
     }
     intercept[IllegalStateException] {
       Scratch.using(spark, "graft-fail-") { d =>

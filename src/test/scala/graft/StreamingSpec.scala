@@ -3,14 +3,20 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.operators.Sessionize
-import graft.streaming.StreamOps
+import graft.streaming.{StreamOps, StreamRun}
 import graft.testkit.StreamReplay
 import java.sql.Timestamp
+import org.apache.spark.sql.{DataFrame, Row}
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(s: String) = Timestamp.valueOf(s)
+
+  /** Each user's last Update-mode emit: the one carrying its event count. */
+  private def lastEmits(emits: DataFrame, values: String*): DataFrame =
+    emits.groupBy("user_id").agg(max(col("n_events")).as("n_events"),
+      values.map(v => max_by(col(v), col("n_events")).as(v)): _*)
 
   private val rows = Seq(
     (1L, ts("2024-01-01 00:01:00"), 10L, "click", 1.50),
@@ -23,8 +29,8 @@ class StreamingSpec extends SparkSpec {
     val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
     mem.addData(rows: _*)
     val stream = mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
-    val got = StreamReplay.runToMemory(spark,
-        StreamOps.tumblingAgg(stream, 300L), "t_tumble")
+    val got = StreamRun(spark, "t_tumble",
+        StreamOps.tumblingAgg(stream, 300L), "complete", StreamRun.Memory)()
       .orderBy("window_start", "event_type")
       .collect().map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2), r.getDouble(3)))
 
@@ -44,7 +50,7 @@ class StreamingSpec extends SparkSpec {
       .groupBy(window(col("ts"), "600 seconds", "300 seconds"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("ws"), col("event_type"), col("n"))
-    val got = StreamReplay.runToMemory(spark, hop, "t_hop")
+    val got = StreamRun(spark, "t_hop", hop, "complete", StreamRun.Memory)()
       .orderBy("ws", "event_type").collect()
       .map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2)))
     val exp = rows.toDF("event_id", "ts", "user_id", "event_type", "value")
@@ -61,8 +67,8 @@ class StreamingSpec extends SparkSpec {
     val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
     mem.addData(rows: _*)
     val stream = mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
-    val got = StreamReplay.runToMemory(spark,
-        StreamOps.sessionAgg(stream, 300L), "t_sess")
+    val got = StreamRun(spark, "t_sess",
+        StreamOps.sessionAgg(stream, 300L), "complete", StreamRun.Memory)()
       .orderBy("user_id", "session_start").collect()
     // user 10: events at 0:01, 0:03:30 (same session), 0:11 (new session); user 11: one
     assert(got.length == 3)
@@ -78,9 +84,9 @@ class StreamingSpec extends SparkSpec {
     // session times out and closes (excluded from the comparison)
     mem.addData((99L, ts("2024-06-01 00:00:00"), 9999L, "flush", 0.0))
     val stream = mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
-    val got = StreamReplay.runToMemory(spark,
+    val got = StreamRun(spark, "t_statesess",
         StreamOps.statefulSessions(spark, stream, 300L, watermark = "0 seconds").toDF(),
-        "t_statesess", outputMode = "append")
+        "append", StreamRun.Memory)()
       .filter(col("user_id") =!= 9999L)
       .orderBy("user_id", "session_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
@@ -106,8 +112,9 @@ class StreamingSpec extends SparkSpec {
       (8L, ts("2024-01-02 10:00:00"), 2L, "view", 0.0))
       .toDF("event_id", "ts", "user_id", "event_type", "value")
     // 4 chunks ⇒ state genuinely crosses micro-batch boundaries
-    val got = StreamReplay.replayAttribution(spark, events,
-        "purchase", Seq("view", "click"), nChunks = 4)
+    val got = StreamReplay(spark, "t_attr", Seq(events), Seq("ts", "event_id"), "append",
+        nChunks = 4)(in => StreamOps.attributionStream(spark, in.head,
+        "purchase", Seq("view", "click"), watermark = "1 second").toDF())
       .select("event_id", "first_touch", "last_touch")
       .as[(Long, Option[String], Option[String])].collect().sortBy(_._1).toSeq
     val exp = Behavior.attribution(events, "purchase", Seq("view", "click"))
@@ -128,8 +135,8 @@ class StreamingSpec extends SparkSpec {
       (ts("2024-01-01 00:01:00"), "same  text HERE"), // normalized dup
       (ts("2024-01-01 00:02:00"), "different text"))
     val stream = mem.toDF().toDF("ts", "text")
-    val got = StreamReplay.runToMemory(spark,
-        StreamOps.streamingExactDedup(stream, "ts"), "t_dedup", outputMode = "append")
+    val got = StreamRun(spark, "t_dedup",
+        StreamOps.streamingExactDedup(stream, "ts"), "append", StreamRun.Memory)()
       .orderBy("ts").collect()
     assert(got.length == 2)
     assert(got.map(_.getString(1)).toSeq == Seq("same Text here", "different text"))
@@ -152,7 +159,7 @@ class StreamingSpec extends SparkSpec {
       imp.toDF().toDF("imp_id", "ts", "user_id"),
       clk.toDF().toDF("clk_id", "ts", "user_id"),
       key = "user_id", windowSeconds = 300L)
-    val got = StreamReplay.runToMemory(spark, joined, "t_ssjoin", outputMode = "append")
+    val got = StreamRun(spark, "t_ssjoin", joined, "append", StreamRun.Memory)()
       .select("imp_id_l", "clk_id_r").orderBy("imp_id_l")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.toSeq == Seq((100L, 200L), (101L, 201L)))
@@ -169,8 +176,12 @@ class StreamingSpec extends SparkSpec {
       (102L, 11L, ts("2024-01-01 00:00:30"))).toDF("event_id", "user_id", "ts")
     val buys = Seq(
       (201L, 10L, ts("2024-01-01 00:12:00"))).toDF("event_id", "user_id", "ts")
-    val got = StreamReplay.replayIntervalJoinLeftOuter(spark, views, buys,
-        "user_id", windowSeconds = 300L, nChunks = 2, name = "t_ssjoin_left")
+    val got = StreamReplay(spark, "t_ssjoin_left", Seq(views, buys), Seq("ts", "event_id"),
+        "append", nChunks = 2, sentinel = Some(StreamReplay.Sentinel(300L,
+          t => Row(Long.MinValue, Long.MinValue, t)))) { in =>
+        StreamOps.intervalJoinLeftOuter(in(0), in(1), "user_id", windowSeconds = 300L,
+          watermark = "1 second")
+      }.filter(col("user_id_l") =!= Long.MinValue)
       .select("event_id_l", "event_id_r").collect()
       .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1))))
       .sortBy(_._1)
@@ -262,7 +273,7 @@ class StreamingSpec extends SparkSpec {
     val stream = mem.toDF().toDF("doc_id", "text")
       .select(col("doc_id"), TextFunctions.scrubPii(col("text")).as("scrubbed"))
       .filter(Sampling.hashBucket(col("doc_id"), 100) < 50)
-    val got = StreamReplay.runToMemory(spark, stream, "t_curation", outputMode = "append")
+    val got = StreamRun(spark, "t_curation", stream, "append", StreamRun.Memory)()
       .collect()
     // same rows as the identical batch pipeline
     val batch = (1L to 40L).map(i => (i, s"doc $i mail x$i@spam.io"))
@@ -323,8 +334,8 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getLong(1), r.getLong(2), r.getBoolean(3))).toSeq
     assert(batch.exists(_._3), "fixture must contain a true anomaly")
     for (chunks <- Seq(1, 4)) {
-      val s = StreamReplay.replayAnomalies(spark, ev, k = 5, z = 3L,
-          nChunks = chunks, name = s"anom_sink_$chunks")
+      val s = StreamReplay(spark, s"anom_sink_$chunks", Seq(ev), Seq("ts", "event_id"), "append",
+          nChunks = chunks)(in => StreamOps.anomalyStream(spark, in.head, k = 5, z = 3L).toDF())
         .orderBy("event_id").collect()
         .map(r => (r.getLong(1), r.getLong(2), r.getBoolean(3))).toSeq
       assert(s == batch, s"chunking=$chunks must not change verdicts")
@@ -344,8 +355,8 @@ class StreamingSpec extends SparkSpec {
     assert(batch.exists(_._3) && !batch.forall(_._3),
       "fixture must cross the threshold mid-stream")
     for (chunks <- Seq(1, 4)) {
-      val s = StreamReplay.replayCusum(spark, ev, kCenti = 5000L,
-          hCenti = 20000L, nChunks = chunks, name = s"cusum_sink_$chunks")
+      val s = StreamReplay(spark, s"cusum_sink_$chunks", Seq(ev), Seq("ts", "event_id"), "append",
+          nChunks = chunks)(in => StreamOps.cusumStream(spark, in.head, 5000L, 20000L).toDF())
         .orderBy("event_id").collect()
         .map(r => (r.getLong(1), r.getLong(2), r.getBoolean(3))).toSeq
       assert(s == batch, s"chunking=$chunks must not change the fold")
@@ -363,11 +374,57 @@ class StreamingSpec extends SparkSpec {
       .orderBy("user_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     for (chunks <- Seq(1, 3, 6)) {
-      val s = StreamReplay.replayEwma(spark, ev, 1L, 5L, nChunks = chunks,
-          name = s"ewma_sink_$chunks")
+      val s = lastEmits(StreamReplay(spark, s"ewma_sink_$chunks", Seq(ev), Seq("ts", "value"),
+          "update", nChunks = chunks)(in => StreamOps.ewmaStream(spark, in.head, 1L, 5L).toDF()),
+          "ewma")
         .orderBy("user_id").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
       assert(s == batch, s"chunking=$chunks must not change the fold")
     }
+  }
+
+  test("streaming Holt == batch Holt bit-for-bit, any chunking") {
+    val ev = Seq(
+      (1L, "2024-01-01 00:00:01", 10.0), (1L, "2024-01-01 00:00:02", 20.0),
+      (1L, "2024-01-01 00:00:03", 30.0), (1L, "2024-01-01 00:00:04", 7.5),
+      (1L, "2024-01-01 00:00:04", 2.5), (2L, "2024-01-01 00:00:01", 5.0),
+      (2L, "2024-01-01 00:00:09", 1.25), (3L, "2024-01-01 00:00:05", 4.0))
+      .map { case (u, t, v) => (u, Timestamp.valueOf(t), v) }
+      .toDF("user_id", "ts", "value")
+    val batch = graft.operators.Behavior.holtLast(ev, 2L, 10L, 3L, 10L)
+      .orderBy("user_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSeq
+    assert(batch.map(_._2) == Seq(5L, 2L, 1L))
+    for (chunks <- Seq(1, 3, 8)) {
+      val s = lastEmits(StreamReplay(spark, s"holt_sink_$chunks", Seq(ev), Seq("ts", "value"),
+          "update", nChunks = chunks)(in =>
+          StreamOps.holtStream(spark, in.head, 2L, 10L, 3L, 10L).toDF()), "level", "trend")
+        .orderBy("user_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSeq
+      assert(s == batch, s"chunking=$chunks must not change the fold")
+    }
+  }
+
+  // The gates of these rows read their one-batch bench face, so the
+  // cross-batch fold is checked here: the row's own operator, replayed
+  // in 4 event-time chunks over the fixture, lands the gate's rows.
+  for (row <- Seq("stream_ewma", "stream_holt", "stream_anomaly", "stream_cusum",
+      "stream_attribution"))
+    test(s"$row: a 4-chunk replay of its operator equals its gate") {
+      val r = PipelineEntry.streamRows(row)
+      val replayed = r.reduce(StreamReplay(spark, s"${row}_replay",
+        r.inputs.map(_(Tables(spark, sf, r.table))), r.order, r.mode)(r.op(spark, _)))
+      val gate = SparkEntry.queries(row)(spark, sf).collect().toSeq
+      assert(gate.nonEmpty)
+      assert(replayed.collect().toSeq == gate)
+    }
+
+  test("a landed stream that lands no row fails, and the error names the stream") {
+    val e = intercept[IllegalStateException] {
+      StreamRun(spark, "t_lands_nothing",
+        Tables.stream(spark, sf, "events").filter(col("value") < lit(Double.NegativeInfinity)),
+        "append", StreamRun.Landed)()
+    }
+    assert(e.getMessage.contains("t_lands_nothing"), e.getMessage)
   }
 }
