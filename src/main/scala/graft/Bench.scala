@@ -82,13 +82,16 @@ object Bench {
     // step's (Rows); SPARK_GRAFT_SKIP's rows are surfaced in the JSON so
     // a skipped run can't read as a full one.
     val names = Rows.select()
-    // per-family GC fence state (VERDICT r12 #5 / r13 #8): the alpha-
-    // sorted suite runs whole families back to back, so fencing at the
-    // family boundary gives each family a clean old-gen start — the
-    // late-suite artifact read dedup_survivors at 4.5x and text_bpe at
-    // 2.5x their isolated times purely from accumulated garbage. The
-    // fence is time-gated (>=60 s since the last one) so small families
-    // don't trigger a GC storm; worst-case overhead is ~1 full GC/min.
+    // per-family GC fence state: the alpha-sorted suite runs whole
+    // families back to back, so a full GC at a family boundary gives each
+    // family a clean old-gen start. Under G1 the late suite read
+    // dedup_survivors at 4.5x and text_bpe at 2.5x their isolated times
+    // from accumulated garbage. Under the Parallel collector, one sf0.1
+    // pass at 4 cores each way: 247.6 s with the fence, 237.0 s without
+    // (GC paused 9.9 s vs 5.0 s), but the sel family read 1.31x slower
+    // without it at an equal family probe, so one pass each cannot clear
+    // it and it stays. Time-gated (>=60 s since the last one) so small
+    // families don't trigger a GC storm: at most ~1 full GC/min.
     var prevFamily = ""
     var lastFence = System.nanoTime()
     // Per-family drift probes (VERDICT r15 #3): one constant-work CPU

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Conv, Expression, ExpressionInfo, Literal, Md5, RegExpReplace, Remainder, Size, StringSplit, StringTrim, Substring}
+import org.apache.spark.sql.catalyst.expressions.{BitwiseCount, BitwiseXor, Cast, Conv, Expression, ExpressionInfo, Literal, Md5, RegExpReplace, Remainder, Size, StringSplit, StringTrim, Substring}
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
 
 import graft.plans._
@@ -11,7 +11,7 @@ import graft.plans._
   * registered either per-cluster via
   * `--conf spark.sql.extensions=graft.GraftExtensions` (injectFunction)
   * or on a live session with [[GraftFunctions.register]] — after which
-  * `spark.sql("SELECT hamming_distance(a, b) ...")` plans the same
+  * `spark.sql("SELECT dot_product(a, b) ...")` plans the same
   * codegen'd expressions the Scala API uses.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -31,9 +31,10 @@ object GraftFunctions {
 
   /** (name, info, builder) for every SQL-exposed kernel. */
   val all: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    // a name for Spark's own bit_count(a ^ b), the form the operators use
     ("hamming_distance",
-      new ExpressionInfo(classOf[HammingDistance].getName, "hamming_distance"),
-      (es: Seq[Expression]) => HammingDistance(es(0), es(1))),
+      new ExpressionInfo(classOf[BitwiseCount].getName, "hamming_distance"),
+      (es: Seq[Expression]) => Cast(BitwiseCount(BitwiseXor(es(0), es(1))), LongType)),
     ("dot_product",
       new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
       (es: Seq[Expression]) => DotProduct(es(0), es(1))),

@@ -1,5 +1,6 @@
 package graft
 
+import java.lang.management.ManagementFactory
 import java.util.concurrent.ConcurrentHashMap
 
 import scala.collection.mutable
@@ -14,8 +15,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * one SparkListener (jobs, stages, tasks, shuffle and spill bytes, each
   * job's call site) and one StreamingQueryListener (micro-batches, their
   * `durationMs` phases and state-store commit time), both installed once
-  * per session, plus the generated classes compiled and the rounds of
-  * [[graft.operators.Fixpoint]] loops.
+  * per session, plus the generated classes compiled, the JVM's garbage
+  * collections and the rounds of [[graft.operators.Fixpoint]] loops.
   *
   * A measurement counts by time window, not by job group: everything
   * that runs between its opening and closing drain of the listener bus
@@ -29,19 +30,20 @@ object RunStats {
 
   /** What one measured body ran. `batchMs` sums each micro-batch's
     * `durationMs` by phase; `compiles` counts generated classes compiled
-    * (JVM-wide; a codegen cache hit compiles none); `rounds` counts the
-    * rounds of iterative operators. */
+    * (JVM-wide; a codegen cache hit compiles none); `gcMs` and `gcs` are
+    * the JVM's garbage collection time and count, summed over its
+    * collectors; `rounds` counts the rounds of iterative operators. */
   final case class Record(wallS: Double, jobs: Seq[Job], stages: Int,
       tasks: Int, shuffleWriteBytes: Long, shuffleReadBytes: Long, spillBytes: Long,
-      compiles: Long, batches: Int, batchMs: Map[String, Long], stateCommitMs: Long,
-      rounds: Int) {
+      compiles: Long, gcMs: Long, gcs: Long, batches: Int, batchMs: Map[String, Long],
+      stateCommitMs: Long, rounds: Int) {
     /** The record as one line of `key=value` columns. */
     def columns: String = {
       val mb = 1024.0 * 1024
       val phases = batchMs.toSeq.sorted.map { case (k, v) => s"$k:$v" }.mkString(",")
       f"$wallS%.2f s  shw=${shuffleWriteBytes / mb}%.1fMB shr=${shuffleReadBytes / mb}%.1fMB " +
         f"spill=${spillBytes / mb}%.1fMB jobs=${jobs.size} stages=$stages tasks=$tasks " +
-        s"compiles=$compiles rounds=$rounds batches=$batches batch_ms={$phases} " +
+        s"compiles=$compiles gc_ms=$gcMs gcs=$gcs rounds=$rounds batches=$batches batch_ms={$phases} " +
         s"state_commit_ms=$stateCommitMs"
     }
   }
@@ -55,13 +57,22 @@ object RunStats {
     open.add(w)
     try {
       val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val (gcMs0, gcs0) = gc()
       val t0 = System.nanoTime()
       sc.setJobDescription(label)
       val r = try body finally sc.setJobDescription(null)
       val wall = (System.nanoTime() - t0) / 1e9
+      val (gcMs1, gcs1) = gc()
       GraftBridge.drainListeners(spark)
-      (r, w.record(wall, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0))
+      (r, w.record(wall, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0,
+        gcMs1 - gcMs0, gcs1 - gcs0))
     } finally open.remove(w)
+  }
+
+  /** The JVM's collection time (ms) and count so far, over all collectors. */
+  private def gc(): (Long, Long) = {
+    val beans = ManagementFactory.getGarbageCollectorMXBeans.asScala
+    (beans.map(_.getCollectionTime).sum, beans.map(_.getCollectionCount).sum)
   }
 
   /** The counters of one open measurement. Spark delivers the two
@@ -92,8 +103,8 @@ object RunStats {
       e.progress.durationMs.asScala.foreach { case (k, v) => batchMs(k) += v }
       e.progress.stateOperators.foreach(s => stateCommitMs += s.commitTimeMs)
     }
-    def record(wallS: Double, compiles: Long): Record = synchronized {
-      Record(wallS, jobs.toList, stages, tasks, shw, shr, spill, compiles, batches,
+    def record(wallS: Double, compiles: Long, gcMs: Long, gcs: Long): Record = synchronized {
+      Record(wallS, jobs.toList, stages, tasks, shw, shr, spill, compiles, gcMs, gcs, batches,
         batchMs.toMap, stateCommitMs, rounds)
     }
   }

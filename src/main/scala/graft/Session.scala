@@ -8,8 +8,9 @@ import org.apache.spark.sql.SparkSession
   * settings.
   *
   * JVM-wide defaults (UI off, a UTC session time zone, artifact
-  * isolation off) come from `build.sbt`'s `javaOptions` and are not
-  * repeated here; adaptive execution is Spark's default. */
+  * isolation off, the Parallel garbage collector) come from
+  * `build.sbt`'s `javaOptions` and are not repeated here; adaptive
+  * execution is Spark's default. */
 object Session {
   /** `SPARK_GRAFT_CPUS`, else the machine's processor count. */
   def defaultCpus: Int =

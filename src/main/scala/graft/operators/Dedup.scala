@@ -261,10 +261,9 @@ object Dedup {
     val firstMatch = coalesce(((0 until nBands).map { b =>
       when(bandKey(col("sh_a"), b) === bandKey(col("sh_b"), b), lit(b))
     } :+ lit(-1)): _*)
-    // native codegen'd popcount(xor) — see graft.plans.HammingDistance
     joined.filter(col("band") === firstMatch)
       .select(col("id_a"), col("id_b"),
-        graft.plans.HammingDistance(col("sh_a"), col("sh_b")).as("hamming"))
+        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast(LongType).as("hamming"))
       .filter(col("hamming") <= maxDist)
   }
 

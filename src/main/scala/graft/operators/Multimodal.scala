@@ -692,7 +692,7 @@ object Multimodal {
     } :+ lit(-1)): _*)
     joined.filter(col("band") === firstMatch)
       .select(col("id_a"), col("id_b"),
-        graft.plans.HammingDistance(col("dh_a"), col("dh_b")).as("hamming"))
+        bit_count(col("dh_a").bitwiseXOR(col("dh_b"))).cast(LongType).as("hamming"))
       .filter(col("hamming") <= maxDist)
   }
 

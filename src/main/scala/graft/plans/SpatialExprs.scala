@@ -25,8 +25,8 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * A native expression rather than a Column fold: each level reads the
   * previous level's (x, y, d) several times, so a Column-composed
   * version duplicates subtrees ~4^bits times, while this stays one tight
-  * codegen'd loop inside the whole-stage span (the [[HammingDistance]]
-  * extension path, SURVEY §7.3).
+  * codegen'd loop inside the whole-stage span (the SURVEY §7.3
+  * extension path).
   *
   * Inputs must lie in `[0, 2^bits)`; violations throw at evaluation —
   * the same loud-failure contract as `Layout.zValue`'s in-plan guard

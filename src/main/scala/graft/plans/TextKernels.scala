@@ -17,8 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * concat_ws(" ", slice(toks, i, n)))` …) is evaluated INTERPRETED per
   * element — profiled at ~75 % of the whole minhash pipeline at sf0.1.
   * These kernels do tokenize→shingle→hash→permute in one tight JVM loop
-  * per row, invoked from generated code (same extension pattern as
-  * [[HammingDistance]]).
+  * per row, invoked from generated code (SURVEY §7.3 extension path).
   *
   * Determinism contract (oracle-critical): tokenization is
   * `split(trim(text), "\s+")` with Spark/Java regex semantics (trim

@@ -13,8 +13,7 @@ import org.apache.spark.sql.types._
   * functions) is evaluated INTERPRETED per element — fine for a handful
   * of rows, a bottleneck when a candidate join emits millions of pairs.
   * These expressions generate a tight primitive loop inside whole-stage
-  * codegen (SURVEY §7.3 extension path, same pattern as
-  * [[HammingDistance]]).
+  * codegen (SURVEY §7.3 extension path).
   *
   * Determinism contract (oracle-critical): each element is cast to
   * double BEFORE multiplying and accumulated LEFT-TO-RIGHT — the exact

@@ -1,5 +1,9 @@
 package graft
 
+import java.lang.management.ManagementFactory
+
+import scala.jdk.CollectionConverters._
+
 /** The run recorder counts what a measured body ran, by time window. */
 class RunStatsSpec extends SparkSpec {
 
@@ -41,5 +45,16 @@ class RunStatsSpec extends SparkSpec {
       }
     }
     assert(sc.getLocalProperty("spark.job.description") == null)
+  }
+
+  test("a body that collects garbage records its collections") {
+    val (_, rec) = RunStats.measure(spark, "gc")(System.gc())
+    assert(rec.gcs >= 1 && rec.gcMs >= 0, rec.columns)
+    assert(rec.columns.contains(s"gcs=${rec.gcs}"), rec.columns)
+  }
+
+  test("the program's JVMs run the Parallel collector") {
+    val names = ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getName).toSet
+    assert(names == Set("PS Scavenge", "PS MarkSweep"), names)
   }
 }
