@@ -5,7 +5,10 @@ Usage: python3 scripts/check.py <sfDir> <verifyOutDir>
 Reads each <verifyOutDir>/<name>/ parquet (Spark result) and runs the
 matching oracle_sql.json query in DuckDB over <sfDir>'s tables, then
 compares: row count, column names (sorted), and values (rows sorted by all
-columns). Reports exact mismatches and max numeric deltas.
+columns). Reports exact mismatches and max numeric deltas. A result with no
+oracle fails. A row whose Spark result and oracle result are both empty
+prints EMPTY, not PASS: it matches, but shows nothing. It is counted apart
+and does not change the exit status.
 
 The top-level invocation forks itself per batch of queries: this box's
 sandbox starts failing small mallocs once a long-lived process has churned
@@ -40,16 +43,14 @@ def run_batch(sf_dir, out_dir, names):
     import numpy as np
     con = connect(sf_dir)
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    n_pass = n_fail = n_rowsonly = 0
+    n_pass = n_fail = n_empty = 0
     for name in names:
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
             print(f"FAIL  {name}: no spark output", flush=True); n_fail += 1; continue
         got = pd.concat([pd.read_parquet(f) for f in sorted(files)], ignore_index=True)
         if name not in oracle:
-            status = "ok" if len(got) > 0 else "EMPTY"
-            print(f"ROWS  {name}: rows={len(got)} {status}", flush=True); n_rowsonly += 1
-            continue
+            print(f"FAIL  {name}: no oracle", flush=True); n_fail += 1; continue
         try:
             exp = con.execute(oracle[name]).df()
         except Exception as e:
@@ -60,6 +61,8 @@ def run_batch(sf_dir, out_dir, names):
             n_fail += 1; continue
         if len(g) != len(e):
             print(f"FAIL  {name}: rows {len(g)} vs {len(e)}", flush=True); n_fail += 1; continue
+        if len(g) == 0:
+            print(f"EMPTY {name}: rows=0 on both sides", flush=True); n_empty += 1; continue
         bad = []
         for c in g.columns:
             gc, ec = g[c], e[c]
@@ -93,16 +96,16 @@ def run_batch(sf_dir, out_dir, names):
             print(f"FAIL  {name}: value mismatch: {'; '.join(bad)}", flush=True); n_fail += 1
         else:
             print(f"PASS  {name}: rows={len(g)}", flush=True); n_pass += 1
-    return n_pass, n_fail, n_rowsonly
+    return n_pass, n_fail, n_empty
 
 def main(sf_dir, out_dir):
     names = sorted(d for d in os.listdir(out_dir)
                    if os.path.isdir(os.path.join(out_dir, d)))
     if len(names) <= BATCH:
-        n_pass, n_fail, n_rowsonly = run_batch(sf_dir, out_dir, names)
-        print(f"\n== {n_pass} pass, {n_fail} fail, {n_rowsonly} rows-only ==")
+        n_pass, n_fail, n_empty = run_batch(sf_dir, out_dir, names)
+        print(f"\n== {n_pass} pass, {n_fail} fail, {n_empty} empty ==")
         return 1 if n_fail else 0
-    n_pass = n_fail = n_rowsonly = 0
+    n_pass = n_fail = n_empty = 0
     for i in range(0, len(names), BATCH):
         chunk = names[i:i + BATCH]
         r = subprocess.run(
@@ -118,11 +121,11 @@ def main(sf_dir, out_dir):
         seen = set()
         for line in r.stdout.splitlines():
             parts = line.split()
-            if len(parts) >= 2 and parts[0] in ("PASS", "FAIL", "ROWS"):
+            if len(parts) >= 2 and parts[0] in ("PASS", "FAIL", "EMPTY"):
                 seen.add(parts[1].rstrip(":"))
                 if parts[0] == "PASS": n_pass += 1
                 elif parts[0] == "FAIL": n_fail += 1
-                else: n_rowsonly += 1
+                else: n_empty += 1
         missing = [n for n in chunk if n not in seen]
         if missing:
             sys.stderr.write(r.stderr)
@@ -130,7 +133,7 @@ def main(sf_dir, out_dir):
                 print(f"FAIL  {n}: checker subprocess died before reaching it "
                       f"(rc={r.returncode})")
             n_fail += len(missing)
-    print(f"\n== {n_pass} pass, {n_fail} fail, {n_rowsonly} rows-only ==")
+    print(f"\n== {n_pass} pass, {n_fail} fail, {n_empty} empty ==")
     return 1 if n_fail else 0
 
 if __name__ == "__main__":

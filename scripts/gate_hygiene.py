@@ -12,7 +12,7 @@ Failures (exit 1):
     but never exported);
   - a query dir whose newest parquet is OLDER than the last commit that
     touched src/main/scala (code moved, export didn't — stale evidence).
-Warnings (exit 0): dirs with no oracle entry (rows-only checks by design).
+Warnings (exit 0): dirs with no oracle entry (check.py fails them).
 """
 import json, os, subprocess, sys
 
@@ -74,7 +74,7 @@ def main(out_dir):
         print(f"FAIL  {name}: oracle registered but no verify export")
         rc = 1
     for name in sorted(dirs - oracle):
-        print(f"WARN  {name}: export without oracle (rows-only check)")
+        print(f"WARN  {name}: export without oracle (check.py fails it)")
     # stale exports: newer code than evidence
     try:
         code_t = int(subprocess.run(

@@ -1,1898 +1,68 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import graft.api.{Col, Table}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.suite.Suite
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The operator suite's entry points (SURVEY.md §7).
   *
-  * Every operator from SURVEY §2 gets a named query here plus (where
-  * ANSI-SQL-expressible) a DuckDB oracle in [[oracleSql]]. Column names are
+  * Every operator from SURVEY §2 gets a named query plus (where
+  * ANSI-SQL-expressible) a DuckDB oracle. Each row is one
+  * [[graft.suite.RowDef]] in its family's file under `graft.suite`,
+  * its Spark build beside its oracle SQL; the four maps here are views
+  * over [[graft.suite.Suite.rows]], built once per JVM. Column names are
   * aliased identically on both sides; aggregates over doubles go through
   * DECIMAL(18,2/4) so both engines compute exact, order-independent sums
   * (then cast to double), and every query carries a total ORDER BY so row
   * order is deterministic.
+  *
+  * Coverage note: every operator with deterministic output has a row
+  * with an oracle. Two operators are deliberately unit-tested only,
+  * because no cross-engine oracle can exist for them:
+  *  - Col.nuniqueApprox (HyperLogLog++) — the estimate depends on
+  *    Spark's HLL hash/register layout; DuckDB's approx_count_distinct
+  *    uses a different sketch. Unit-tested against exact nunique within
+  *    the configured rsd.
+  *  - Col.quantileApprox (Greenwald-Khanna) — same class of
+  *    engine-specific sketch; unit-tested against the exact percentile.
+  * misc_sample avoids the engine-RNG problem entirely: sampling is a
+  * deterministic seed-keyed hash filter (Sampling.sampleHash), so its
+  * oracle replays the same md5 bucket in SQL and the check is
+  * hash-exact like every other query. Oracle-independence: the mirrored
+  * part is the bucket FORMULA only — Spark's and DuckDB's md5 are
+  * unrelated implementations, and CurationSpec ("sampleHash:
+  * deterministic, rate-shaped, seed-independent draws") witnesses the
+  * statistical contract without md5 at all. The full audit of
+  * formula-mirroring oracles lives at [[graft.suite.Shared]]'s SQL
+  * fragments.
   */
 object SparkEntry {
-
-  // ---- determinism helpers (shared by queries; mirrored in oracle SQL) ----
-  private val D = DecimalType(18, 2)
-  /** exact, order-independent SUM over a 2-decimal double column. */
-  private def dsum(c: Column): Column = sum(c.cast(D)).cast(DoubleType)
-  /** exact AVG = exact sum / count, evaluated in double identically. */
-  private def davg(c: Column): Column = sum(c.cast(D)).cast(DoubleType) / count(c)
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
-  // =====================================================================
-  // Query inventory
-  //
-  // Coverage note: every operator with deterministic output has a query
-  // here and a DuckDB oracle below. Two operators are deliberately
-  // unit-tested only, because no cross-engine oracle can exist for them:
-  //  - Col.nuniqueApprox (HyperLogLog++) — the estimate depends on
-  //    Spark's HLL hash/register layout; DuckDB's approx_count_distinct
-  //    uses a different sketch. Unit-tested against exact nunique within
-  //    the configured rsd.
-  //  - Col.quantileApprox (Greenwald-Khanna) — same class of
-  //    engine-specific sketch; unit-tested against the exact percentile.
-  // misc_sample avoids the engine-RNG problem entirely: sampling is a
-  // deterministic seed-keyed hash filter (Sampling.sampleHash), so its
-  // oracle replays the same md5 bucket in SQL and the check is
-  // hash-exact like every other query. Oracle-independence: the mirrored
-  // part is the bucket FORMULA only — Spark's and DuckDB's md5 are
-  // unrelated implementations, and CurationSpec ("sampleHash:
-  // deterministic, rate-shaped, seed-independent draws") witnesses the
-  // statistical contract without md5 at all. The full audit of
-  // formula-mirroring oracles lives at PipelineEntry's shared-SQL-
-  // fragment block.
-  // =====================================================================
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    relational ++ TpchEntry.queries ++ PipelineEntry.queries
+  /** Every row's gate form, by name. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Suite.rows.map(r => r.name -> r.build).toMap
+
+  /** Every row's DuckDB oracle SQL: same table names, same output column
+    * names, same deterministic ORDER BY; decimal-exact aggregation
+    * mirrors the Spark side. */
+  lazy val oracleSql: Map[String, String] =
+    Suite.rows.map(r => r.name -> r.oracle).toMap
 
   /** Bench-only operator faces for queries whose gate form is a
-    * correctness harness with dominant feed cost (the MemoryStream
-    * stream_* rows). A timed run ([[Rows.form]]) runs these INSTEAD of
-    * the gate form and reports the substitution; Verify never uses
-    * them. */
-  def benchFaces: Map[String, (SparkSession, String) => DataFrame] =
-    PipelineEntry.benchFaces
+    * correctness harness with dominant feed cost (the stream_* rows). A
+    * timed run ([[Rows.form]]) runs these INSTEAD of the gate form and
+    * reports the substitution; Verify never uses them. */
+  lazy val benchFaces: Map[String, (SparkSession, String) => DataFrame] =
+    Suite.rows.flatMap(r => r.bench.map(r.name -> _)).toMap
 
   /** Size-triggered bounded-footprint substitutions for a timed run
-    * ([[Rows.form]], see [[PipelineEntry.scaleFaces]]): (table sized
+    * ([[Rows.form]], see [[graft.suite.RowDef.Scale]]): (table sized
     * on, byte threshold, substitute). Verify never uses these — the
     * gate always runs the single-pass form. */
-  def scaleFaces
+  lazy val scaleFaces
       : Map[String, (String, Long, (SparkSession, String) => DataFrame)] =
-    PipelineEntry.scaleFaces
-
-  private[graft] def relational: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- flagship: TPC-H Q1 pricing summary (SURVEY §2.7/§2.8) ----
-    "q1_agg" -> { (s, dir) =>
-      val li = t(s, dir, "lineitem")
-      li.filter(col("l_shipdate") <= lit("1998-09-02").cast(TimestampType))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          dsum(col("l_quantity")).as("sum_qty"),
-          dsum(col("l_extendedprice")).as("sum_base_price"),
-          sum(col("l_extendedprice").cast(D) * (lit(1) - col("l_discount").cast(D)))
-            .cast(DoubleType).as("sum_disc_price"),
-          davg(col("l_quantity")).as("avg_qty"),
-          davg(col("l_extendedprice")).as("avg_price"),
-          davg(col("l_discount")).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    },
-
-    // ---- TPC-H Q3: join-heavy top-k (broadcast dim + partial agg + TakeOrdered) ----
-    "q3_shipping" -> { (s, dir) =>
-      val c = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-      val o = t(s, dir, "orders")
-        .filter(col("o_orderdate") < lit("1995-03-15").cast(TimestampType))
-      val li = t(s, dir, "lineitem")
-        .filter(col("l_shipdate") > lit("1995-03-15").cast(TimestampType))
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-        .agg(sum(col("l_extendedprice").cast(D) * (lit(1) - col("l_discount").cast(D)))
-          .cast(DoubleType).as("revenue"))
-        .orderBy(desc("revenue"), asc("o_orderdate"), asc("l_orderkey"))
-        .select(col("l_orderkey"), col("revenue"), col("o_orderdate"), col("o_orderpriority"))
-        .limit(10)
-    },
-
-    "q10_returns" -> { (s, dir) =>
-      // TPC-H Q10 shape (returned-item reporting): revenue lost to
-      // returns per customer over one order quarter, top 20. Orders
-      // filter prunes FIRST (partition-prunable at scale), lineitem
-      // joins shuffled on the orderkey (both sides huge — bucketing
-      // co-locates them in a warehouse deployment), nation broadcasts.
-      val li = t(s, dir, "lineitem").filter(col("l_returnflag") === "R")
-      val o = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit("1995-01-01").cast(TimestampType) &&
-          col("o_orderdate") < lit("1995-04-01").cast(TimestampType))
-      val c = t(s, dir, "customer")
-      val n = t(s, dir, "nation")
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"),
-          col("n_name"), col("c_mktsegment"))
-        .agg(sum(col("l_extendedprice").cast(D) * (lit(1) - col("l_discount").cast(D)))
-          .cast(DoubleType).as("revenue"))
-        .orderBy(desc("revenue"), asc("c_custkey"))
-        .select(col("c_custkey"), col("c_name"), col("revenue"),
-          col("c_acctbal"), col("n_name"), col("c_mktsegment"))
-        .limit(20)
-    },
-    "q18_volume" -> { (s, dir) =>
-      // TPC-H Q18 shape (large-volume customers): orders whose total
-      // lineitem quantity clears a HAVING threshold, joined back to
-      // customer detail — the aggregate-then-semi-join pattern (the
-      // heavy lineitem aggregate runs ONCE; the qualifying key set,
-      // tiny by construction, broadcasts into the detail join)
-      val big = t(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(sum(col("l_quantity").cast(LongType)).as("total_qty"))
-        .filter(col("total_qty") > 180)
-      t(s, dir, "orders")
-        .join(big, col("o_orderkey") === big("l_orderkey"))
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
-          col("o_orderdate"), col("o_totalprice"), col("total_qty"))
-        .orderBy(desc("total_qty"), asc("o_orderkey"))
-        .limit(50)
-    },
-    "q14_promo" -> { (s, dir) =>
-      // TPC-H Q14 shape (promotion effect): PROMO share of one month's
-      // revenue — two decimal-exact sums from ONE conditional
-      // aggregate (no second scan, no join back), part side broadcast
-      val li = t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1995-09-01").cast(TimestampType) &&
-          col("l_shipdate") < lit("1995-10-01").cast(TimestampType))
-      val p = t(s, dir, "part").select(col("p_partkey"), col("p_type"))
-      val rev = col("l_extendedprice").cast(D) * (lit(1) - col("l_discount").cast(D))
-      li.join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .agg(
-          sum(when(col("p_type") === "PROMO", rev).otherwise(lit(0).cast(D)))
-            .cast(DoubleType).as("promo_revenue"),
-          sum(rev).cast(DoubleType).as("total_revenue"))
-        .select(col("promo_revenue"), col("total_revenue"),
-          (lit(100.0) * col("promo_revenue") / col("total_revenue")).as("promo_pct"))
-    },
-
-    "sort_topn_group" -> { (s, dir) =>
-      // top-3 rows per group WITHOUT a per-group sort: the bounded
-      // TopKByScore partial aggregate (state = k entries per group on
-      // every partial path, map-side combine) — the same kernel the ANN
-      // family ranks with, reused on relational data; a window
-      // row_number() formulation would sort every group's full row set
-      t(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(graft.plans.TopKByScore(col("o_totalprice"), col("o_orderkey"), 3).as("_top"))
-        .select(col("o_custkey"), posexplode(col("_top")))
-        .select(col("o_custkey"), (col("pos") + 1).cast(LongType).as("rank"),
-          col("col.c_id").as("o_orderkey"), col("col.cos").as("o_totalprice"))
-        .orderBy("o_custkey", "rank")
-    },
-
-    // ---- SQL entry point: spark.sql over registered fixture views ----
-    "sql_q6" -> { (s, dir) =>
-      Tables.registerAll(s, dir)
-      s.sql(
-        """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-          |FROM lineitem
-          |WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_shipdate < TIMESTAMP '1996-01-01'
-          |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin)
-    },
-
-    "sql_lateral" -> { (s, dir) =>
-      // SQL generator surface: LATERAL VIEW explode (the HiveQL form
-      // Spark SQL keeps) — tokenize in SQL, count per token, top-20;
-      // oracle spells the same with DuckDB's unnest
-      Tables.registerAll(s, dir)
-      s.sql(
-        """SELECT tok, COUNT(*) AS n
-          |FROM documents
-          |LATERAL VIEW explode(split(trim(text), '\\s+')) AS tok
-          |GROUP BY tok ORDER BY n DESC, tok LIMIT 20""".stripMargin)
-    },
-    "sql_pivot" -> { (s, dir) =>
-      // SQL PIVOT surface (Spark 4 syntax): order counts per priority
-      // spread into columns by status; the oracle spells the same
-      // pivot as portable conditional aggregation
-      Tables.registerAll(s, dir)
-      s.sql(
-        """SELECT * FROM (
-          |  SELECT o_orderpriority, o_orderstatus FROM orders
-          |) PIVOT (
-          |  COUNT(*) FOR o_orderstatus IN ('F' AS n_f, 'O' AS n_o, 'P' AS n_p)
-          |)
-          |ORDER BY o_orderpriority""".stripMargin)
-    },
-
-    // ---- projection / fields (§2.2) ----
-    "proj_field" -> { (s, dir) =>
-      Table(t(s, dir, "lineitem"))
-        .project("l_orderkey", "l_linenumber", "l_extendedprice")
-        .sort(Seq("l_orderkey", "l_linenumber")).df
-    },
-    "proj_drop" -> { (s, dir) =>
-      Table(t(s, dir, "customer")).dropField("c_name", "c_acctbal")
-        .sort(Seq("c_custkey")).df
-    },
-    "proj_relabel" -> { (s, dir) =>
-      Table(t(s, dir, "region"))
-        .relabel("r_regionkey" -> "key", "r_name" -> "name")
-        .sort(Seq("key")).df
-    },
-
-    // ---- selection (§2.2) ----
-    "sel_filter" -> { (s, dir) =>
-      val li = Table(t(s, dir, "lineitem"))
-      li.filter(li("l_quantity") > 45 && li("l_returnflag") === "A")
-        .project("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
-        .sort(Seq("l_orderkey", "l_linenumber")).df
-    },
-    "sel_isin" -> { (s, dir) =>
-      val o = Table(t(s, dir, "orders"))
-      o.filter(o("o_orderpriority").isin("1-URGENT", "2-HIGH"))
-        .project("o_orderkey", "o_orderpriority")
-        .sort(Seq("o_orderkey")).df
-    },
-    "sel_slice" -> { (s, dir) =>
-      // positional slice [100, 200) over an explicit total order (§7.4 note)
-      Table(t(s, dir, "orders")).sort(Seq("o_orderkey")).slice(100, 200).df
-    },
-    "sel_slice_sorted" -> { (s, dir) =>
-      // the scale-safe sibling: same [5000, 5100) answer via two-pass
-      // partition-offset pagination — no global LIMIT/OFFSET funnel
-      // (see Table.sliceSorted; parity with slice() unit-tested)
-      Table(t(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice")))
-        .sliceSorted(5000, 5100, Seq(col("o_orderkey"))).df
-        .orderBy("o_orderkey")
-    },
-    "sel_slice_strided" -> { (s, dir) =>
-      // numpy-backend slice parity: orders[-6000::7] — negative start
-      // resolved against the counted total, stride as per-partition
-      // index arithmetic on the same SortedPages machinery (no funnel,
-      // no extra shuffle); oracle replays via row_number − 1
-      Table(t(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice")))
-        .sliceStrided(Some(-6000L), None, 7L, Seq(col("o_orderkey"))).df
-        .orderBy("o_orderkey")
-    },
-    "sel_with_index" -> { (s, dir) =>
-      // global 0-based row index under a total order WITHOUT the
-      // single-partition row_number() window: the SortedPages count
-      // pass numbers each range partition's rows from its prefix-sum
-      // offset (same boundary-consistent machinery as sliceSorted);
-      // restricted to a slice of customers to keep the dump small
-      Table(t(s, dir, "customer")
-          .filter(col("c_custkey") % 5 === 0)
-          .select(col("c_custkey"), col("c_acctbal")))
-        .paginateSorted(Seq(col("c_custkey")))
-        .withIndex("row_idx").df
-        .orderBy("c_custkey")
-    },
-    "sel_coerce" -> { (s, dir) =>
-      // scalar_coerce (arithmetic.py:251-306): string literals coerce to
-      // the column dtype (timestamp / numeric) — no manual casts
-      val li = Table(t(s, dir, "lineitem"))
-      li.filter(li("l_shipdate") <= "1998-09-02" && li("l_quantity") > "45")
-        .project("l_orderkey", "l_linenumber", "l_quantity")
-        .sort(Seq("l_orderkey", "l_linenumber")).df
-    },
-    "misc_sample_n" -> { (s, dir) =>
-      // Sample(n=): exact-n contract checked by count (rows are engine RNG)
-      Table(t(s, dir, "orders")).sampleN(500).df.agg(count(lit(1)).as("n"))
-    },
-    "src_jdbc_roundtrip" -> { (s, dir) =>
-      // JDBC source (compute/sql.py:1376-1392) via embedded Derby
-      // Derby opens the database at a local path
-      val db = new org.apache.hadoop.fs.Path(
-        Scratch.landing(s, s"src_jdbc_roundtrip|$dir")).toUri.getPath
-      val url = s"jdbc:derby:$db/derbydb;create=true"
-      val props = new java.util.Properties()
-      props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-      t(s, dir, "nation")
-        .select(col("n_nationkey").cast(IntegerType), col("n_name"),
-          col("n_regionkey").cast(IntegerType))
-        .write.mode("overwrite").jdbc(url, "nation_jdbc", props)
-      Table.dataJdbc(s, url, "nation_jdbc", props).df
-        .orderBy("n_nationkey")
-    },
-
-    // ---- merge / transform / coerce / coalesce (§2.2) ----
-    "merge_transform" -> { (s, dir) =>
-      val li = Table(t(s, dir, "lineitem"))
-      li.project("l_orderkey", "l_linenumber", "l_extendedprice", "l_discount", "l_tax")
-        .merge(
-          "disc_price" -> (Col(col("l_extendedprice")) * (Col.lit(1) - Col(col("l_discount")))),
-          "charge" -> Col(col("l_extendedprice") * (lit(1) - col("l_discount")) * (lit(1) + col("l_tax"))))
-        .dropField("l_discount", "l_tax")
-        .sort(Seq("l_orderkey", "l_linenumber")).df
-    },
-    "misc_coerce" -> { (s, dir) =>
-      val li = Table(t(s, dir, "lineitem"))
-      li.project("l_orderkey", "l_linenumber", "l_quantity")
-        .merge(
-          "qty_int" -> li("l_quantity").coerce("bigint"),
-          "qty_str" -> li("l_quantity").coerce("string"))
-        .dropField("l_quantity")
-        .sort(Seq("l_orderkey", "l_linenumber")).df
-    },
-    "misc_coalesce" -> { (s, dir) =>
-      val li = Table(t(s, dir, "lineitem"))
-      li.project("l_orderkey", "l_linenumber", "l_returnflag")
-        .merge("flag2" -> Col(expr("nullif(l_returnflag, 'N')")).coalesceWith(Col.lit("X")))
-        .dropField("l_returnflag")
-        .sort(Seq("l_orderkey", "l_linenumber")).df
-    },
-
-    // ---- arithmetic / comparison / boolean (§2.3) ----
-    "arith_ops" -> { (s, dir) =>
-      val li = Table(t(s, dir, "lineitem"))
-      val q = li("l_quantity")
-      li.project("l_orderkey", "l_linenumber", "l_quantity")
-        .merge(
-          "a_add" -> (q + 1.5),
-          "a_div" -> (q / 7),
-          "a_floordiv" -> q.floorDiv(Col.lit(7)),
-          "a_mod" -> (Col(col("l_orderkey")) % 7),
-          "a_mul" -> (q * 2),
-          "a_neg" -> (-q),
-          "a_pow" -> q.pow(Col.lit(2)),
-          "a_sub" -> (q - 0.5))
-        .dropField("l_quantity")
-        .sort(Seq("l_orderkey", "l_linenumber")).df
-    },
-    "arith_cmp" -> { (s, dir) =>
-      val li = Table(t(s, dir, "lineitem"))
-      val q = li("l_quantity"); val f = li("l_returnflag")
-      li.merge(
-          "c_and" -> ((q > 10) && (f === "A")),
-          "c_eq" -> (f === "R"),
-          "c_ge" -> (q >= 30),
-          "c_gt" -> (q > 30),
-          "c_le" -> (q <= 30),
-          "c_lt" -> (q < 30),
-          "c_ne" -> (f !== "R"),
-          "c_not" -> !(q > 30),
-          "c_or" -> ((q < 5) || (q > 45)))
-        .project("l_orderkey", "l_linenumber", "c_and", "c_eq", "c_ge", "c_gt",
-          "c_le", "c_lt", "c_ne", "c_not", "c_or")
-        .sort(Seq("l_orderkey", "l_linenumber")).df
-    },
-    "arith_greatest_least" -> { (s, dir) =>
-      val li = Table(t(s, dir, "lineitem"))
-      li.project("l_orderkey", "l_linenumber", "l_quantity", "l_discount")
-        .merge(
-          "g" -> Col(li("l_quantity").math.greatest(col("l_discount") * 100)),
-          "l" -> Col(li("l_quantity").math.least(col("l_discount") * 100)))
-        .sort(Seq("l_orderkey", "l_linenumber")).df
-    },
-
-    // ---- math scalar functions (§2.4) ----
-    "math_funcs" -> { (s, dir) =>
-      val li = Table(t(s, dir, "lineitem"))
-      val q = col("l_quantity"); val d = col("l_discount")
-      def r6(c: Column) = round(c, 6)
-      li.merge(
-          "m_abs" -> Col(abs(q - 25)),
-          "m_asin" -> Col(r6(asin(d))),
-          "m_atan2" -> Col(r6(atan2(q, lit(3.0)))),
-          "m_ceil" -> Col(ceil(q / 7).cast(LongType)),
-          "m_cos" -> Col(r6(cos(q))),
-          "m_degrees" -> Col(r6(degrees(d))),
-          "m_exp" -> Col(r6(exp(d))),
-          "m_floor" -> Col(floor(q / 7).cast(LongType)),
-          "m_hypot" -> Col(r6(hypot(q, lit(4.0)))),
-          "m_log" -> Col(r6(log(q + 1))),
-          "m_log10" -> Col(r6(log10(q + 1))),
-          "m_log1p" -> Col(r6(log1p(q))),
-          "m_sin" -> Col(r6(sin(q))),
-          "m_sqrt" -> Col(r6(sqrt(q))),
-          "m_tan" -> Col(r6(tan(d))),
-          "m_trunc" -> Col(new graft.api.MathOps(q * 0.3).trunc.cast(LongType)))
-        .project(Seq("l_orderkey", "l_linenumber") ++ Seq("m_abs", "m_asin",
-          "m_atan2", "m_ceil", "m_cos", "m_degrees", "m_exp", "m_floor",
-          "m_hypot", "m_log", "m_log10", "m_log1p", "m_sin", "m_sqrt",
-          "m_tan", "m_trunc"): _*)
-        .sort(Seq("l_orderkey", "l_linenumber")).df
-    },
-
-    // ---- string functions (§2.5) ----
-    "str_basic" -> { (s, dir) =>
-      val c = Table(t(s, dir, "customer"))
-      val n = c("c_name")
-      c.project("c_custkey", "c_name")
-        .merge(
-          "s_capitalize" -> Col(n.str.capitalize),
-          "s_len" -> Col(n.str.len.cast(LongType)),
-          "s_lower" -> Col(n.str.lower),
-          "s_lstrip" -> Col(Col.lit("  pad  ").c).label("s_pad_in"),
-          "s_upper" -> Col(n.str.upper))
-        .transform("s_lstrip" -> Col(ltrim(lit("  pad  "))))
-        .sort(Seq("c_custkey")).df
-    },
-    "str_like_find" -> { (s, dir) =>
-      val p = Table(t(s, dir, "part"))
-      val ty = p("p_type")
-      p.project("p_partkey", "p_type")
-        .merge(
-          "s_find" -> Col(ty.str.find("BRASS")),
-          "s_like" -> Col(ty.str.like("*BRASS*")),
-          "s_pos" -> Col(ty.str.find("ECONOMY")))
-        .sort(Seq("p_partkey")).df
-    },
-    "str_slice_pad" -> { (s, dir) =>
-      val c = Table(t(s, dir, "customer"))
-      val n = c("c_name")
-      c.merge(
-          "s_bpad" -> Col(n.str.pad(25, "both", ".")),
-          "s_cat" -> Col(n.str.cat(col("c_mktsegment"), sep = "|")),
-          "s_lpad" -> Col(n.str.pad(25, "left", ".")),
-          "s_repeat" -> Col(substring(n.c, 1, 2)).label("tmp"),
-          "s_rpad" -> Col(n.str.pad(25, "right", ".")),
-          "s_rstrip" -> Col(new graft.api.StrOps(lit("  pad  ")).rstrip),
-          "s_slice" -> Col(n.str.slice(0, 8)),
-          "s_strip" -> Col(new graft.api.StrOps(lit("  pad  ")).strip),
-          "s_replace" -> Col(n.str.replace("Customer", "Cust")))
-        .transform("s_repeat" -> Col(repeat(substring(n.c, 1, 2), 3)))
-        .project("c_custkey", "s_bpad", "s_cat", "s_lpad", "s_repeat",
-          "s_rpad", "s_rstrip", "s_slice", "s_strip", "s_replace")
-        .sort(Seq("c_custkey")).df
-    },
-    "str_replace_max" -> { (s, dir) =>
-      // bounded replace (first-N occurrences, Python str.replace(count)
-      // semantics) over a string with guaranteed repeats: name || name
-      val x = concat(col("c_name"), lit(" "), col("c_name"))
-      val so = new graft.api.StrOps(x)
-      t(s, dir, "customer").select(col("c_custkey"),
-          so.replace("Customer", "Cust", 1).as("r1"),
-          so.replace("0", "#", 3).as("r3"))
-        .orderBy("c_custkey")
-    },
-    "str_predicates" -> { (s, dir) =>
-      val c = Table(t(s, dir, "customer"))
-      val seg = c("c_mktsegment")
-      c.project("c_custkey", "c_mktsegment")
-        .merge(
-          "p_isalnum" -> Col(seg.str.isalnum),
-          "p_isalpha" -> Col(seg.str.isalpha),
-          "p_isdigit" -> Col(seg.str.isdigit),
-          "p_islower" -> Col(seg.str.islower),
-          "p_isupper" -> Col(seg.str.isupper))
-        .sort(Seq("c_custkey")).df
-    },
-
-    // ---- datetime functions (§2.6) ----
-    "dt_extract" -> { (s, dir) =>
-      val o = Table(t(s, dir, "orders"))
-      val d = o("o_orderdate")
-      o.merge(
-          "d_day" -> Col(d.dt.day),
-          "d_hour" -> Col(d.dt.hour),
-          "d_minute" -> Col(d.dt.minute),
-          "d_month" -> Col(d.dt.month),
-          "d_second" -> Col(d.dt.second),
-          "d_year" -> Col(d.dt.year))
-        .project("o_orderkey", "d_day", "d_hour", "d_minute", "d_month",
-          "d_second", "d_year")
-        .sort(Seq("o_orderkey")).df
-    },
-    "dt_calendar" -> { (s, dir) =>
-      val o = Table(t(s, dir, "orders"))
-      val d = o("o_orderdate")
-      o.merge(
-          "d_dayofyear" -> Col(d.dt.dayofyear),
-          "d_daysinmonth" -> Col(d.dt.daysinmonth),
-          "d_monthend" -> Col(d.dt.isMonthEnd),
-          "d_monthstart" -> Col(d.dt.isMonthStart),
-          "d_qend" -> Col(d.dt.isQuarterEnd),
-          "d_qstart" -> Col(d.dt.isQuarterStart),
-          "d_quarter" -> Col(d.dt.quarter),
-          "d_week" -> Col(d.dt.week),
-          "d_weekday" -> Col(d.dt.weekday),
-          "d_yend" -> Col(d.dt.isYearEnd),
-          "d_ystart" -> Col(d.dt.isYearStart))
-        .project("o_orderkey", "d_dayofyear", "d_daysinmonth", "d_monthend",
-          "d_monthstart", "d_qend", "d_qstart", "d_quarter", "d_week",
-          "d_weekday", "d_yend", "d_ystart")
-        .sort(Seq("o_orderkey")).df
-    },
-    "dt_trunc" -> { (s, dir) =>
-      val li = Table(t(s, dir, "lineitem"))
-      val sd = li("l_shipdate")
-      li.merge(
-          "t_10min" -> Col(sd.dt.truncate(10, "minutes")),
-          "t_day" -> Col(sd.dt.truncate(1, "day")),
-          "t_month" -> Col(sd.dt.truncate(1, "month")),
-          "t_strftime" -> Col(sd.dt.strftime("%Y-%m-%d %H:%M")),
-          "t_year" -> Col(sd.dt.truncate(1, "year")))
-        .project("l_orderkey", "l_linenumber", "t_10min", "t_day", "t_month",
-          "t_strftime", "t_year")
-        .sort(Seq("l_orderkey", "l_linenumber")).df
-    },
-
-    // ---- reductions (§2.7) ----
-    "red_summary" -> { (s, dir) =>
-      val li = t(s, dir, "lineitem")
-      // Blaze summary(): one row, field names alphabetical (reductions.py:277-279)
-      li.agg(
-        davg(col("l_quantity")).as("r_mean"),
-        count(col("l_quantity")).as("r_count"),
-        max(col("l_quantity")).as("r_max"),
-        min(col("l_quantity")).as("r_min"),
-        countDistinct(col("l_returnflag")).as("r_nunique"),
-        dsum(col("l_quantity")).as("r_sum"),
-        count(lit(1)).as("r_nrows"))
-        .select(col("r_count"), col("r_max"), col("r_mean"), col("r_min"),
-          col("r_nrows"), col("r_nunique"), col("r_sum"))
-    },
-    "red_var_std" -> { (s, dir) =>
-      val li = t(s, dir, "lineitem")
-      // exact moments in decimal, final formula in double — identical in DuckDB
-      val agg = li.agg(
-        sum(col("l_quantity").cast(D)).cast(DoubleType).as("sx"),
-        sum(col("l_quantity").cast(D) * col("l_quantity").cast(D)).cast(DoubleType).as("sx2"),
-        count(col("l_quantity")).cast(DoubleType).as("n"))
-      agg.select(
-        ((col("sx2") - col("sx") * col("sx") / col("n")) / col("n")).as("var_pop"),
-        ((col("sx2") - col("sx") * col("sx") / col("n")) / (col("n") - 1)).as("var_samp"),
-        sqrt((col("sx2") - col("sx") * col("sx") / col("n")) / col("n")).as("std_pop"),
-        sqrt((col("sx2") - col("sx") * col("sx") / col("n")) / (col("n") - 1)).as("std_samp"))
-    },
-    "red_any_all" -> { (s, dir) =>
-      val li = t(s, dir, "lineitem")
-      li.agg(
-        max(col("l_quantity") > 49).as("r_any_gt49"),
-        min(col("l_quantity") > 0).as("r_all_gt0"),
-        max(col("l_quantity") > 100).as("r_any_gt100"))
-        .select(col("r_all_gt0"), col("r_any_gt100"), col("r_any_gt49"))
-    },
-    "red_vnorm" -> { (s, dir) =>
-      val li = t(s, dir, "lineitem")
-      li.agg(sum(col("l_quantity").cast(D) * col("l_quantity").cast(D))
-          .cast(DoubleType).as("ss"))
-        .select(sqrt(col("ss")).as("vnorm2"))
-    },
-    "red_count_values" -> { (s, dir) =>
-      Table(t(s, dir, "lineitem")).countValues("l_returnflag").df
-    },
-    "misc_checksum" -> { (s, dir) =>
-      // anti-entropy: per-source (n, xor-of-row-hash) checksums —
-      // order/partitioning-independent, so two copies of the corpus
-      // compare by exchanging one tiny table
-      Table(t(s, dir, "documents"))
-        .checksumBy("source", graft.functions.TextFunctions.tokenHash(col("text"))).df
-    },
-    "red_mode" -> { (s, dir) =>
-      // exact mode with pinned tiebreak (count desc, value asc) — SQL
-      // mode() leaves ties engine-defined, so both sides spell it out
-      Table(t(s, dir, "lineitem")
-          .select(col("l_quantity").cast(LongType).as("l_quantity")))
-        .modeOf("l_quantity").df
-    },
-
-    // ---- grouping (§2.8) ----
-    "by_sum" -> { (s, dir) =>
-      val li = Table(t(s, dir, "lineitem"))
-      li.by("l_returnflag",
-          "total_qty" -> Col(dsum(col("l_quantity"))),
-          "avg_price" -> Col(davg(col("l_extendedprice"))),
-          "n" -> Col(count(lit(1))))
-        .sort(Seq("l_returnflag")).df
-    },
-    "by_derived" -> { (s, dir) =>
-      // grouping on a derived elementwise expression (split_apply_combine.py:28-88)
-      val o = Table(t(s, dir, "orders"))
-      o.by(Seq("order_year" -> Col(year(col("o_orderdate")))),
-          "n" -> Col(count(lit(1))),
-          "total" -> Col(dsum(col("o_totalprice"))))
-        .sort(Seq("order_year")).df
-    },
-    "by_multi" -> { (s, dir) =>
-      val li = Table(t(s, dir, "lineitem"))
-      li.byFields(Seq("l_returnflag", "l_linestatus"),
-          "max_disc" -> Col(max(col("l_discount"))),
-          "min_qty" -> Col(min(col("l_quantity"))),
-          "nunique_parts" -> Col(countDistinct(col("l_partkey"))))
-        .sort(Seq("l_returnflag", "l_linestatus")).df
-    },
-
-    // ---- joins (§2.9) ----
-    "join_inner" -> { (s, dir) =>
-      val o = Table(t(s, dir, "orders"))
-      val c = Table(t(s, dir, "customer"))
-      Table.join(o, c, Seq("o_custkey"), Seq("c_custkey"), "inner",
-          broadcastRight = true)
-        .project("o_custkey", "o_orderkey", "o_totalprice", "c_name", "c_mktsegment")
-        .sort(Seq("o_orderkey")).df
-    },
-    "join_left" -> { (s, dir) =>
-      val c = Table(t(s, dir, "customer"))
-      val n = Table(t(s, dir, "nation"))
-      Table.join(c, n, Seq("c_nationkey"), Seq("n_nationkey"), "left",
-          broadcastRight = true)
-        .project("c_nationkey", "c_custkey", "c_name", "n_name")
-        .sort(Seq("c_custkey")).df
-    },
-    "join_outer" -> { (s, dir) =>
-      // full outer over a filtered pair so both null sides occur
-      val o = Table(Table(t(s, dir, "orders")).df.filter(col("o_orderkey") % 3 === 0))
-      val li = Table(Table(t(s, dir, "lineitem")).df
-        .filter(col("l_orderkey") % 3 === 1)
-        .groupBy(col("l_orderkey")).agg(dsum(col("l_quantity")).as("qty")))
-      Table.join(o, li, Seq("o_orderkey"), Seq("l_orderkey"), "outer")
-        .project("o_orderkey", "o_totalprice", "qty")
-        .sort(Seq("o_orderkey")).df
-    },
-    "join_multi" -> { (s, dir) =>
-      // TPC-H Q5-flavored 5-way join with broadcast dims; revenue by region
-      val li = t(s, dir, "lineitem"); val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer"); val n = t(s, dir, "nation")
-      val r = t(s, dir, "region")
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"))
-        .agg(sum(col("l_extendedprice").cast(D) * (lit(1) - col("l_discount").cast(D)))
-          .cast(DoubleType).as("revenue"))
-        .orderBy(col("r_name"))
-    },
-    "join_semi" -> { (s, dir) =>
-      val li = t(s, dir, "lineitem")
-      val big = t(s, dir, "orders").filter(col("o_totalprice") > 400000)
-      li.join(big, col("l_orderkey") === col("o_orderkey"), "left_semi")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    },
-    "join_right" -> { (s, dir) =>
-      // right join: all customers kept, key taken from the right side,
-      // unmatched order columns null (collections.py:767-771)
-      val o = Table(t(s, dir, "orders").filter(col("o_totalprice") > 300000))
-      val c = Table(t(s, dir, "customer"))
-      Table.join(o, c, Seq("o_custkey"), Seq("c_custkey"), "right")
-        .project("o_custkey", "o_orderkey", "c_name")
-        .sort(Seq("o_custkey", "o_orderkey")).df
-    },
-    "join_anti" -> { (s, dir) =>
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders").filter(col("o_totalprice") > 300000)
-      c.join(o, col("c_custkey") === col("o_custkey"), "left_anti")
-        .select(col("c_custkey"), col("c_name"))
-        .orderBy(col("c_custkey"))
-    },
-
-    // ---- sorting / limits / top-k (§2.10) ----
-    "sort_head" -> { (s, dir) =>
-      // top-k: Spark plans TakeOrderedAndProject (no full sort at scale)
-      t(s, dir, "orders")
-        .orderBy(desc("o_totalprice"), asc("o_orderkey"))
-        .select(col("o_orderkey"), col("o_totalprice"))
-        .limit(10)
-    },
-    "sort_tail" -> { (s, dir) =>
-      // reference tail rewrite: inverted sort + head + re-sort (sql.py:1523-1546)
-      Table(t(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice")))
-        .tail(10, Seq("o_orderkey")).df
-    },
-
-    // ---- set-like ops (§2.11) ----
-    "set_distinct" -> { (s, dir) =>
-      Table(t(s, dir, "lineitem")).df
-        .select(col("l_returnflag"), col("l_linestatus")).distinct()
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    },
-    "set_distinct_on" -> { (s, dir) =>
-      // Distinct(on): keep FIRST row per key under an explicit total order
-      val o = t(s, dir, "orders")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("o_orderpriority")).orderBy(col("o_orderkey"))
-      o.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("o_orderpriority"))
-    },
-    "set_concat" -> { (s, dir) =>
-      val o = Table(t(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice")))
-      val hi = Table(o.df.filter(col("o_totalprice") > 300000))
-      val lo = Table(o.df.filter(col("o_totalprice") < 10000))
-      hi.concat(lo).sort(Seq("o_orderkey")).df
-    },
-
-    // ---- remaining string surface (§2.5) ----
-    "str_predicates2" -> { (s, dir) =>
-      val c = Table(t(s, dir, "customer"))
-      val n = c("c_name")
-      c.merge(
-          "p_isdecimal" -> Col(n.str.isdecimal),
-          "p_isnumeric" -> Col(n.str.isnumeric),
-          "p_isspace" -> Col(Col.lit("   ").c).label("tmp"),
-          "p_istitle" -> Col(n.str.istitle),
-          "p_slicerep" -> Col(n.str.sliceReplace(0, 8, "CUST")))
-        .transform("p_isspace" -> Col(new graft.api.StrOps(lit("   ")).isspace))
-        .project("c_custkey", "p_isdecimal", "p_isnumeric", "p_isspace",
-          "p_istitle", "p_slicerep")
-        .sort(Seq("c_custkey")).df
-    },
-    "str_interp" -> { (s, dir) =>
-      // Interp: string % args (arithmetic.py:223-235) → format_string
-      val c = t(s, dir, "customer")
-      c.select(col("c_custkey"),
-          format_string("%s|%05d", col("c_mktsegment"), col("c_custkey")).as("s_interp"))
-        .orderBy("c_custkey")
-    },
-
-    // ---- remaining math surface (§2.4) ----
-    "math_funcs2" -> { (s, dir) =>
-      val li = Table(t(s, dir, "lineitem"))
-      val q = col("l_quantity"); val d = col("l_discount")
-      def r6(c: Column) = round(c, 6)
-      li.merge(
-          "m_acos" -> Col(r6(acos(d))),
-          "m_acosh" -> Col(r6(acosh(q / 10 + 1))),
-          "m_atan" -> Col(r6(atan(d))),
-          "m_asinh" -> Col(r6(asinh(d))),
-          "m_atanh" -> Col(r6(atanh(d))),
-          "m_copysign" -> Col(new graft.api.MathOps(q - 25).copysign(d - 0.05)),
-          "m_cosh" -> Col(r6(cosh(d))),
-          "m_expm1" -> Col(r6(expm1(d))),
-          "m_fmod" -> Col(new graft.api.MathOps(q).fmod(lit(7.3))),
-          "m_isnan" -> Col(isnan(lit(Double.NaN))),
-          "m_ldexp" -> Col(new graft.api.MathOps(d).ldexp(lit(3))),
-          "m_notnull" -> Col(expr("nullif(l_returnflag,'N')").isNotNull),
-          "m_radians" -> Col(r6(radians(q))),
-          "m_sinh" -> Col(r6(sinh(d))),
-          "m_tanh" -> Col(r6(tanh(d))),
-          "m_truncate" -> Col(new graft.api.MathOps(q * 1.37).truncate(5.0)))
-        .project(Seq("l_orderkey", "l_linenumber", "m_acos", "m_acosh",
-          "m_asinh", "m_atan", "m_atanh", "m_copysign", "m_cosh", "m_expm1",
-          "m_fmod", "m_isnan", "m_ldexp", "m_notnull", "m_radians", "m_sinh",
-          "m_tanh", "m_truncate"): _*)
-        .sort(Seq("l_orderkey", "l_linenumber")).df
-    },
-
-    // ---- sub-second datetime + weekday name on events (§2.6) ----
-    "dt_extract2" -> { (s, dir) =>
-      val ev = Table(t(s, dir, "events"))
-      val ts = ev("ts")
-      ev.merge(
-          "d_hour" -> Col(ts.dt.hour),
-          "d_micro" -> Col(ts.dt.microsecond),
-          "d_milli" -> Col(ts.dt.millisecond),
-          "d_minute" -> Col(ts.dt.minute),
-          "d_nano" -> Col(ts.dt.nanosecond),
-          "d_second" -> Col(ts.dt.second),
-          "d_strf" -> Col(ts.dt.strftime("%Y-%m-%d %H:%M:%S")),
-          "d_timeus" -> Col(ts.dt.time),
-          "d_wdname" -> Col(ts.dt.weekdayName))
-        .project("event_id", "d_hour", "d_micro", "d_milli", "d_minute",
-          "d_nano", "d_second", "d_strf", "d_timeus", "d_wdname")
-        .sort(Seq("event_id")).df
-    },
-    "dt_timedelta" -> { (s, dir) =>
-      // timestamp Sub → .td accessor namespace (datetime.py:369-383)
-      val li = t(s, dir, "lineitem"); val o = t(s, dir, "orders")
-      val td = Col(new graft.api.DtOps(col("l_shipdate")).sub(col("o_orderdate")))
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_orderkey"), col("l_linenumber"),
-          td.c.as("td_us"),
-          td.td.days.as("td_days"),
-          td.td.seconds.as("td_seconds"),
-          td.td.totalSeconds.as("td_total_seconds"))
-        .orderBy("l_orderkey", "l_linenumber")
-    },
-    "dt_roundfreq" -> { (s, dir) =>
-      val ev = Table(t(s, dir, "events"))
-      val ts = ev("ts")
-      ev.merge(
-          "t_ceil" -> Col(ts.dt.ceilFreq(3600)),
-          "t_floor" -> Col(ts.dt.floorFreq(3600)),
-          "t_round" -> Col(ts.dt.roundFreq(3600)),
-          "t_utcfrom" -> Col(new graft.api.DtOps(unix_timestamp(ts.c)).utcFromTimestamp))
-        .project("event_id", "t_ceil", "t_floor", "t_round", "t_utcfrom")
-        .sort(Seq("event_id")).df
-    },
-
-    // ---- shift / window (§2.2 Shift) ----
-    "win_shift" -> { (s, dir) =>
-      val ev = t(s, dir, "events")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("event_id"))
-      ev.select(col("event_id"), col("user_id"), col("value"))
-        .withColumn("prev_value", lag(col("value"), 1).over(w))
-        .orderBy(col("event_id"))
-    },
-
-    // ---- window-function surface beyond Shift (extension; the
-    // reference's only window op is Shift) ----
-    "win_cumsum" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, dir, "events").select(col("event_id"), col("user_id"), col("ts"), col("value"))
-        .withColumn("cum_value", sum(col("value").cast(D)).over(w).cast(DoubleType))
-        .drop("ts")
-        .orderBy("event_id")
-    },
-    "win_range_frame" -> { (s, dir) =>
-      // VALUE-range frame (not a rows frame): each event sums the
-      // user's value over the trailing 1-hour WALL-CLOCK window —
-      // rangeBetween on exact int64 microseconds, decimal-exact sum;
-      // duplicate order keys share one frame, exactly as SQL RANGE
-      // requires (a rows frame would split them)
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id")).orderBy(col("_us"))
-        .rangeBetween(-3600L * 1000000L, Window.currentRow)
-      t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"),
-          unix_micros(col("ts")).as("_us"))
-        .withColumn("hour_sum",
-          sum(col("value").cast(D)).over(w).cast(DoubleType))
-        .withColumn("hour_n", count(lit(1)).over(w))
-        .drop("ts", "_us")
-        .orderBy("event_id")
-    },
-    "by_stringagg" -> { (s, dir) =>
-      // ordered string aggregation (LISTAGG/string_agg parity): region
-      // names of each nation group concatenated in sorted order —
-      // sort_array makes the fold order deterministic, so the string
-      // hash-matches the oracle's string_agg(... ORDER BY)
-      t(s, dir, "nation")
-        .groupBy(col("n_regionkey"))
-        .agg(array_join(sort_array(collect_list(col("n_name"))), ",").as("nations"),
-          count(lit(1)).as("n"))
-        .orderBy("n_regionkey")
-    },
-    "by_multi_distinct" -> { (s, dir) =>
-      // several EXACT distinct aggregates in one pass (the Expand-based
-      // multi-distinct plan): per order-month, distinct customers AND
-      // distinct clerks-equivalent (priority levels), plus a plain count
-      t(s, dir, "orders")
-        .groupBy(date_trunc("month", col("o_orderdate")).as("month"))
-        .agg(countDistinct(col("o_custkey")).as("n_customers"),
-          countDistinct(col("o_orderpriority")).as("n_priorities"),
-          count(lit(1)).as("n_orders"))
-        .orderBy("month")
-    },
-    "win_rolling" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-        .rowsBetween(-3, Window.currentRow)
-      // decimal-exact rolling sum / frame count = deterministic mean
-      t(s, dir, "events").select(col("event_id"), col("user_id"), col("ts"), col("value"))
-        .withColumn("roll_mean",
-          sum(col("value").cast(D)).over(w).cast(DoubleType) / count(lit(1)).over(w))
-        .drop("ts")
-        .orderBy("event_id")
-    },
-    "win_rank" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      // rn/quartile over a total order (unique tiebreak); rank/dense_rank
-      // over a coarse key so tie semantics are actually exercised
-      val wRn = Window.partitionBy(col("user_id")).orderBy(col("value").desc, col("event_id"))
-      val wRk = Window.partitionBy(col("user_id")).orderBy(col("event_type"))
-      t(s, dir, "events").select(col("event_id"), col("user_id"),
-          col("value"), col("event_type"))
-        .withColumn("rn", row_number().over(wRn).cast(LongType))
-        .withColumn("rnk", rank().over(wRk).cast(LongType))
-        .withColumn("drank", dense_rank().over(wRk).cast(LongType))
-        .withColumn("quartile", ntile(4).over(wRn).cast(LongType))
-        .orderBy("event_id")
-    },
-    "win_value_funcs" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      // the value-picking window family over a TOTAL order (ts,
-      // event_id tiebreak — deterministic across engines): first/last/
-      // nth with explicit full frames, offset lag with a default,
-      // lead(2), and the two distribution ranks (exact integer ratios
-      // cast to double identically on both engines)
-      val ord = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val grow = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val full = ord.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      t(s, dir, "events").select(col("event_id"), col("user_id"), col("ts"), col("value"))
-        .withColumn("v_first", first(col("value")).over(grow))
-        .withColumn("v_last", last(col("value")).over(full))
-        .withColumn("v_second", nth_value(col("value"), 2).over(full))
-        .withColumn("v_prev", lag(col("value"), 1, -1.0).over(ord))
-        .withColumn("v_next2", lead(col("value"), 2).over(ord))
-        .withColumn("prank", percent_rank().over(ord))
-        .withColumn("cdist", cume_dist().over(ord))
-        .orderBy("event_id")
-    },
-
-    // ---- grouping sets / pivot (extension; SURVEY §2.8 — absent from
-    // the reference, free in Spark) ----
-    "by_cube" -> { (s, dir) =>
-      Table(t(s, dir, "lineitem"))
-        .byCube(Seq("l_returnflag", "l_linestatus"),
-          "n" -> Col(count(lit(1))),
-          "sum_qty" -> Col(dsum(col("l_quantity")))).df
-        .select(coalesce(col("l_returnflag"), lit("ALL")).as("rf"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("ls"),
-          col("n"), col("sum_qty"))
-        .orderBy("rf", "ls")
-    },
-    "by_rollup" -> { (s, dir) =>
-      val o = t(s, dir, "orders")
-        .withColumn("o_year", year(col("o_orderdate")).cast(LongType))
-      Table(o).byRollup(Seq("o_year", "o_orderstatus"),
-        "total" -> Col(dsum(col("o_totalprice")))).df
-        .select(coalesce(col("o_year"), lit(-1L)).as("o_year"),
-          coalesce(col("o_orderstatus"), lit("ALL")).as("status"), col("total"))
-        .orderBy("o_year", "status")
-    },
-    "by_grouping_sets" -> { (s, dir) =>
-      // EXPLICIT grouping sets — the irregular lattice cube/rollup
-      // can't express: ((status, priority), (status), ()) but NOT
-      // (priority). One pass, one Expand, one aggregate — never three
-      // scans unioned
-      t(s, dir, "orders")
-        .groupingSets(
-          Seq(Seq(col("o_orderstatus"), col("o_orderpriority")),
-            Seq(col("o_orderstatus")), Seq()),
-          col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-        .select(coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
-          coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
-          col("n"), col("total"))
-        .orderBy("status", "priority")
-    },
-    "by_pivot" -> { (s, dir) =>
-      Table(t(s, dir, "orders"))
-        .pivotAgg("o_orderstatus", "o_orderpriority",
-          Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"),
-          "n", Col(lit(1)), _.count).df
-        .orderBy("o_orderstatus")
-    },
-
-    // ---- HAVING: filter on an aggregate (Blaze composes this as
-    // selection-over-By; the plan is agg → filter, no extra shuffle) ----
-    "by_having" -> { (s, dir) =>
-      Table(t(s, dir, "orders"))
-        .byFields(Seq("o_custkey"), "n" -> Col(count(lit(1))),
-          "total" -> Col(dsum(col("o_totalprice"))))
-        .filter(Col(col("n") >= 10))
-        .sort(Seq("o_custkey")).df
-    },
-
-    // ---- correlation/covariance via exact decimal moments (extension;
-    // Spark's corr() sums doubles, whose cross-partition order is
-    // nondeterministic — composing from DECIMAL-exact Σx,Σy,Σxy,Σx²,Σy²
-    // gives bit-stable results AND oracle comparability) ----
-    "red_corr_matrix" -> { (s, dir) =>
-      // the k-column generalization (operators.Features): all pairwise
-      // correlations from ONE decimal-exact moment aggregate
-      graft.operators.Features.correlationMatrix(t(s, dir, "lineitem"),
-          Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
-        .orderBy("col_a", "col_b")
-    },
-    "red_moments" -> { (s, dir) =>
-      // skewness / excess kurtosis from EXACT integer moment sums:
-      // l_quantity is integral (1..50), so sum(x^k) for k=1..4 stays
-      // int64-exact at any corpus size (50^4 * 10^10 rows < 2^63 /
-      // headroom documented) — only the final standardized ratios are
-      // IEEE, in a fixed formula both engines evaluate identically
-      val x = col("l_quantity").cast(LongType)
-      val m = t(s, dir, "lineitem").agg(
-        count(lit(1)).as("n"), sum(x).as("s1"), sum(x * x).as("s2"),
-        sum(x * x * x).as("s3"), sum(x * x * x * x).as("s4"))
-      // the SUMS are exact int64; the standardized ratios are computed
-      // in double with a FIXED expression tree (mirrored token-for-token
-      // in the oracle), so the doubles hash-match:
-      //   mean = s1/n, var = s2/n − mean², m3 = s3/n − 3·mean·(s2/n) +
-      //   2·mean³, skew = m3/var^1.5 (int64 cross-multiplied forms like
-      //   n²·s3 would overflow at corpus scale — deliberately avoided)
-      val nD = col("n").cast(DoubleType)
-      val mean = col("s1").cast(DoubleType) / nD
-      val varP = col("s2").cast(DoubleType) / nD - mean * mean
-      val m3 = col("s3").cast(DoubleType) / nD -
-        lit(3.0) * mean * (col("s2").cast(DoubleType) / nD) +
-        lit(2.0) * mean * mean * mean
-      m.select(col("n"), mean.as("mean"), varP.as("var_pop"),
-        (m3 / (varP * sqrt(varP))).as("skewness"))
-    },
-    "red_corr" -> { (s, dir) =>
-      val D4 = DecimalType(28, 4)
-      val x = col("l_quantity").cast(D4)
-      val y = col("l_extendedprice").cast(D4)
-      val m = t(s, dir, "lineitem").agg(
-        count(lit(1)).cast(DoubleType).as("n"),
-        sum(x).cast(DoubleType).as("sx"), sum(y).cast(DoubleType).as("sy"),
-        sum(x * y).cast(DoubleType).as("sxy"),
-        sum(x * x).cast(DoubleType).as("sxx"), sum(y * y).cast(DoubleType).as("syy"))
-      m.select(
-        m("n").cast(LongType).as("n"),
-        ((m("sxy") - m("sx") * m("sy") / m("n")) / m("n")).as("covar_pop"),
-        ((m("sxy") - m("sx") * m("sy") / m("n")) / (m("n") - 1)).as("covar_samp"),
-        ((m("sxy") - m("sx") * m("sy") / m("n")) /
-          (sqrt(m("sxx") - m("sx") * m("sx") / m("n")) *
-            sqrt(m("syy") - m("sy") * m("sy") / m("n")))).as("corr"))
-    },
-
-    "by_unpivot" -> { (s, dir) =>
-      // melt: the wide→long inverse of by_pivot (common-typed values)
-      Table(t(s, dir, "part")
-        .select(col("p_partkey"), col("p_size").cast(DoubleType).as("p_size"),
-          col("p_retailprice")))
-        .melt(ids = Seq("p_partkey"), values = Seq("p_retailprice", "p_size")).df
-        .orderBy("p_partkey", "variable")
-    },
-
-    // ---- intersect / except (extension; SURVEY §2.11) ----
-    "set_union" -> { (s, dir) =>
-      // distinct union (UNION vs concat's UNION ALL): two overlapping
-      // customer-key sets
-      val o = t(s, dir, "orders")
-      val hi = Table(o.filter(col("o_totalprice") > 100000).select(col("o_custkey")))
-      val urgent = Table(o.filter(col("o_orderpriority") === "1-URGENT").select(col("o_custkey")))
-      hi.concat(urgent).distinct().sort(Seq("o_custkey")).df
-    },
-    "set_intersect" -> { (s, dir) =>
-      val c = Table(t(s, dir, "customer").select(col("c_nationkey").as("nationkey")))
-      val sup = Table(t(s, dir, "supplier").select(col("s_nationkey").as("nationkey")))
-      c.intersect(sup).sort(Seq("nationkey")).df
-    },
-    "join_null_safe" -> { (s, dir) =>
-      // null-safe equality join (<=> / IS NOT DISTINCT FROM): NULL keys
-      // MATCH each other instead of dropping — the semantic exact dedup
-      // needs when a nullable column is part of the identity. Keys are
-      // nation ids nulled on a deterministic slice of both sides.
-      val c = t(s, dir, "customer")
-        .select(col("c_custkey"),
-          when(col("c_custkey") % 50 === 0, lit(null)).otherwise(col("c_nationkey"))
-            .as("c_nk"))
-      val sup = t(s, dir, "supplier")
-        .select(col("s_suppkey"),
-          when(col("s_suppkey") % 7 === 0, lit(null)).otherwise(col("s_nationkey"))
-            .as("s_nk"))
-      // aggregate-BEFORE-join: the pair count per key is the product of
-      // the two sides' key counts, so the null-safe join runs on two
-      // ~nation-sized aggregates instead of materializing the
-      // customers×suppliers row explosion (quadratic in sf — measured
-      // 131× at the sf10 rehearsal before this rewrite). The <=> join
-      // semantics under test are identical; NULL groups still match.
-      val cc = c.groupBy(col("c_nk")).agg(count(lit(1)).as("_nc"))
-      val sc = sup.groupBy(col("s_nk")).agg(count(lit(1)).as("_ns"))
-      cc.join(sc, col("c_nk") <=> col("s_nk"))
-        .select(col("c_nk").as("nk"), (col("_nc") * col("_ns")).as("n_pairs"))
-        .orderBy(asc_nulls_first("nk"))
-    },
-    "set_bag_ops" -> { (s, dir) =>
-      // BAG semantics (INTERSECT ALL / EXCEPT ALL): duplicates count —
-      // multiset intersection keeps min(multiplicity), difference
-      // subtracts it; the distinct-set forms (set_intersect/except)
-      // would collapse them
-      val a = t(s, dir, "orders").select((col("o_custkey") % 100).as("k"))
-      val b = t(s, dir, "lineitem").select((col("l_suppkey") % 100).as("k"))
-      Table(a.intersectAll(b)).df
-        .groupBy("k").agg(count(lit(1)).as("n_inter"))
-        .join(
-          a.exceptAll(b).groupBy("k").agg(count(lit(1)).as("n_exc")),
-          Seq("k"), "full_outer")
-        .select(col("k"), coalesce(col("n_inter"), lit(0L)).as("n_inter"),
-          coalesce(col("n_exc"), lit(0L)).as("n_exc"))
-        .orderBy("k")
-    },
-    "set_except" -> { (s, dir) =>
-      // nations with NO high-balance customer (the subtrahend must not
-      // cover every nation, or the query vacuously tests the empty set)
-      val n = Table(t(s, dir, "nation").select(col("n_nationkey").as("nationkey")))
-      val rich = Table(t(s, dir, "customer").filter(col("c_acctbal") > 9900)
-        .select(col("c_nationkey").as("nationkey")))
-      n.except(rich).sort(Seq("nationkey")).df
-    },
-
-    "by_topk" -> { (s, dir) =>
-      // per-group top-k via the bounded partial aggregate — never a
-      // per-group window sort (plan-guarded in the unit suite)
-      Table(t(s, dir, "orders"))
-        .topKBy(Seq("o_orderpriority"), Col(col("o_totalprice")), "o_orderkey", k = 3)
-        .sort(Seq("o_orderpriority", "rank")).df
-    },
-
-    // ---- skew / co-location tools as oracle-checked queries (§2.15).
-    // Each is result-IDENTICAL to its plain formulation — that identity
-    // is the contract, so the plain GROUP BY / JOIN is the exact oracle ----
-    "salted_sum" -> { (s, dir) =>
-      // two-stage salted aggregation: one hot l_returnflag spreads over
-      // 16 reducers in stage 1, stage 2 merges 16 partials per key
-      Table(t(s, dir, "lineitem"))
-        .saltedSumBy(Seq("l_returnflag"), saltBuckets = 16,
-          "n" -> Col(lit(1L)),
-          "sum_qty" -> Col(col("l_quantity").cast(D)))
-        .df.select(col("l_returnflag"), col("n"),
-          col("sum_qty").cast(DoubleType).as("sum_qty"))
-        .orderBy("l_returnflag")
-    },
-    "salted_join" -> { (s, dir) =>
-      // replicated-salt equi-join: supplier replicated 8×, lineitem salted
-      // by a within-key-varying column, so a hot suppkey spreads over 8
-      // reducers (equality to the plain join is also unit-asserted)
-      val li = Table(t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_suppkey")))
-      val sup = Table(t(s, dir, "supplier")
-        .select(col("s_suppkey").as("l_suppkey"), col("s_name")))
-      li.saltedJoin(sup, "l_suppkey", spreadCol = "l_orderkey", salts = 8)
-        .sort(Seq("l_orderkey", "l_linenumber")).df
-    },
-    "bucketed_join" -> { (s, dir) =>
-      // pay the shuffle at WRITE time: both sides bucketed + sorted on the
-      // join key, so the join itself plans with ZERO exchanges (the
-      // repeated-daily-join pattern for 100 TB fact tables; exchange-free
-      // plan asserted in the unit suite). Stale dirs from a previous JVM
-      // are cleared first — the in-memory catalog forgets them.
-      val wh = new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-      Seq("graft_orders_b", "graft_customer_b").foreach { tb =>
-        s.sql(s"DROP TABLE IF EXISTS $tb")
-        val dir = new java.io.File(wh, tb)
-        if (dir.exists()) {
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-          }
-          rm(dir)
-        }
-      }
-      Table.writeBucketed(Table(t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))),
-        "graft_orders_b", Seq("o_custkey"), numBuckets = 8)
-      Table.writeBucketed(Table(t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_name"))),
-        "graft_customer_b", Seq("c_custkey"), numBuckets = 8)
-      s.table("graft_orders_b")
-        .join(s.table("graft_customer_b"), col("o_custkey") === col("c_custkey"))
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("c_name"))
-        .orderBy("o_orderkey")
-    },
-
-    "fk_hop" -> { (s, dir) =>
-      // foreign-key field traversal (expressions.py:136-142, sql.py:272-276):
-      // orders.o_custkey is an FK into customer — accessing customer
-      // fields through it auto-joins the (broadcast) dimension
-      Table(t(s, dir, "orders"))
-        .fkField("o_custkey", Table(t(s, dir, "customer")), "c_custkey",
-          "c_name", "c_mktsegment")
-        .project("o_orderkey", "o_custkey", "c_name", "c_mktsegment")
-        .sort(Seq("o_orderkey")).df
-    },
-    "src_iterable" -> { (s, dir) =>
-      // Iterables source (§2.1): a driver-local Seq as a first-class
-      // table — tiny reference data (here a priority ranking) belongs
-      // inline + broadcast, never in a file
-      import s.implicits._
-      val prio = Seq(
-        ("1-URGENT", 1), ("2-HIGH", 2), ("3-MEDIUM", 3),
-        ("4-NOT SPECIFIED", 4), ("5-LOW", 5))
-        .toDF("o_orderpriority", "prio_rank")
-      t(s, dir, "orders")
-        .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n"))
-        .join(broadcast(prio), Seq("o_orderpriority"))
-        .select(col("o_orderpriority"), col("prio_rank"), col("n"))
-        .orderBy("prio_rank")
-    },
-
-    "q5_region_revenue" -> { (s, dir) =>
-      // TPC-H Q5 shape: the 6-table join — tiny dims (region, nation)
-      // broadcast; the fact chain customer ⋈ orders ⋈ lineitem ⋈ supplier
-      // shuffles on its join keys with AQE free to reorder/rebalance; the
-      // local-supplier predicate (c_nationkey = s_nationkey) closes the
-      // cycle as a join condition, not a post-filter
-      val r = t(s, dir, "region").filter(col("r_name") === "ASIA")
-      val n = t(s, dir, "nation")
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit("1995-01-01").cast(TimestampType) &&
-          col("o_orderdate") < lit("1996-01-01").cast(TimestampType))
-      val li = t(s, dir, "lineitem")
-      val sup = t(s, dir, "supplier")
-      c.join(o, col("c_custkey") === col("o_custkey"))
-        .join(li, col("o_orderkey") === col("l_orderkey"))
-        .join(sup, col("l_suppkey") === col("s_suppkey") &&
-          col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("n_name"))
-        .agg(sum(col("l_extendedprice").cast(D) * (lit(1) - col("l_discount").cast(D)))
-          .cast(DoubleType).as("revenue"))
-        .orderBy(desc("revenue"), asc("n_name"))
-    },
-    "misc_profile" -> { (s, dir) =>
-      // one-pass per-column table profile (exact distincts → Expand; the
-      // approx_count_distinct swap is the 100 TB path, documented on the op)
-      Table(t(s, dir, "orders")).profile.sort(Seq("col_name")).df
-    },
-    "misc_heavyhitters" -> { (s, dir) =>
-      // one-pass bounded-memory frequent items (Misra-Gries): capacity 64
-      // ≫ 5 distinct priorities → EXACT regime, so the plain GROUP BY is
-      // the oracle; the approximation bounds are property-tested
-      t(s, dir, "orders")
-        .agg(graft.plans.HeavyHitters(col("o_orderpriority"), 64).as("_hh"))
-        .select(explode(col("_hh")).as("e"))
-        .select(col("e.key").as("o_orderpriority"), col("e.cnt").as("n"))
-        .orderBy(desc("n"), asc("o_orderpriority"))
-    }
-  )
-
-  // =====================================================================
-  // DuckDB oracle SQL — same table names, same output column names, same
-  // deterministic ORDER BY; decimal-exact aggregation mirrors the Spark side.
-  // =====================================================================
-  def oracleSql: Map[String, String] =
-    relationalOracle ++ TpchEntry.oracleSql ++ PipelineEntry.oracleSql
-
-  private def relationalOracle: Map[String, String] = Map(
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(l_quantity) AS avg_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(l_extendedprice) AS avg_price,
-        |  CAST(SUM(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) / COUNT(l_discount) AS avg_disc,
-        |  COUNT(*) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q3_shipping" ->
-      """SELECT l_orderkey,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        |  o_orderdate, o_orderpriority
-        |FROM customer, orders, lineitem
-        |WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey AND l_orderkey = o_orderkey
-        |  AND o_orderdate < TIMESTAMP '1995-03-15' AND l_shipdate > TIMESTAMP '1995-03-15'
-        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, o_orderdate, l_orderkey LIMIT 10""".stripMargin,
-    "red_moments" ->
-      """WITH m AS (SELECT count(*) AS n,
-        |    CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS s1,
-        |    CAST(SUM(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT)) AS BIGINT) AS s2,
-        |    CAST(SUM(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT)) AS BIGINT) AS s3,
-        |    CAST(SUM(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT)) AS BIGINT) AS s4
-        |  FROM lineitem)
-        |SELECT n, CAST(s1 AS DOUBLE) / n AS mean,
-        |  CAST(s2 AS DOUBLE) / n - (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n) AS var_pop,
-        |  (CAST(s3 AS DOUBLE) / n - 3.0 * (CAST(s1 AS DOUBLE) / n) * (CAST(s2 AS DOUBLE) / n)
-        |    + 2.0 * (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n))
-        |  / ((CAST(s2 AS DOUBLE) / n - (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n))
-        |     * SQRT(CAST(s2 AS DOUBLE) / n - (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n))) AS skewness
-        |FROM m""".stripMargin,
-    "q10_returns" ->
-      """SELECT c_custkey, c_name,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        |  c_acctbal, n_name, c_mktsegment
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        |  AND o_orderdate >= TIMESTAMP '1995-01-01' AND o_orderdate < TIMESTAMP '1995-04-01'
-        |GROUP BY c_custkey, c_name, c_acctbal, n_name, c_mktsegment
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-    "q18_volume" ->
-      """WITH big AS (SELECT l_orderkey, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty
-        |  FROM lineitem GROUP BY l_orderkey HAVING SUM(CAST(l_quantity AS BIGINT)) > 180)
-        |SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice, total_qty
-        |FROM big JOIN orders ON o_orderkey = l_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY total_qty DESC, o_orderkey LIMIT 50""".stripMargin,
-    "q14_promo" ->
-      """WITH a AS (
-        |  SELECT
-        |    CAST(SUM(CASE WHEN p_type = 'PROMO'
-        |      THEN CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))
-        |      ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS promo_revenue,
-        |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS total_revenue
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE l_shipdate >= TIMESTAMP '1995-09-01' AND l_shipdate < TIMESTAMP '1995-10-01')
-        |SELECT promo_revenue, total_revenue,
-        |  100.0 * promo_revenue / total_revenue AS promo_pct FROM a""".stripMargin,
-    "sort_topn_group" ->
-      """WITH r AS (SELECT o_custkey, o_orderkey, o_totalprice,
-        |  row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rank
-        |  FROM orders)
-        |SELECT o_custkey, CAST(rank AS BIGINT) AS rank, o_orderkey, o_totalprice
-        |FROM r WHERE rank <= 3 ORDER BY o_custkey, rank""".stripMargin,
-    "sql_lateral" ->
-      """SELECT tok, COUNT(*) AS n
-        |FROM (SELECT unnest(string_split_regex(trim(text), '\s+')) AS tok FROM documents)
-        |GROUP BY tok ORDER BY n DESC, tok LIMIT 20""".stripMargin,
-    "sql_pivot" ->
-      """SELECT o_orderpriority,
-        |  CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_f,
-        |  CAST(SUM(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_o,
-        |  CAST(SUM(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS n_p
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "sql_q6" ->
-      """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_shipdate < TIMESTAMP '1996-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-    "proj_field" ->
-      "SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem ORDER BY l_orderkey, l_linenumber",
-    "proj_drop" ->
-      "SELECT c_custkey, c_nationkey, c_mktsegment FROM customer ORDER BY c_custkey",
-    "proj_relabel" ->
-      "SELECT r_regionkey AS key, r_name AS name FROM region ORDER BY key",
-
-    "sel_filter" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag FROM lineitem
-        |WHERE l_quantity > 45 AND l_returnflag = 'A' ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "sel_isin" ->
-      """SELECT o_orderkey, o_orderpriority FROM orders
-        |WHERE o_orderpriority IN ('1-URGENT','2-HIGH') ORDER BY o_orderkey""".stripMargin,
-    "sel_slice" ->
-      "SELECT * FROM orders ORDER BY o_orderkey LIMIT 100 OFFSET 100",
-    "sel_slice_sorted" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_orderkey LIMIT 100 OFFSET 5000""".stripMargin,
-    "sel_slice_strided" ->
-      """WITH x AS (SELECT o_orderkey, o_totalprice,
-        |    row_number() OVER (ORDER BY o_orderkey) - 1 AS idx,
-        |    COUNT(*) OVER () AS n
-        |  FROM orders)
-        |SELECT o_orderkey, o_totalprice FROM x
-        |WHERE idx >= GREATEST(n - 6000, 0)
-        |  AND (idx - GREATEST(n - 6000, 0)) % 7 = 0
-        |ORDER BY o_orderkey""".stripMargin,
-    "sel_with_index" ->
-      """SELECT c_custkey, c_acctbal,
-        |  CAST(row_number() OVER (ORDER BY c_custkey) - 1 AS BIGINT) AS row_idx
-        |FROM customer WHERE c_custkey % 5 = 0
-        |ORDER BY c_custkey""".stripMargin,
-    "sel_coerce" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-02' AND l_quantity > 45
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "misc_sample_n" ->
-      "SELECT CAST(500 AS BIGINT) AS n",
-    "src_jdbc_roundtrip" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey",
-
-    "merge_transform" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice,
-        |  l_extendedprice * (1 - l_discount) * (1 + l_tax) AS charge,
-        |  l_extendedprice * (1 - l_discount) AS disc_price
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "misc_coerce" ->
-      """SELECT l_orderkey, l_linenumber, CAST(l_quantity AS BIGINT) AS qty_int,
-        |  CAST(l_quantity AS VARCHAR) AS qty_str
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "misc_coalesce" ->
-      """SELECT l_orderkey, l_linenumber, COALESCE(NULLIF(l_returnflag,'N'),'X') AS flag2
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "arith_ops" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  l_quantity + 1.5 AS a_add,
-        |  l_quantity / 7 AS a_div,
-        |  CAST(FLOOR(l_quantity / 7) AS BIGINT) AS a_floordiv,
-        |  l_orderkey % 7 AS a_mod,
-        |  l_quantity * 2 AS a_mul,
-        |  -l_quantity AS a_neg,
-        |  POW(l_quantity, 2) AS a_pow,
-        |  l_quantity - 0.5 AS a_sub
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "arith_cmp" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  (l_quantity > 10 AND l_returnflag = 'A') AS c_and,
-        |  l_returnflag = 'R' AS c_eq,
-        |  l_quantity >= 30 AS c_ge,
-        |  l_quantity > 30 AS c_gt,
-        |  l_quantity <= 30 AS c_le,
-        |  l_quantity < 30 AS c_lt,
-        |  l_returnflag <> 'R' AS c_ne,
-        |  NOT (l_quantity > 30) AS c_not,
-        |  (l_quantity < 5 OR l_quantity > 45) AS c_or
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "arith_greatest_least" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_discount,
-        |  GREATEST(l_quantity, l_discount * 100) AS g,
-        |  LEAST(l_quantity, l_discount * 100) AS l
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "math_funcs" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  ABS(l_quantity - 25) AS m_abs,
-        |  ROUND(ASIN(l_discount), 6) AS m_asin,
-        |  ROUND(ATAN2(l_quantity, 3.0), 6) AS m_atan2,
-        |  CAST(CEIL(l_quantity / 7) AS BIGINT) AS m_ceil,
-        |  ROUND(COS(l_quantity), 6) AS m_cos,
-        |  ROUND(DEGREES(l_discount), 6) AS m_degrees,
-        |  ROUND(EXP(l_discount), 6) AS m_exp,
-        |  CAST(FLOOR(l_quantity / 7) AS BIGINT) AS m_floor,
-        |  ROUND(SQRT(l_quantity*l_quantity + 4.0*4.0), 6) AS m_hypot,
-        |  ROUND(LN(l_quantity + 1), 6) AS m_log,
-        |  ROUND(LOG10(l_quantity + 1), 6) AS m_log10,
-        |  ROUND(LN(1 + l_quantity), 6) AS m_log1p,
-        |  ROUND(SIN(l_quantity), 6) AS m_sin,
-        |  ROUND(SQRT(l_quantity), 6) AS m_sqrt,
-        |  ROUND(TAN(l_discount), 6) AS m_tan,
-        |  CAST(CASE WHEN l_quantity * 0.3 >= 0 THEN FLOOR(l_quantity * 0.3) ELSE CEIL(l_quantity * 0.3) END AS BIGINT) AS m_trunc
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "str_basic" ->
-      """SELECT c_custkey, c_name,
-        |  UPPER(SUBSTRING(c_name, 1, 1)) || LOWER(SUBSTRING(c_name, 2)) AS s_capitalize,
-        |  CAST(LENGTH(c_name) AS BIGINT) AS s_len,
-        |  LOWER(c_name) AS s_lower,
-        |  LTRIM('  pad  ') AS s_lstrip,
-        |  UPPER(c_name) AS s_upper
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "str_like_find" ->
-      """SELECT p_partkey, p_type,
-        |  CAST(STRPOS(p_type, 'BRASS') - 1 AS BIGINT) AS s_find,
-        |  p_type LIKE '%BRASS%' AS s_like,
-        |  CAST(STRPOS(p_type, 'ECONOMY') - 1 AS BIGINT) AS s_pos
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "str_slice_pad" ->
-      """SELECT c_custkey,
-        |  CASE WHEN LENGTH(c_name) >= 25 THEN c_name
-        |       ELSE RPAD(LPAD(c_name, CAST(LENGTH(c_name) + FLOOR((25 - LENGTH(c_name)) / 2.0) + ((25 - LENGTH(c_name)) & 25 & 1) AS INT), '.'), 25, '.') END AS s_bpad,
-        |  c_name || '|' || c_mktsegment AS s_cat,
-        |  LPAD(c_name, 25, '.') AS s_lpad,
-        |  REPEAT(SUBSTRING(c_name, 1, 2), 3) AS s_repeat,
-        |  RPAD(c_name, 25, '.') AS s_rpad,
-        |  RTRIM('  pad  ') AS s_rstrip,
-        |  SUBSTRING(c_name, 1, 8) AS s_slice,
-        |  TRIM('  pad  ') AS s_strip,
-        |  REPLACE(c_name, 'Customer', 'Cust') AS s_replace
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "str_replace_max" -> {
-      // replace-first-occurrence step, unrolled per max (sequential
-      // first-match == Python first-N because the replacements here never
-      // create new matches); strpos = 0 when absent → pass through.
-      // Oracle-independence: this CASE chain mirrors the operator's
-      // unrolling idea, so it is not an independent spec — the second
-      // witness is PropertySpec "replace(old, new, max): Spark == JVM
-      // reference on random strings" (java.lang.String as the third
-      // implementation; see the audit block in PipelineEntry)
-      def once(x: String, old: String, nw: String) =
-        s"CASE WHEN strpos($x, '$old') > 0 THEN substr($x, 1, strpos($x, '$old') - 1) " +
-          s"|| '$nw' || substr($x, strpos($x, '$old') + ${old.length}) ELSE $x END"
-      s"""WITH t0 AS (SELECT c_custkey, c_name || ' ' || c_name AS x FROM customer),
-         |t1 AS (SELECT c_custkey, x, ${once("x", "0", "#")} AS y1 FROM t0),
-         |t2 AS (SELECT c_custkey, x, ${once("y1", "0", "#")} AS y2 FROM t1),
-         |t3 AS (SELECT c_custkey, x, ${once("y2", "0", "#")} AS y3 FROM t2)
-         |SELECT c_custkey, ${once("x", "Customer", "Cust")} AS r1, y3 AS r3
-         |FROM t3 ORDER BY c_custkey""".stripMargin
-    },
-    "str_predicates" ->
-      """SELECT c_custkey, c_mktsegment,
-        |  regexp_matches(c_mktsegment, '^[A-Za-z0-9]+$') AS p_isalnum,
-        |  regexp_matches(c_mktsegment, '^[A-Za-z]+$') AS p_isalpha,
-        |  regexp_matches(c_mktsegment, '^[0-9]+$') AS p_isdigit,
-        |  (regexp_matches(c_mktsegment, '[a-z]') AND NOT regexp_matches(c_mktsegment, '[A-Z]')) AS p_islower,
-        |  (regexp_matches(c_mktsegment, '[A-Z]') AND NOT regexp_matches(c_mktsegment, '[a-z]')) AS p_isupper
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-
-    "dt_extract" ->
-      """SELECT o_orderkey,
-        |  CAST(EXTRACT(DAY FROM o_orderdate) AS INT) AS d_day,
-        |  CAST(EXTRACT(HOUR FROM o_orderdate) AS INT) AS d_hour,
-        |  CAST(EXTRACT(MINUTE FROM o_orderdate) AS INT) AS d_minute,
-        |  CAST(EXTRACT(MONTH FROM o_orderdate) AS INT) AS d_month,
-        |  CAST(EXTRACT(SECOND FROM o_orderdate) AS DOUBLE) AS d_second,
-        |  CAST(EXTRACT(YEAR FROM o_orderdate) AS INT) AS d_year
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "dt_calendar" ->
-      """SELECT o_orderkey,
-        |  CAST(dayofyear(o_orderdate) AS INT) AS d_dayofyear,
-        |  CAST(EXTRACT(DAY FROM last_day(o_orderdate)) AS INT) AS d_daysinmonth,
-        |  CAST(o_orderdate AS DATE) = last_day(o_orderdate) AS d_monthend,
-        |  EXTRACT(DAY FROM o_orderdate) = 1 AS d_monthstart,
-        |  (CAST(o_orderdate AS DATE) = last_day(o_orderdate) AND EXTRACT(MONTH FROM o_orderdate) % 3 = 0) AS d_qend,
-        |  (EXTRACT(DAY FROM o_orderdate) = 1 AND EXTRACT(MONTH FROM o_orderdate) % 3 = 1) AS d_qstart,
-        |  CAST(EXTRACT(QUARTER FROM o_orderdate) AS INT) AS d_quarter,
-        |  CAST(weekofyear(o_orderdate) AS INT) AS d_week,
-        |  CAST(isodow(o_orderdate) - 1 AS INT) AS d_weekday,
-        |  (EXTRACT(MONTH FROM o_orderdate) = 12 AND EXTRACT(DAY FROM o_orderdate) = 31) AS d_yend,
-        |  dayofyear(o_orderdate) = 1 AS d_ystart
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "dt_trunc" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  make_timestamp(CAST(FLOOR(epoch(l_shipdate) / 600) AS BIGINT) * 600 * 1000000) AS t_10min,
-        |  date_trunc('day', l_shipdate) AS t_day,
-        |  date_trunc('month', l_shipdate) AS t_month,
-        |  strftime(l_shipdate, '%Y-%m-%d %H:%M') AS t_strftime,
-        |  date_trunc('year', l_shipdate) AS t_year
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "red_summary" ->
-      """SELECT COUNT(l_quantity) AS r_count, MAX(l_quantity) AS r_max,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(l_quantity) AS r_mean,
-        |  MIN(l_quantity) AS r_min, COUNT(*) AS r_nrows,
-        |  COUNT(DISTINCT l_returnflag) AS r_nunique,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS r_sum
-        |FROM lineitem""".stripMargin,
-    "red_var_std" ->
-      """WITH m AS (SELECT
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sx,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sx2,
-        |  CAST(COUNT(l_quantity) AS DOUBLE) AS n FROM lineitem)
-        |SELECT (sx2 - sx * sx / n) / n AS var_pop,
-        |  (sx2 - sx * sx / n) / (n - 1) AS var_samp,
-        |  SQRT((sx2 - sx * sx / n) / n) AS std_pop,
-        |  SQRT((sx2 - sx * sx / n) / (n - 1)) AS std_samp
-        |FROM m""".stripMargin,
-    "red_any_all" ->
-      """SELECT bool_and(l_quantity > 0) AS r_all_gt0,
-        |  bool_or(l_quantity > 100) AS r_any_gt100,
-        |  bool_or(l_quantity > 49) AS r_any_gt49
-        |FROM lineitem""".stripMargin,
-    "red_vnorm" ->
-      """SELECT SQRT(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)) AS vnorm2
-        |FROM lineitem""".stripMargin,
-    "red_count_values" ->
-      """SELECT l_returnflag, COUNT(*) AS count FROM lineitem
-        |GROUP BY l_returnflag ORDER BY count DESC, l_returnflag""".stripMargin,
-    "red_mode" ->
-      """SELECT CAST(l_quantity AS BIGINT) AS mode_val, COUNT(*) AS n FROM lineitem
-        |GROUP BY 1 ORDER BY n DESC, mode_val LIMIT 1""".stripMargin,
-    "misc_checksum" ->
-      """SELECT source, COUNT(*) AS n,
-        |  bit_xor(CAST(concat('0x', substr(md5(text), 1, 7)) AS BIGINT)) AS checksum
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-
-    "by_sum" ->
-      """SELECT l_returnflag,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(l_extendedprice) AS avg_price,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "by_derived" ->
-      """SELECT CAST(EXTRACT(YEAR FROM o_orderdate) AS INT) AS order_year, COUNT(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders GROUP BY order_year ORDER BY order_year""".stripMargin,
-    "by_multi" ->
-      """SELECT l_returnflag, l_linestatus, MAX(l_discount) AS max_disc,
-        |  MIN(l_quantity) AS min_qty, COUNT(DISTINCT l_partkey) AS nunique_parts
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "join_inner" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, c_name, c_mktsegment
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
-    "join_left" ->
-      """SELECT c_nationkey, c_custkey, c_name, n_name
-        |FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey
-        |ORDER BY c_custkey""".stripMargin,
-    "join_outer" ->
-      """WITH o AS (SELECT * FROM orders WHERE o_orderkey % 3 = 0),
-        |  li AS (SELECT l_orderkey, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-        |         FROM lineitem WHERE l_orderkey % 3 = 1 GROUP BY l_orderkey)
-        |SELECT COALESCE(o.o_orderkey, li.l_orderkey) AS o_orderkey, o.o_totalprice, li.qty
-        |FROM o FULL OUTER JOIN li ON o.o_orderkey = li.l_orderkey
-        |ORDER BY o_orderkey""".stripMargin,
-    "join_multi" ->
-      """SELECT r_name,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name ORDER BY r_name""".stripMargin,
-    "join_semi" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-        |WHERE l_orderkey IN (SELECT o_orderkey FROM orders WHERE o_totalprice > 400000)
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "join_right" ->
-      """SELECT c_custkey AS o_custkey, o_orderkey, c_name
-        |FROM (SELECT * FROM orders WHERE o_totalprice > 300000) o
-        |RIGHT JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "join_anti" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_totalprice > 300000)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "sort_head" ->
-      "SELECT o_orderkey, o_totalprice FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10",
-    "sort_tail" ->
-      """SELECT * FROM (SELECT o_orderkey, o_totalprice FROM orders ORDER BY o_orderkey DESC LIMIT 10)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "set_distinct" ->
-      """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "set_distinct_on" ->
-      """SELECT DISTINCT ON (o_orderpriority) o_orderpriority, o_orderkey, o_totalprice
-        |FROM orders ORDER BY o_orderpriority, o_orderkey""".stripMargin,
-    "set_concat" ->
-      """SELECT o_orderkey, o_totalprice FROM orders WHERE o_totalprice > 300000
-        |UNION ALL
-        |SELECT o_orderkey, o_totalprice FROM orders WHERE o_totalprice < 10000
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "str_predicates2" ->
-      """SELECT c_custkey,
-        |  regexp_matches(c_name, '^[0-9]+$') AS p_isdecimal,
-        |  regexp_matches(c_name, '^[0-9]+$') AS p_isnumeric,
-        |  regexp_matches('   ', '^\s+$') AS p_isspace,
-        |  (regexp_matches(c_name, '[A-Za-z]') AND NOT regexp_matches(c_name, '(^|[^A-Za-z])[a-z]')
-        |    AND NOT regexp_matches(c_name, '[A-Za-z][A-Z]')) AS p_istitle,
-        |  SUBSTRING(c_name, 1, 0) || 'CUST' || SUBSTRING(c_name, 9) AS p_slicerep
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "str_interp" ->
-      """SELECT c_custkey, printf('%s|%05d', c_mktsegment, c_custkey) AS s_interp
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-
-    "math_funcs2" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  ROUND(ACOS(l_discount), 6) AS m_acos,
-        |  ROUND(ATAN(l_discount), 6) AS m_atan,
-        |  ROUND(LN(l_quantity / 10 + 1 + SQRT((l_quantity / 10 + 1) * (l_quantity / 10 + 1) - 1)), 6) AS m_acosh,
-        |  ROUND(LN(l_discount + SQRT(l_discount * l_discount + 1)), 6) AS m_asinh,
-        |  ROUND(0.5 * LN((1 + l_discount) / (1 - l_discount)), 6) AS m_atanh,
-        |  CASE WHEN l_discount - 0.05 >= 0 OR isnan(l_discount - 0.05) THEN ABS(l_quantity - 25) ELSE -ABS(l_quantity - 25) END AS m_copysign,
-        |  ROUND((EXP(l_discount) + EXP(-l_discount)) / 2, 6) AS m_cosh,
-        |  ROUND(EXP(l_discount) - 1, 6) AS m_expm1,
-        |  l_quantity % 7.3 AS m_fmod,
-        |  isnan('NaN'::DOUBLE) AS m_isnan,
-        |  l_discount * POW(2.0, 3) AS m_ldexp,
-        |  NULLIF(l_returnflag, 'N') IS NOT NULL AS m_notnull,
-        |  ROUND(RADIANS(l_quantity), 6) AS m_radians,
-        |  ROUND((EXP(l_discount) - EXP(-l_discount)) / 2, 6) AS m_sinh,
-        |  ROUND((EXP(l_discount) - EXP(-l_discount)) / (EXP(l_discount) + EXP(-l_discount)), 6) AS m_tanh,
-        |  FLOOR(l_quantity * 1.37 / 5.0) * 5.0 AS m_truncate
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "dt_extract2" ->
-      """SELECT event_id,
-        |  CAST(EXTRACT(HOUR FROM ts) AS INT) AS d_hour,
-        |  epoch_us(ts) % 1000000 AS d_micro,
-        |  (epoch_us(ts) % 1000000) // 1000 AS d_milli,
-        |  CAST(EXTRACT(MINUTE FROM ts) AS INT) AS d_minute,
-        |  CAST(0 AS BIGINT) AS d_nano,
-        |  CAST(FLOOR(EXTRACT(SECOND FROM ts)) AS DOUBLE) AS d_second,
-        |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS d_strf,
-        |  epoch_us(ts) % 86400000000 AS d_timeus,
-        |  strftime(ts, '%A') AS d_wdname
-        |FROM events ORDER BY event_id""".stripMargin,
-    "dt_timedelta" ->
-      """WITH j AS (SELECT l_orderkey, l_linenumber,
-        |    epoch_us(l_shipdate) - epoch_us(o_orderdate) AS td_us
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |d AS (SELECT *, CAST(FLOOR(CAST(td_us AS DOUBLE) / 86400000000.0) AS BIGINT) AS td_days FROM j)
-        |SELECT l_orderkey, l_linenumber, td_us, td_days,
-        |  CAST(FLOOR(CAST(td_us - td_days * 86400000000 AS DOUBLE) / 1000000.0) AS BIGINT) AS td_seconds,
-        |  CAST(td_us AS DOUBLE) / 1000000.0 AS td_total_seconds
-        |FROM d ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "dt_roundfreq" ->
-      """SELECT event_id,
-        |  make_timestamp(CAST(CEIL(FLOOR(epoch(ts)) / 3600.0) AS BIGINT) * 3600 * 1000000) AS t_ceil,
-        |  make_timestamp(CAST(FLOOR(FLOOR(epoch(ts)) / 3600.0) AS BIGINT) * 3600 * 1000000) AS t_floor,
-        |  make_timestamp(CAST(FLOOR((FLOOR(epoch(ts)) + 1800.0) / 3600.0) AS BIGINT) * 3600 * 1000000) AS t_round,
-        |  make_timestamp(CAST(FLOOR(epoch(ts)) AS BIGINT) * 1000000) AS t_utcfrom
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "win_shift" ->
-      """SELECT event_id, user_id, value,
-        |  lag(value, 1) OVER (PARTITION BY user_id ORDER BY event_id) AS prev_value
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "win_cumsum" ->
-      """SELECT event_id, user_id, value,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER
-        |    (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS cum_value
-        |FROM events ORDER BY event_id""".stripMargin,
-    "win_range_frame" ->
-      """SELECT event_id, user_id, value,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS hour_sum,
-        |  COUNT(*) OVER w AS hour_n
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |  RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-    "by_stringagg" ->
-      """SELECT n_regionkey, string_agg(n_name, ',' ORDER BY n_name) AS nations,
-        |  count(*) AS n
-        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin,
-    "by_multi_distinct" ->
-      """SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month,
-        |  COUNT(DISTINCT o_custkey) AS n_customers,
-        |  COUNT(DISTINCT o_orderpriority) AS n_priorities,
-        |  COUNT(*) AS n_orders
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-    "win_rolling" ->
-      """SELECT event_id, user_id, value,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) / (COUNT(*) OVER w) AS roll_mean
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-    "win_rank" ->
-      """SELECT event_id, user_id, value, event_type,
-        |  row_number() OVER (PARTITION BY user_id ORDER BY value DESC, event_id) AS rn,
-        |  rank() OVER (PARTITION BY user_id ORDER BY event_type) AS rnk,
-        |  dense_rank() OVER (PARTITION BY user_id ORDER BY event_type) AS drank,
-        |  ntile(4) OVER (PARTITION BY user_id ORDER BY value DESC, event_id) AS quartile
-        |FROM events ORDER BY event_id""".stripMargin,
-    "win_value_funcs" ->
-      """SELECT event_id, user_id, ts, value,
-        |  first_value(value) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v_first,
-        |  last_value(value) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS v_last,
-        |  nth_value(value, 2) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS v_second,
-        |  lag(value, 1, -1.0) OVER w AS v_prev,
-        |  lead(value, 2) OVER w AS v_next2,
-        |  percent_rank() OVER w AS prank,
-        |  cume_dist() OVER w AS cdist
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |ORDER BY event_id""".stripMargin,
-    "by_grouping_sets" ->
-      """SELECT COALESCE(o_orderstatus, 'ALL') AS status,
-        |  COALESCE(o_orderpriority, 'ALL') AS priority,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
-        |ORDER BY status, priority""".stripMargin,
-
-    "by_cube" ->
-      """SELECT COALESCE(l_returnflag, 'ALL') AS rf, COALESCE(l_linestatus, 'ALL') AS ls,
-        |  COUNT(*) AS n, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus) ORDER BY rf, ls""".stripMargin,
-    "by_rollup" ->
-      """WITH o AS (SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year, o_orderstatus, o_totalprice FROM orders)
-        |SELECT COALESCE(o_year, -1) AS o_year, COALESCE(o_orderstatus, 'ALL') AS status,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM o GROUP BY ROLLUP(o_year, o_orderstatus) ORDER BY o_year, status""".stripMargin,
-    "by_pivot" ->
-      """SELECT o_orderstatus,
-        |  COUNT(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS n_1_urgent,
-        |  COUNT(*) FILTER (WHERE o_orderpriority = '2-HIGH') AS n_2_high,
-        |  COUNT(*) FILTER (WHERE o_orderpriority = '3-MEDIUM') AS n_3_medium,
-        |  COUNT(*) FILTER (WHERE o_orderpriority = '4-NOT SPECIFIED') AS n_4_not_specified,
-        |  COUNT(*) FILTER (WHERE o_orderpriority = '5-LOW') AS n_5_low
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "by_having" ->
-      """SELECT o_custkey, COUNT(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders GROUP BY o_custkey HAVING COUNT(*) >= 10
-        |ORDER BY o_custkey""".stripMargin,
-    "red_corr_matrix" -> {
-      val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-      def d(c: String) = s"CAST($c AS DECIMAL(28,4))"
-      val moments = (cols.indices.map(i => s"CAST(SUM(${d(cols(i))}) AS DOUBLE) AS s$i") ++
-        (for { i <- cols.indices; j <- i until cols.size } yield
-          s"CAST(SUM(${d(cols(i))} * ${d(cols(j))}) AS DOUBLE) AS p${i}_$j"))
-        .mkString(",\n  ")
-      val rows = (for { i <- cols.indices; j <- (i + 1) until cols.size } yield
-        s"SELECT '${cols(i)}' AS col_a, '${cols(j)}' AS col_b, " +
-          s"((p${i}_$j - s$i * s$j / n) / (SQRT(p${i}_$i - s$i * s$i / n) * SQRT(p${j}_$j - s$j * s$j / n))) AS corr FROM m")
-        .mkString("\nUNION ALL ")
-      s"""WITH m AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-         |  $moments
-         |FROM lineitem)
-         |$rows
-         |ORDER BY col_a, col_b""".stripMargin
-    },
-    "red_corr" ->
-      """WITH m AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(28,4))) AS DOUBLE) AS sx,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,4))) AS DOUBLE) AS sy,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(28,4)) * CAST(l_extendedprice AS DECIMAL(28,4))) AS DOUBLE) AS sxy,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(28,4)) * CAST(l_quantity AS DECIMAL(28,4))) AS DOUBLE) AS sxx,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,4)) * CAST(l_extendedprice AS DECIMAL(28,4))) AS DOUBLE) AS syy
-        |FROM lineitem)
-        |SELECT CAST(n AS BIGINT) AS n,
-        |  ((sxy - sx * sy / n) / n) AS covar_pop,
-        |  ((sxy - sx * sy / n) / (n - 1)) AS covar_samp,
-        |  ((sxy - sx * sy / n) / (SQRT(sxx - sx * sx / n) * SQRT(syy - sy * sy / n))) AS corr
-        |FROM m""".stripMargin,
-
-    "by_unpivot" ->
-      """SELECT p_partkey, 'p_retailprice' AS variable, p_retailprice AS value FROM part
-        |UNION ALL
-        |SELECT p_partkey, 'p_size', CAST(p_size AS DOUBLE) FROM part
-        |ORDER BY p_partkey, variable""".stripMargin,
-    "set_union" ->
-      """SELECT o_custkey FROM orders WHERE o_totalprice > 100000
-        |UNION
-        |SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
-        |ORDER BY o_custkey""".stripMargin,
-    "set_intersect" ->
-      """SELECT c_nationkey AS nationkey FROM customer
-        |INTERSECT
-        |SELECT s_nationkey FROM supplier
-        |ORDER BY nationkey""".stripMargin,
-    "join_null_safe" ->
-      """WITH c AS (SELECT c_custkey,
-        |    CASE WHEN c_custkey % 50 = 0 THEN NULL ELSE c_nationkey END AS c_nk FROM customer),
-        |s AS (SELECT s_suppkey,
-        |    CASE WHEN s_suppkey % 7 = 0 THEN NULL ELSE s_nationkey END AS s_nk FROM supplier)
-        |SELECT c_nk AS nk, count(*) AS n_pairs
-        |FROM c JOIN s ON c_nk IS NOT DISTINCT FROM s_nk
-        |GROUP BY c_nk ORDER BY nk NULLS FIRST""".stripMargin,
-    "set_bag_ops" ->
-      """WITH a AS (SELECT o_custkey % 100 AS k FROM orders),
-        |b AS (SELECT l_suppkey % 100 AS k FROM lineitem),
-        |i AS (SELECT k, count(*) AS n_inter FROM (SELECT k FROM a INTERSECT ALL SELECT k FROM b) GROUP BY k),
-        |e AS (SELECT k, count(*) AS n_exc FROM (SELECT k FROM a EXCEPT ALL SELECT k FROM b) GROUP BY k)
-        |SELECT coalesce(i.k, e.k) AS k,
-        |  coalesce(n_inter, 0) AS n_inter, coalesce(n_exc, 0) AS n_exc
-        |FROM i FULL OUTER JOIN e ON i.k = e.k ORDER BY k""".stripMargin,
-    "set_except" ->
-      """SELECT n_nationkey AS nationkey FROM nation
-        |EXCEPT
-        |SELECT c_nationkey FROM customer WHERE c_acctbal > 9900
-        |ORDER BY nationkey""".stripMargin,
-
-    "by_topk" ->
-      """WITH r AS (SELECT o_orderpriority, o_orderkey, o_totalprice,
-        |  row_number() OVER (PARTITION BY o_orderpriority
-        |    ORDER BY o_totalprice DESC, o_orderkey) AS rank
-        |FROM orders)
-        |SELECT o_orderpriority, CAST(rank AS BIGINT) AS rank, o_orderkey,
-        |  o_totalprice AS score
-        |FROM r WHERE rank <= 3 ORDER BY o_orderpriority, rank""".stripMargin,
-
-    // the salted/bucketed formulations are result-identical to the plain
-    // GROUP BY / JOIN — which is therefore their exact oracle
-    "salted_sum" ->
-      """SELECT l_returnflag, COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "salted_join" ->
-      """SELECT l.l_suppkey, l.l_orderkey, l.l_linenumber, s.s_name
-        |FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "bucketed_join" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice, c_name
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // FK traversal lowers to the reference's WHERE-join (inner)
-    "fk_hop" ->
-      """SELECT o.o_orderkey, o.o_custkey, c.c_name, c.c_mktsegment
-        |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
-    "src_iterable" ->
-      """WITH p(o_orderpriority, prio_rank) AS (VALUES
-        |  ('1-URGENT', 1), ('2-HIGH', 2), ('3-MEDIUM', 3),
-        |  ('4-NOT SPECIFIED', 4), ('5-LOW', 5)),
-        |a AS (SELECT o_orderpriority, COUNT(*) AS n FROM orders GROUP BY 1)
-        |SELECT a.o_orderpriority, p.prio_rank, a.n
-        |FROM a JOIN p ON a.o_orderpriority = p.o_orderpriority
-        |ORDER BY prio_rank""".stripMargin,
-
-    "q5_region_revenue" ->
-      """SELECT n_name,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM customer, orders, lineitem, supplier, nation, region
-        |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-        |  AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |  AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-        |  AND r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1995-01-01'
-        |  AND o_orderdate < TIMESTAMP '1996-01-01'
-        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin,
-    "misc_profile" -> {
-      val fields = Seq(
-        ("o_orderkey", true), ("o_custkey", true), ("o_orderstatus", false),
-        ("o_totalprice", true), ("o_orderdate", false), ("o_orderpriority", false))
-      fields.map { case (f, isNum) =>
-        val mn = if (isNum) s"CAST(MIN($f) AS DOUBLE)" else "CAST(NULL AS DOUBLE)"
-        val mx = if (isNum) s"CAST(MAX($f) AS DOUBLE)" else "CAST(NULL AS DOUBLE)"
-        s"""SELECT '$f' AS col_name, COUNT(*) AS n_rows,
-           |  COUNT(*) - COUNT($f) AS n_null, COUNT(DISTINCT $f) AS n_distinct,
-           |  $mn AS min_num, $mx AS max_num FROM orders""".stripMargin
-      }.mkString("", "\nUNION ALL ", "\nORDER BY col_name")
-    },
-    // exact-regime Misra-Gries == the plain GROUP BY it bounds
-    "misc_heavyhitters" ->
-      """SELECT o_orderpriority, COUNT(*) AS n FROM orders
-        |GROUP BY o_orderpriority ORDER BY n DESC, o_orderpriority""".stripMargin
-  )
+    Suite.rows.flatMap(r => r.scale.map(f => r.name -> ((f.table, f.bytes, f.build)))).toMap
 }

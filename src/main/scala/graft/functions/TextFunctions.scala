@@ -402,50 +402,25 @@ object TextFunctions {
     */
   def bm25Scores(docs: DataFrame, textCol: Column, queryTerms: Seq[String],
                  idCol: String = "doc_id"): DataFrame = {
-    require(queryTerms.nonEmpty && queryTerms.size <= 16,
-      s"bm25Scores: 1..16 query terms, got ${queryTerms.size}")
     require(queryTerms.distinct.size == queryTerms.size,
       "bm25Scores: duplicate query terms")
-    val D = DoubleType
-    val toks = docs.select(col(idCol), size(tokens(textCol)).cast(LongType).as("_dl"),
-      explode(tokens(textCol)).as("_tok"))
-    val stats = docs.agg(count(lit(1)).as("_n"),
-      sum(size(tokens(textCol)).cast(LongType)).as("_sumdl"))
-    val tf = toks.filter(col("_tok").isin(queryTerms: _*))
-      .groupBy(col(idCol), col("_dl"), col("_tok"))
-      .agg(count(lit(1)).as("_tf"))
-    // _df derived FROM tf as a window count (r18): ids are unique per
-    // doc (corpus precondition), so tf has exactly one row per
-    // matching (doc, term) and its per-term row count IS the
-    // distinct-doc count. The old separate distinct re-ran the
-    // tokenize+explode corpus scan (different exchange keys, so
-    // ReuseExchange never deduped it); a dfreq-join would duplicate
-    // the tf subtree the same way. The window keeps the plan LINEAR:
-    // one corpus scan, one tiny (docs-with-matches x terms) exchange.
-    val withDf = tf.withColumn("_df", count(lit(1)).over(
-      org.apache.spark.sql.expressions.Window.partitionBy(col("_tok"))))
-    val scored = withDf.crossJoin(broadcast(stats))
-      .withColumn("_idf",
-        (lit(2L) * col("_n") - lit(2L) * col("_df") + lit(1L)).cast(D) /
-          (lit(2L) * col("_df") + lit(1L)).cast(D))
-      .withColumn("_s", col("_idf") * ((col("_tf").cast(D) * lit(2.2)) /
-        (col("_tf").cast(D) + lit(1.2) * (lit(0.25) + lit(0.75) *
-          (col("_dl").cast(D) / (col("_sumdl").cast(D) / col("_n").cast(D)))))))
+    val perTerm = bm25PerTerm(docs, textCol, queryTerms, idCol)
     // fixed-order pivot: one conditional singleton-max per term, then a
     // left-to-right sum — immune to aggregate ordering
     val pivots = queryTerms.zipWithIndex.map { case (t, i) =>
-      max(when(col("_tok") === t, col("_s"))).as(s"_s$i")
+      max(when(col("term") === t, col("s"))).as(s"_s$i")
     }
     val total = queryTerms.indices
       .map(i => coalesce(col(s"_s$i"), lit(0.0)))
       .reduceLeft(_ + _)
-    scored.groupBy(col(idCol)).agg(pivots.head, pivots.tail: _*)
+    perTerm.groupBy(col(idCol)).agg(pivots.head, pivots.tail: _*)
       .select(col(idCol), total.as("score"))
   }
 
-  /** Per-term face of [[bm25Scores]]: `(idCol, term, tf, s)` for every
-    * (doc, query-term) match — the building block rankers and the
-    * ranking evaluator share. Same idf/normalization arithmetic. */
+  /** Per-term BM25: `(idCol, term, tf, s)` for every (doc, query-term)
+    * match — the building block [[bm25Scores]], the rankers and the
+    * ranking evaluator share. Same scale shape and precondition as
+    * [[bm25Scores]]. */
   def bm25PerTerm(docs: DataFrame, textCol: Column, queryTerms: Seq[String],
                   idCol: String = "doc_id"): DataFrame = {
     require(queryTerms.nonEmpty && queryTerms.size <= 16,

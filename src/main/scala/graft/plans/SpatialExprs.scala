@@ -63,7 +63,7 @@ object HilbertValue {
       GraftBridge.expression(x), GraftBridge.expression(y), bits))
 
   /** shared by interpreted eval and generated code (and, as the SPEC,
-    * by the oracle SQL generator in PipelineEntry).
+    * by the oracle SQL generator in graft.suite.Shared).
     */
   def index(bits: Int, x0: Long, y0: Long): Long = {
     if (x0 < 0 || (x0 >>> bits) != 0 || y0 < 0 || (y0 >>> bits) != 0)

@@ -148,18 +148,18 @@ class OperatorsSpec extends SparkSpec {
     // the face shares prAuditAgg verbatim and the chunked route's pair
     // set is equivalence-pinned above; this pins the WIRING — the one
     // audit row must be bit-identical through the landed-parquet path
-    val gate = PipelineEntry.queries("dedup_pr_audit")(spark, sf)
+    val gate = SparkEntry.queries("dedup_pr_audit")(spark, sf)
       .collect().map(_.toSeq).toSeq
-    val (_, _, faceFn) = PipelineEntry.scaleFaces("dedup_pr_audit")
+    val (_, _, faceFn) = SparkEntry.scaleFaces("dedup_pr_audit")
     val face = faceFn(spark, sf).collect().map(_.toSeq).toSeq
     assert(gate == face, s"gate $gate vs face $face")
     assert(gate.head.head.asInstanceOf[Long] > 0, "empty audit proves nothing")
   }
 
   test("graph_labelprop scale face (chunked waves) equals the gate row") {
-    val gate = PipelineEntry.queries("graph_labelprop")(spark, sf)
+    val gate = SparkEntry.queries("graph_labelprop")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val (_, _, faceFn) = PipelineEntry.scaleFaces("graph_labelprop")
+    val (_, _, faceFn) = SparkEntry.scaleFaces("graph_labelprop")
     val face = faceFn(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(gate == face, s"face diverged: ${gate.toSet -- face.toSet} / ${face.toSet -- gate.toSet}")
@@ -172,9 +172,9 @@ class OperatorsSpec extends SparkSpec {
     // BehaviorSpec — this pins the WIRING (same edge frame, same
     // iters, landed-parquet path) so the bench face can never drift
     // from the gate row
-    val gate = PipelineEntry.queries("graph_pagerank")(spark, sf)
+    val gate = SparkEntry.queries("graph_pagerank")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val (_, _, faceFn) = PipelineEntry.scaleFaces("graph_pagerank")
+    val (_, _, faceFn) = SparkEntry.scaleFaces("graph_pagerank")
     val face = faceFn(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(gate == face, s"face diverged: ${gate.toSet -- face.toSet} / ${face.toSet -- gate.toSet}")

@@ -1,25 +1,21 @@
 package graft
 
-/** The row step every main runs its rows through, and the name-keyed
-  * maps it reads. */
+/** The row step every main runs its rows through, and the suite of row
+  * definitions it reads. */
 class RowsSpec extends SparkSpec {
   /** The sf0.01 fixture beside the suite's sf0.001 one. */
   private val sf01 = new java.io.File(sf).getParent + "/sf0.01"
 
-  test("the row maps agree: oracles and faces name rows, scale faces read fixture tables") {
-    val rows = SparkEntry.queries.keySet
-    for ((map, keys) <- Seq("oracleSql" -> SparkEntry.oracleSql.keySet,
-        "benchFaces" -> SparkEntry.benchFaces.keySet, "scaleFaces" -> SparkEntry.scaleFaces.keySet))
-      assert(keys.subsetOf(rows), s"$map names no row: ${keys -- rows}")
-    for ((row, (table, _, _)) <- SparkEntry.scaleFaces)
-      assert(Tables.names.contains(table), s"$row's scale face reads $table")
+  test("a name two rows share fails the suite's construction, and the error names it") {
+    val q1 = suite.Suite.rows.find(_.name == "q1_agg").get
+    val e = intercept[IllegalArgumentException](
+      suite.Suite.unique(Seq(q1, q1.copy(name = "q3_shipping"), q1)))
+    assert(e.getMessage.contains("q1_agg") && !e.getMessage.contains("q3_shipping"), e.getMessage)
   }
 
-  test("the relational, TPC-H and pipeline query maps share no name") {
-    val parts = Seq(SparkEntry.relational.keySet, TpchEntry.queries.keySet,
-      PipelineEntry.queries.keySet)
-    for (Seq(a, b) <- parts.combinations(2)) assert((a & b).isEmpty, a & b)
-    assert(parts.map(_.size).sum == SparkEntry.queries.size)
+  test("every scale face reads a fixture table") {
+    for ((row, (table, _, _)) <- SparkEntry.scaleFaces)
+      assert(Tables.names.contains(table), s"$row's scale face reads $table")
   }
 
   test("an unknown row name fails the selection, and the error names it") {

@@ -411,7 +411,7 @@ class StreamingSpec extends SparkSpec {
   for (row <- Seq("stream_ewma", "stream_holt", "stream_anomaly", "stream_cusum",
       "stream_attribution"))
     test(s"$row: a 4-chunk replay of its operator equals its gate") {
-      val r = PipelineEntry.streamRows(row)
+      val r = suite.StreamRows.ops.find(_.name == row).get
       val replayed = r.reduce(StreamReplay(spark, s"${row}_replay",
         r.inputs.map(_(Tables(spark, sf, r.table))), r.order, r.mode)(r.op(spark, _)))
       val gate = SparkEntry.queries(row)(spark, sf).collect().toSeq

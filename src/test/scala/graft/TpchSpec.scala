@@ -1,9 +1,9 @@
 package graft
 
-/** Plan-shape assertions for the TPC-H batch ([[TpchEntry]]): the value
+/** Plan-shape assertions for the TPC-H batch ([[suite.TpchRows]]): the value
   * of these queries is the PLAN each one is supposed to produce at
   * warehouse scale, so each scale-critical lowering claim from the
-  * TpchEntry scaladoc is pinned here — a regression that, say, turns the
+  * TpchRows scaladoc is pinned here — a regression that, say, turns the
   * Q4 EXISTS into an inner join + distinct, or loses a broadcast and
   * shuffles the `part` dimension, fails the suite even though the oracle
   * answer would still match.
@@ -11,7 +11,7 @@ package graft
 class TpchSpec extends SparkSpec {
 
   private def plan(name: String): String =
-    TpchEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+    SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
   test("q2: correlated min is ONE window pass, dims broadcast, partsupp proxy never re-read") {
     val p = plan("q2_mincost")
@@ -58,7 +58,7 @@ class TpchSpec extends SparkSpec {
     // the left join's right side must already be the per-custkey count,
     // so exactly two aggregates appear above the join: none between
     // scan(orders) and the join would mean the raw orders table crossed
-    val df = TpchEntry.queries("q13_custdist")(spark, sf)
+    val df = SparkEntry.queries("q13_custdist")(spark, sf)
     val p = df.queryExecution.optimizedPlan.toString
     val joinIdx = p.indexOf("Join LeftOuter")
     assert(joinIdx >= 0, s"expected left outer join:\n$p")
@@ -89,6 +89,6 @@ class TpchSpec extends SparkSpec {
   test("q4/q12 shipped-late predicates and q19 disjunction stay non-vacuous at sf0.001") {
     for (q <- Seq("q2_mincost", "q4_priority", "q12_shipmode", "q19_disjunct",
         "q20_greensupp", "q22_opportunity", "q7_volume", "q11_value"))
-      assert(TpchEntry.queries(q)(spark, sf).count() > 0, s"$q is vacuous at $sf")
+      assert(SparkEntry.queries(q)(spark, sf).count() > 0, s"$q is vacuous at $sf")
   }
 }
